@@ -39,10 +39,6 @@ from pyspark.sql import functions as F
 # helpers
 # ---------------------------------------------------------------------------
 
-_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-           "lineitem", "events", "documents", "embeddings")
-
-
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
@@ -152,7 +148,7 @@ _KG_TABLES = ("linked", "canonical", "edges", "triples", "nodes")
 # only hashes the datagen/hash modules, so e.g. the round-3 edge
 # `source` change or a new materialized artifact needs this token to
 # invalidate cached worlds in /tmp
-_KG_WORLD_V = "w5"   # w5: + ie/docs.parquet (templated open-IE corpus)
+_KG_WORLD_V = "w6"   # w6: linked built through the byte-budget gate
 
 
 def _kg_paths(sf_dir: str) -> dict[str, str]:
@@ -214,7 +210,7 @@ def _kg_world(spark: SparkSession, sf_dir: str) -> dict:
                                n_docs=300,
                                n_products=_KG_N_PRODUCTS, seed=42)
     catalog = spark.read.parquet(p["catalog"])
-    pipe = KGPipeline(warehouse=p["wh"], link_strategy="exact")
+    pipe = KGPipeline(warehouse=p["wh"])
     if not os.path.exists(p["done"]):
         import shutil
 
@@ -3606,8 +3602,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from fashion_knowledge_graph_spark.plans import queries as Q
         out = _kg_world(spark, sf)
         qdocs = spark.read.parquet(_kg_paths(sf)["qdocs"])
-        r = Q.outfit_from_image(qdocs, out["catalog"], threshold=0.7,
-                                strategy="exact")
+        r = Q.outfit_from_image(qdocs, out["catalog"], threshold=0.7)
         return r.select("doc_id", "span_idx", "product_id", "category",
                         F.round("score", 6).alias("score"))
 

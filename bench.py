@@ -230,7 +230,7 @@ def _kg_build(spark, sf_dir: str, replicate: int = 1,
     catalog = spark.read.parquet(cat_path)
     docs = spark.read.parquet(docs_dir)
     wh = tempfile.mkdtemp(prefix="fkg_bench_wh_", dir=os.path.dirname(docs_dir))
-    pipe = KGPipeline(warehouse=wh, link_strategy="auto")
+    pipe = KGPipeline(warehouse=wh)
     out = pipe.build(docs, catalog, resume=False)
     # every output table is already MATERIALIZED by its snapshot commit
     # inside build(); re-scanning 22M+ committed triple rows through a

@@ -104,29 +104,6 @@ def lexicon_map_df(spark, preds: dict[str, list[str]] | None = None,
     return spark.createDataFrame(rows, "token string, pred string, obj string")
 
 
-def tokens_col(text_col, bigrams: bool = True):
-    """Lowercased tokens (hyphens kept) + optional space-joined bigrams,
-    as one array column — pure Catalyst expressions.
-
-    Bigrams are built with ``zip_with`` over two ``slice``s of the
-    token array, NOT ``element_at`` inside a ``transform`` lambda:
-    Catalyst does not CSE a subexpression referenced from inside a
-    higher-order-function lambda, so the element_at form re-evaluates
-    the regex split per index — O(tokens²·regex) per row, measured
-    15× slower at sf0.1."""
-    toks = F.filter(
-        F.split(F.lower(text_col), r"[^a-z0-9\-]+"), lambda t: t != "")
-    if not bigrams:
-        return toks
-    bg = F.when(
-        F.size(toks) >= 2,
-        F.zip_with(F.slice(toks, 1, F.size(toks) - 1),
-                   F.slice(toks, 2, F.size(toks) - 1),
-                   lambda a, b: F.concat_ws(" ", a, b)),
-    ).otherwise(F.array())
-    return F.concat(toks, bg)
-
-
 def lexicon_triples(text_df: DataFrame, subj_col: str,
                     text_col: str = "text",
                     bigrams: bool = True,

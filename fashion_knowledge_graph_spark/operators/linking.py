@@ -1,5 +1,4 @@
-"""Entity linking: LSH-blocked cosine top-k join of mentions against
-the catalog (or taxonomy) embedding space.
+"""Entity linking: image mentions → catalog products.
 
 Reproduces the reference's Pinecone query semantics
 (src/database/vector_database.py:127-191 called from
@@ -10,23 +9,30 @@ src/engine/process_social_media_images.py:78-99):
 - cosine metric over L2-normalized vectors (setup_pinecone.py:37)
 - top_k=5, then **only the first match** is threshold-checked at
   ``score >= 0.7`` (W5 in SURVEY §2.E: top-1-then-threshold, NOT
-  threshold-then-top-1 — both implementations preserve this order)
+  threshold-then-top-1 — every path here preserves this order)
 
-Two physical strategies, same semantics:
+``link_mentions`` is the one entry point. Its byte-budget gate
+(``fits_driver_broadcast``: estimated packed catalog bytes against
+``BROADCAST_BUDGET_MB``) picks one of two physical paths:
 
-- ``link_exact``  — broadcast the catalog, exact cosine against every
-  filter-compatible row. Correct at any recall; right choice while
-  the dim fits in memory (reference catalog: 3,127 rows). Used as the
-  in-Spark oracle for the LSH path.
-- ``link_lsh``    — the 100 TB path. Both sides get sign-LSH band
-  signatures (8 bands × 8 bits over deterministic hyperplanes);
-  candidates = equi-join on (type, color, band_idx, band_sig) — the
-  metadata filters *are* part of the blocking key, so hot attribute
-  values ("black") are already split 65536-ways per band, and AQE
-  skew join handles residual imbalance. Exact cosine re-rank on
-  candidates. Recall for near-duplicate photos (cosine ≥ 0.98)
-  ≈ 99.9% (1 - (1 - (1-θ/π)^16)^16); verified ≥ 0.95 vs brute force
-  in tests.
+- ``detect_and_link_fused`` — the catalog fits: it is packed per
+  (type, color) on the driver and broadcast, and ONE ``mapInArrow``
+  kernel detects, embeds and links each batch (a matmul per metadata
+  group). Exact, zero shuffles, and the 512-d embeddings never cross
+  the Arrow/JVM boundary.
+- ``link_lsh`` — the catalog is too big or too wide: both sides get
+  sign-LSH band signatures (``NBANDS`` = 16 bands × 16 bits, from
+  ``NBITS`` = 256 deterministic hyperplanes); candidates = equi-join
+  on (type, color, band_idx, band_sig) — the metadata filters *are*
+  part of the blocking key, so hot attribute values ("black") are
+  already split 65536-ways per band, and AQE skew join handles
+  residual imbalance. Exact cosine re-rank on candidates. Recall for
+  near-duplicate photos (cosine ≥ 0.98) ≈ 0.999; verified ≥ 0.95 vs
+  brute force in tests.
+
+``link_exact`` (broadcast join, exact cosine, window top-1) is the
+relational reference both paths are tested against; no build path
+selects it.
 """
 
 from __future__ import annotations
@@ -36,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import taxonomy as tx
 from ..functions.embeddings import cosine_col, hyperplanes, make_signature_udf
+from . import mentions as mn
 
 # 16 bands × 16 bits: at a 200k catalog, 8-bit signatures left ~27
 # random collisions per (band, hot type×color) block — ~400M candidate
@@ -89,7 +96,9 @@ def _filter_cond():
 def link_exact(mentions: DataFrame, catalog: DataFrame,
                top_k: int = tx.LINK_TOP_K,
                threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
-    """Broadcast-join exact variant (small/medium dims).
+    """Relational exact reference: broadcast join on the metadata
+    filters, exact cosine, window top-1-then-threshold. The fused and
+    LSH paths are tested against it.
 
     The cosine is computed map-side immediately after the broadcast
     join and BOTH embedding columns are projected away before the
@@ -197,94 +206,6 @@ def _dot_arrow(df: DataFrame, a_col: str, b_col: str,
     return df.mapInArrow(kernel, out_schema)
 
 
-def link_broadcast_matmul(mentions: DataFrame, catalog: DataFrame,
-                          top_k: int = tx.LINK_TOP_K,
-                          threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
-    """Broadcast-kernel exact variant: the dim-sized catalog is
-    collected once, partitioned by (type, color) on the driver, and
-    every mention batch resolves its top-1 match with one numpy
-    matmul per metadata group inside ``mapInPandas``.
-
-    Same semantics as ``link_exact`` (metadata filters → cosine →
-    top-1-then-threshold, ties to min product_id), pinned by a parity
-    test. Physically superior for a Pinecone-sized catalog: zero
-    shuffles (the relational form pays a join plus a 500k-row window
-    exchange, and its per-candidate ``aggregate``/``zip_with`` cosine
-    is interpreted expression eval, not codegen — measured 37 s of
-    the bench build; this kernel is ~2 s). ``top_k`` only gates the
-    reference's W5 rank-1 check, so emitting the argmax is exact.
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    packed = _pack_catalog(catalog)
-    bc = mentions.sparkSession.sparkContext.broadcast(packed)
-
-    m = _mention_side(mentions)
-    out_schema = T.StructType([
-        T.StructField("doc_id", m.schema["doc_id"].dataType),
-        T.StructField("span_idx", m.schema["span_idx"].dataType),
-        T.StructField("product_id", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("attrs", m.schema["attrs"].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def kernel(batches):
-        # mapInArrow: the embedding ListArray flattens to one float32
-        # buffer (zero copies, no per-row ndarray boxing), the attrs
-        # struct passes through via take()
-        import pyarrow as pa
-        cat = bc.value
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            emb = rb.column("embedding")
-            vecs = np.asarray(emb.flatten(), dtype=np.float64) \
-                .reshape(n, -1)
-            m_type = rb.column("m_type").to_pylist()
-            m_color = rb.column("m_color").to_pylist()
-            m_gender = np.asarray(rb.column("m_gender").to_pylist(),
-                                  dtype=object)
-            by_key: dict = {}
-            for i, k in enumerate(zip(m_type, m_color)):
-                by_key.setdefault(k, []).append(i)
-            out_idx: list = []
-            out_pid: list = []
-            out_cat: list = []
-            out_score: list = []
-            for k, idxs in by_key.items():
-                g = cat.get(k)
-                if g is None:
-                    continue
-                pids, cats, genders, cmat = g
-                sims = vecs[idxs] @ cmat.T            # (b, |group|)
-                mg = m_gender[idxs]
-                allowed = (genders[None, :] == "unisex") | \
-                          (genders[None, :] == mg[:, None])
-                sims = np.where(allowed, sims, -np.inf)
-                best = np.argmax(sims, axis=1)        # first max = min pid
-                bscore = sims[np.arange(len(idxs)), best]
-                ok = np.nonzero(bscore >= threshold)[0]
-                out_idx.extend(idxs[j] for j in ok)
-                out_pid.extend(pids[best[j]] for j in ok)
-                out_cat.extend(cats[best[j]] for j in ok)
-                out_score.extend(float(bscore[j]) for j in ok)
-            take = pa.array(out_idx, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [rb.column("doc_id").take(take),
-                 rb.column("span_idx").take(take),
-                 pa.array(out_pid, type=pa.string()),
-                 pa.array(out_cat, type=pa.string()),
-                 rb.column("attrs").take(take),
-                 pa.array(out_score, type=pa.float64())],
-                names=["doc_id", "span_idx", "product_id", "category",
-                       "attrs", "score"])
-
-    return m.mapInArrow(kernel, out_schema)
-
-
 def _pack_catalog(catalog: DataFrame) -> dict:
     """(type, color) → (pids, categories, genders, unit-vec matrix),
     sorted by product_id so argmax ties resolve to the min id."""
@@ -311,28 +232,26 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
     """Mention detection + entity linking FUSED into one ``mapInArrow``
     kernel (the dim-sized-catalog fast path).
 
-    The two-kernel plan (mentions kernel → link kernel) ships every
+    A two-kernel plan (mentions kernel → link kernel) ships every
     mention's 512-d embedding Arrow→JVM→Arrow between them — ~2 KB/row
     of pure serialization for a column the linked output then drops.
-    Fusing keeps embeddings in numpy registers: detect gates, extract
-    attrs, embed, and matmul against the broadcast catalog inside one
-    pass, emitting only the narrow linked rows. Semantics identical to
-    ``image_mentions`` → ``link_broadcast_matmul`` (pinned by parity
-    test); same top-1-then-threshold gate, ties to min product_id."""
+    Fusing keeps embeddings in numpy: the detect step
+    (``mentions.detect_batch``), then one matmul per (type, color)
+    group against the broadcast catalog, emitting only the narrow
+    linked rows. Semantics identical to ``image_mentions`` →
+    ``link_exact`` (pinned by a parity test): gender mask, then the W5
+    gate — ``top_k`` only bounds the candidates the reference ranks
+    before checking rank 1, so emitting the argmax is exact; ties go
+    to the min product_id."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
 
     from ..functions.embeddings import ATTR_SCHEMA
-    from .mentions import explode_spans
 
-    spans = explode_spans(docs).filter(
+    spans = mn.explode_spans(docs).filter(
         (F.col("kind") == "image_ref") & F.col("media_ref").isNotNull())
-    packed = _pack_catalog(catalog)
-    bc = spans.sparkSession.sparkContext.broadcast(packed)
-    min_area = tx.MIN_AREA
-    attr_fields = [(f.name, isinstance(f.dataType, T.ArrayType))
-                   for f in ATTR_SCHEMA.fields]
+    bc = spans.sparkSession.sparkContext.broadcast(_pack_catalog(catalog))
 
     out_schema = T.StructType([
         T.StructField("doc_id", spans.schema["doc_id"].dataType),
@@ -344,29 +263,18 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
     ])
 
     def kernel(batches):
-        from ..datagen import base_attrs, content_embed
-        from ..functions.hashing import segment_labels_areas
-
         cat = bc.value
         for rb in batches:
-            refs = np.asarray(rb.column("media_ref").to_pylist(), dtype="U")
-            if len(refs) == 0:
+            det = mn.detect_batch(rb.column("media_ref"))
+            if det is None:
                 continue
-            labels, areas = segment_labels_areas(refs)
-            mask = (labels != "Background") & (areas >= min_area)
-            if not mask.any():
-                continue
-            idx = np.nonzero(mask)[0]
-            refs_k = refs[idx]
-            attrs = base_attrs(refs_k)
-            vecs = content_embed(refs_k).astype(np.float64)
-            m_type = attrs["type"]
-            m_color = attrs["color"]
+            idx, _, _, attrs, vecs = det
+            vecs = vecs.astype(np.float64)
             m_gender = np.asarray(attrs["gender"], dtype=object)
             by_key: dict = {}
-            for i, k in enumerate(zip(m_type, m_color)):
+            for i, k in enumerate(zip(attrs["type"], attrs["color"])):
                 by_key.setdefault(k, []).append(i)
-            sel_local: list = []        # indices into refs_k / attrs
+            sel_local: list = []        # indices into idx / attrs
             out_pid: list = []
             out_cat: list = []
             out_score: list = []
@@ -389,28 +297,21 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
                 out_score.extend(float(bscore[j]) for j in ok)
             if not sel_local:
                 continue
-            attrs_arr = pa.StructArray.from_arrays(
-                [pa.array([attrs[name][i] for i in sel_local],
-                          type=pa.list_(pa.string()) if is_arr
-                          else pa.string())
-                 for name, is_arr in attr_fields],
-                [name for name, _ in attr_fields])
             take_orig = pa.array(idx[sel_local].astype(np.int32))
             yield pa.RecordBatch.from_arrays(
                 [rb.column("doc_id").take(take_orig),
                  rb.column("span_idx").take(take_orig),
                  pa.array(out_pid, type=pa.string()),
                  pa.array(out_cat, type=pa.string()),
-                 attrs_arr,
+                 mn.attrs_array(attrs, sel_local),
                  pa.array(out_score, type=pa.float64())],
-                names=["doc_id", "span_idx", "product_id", "category",
-                       "attrs", "score"])
+                names=out_schema.names)
 
     return spans.mapInArrow(kernel, out_schema)
 
 
-# Driver-broadcast budget for the packed-catalog fast paths
-# (_pack_catalog → link_broadcast_matmul / detect_and_link_fused).
+# Driver-broadcast budget for the packed-catalog fast path
+# (_pack_catalog → detect_and_link_fused).
 # A row gate alone is not a memory contract: 100k rows × 512-d
 # float64 is ~410 MB of packed numpy on the driver AND inside every
 # executor Python worker — the BYTES are what OOM, not the rows, and
@@ -443,21 +344,16 @@ def fits_driver_broadcast(catalog: DataFrame,
     return n <= max_rows and est <= budget_mb << 20
 
 
-def link_mentions(mentions: DataFrame, catalog: DataFrame,
-                  strategy: str = "auto", **kw) -> DataFrame:
-    """Pick the physical strategy: broadcast-exact while the catalog is
-    dim-sized, LSH-blocked once it isn't (mirrors Spark's own
-    broadcast-threshold philosophy, but the cosine join needs the
-    decision made here, above Catalyst)."""
-    if strategy == "exact":
-        return link_exact(mentions, catalog, **kw)
-    if strategy == "matmul":
-        return link_broadcast_matmul(mentions, catalog, **kw)
-    if strategy == "lsh":
-        return link_lsh(mentions, catalog, **kw)
-    # auto: dim-size probe in rows AND bytes. Dim-sized catalog →
-    # broadcast matmul kernel (exact, zero-shuffle); big or wide
-    # catalog → LSH blocking.
-    if fits_driver_broadcast(catalog):
-        return link_broadcast_matmul(mentions, catalog, **kw)
-    return link_lsh(mentions, catalog, **kw)
+def link_mentions(docs: DataFrame, catalog: DataFrame,
+                  top_k: int = tx.LINK_TOP_K,
+                  threshold: float = tx.LINK_THRESHOLD,
+                  budget_mb: int = BROADCAST_BUDGET_MB) -> DataFrame:
+    """Detect and link the image mentions of ``docs`` — the one linking
+    entry point. The byte-budget gate picks the physical path: a
+    dim-sized catalog takes the fused detect+link kernel (exact, zero
+    shuffles); a big or wide one takes ``image_mentions`` → LSH
+    blocking. Spark's own broadcast threshold cannot make this call —
+    the cosine join needs it made here, above Catalyst."""
+    if fits_driver_broadcast(catalog, budget_mb=budget_mb):
+        return detect_and_link_fused(docs, catalog, top_k, threshold)
+    return link_lsh(mn.image_mentions(docs), catalog, top_k, threshold)

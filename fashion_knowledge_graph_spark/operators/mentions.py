@@ -82,8 +82,8 @@ def image_mentions(docs: DataFrame) -> DataFrame:
     emits the embedding column as an Arrow ListArray built from one
     flat float32 buffer (zero boxing).
 
-    Filters reproduce the reference gates (applied inside the kernel,
-    same predicates):
+    Filters reproduce the reference gates (applied inside the kernel by
+    ``detect_batch``, same predicates):
     - Background class skipped (image_processor.py:114-115, P6)
     - area >= 1028      (image_processor.py:117-119, P5)
     - missing ``type`` skipped
@@ -91,8 +91,6 @@ def image_mentions(docs: DataFrame) -> DataFrame:
     """
     import numpy as np
     import pyarrow as pa
-
-    from .. import taxonomy as taxo
 
     spans = explode_spans(docs).filter(
         F.col("kind") == "image_ref").filter(F.col("media_ref").isNotNull())
@@ -103,65 +101,78 @@ def image_mentions(docs: DataFrame) -> DataFrame:
         T.StructField("attrs", ATTR_SCHEMA),
         T.StructField("embedding", T.ArrayType(T.FloatType())),
     ])
-    min_area, img_dim = tx.MIN_AREA, taxo.IMG_DIM
-    in_names = [f.name for f in spans.schema.fields]
-    attr_fields = [(f.name, isinstance(f.dataType, T.ArrayType))
-                   for f in ATTR_SCHEMA.fields]
+    img_dim = tx.IMG_DIM
 
     def kernel(batches):
-        from ..datagen import base_attrs, content_embed
-        from ..functions.hashing import segment_labels_areas
-
         for rb in batches:
-            refs = np.asarray(rb.column("media_ref").to_pylist(), dtype="U")
-            if len(refs) == 0:
+            det = detect_batch(rb.column("media_ref"))
+            if det is None:
                 continue
-            labels, areas = segment_labels_areas(refs)
-            mask = (labels != "Background") & (areas >= min_area)
-            if not mask.any():
-                continue
-            idx = np.nonzero(mask)[0]
-            kept = rb.take(pa.array(idx))
-            refs_k = refs[idx]
-            attrs = base_attrs(refs_k)
-            type_ok = np.array([t is not None for t in attrs["type"]])
-            if not type_ok.all():
-                idx2 = np.nonzero(type_ok)[0]
-                kept = kept.take(pa.array(idx2))
-                refs_k = refs_k[idx2]
-                attrs = {k: (np.asarray(v, dtype=object)[idx2]
-                             if not isinstance(v, list)
-                             else [v[i] for i in idx2])
-                         for k, v in attrs.items()}
-                labels_k = labels[idx][idx2]
-                areas_k = areas[idx][idx2]
-            else:
-                labels_k, areas_k = labels[idx], areas[idx]
-            vecs = content_embed(refs_k)                 # (n, dim) f32
-            n = len(refs_k)
-            attrs_arr = pa.StructArray.from_arrays(
-                [pa.array(list(attrs[name]),
-                          type=pa.list_(pa.string()) if is_arr
-                          else pa.string())
-                 for name, is_arr in attr_fields],
-                [name for name, _ in attr_fields])
+            idx, labels, areas, attrs, vecs = det
+            n = len(idx)
             emb_arr = pa.ListArray.from_arrays(
                 pa.array(np.arange(0, (n + 1) * img_dim, img_dim,
                                    dtype=np.int32)),
                 pa.array(vecs.reshape(-1)))
             yield pa.RecordBatch.from_arrays(
-                [*kept.columns,
-                 pa.array(labels_k.astype("U")),
-                 pa.array(areas_k),
-                 attrs_arr, emb_arr],
-                schema=pa.schema([
-                    *((name, kept.schema.field(i).type)
-                      for i, name in enumerate(in_names)),
-                    ("label", pa.string()), ("area", pa.int64()),
-                    ("attrs", attrs_arr.type),
-                    ("embedding", emb_arr.type)]))
+                [*rb.take(pa.array(idx)).columns,
+                 pa.array(labels.astype("U")), pa.array(areas),
+                 attrs_array(attrs), emb_arr],
+                names=out_schema.names)
 
     return spans.mapInArrow(kernel, out_schema)
+
+
+def detect_batch(media_refs):
+    """The reference's detect step over one Arrow batch of media refs —
+    the ONE copy both mention kernels (``image_mentions`` and
+    ``linking.detect_and_link_fused``) run:
+
+    - segment label/area; Background skipped (image_processor.py:
+      114-115, P6) and ``area >= 1028`` kept (:117-119, P5)
+    - attributes; missing ``type`` skipped
+      (process_social_media_images.py:74-76, P8)
+    - 512-d embedding of the survivors only
+
+    Returns ``(idx, labels, areas, attrs, vecs)`` for the kept rows —
+    ``idx`` indexes the batch, ``attrs`` maps each ATTR_SCHEMA field to
+    a per-row sequence, ``vecs`` is (n, IMG_DIM) float32 — or None when
+    no row survives."""
+    import numpy as np
+
+    from ..datagen import base_attrs, content_embed
+    from ..functions.hashing import segment_labels_areas
+
+    refs = np.asarray(media_refs.to_pylist(), dtype="U")
+    if len(refs) == 0:
+        return None
+    labels, areas = segment_labels_areas(refs)
+    idx = np.nonzero((labels != "Background") & (areas >= tx.MIN_AREA))[0]
+    if len(idx) == 0:
+        return None
+    attrs = base_attrs(refs[idx])
+    typed = [i for i, t in enumerate(attrs["type"]) if t is not None]
+    if len(typed) < len(idx):
+        if not typed:
+            return None
+        idx = idx[typed]
+        attrs = {k: [v[i] for i in typed] for k, v in attrs.items()}
+    return idx, labels[idx], areas[idx], attrs, content_embed(refs[idx])
+
+
+def attrs_array(attrs: dict, rows=None):
+    """``detect_batch`` attrs → the ATTR_SCHEMA Arrow struct column,
+    optionally restricted to positions ``rows``."""
+    import pyarrow as pa
+
+    cols = []
+    for f in ATTR_SCHEMA.fields:
+        vals = attrs[f.name]
+        cols.append(pa.array(
+            list(vals) if rows is None else [vals[i] for i in rows],
+            type=pa.list_(pa.string())
+            if isinstance(f.dataType, T.ArrayType) else pa.string()))
+    return pa.StructArray.from_arrays(cols, ATTR_SCHEMA.names)
 
 
 def image_mentions_pregate(docs: DataFrame) -> DataFrame:

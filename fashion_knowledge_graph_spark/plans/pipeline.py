@@ -4,9 +4,10 @@ Spark-first restatement of the reference's two batch entry points
 (src/engine/process_catalog.py, src/engine/process_social_media_images.py)
 as one declarative lineage over the interleaved docs table:
 
-  docs ──explode──► image mentions ──UDFs──► embeddings/attrs
+  docs ──explode──► image mentions ──detect──► embeddings/attrs
         └─explode──► text spans ──lexicon──► doc-level triples
-  mentions ⋈LSH catalog ──top-1≥0.7──► linked mentions
+  mentions ⋈ catalog ──top-1≥0.7──► linked mentions
+      (one fused broadcast kernel; LSH blocking past the byte budget)
   linked ──self-join i<j──► pairs ──agg──► edges
   catalog ──LSH self-join──► near-dups ──CC──► canonical map
   linked+edges+triples ──canonicalize──► nodes / edges / triples tables
@@ -15,11 +16,11 @@ Stage boundaries are snapshot commits (sources/tables.py): each stage
 is resumable — rerunning skips stages whose snapshot exists (and, for
 the mention stage, processes only docs not yet in the lineage,
 anti-join on doc_id). Shuffle inventory (the whole build):
-  1. linking join (band,bsig,type,color)   — AQE skew-split
-  2. candidate dedup + top-1 window (doc_id,span_idx)
-  3. pair self-join (doc_id)               — narrow projected rows
-  4. edge aggregation (src,dst,rel)        — map-side partial agg
-  5. CC iterations (small: catalog-sized)
+  1. LSH path only: linking join (band,bsig,type,color) — AQE
+     skew-split — then candidate dedup + top-1 window (doc_id,span_idx)
+  2. pair self-join (doc_id)               — narrow projected rows
+  3. edge aggregation (src,dst,rel)        — map-side partial agg
+  4. CC iterations (small: catalog-sized)
 Everything else is map-side.
 """
 
@@ -45,13 +46,14 @@ class KGPipeline:
     """Config + table handles for one KG build."""
 
     warehouse: str
-    link_strategy: str = "auto"
     link_threshold: float = tx.LINK_THRESHOLD
     link_top_k: int = tx.LINK_TOP_K
     dup_threshold: float = cc.DUP_COSINE
     # scale knobs — the three gates that pick driver fast paths over
-    # the distributed (100 TB) branches. Production defaults; tests
-    # set them to 0 to force the at-scale plans end-to-end
+    # the distributed (100 TB) branches; broadcast_budget_mb alone
+    # picks the linking path (linking.link_mentions). Production
+    # defaults; tests set them to 0 to force the at-scale plans
+    # end-to-end
     # (tests/test_pipeline.py::test_at_scale_branches_full_build).
     broadcast_budget_mb: int = lk.BROADCAST_BUDGET_MB
     canon_driver_threshold: int = 20_000
@@ -88,7 +90,8 @@ class KGPipeline:
         Incremental semantics replace the reference's "rerun the batch
         script against Neo4j MERGE": already-linked docs are skipped
         via anti-join against the committed snapshot, new results are
-        appended as a new snapshot.
+        appended as a new snapshot. A fresh build (``resume=False``, or
+        no committed processed-docs snapshot) overwrites both tables.
         """
         spark = docs.sparkSession
         t = self.table("linked")
@@ -107,27 +110,13 @@ class KGPipeline:
         # job launch — measurable against the build's fixed-cost floor)
         if resuming and todo.isEmpty():
             return t.read(spark)
-        if self.link_strategy in ("auto", "matmul", "fused") and (
-                self.link_strategy != "auto"
-                or lk.fits_driver_broadcast(
-                    catalog, budget_mb=self.broadcast_budget_mb)):
-            # dim-sized catalog: one fused mapInArrow pass (detect +
-            # embed + link) — no 512-d embedding column ever crosses
-            # the Arrow/JVM boundary (linking.detect_and_link_fused)
-            linked = lk.detect_and_link_fused(
-                todo, catalog, top_k=self.link_top_k,
-                threshold=self.link_threshold)
-        else:
-            mentions = mn.image_mentions(todo)
-            # the budget decision was already made above — "auto"
-            # falling through means the catalog is too big or too wide
-            # for the packed broadcast, so go straight to LSH instead
-            # of letting link_mentions re-probe with its default budget
-            strat = "lsh" if self.link_strategy == "auto" \
-                else self.link_strategy
-            linked = lk.link_mentions(
-                mentions, catalog, strategy=strat,
-                top_k=self.link_top_k, threshold=self.link_threshold)
+        linked = lk.link_mentions(
+            todo, catalog, top_k=self.link_top_k,
+            threshold=self.link_threshold,
+            budget_mb=self.broadcast_budget_mb)
+        # a fresh build REPLACES whatever the warehouse holds; only a
+        # resumed build adds to it
+        mode = "append" if resuming else "overwrite"
         flat = linked.select(
             "doc_id", "span_idx", "product_id", "category", "score",
             *[F.col(f"attrs.{a}").alias(a)
@@ -151,10 +140,11 @@ class KGPipeline:
             flat_cp = flat.localCheckpoint(eager=True)
 
             def _commit_linked():
-                t.write(flat_cp, mode="append", stage="link")
-                # processed-docs AFTER linked (crash between them ⇒
-                # duplicated work on resume, never lost work)
-                seen.write(todo.select("doc_id"), mode="append",
+                t.write(flat_cp, mode=mode, stage="link")
+                # processed-docs AFTER linked: a crash between them
+                # leaves no processed_docs, so the rerun is fresh and
+                # overwrites linked — work repeated, never lost
+                seen.write(todo.select("doc_id"), mode=mode,
                            stage="link")
             self._deferred.append(ex.submit(_commit_linked))
             return flat_cp
@@ -165,15 +155,15 @@ class KGPipeline:
             flat = flat.localCheckpoint(eager=True)
             self._inc_new_linked = flat
             self._inc_new_docs = todo
-        t.write(flat, mode="append", stage="link")
+        t.write(flat, mode=mode, stage="link")
         # same ordering constraint as above; nothing downstream depends
         # on processed_docs, so with an executor it overlaps the
         # edges/triples stages
         if ex is not None:
             self._deferred.append(ex.submit(
-                seen.write, todo.select("doc_id"), "append", "link"))
+                seen.write, todo.select("doc_id"), mode, "link"))
         else:
-            seen.write(todo.select("doc_id"), mode="append", stage="link")
+            seen.write(todo.select("doc_id"), mode=mode, stage="link")
         return t.read(spark)
 
     def stage_canonical(self, catalog: DataFrame) -> DataFrame:
@@ -392,10 +382,3 @@ class KGPipeline:
         return {"linked": linked, "canonical": canon, "edges": edges,
                 "triples": triples, "nodes": nodes}
 
-
-def read_fixtures(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
-    return {
-        "docs": spark.read.parquet(os.path.join(fixture_dir, "docs.parquet")),
-        "catalog": spark.read.parquet(os.path.join(fixture_dir, "catalog.parquet")),
-        "taxonomy": spark.read.parquet(os.path.join(fixture_dir, "taxonomy.parquet")),
-    }

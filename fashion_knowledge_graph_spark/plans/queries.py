@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from .. import taxonomy as tx
 from ..functions.embeddings import clip_text_embed_udf, text_embed_udf
 from ..operators import linking as lk
-from ..operators import mentions as mn
 from ..operators.rrf import add_rank, rrf_fuse
 from ..operators.topk import grouped_top_k
 
@@ -148,14 +147,15 @@ def two_hop_recommend(edges: DataFrame, seeds: DataFrame,
 
 
 def outfit_from_image(query_docs: DataFrame, catalog: DataFrame,
-                      threshold: float = 0.7, top_k: int = tx.LINK_TOP_K,
-                      strategy: str = "exact") -> DataFrame:
+                      threshold: float = 0.7,
+                      top_k: int = tx.LINK_TOP_K) -> DataFrame:
     """Query media docs (input_hint shape) → detected garment mentions
-    → linking join against the catalog (threshold 0.7,
-    recommender.py:227). Returns matched catalog items per query doc."""
-    mentions = mn.image_mentions(query_docs)
-    linked = lk.link_mentions(mentions, catalog, strategy=strategy,
-                              top_k=top_k, threshold=threshold)
+    → linking against the catalog (threshold 0.7, recommender.py:227)
+    through the same gate and paths as the KG build
+    (``linking.link_mentions``). Returns matched catalog items per
+    query doc."""
+    linked = lk.link_mentions(query_docs, catalog, top_k=top_k,
+                              threshold=threshold)
     return linked.select("doc_id", "span_idx", "product_id",
                          "category", "score")
 

@@ -20,9 +20,9 @@ Semantics matched to Iceberg:
 - time travel: ``read(spark, snapshot_id=N)``
 
 Lineage (north_rule: "every stage writes per-partition lineage +
-metrics"): ``write`` computes per-output-partition row counts during
-the same job via an accumulator inside a mapInPandas pass-through (no
-second scan) and commits them next to the snapshot.
+metrics"): after the plain JVM write, ``write`` reads each new file's
+parquet footer on the driver (row count, optional min/max bounds — no
+second scan of the data) and commits them in the snapshot manifest.
 """
 
 from __future__ import annotations
@@ -84,8 +84,9 @@ class SnapshotTable:
         """Commit ``df`` as a new snapshot; returns snapshot id.
 
         Lineage rows (stage, partition_id, output_rows, wall_ms,
-        snapshot_id) are collected during the same write job via an
-        accumulator and stored in the manifest.
+        snapshot_id) come from the parquet footers of the files this
+        write produced (one driver-side footer read per file) and are
+        stored in the manifest.
 
         ``stats_cols``: column names whose per-FILE min/max are read
         from the parquet footers (no data pass — the same footer open
@@ -183,15 +184,18 @@ class SnapshotTable:
         }
         if file_stats:
             manifest["file_stats"] = file_stats
+        self._put_manifest(manifest)
+        self.publish(sid)
+        return sid
+
+    def _put_manifest(self, manifest: dict) -> None:
+        """Write a snapshot manifest atomically: temp file, then rename.
+        The manifest must exist before CURRENT may point at it."""
+        sid = manifest["snapshot_id"]
         tmp = os.path.join(self.snap_dir, f".{sid:08d}.json.tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, os.path.join(self.snap_dir, f"{sid:08d}.json"))
-        tmp_cur = os.path.join(self.snap_dir, ".CURRENT.tmp")
-        with open(tmp_cur, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp_cur, os.path.join(self.snap_dir, "CURRENT"))
-        return sid
 
     def delete_where(self, spark: SparkSession,
                      condition: Column | str) -> int:
@@ -422,14 +426,8 @@ class SnapshotTable:
         }
         if tgt.get("file_stats"):
             manifest["file_stats"] = tgt["file_stats"]
-        tmp = os.path.join(self.snap_dir, f".{sid:08d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.snap_dir, f"{sid:08d}.json"))
-        tmp_cur = os.path.join(self.snap_dir, ".CURRENT.tmp")
-        with open(tmp_cur, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp_cur, os.path.join(self.snap_dir, "CURRENT"))
+        self._put_manifest(manifest)
+        self.publish(sid)
         return sid
 
     def count_rows(self, snapshot_id: int | None = None) -> int:
@@ -470,25 +468,22 @@ class SnapshotTable:
         run against the staged snapshot (``read(spark, sid)``). The
         staged snapshot is an overwrite of table content when
         published; until then it is invisible and expirable."""
-        cur_path = os.path.join(self.snap_dir, "CURRENT")
         before = self.current_snapshot()
         sid = self.write(df, mode="overwrite", stage=stage or "staged",
                          stats_cols=stats_cols)
         # write() moved CURRENT; restore it (atomic replace, same
         # mechanism) — the manifest stays, unreferenced
         if before is None:
-            os.unlink(cur_path)
+            os.unlink(os.path.join(self.snap_dir, "CURRENT"))
         else:
-            tmp = os.path.join(self.snap_dir, ".CURRENT.tmp")
-            with open(tmp, "w") as f:
-                f.write(str(before))
-            os.replace(tmp, cur_path)
+            self.publish(before)
         return sid
 
     def publish(self, snapshot_id: int) -> None:
-        """WAP step 3: atomically point CURRENT at an audited staged
-        snapshot. One rename — readers switch between two complete
-        table states, never a partial one."""
+        """Atomically point CURRENT at a committed snapshot — the
+        commit point of every write, and WAP step 3 for an audited
+        staged snapshot. One rename — readers switch between two
+        complete table states, never a partial one."""
         self._manifest(snapshot_id)          # must exist
         tmp = os.path.join(self.snap_dir, ".CURRENT.tmp")
         with open(tmp, "w") as f:
@@ -581,18 +576,6 @@ class SnapshotTable:
         shutil.rmtree(self.root, ignore_errors=True)
 
 
-def metrics_df(spark: SparkSession, tables: dict[str, SnapshotTable]) -> DataFrame:
-    """All stages' lineage as one DataFrame (A9 in SURVEY §2.D)."""
-    rows = []
-    for name, t in tables.items():
-        for r in t.lineage():
-            rows.append((name, r.get("stage"), r["partition_id"],
-                         r["output_rows"], r["snapshot_id"], r["wall_ms"]))
-    return spark.createDataFrame(
-        rows, "table string, stage string, partition_id int, "
-              "output_rows long, snapshot_id int, wall_ms long")
-
-
 def metrics_totals_df(spark: SparkSession,
                       tables: dict[str, SnapshotTable]) -> DataFrame:
     """Per-(table, stage) lineage row totals — the deterministic
@@ -610,8 +593,3 @@ def metrics_totals_df(spark: SparkSession,
     return spark.createDataFrame(
         rows, "table string, stage string, output_rows long")
 
-
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """Ad-hoc per-partition metrics for any DataFrame."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows"))

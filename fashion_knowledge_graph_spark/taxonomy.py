@@ -166,20 +166,3 @@ def taxonomy_pdf():
     pdf["embedding"] = list(vecs.astype("float32"))
     return pdf
 
-
-def taxonomy_df(spark):
-    """Taxonomy as a Spark DataFrame (broadcast-sized dim)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("value", T.StringType(), False),
-        T.StructField("aliases", T.ArrayType(T.StringType()), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-    ])
-    pdf = taxonomy_pdf()
-    rows = [
-        (r.pred, r.value, list(r.aliases), [float(x) for x in r.embedding])
-        for r in pdf.itertuples()
-    ]
-    return spark.createDataFrame(rows, schema)

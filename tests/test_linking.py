@@ -38,22 +38,6 @@ def test_threshold_gate_is_top1_then_threshold(spark, docs_df, catalog_df):
     assert noise.count() == 0
 
 
-def test_matmul_equals_exact(spark, docs_df, catalog_df):
-    from fashion_knowledge_graph_spark.operators import linking as lk
-    from fashion_knowledge_graph_spark.operators import mentions as mn
-
-    m = mn.image_mentions(docs_df)
-    a = lk.link_exact(m, catalog_df)
-    b = lk.link_broadcast_matmul(m, catalog_df)
-    ka = {(r["doc_id"], r["span_idx"]): (r["product_id"], r["category"],
-                                         round(r["score"], 6))
-          for r in a.collect()}
-    kb = {(r["doc_id"], r["span_idx"]): (r["product_id"], r["category"],
-                                         round(r["score"], 6))
-          for r in b.collect()}
-    assert ka == kb and ka
-
-
 def test_fused_detect_and_link_equals_exact(spark, docs_df, catalog_df):
     """The single-kernel fused path (detect + embed + link in one
     mapInArrow pass) must emit exactly the two-kernel plan's links,

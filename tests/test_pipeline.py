@@ -1,4 +1,7 @@
+from collections import Counter
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from fashion_knowledge_graph_spark.plans.pipeline import KGPipeline
@@ -20,7 +23,7 @@ def _expected_triples(oracle_out):
 
 def test_full_build_matches_oracle(spark, docs_df, catalog_df,
                                    oracle_out, tmp_path):
-    pipe = KGPipeline(warehouse=str(tmp_path / "wh"), link_strategy="exact")
+    pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     out = pipe.build(docs_df, catalog_df)
 
     got_edges = rows_set(out["edges"], EDGE_COLS)
@@ -48,13 +51,13 @@ def test_resume_is_incremental_and_identical(spark, docs_df, catalog_df,
     one-shot full build."""
     half = docs_df.filter(F.crc32(F.col("doc_id")) % 2 == 0)
 
-    pipe1 = KGPipeline(warehouse=str(tmp_path / "wh1"), link_strategy="exact")
+    pipe1 = KGPipeline(warehouse=str(tmp_path / "wh1"))
     pipe1.build(half, catalog_df)
     snap_after_half = pipe1.table("linked").current_snapshot()
     out1 = pipe1.build(docs_df, catalog_df)   # resumes: only new docs linked
     assert pipe1.table("linked").current_snapshot() > snap_after_half
 
-    pipe2 = KGPipeline(warehouse=str(tmp_path / "wh2"), link_strategy="exact")
+    pipe2 = KGPipeline(warehouse=str(tmp_path / "wh2"))
     out2 = pipe2.build(docs_df, catalog_df)
 
     for name, cols in (("edges", EDGE_COLS), ("triples", TRIPLE_COLS)):
@@ -63,17 +66,81 @@ def test_resume_is_incremental_and_identical(spark, docs_df, catalog_df,
 
 
 def test_resume_skips_done_work(spark, docs_df, catalog_df, tmp_path):
-    pipe = KGPipeline(warehouse=str(tmp_path / "wh"), link_strategy="exact")
+    pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     pipe.build(docs_df, catalog_df)
     sid = pipe.table("linked").current_snapshot()
     pipe.build(docs_df, catalog_df)   # nothing new → no new linked snapshot
     assert pipe.table("linked").current_snapshot() == sid
 
 
+def _table_bags(spark, pipe):
+    """Committed linked/edges/triples/nodes as row multisets (a set
+    would hide a duplicated row)."""
+    def row(r):
+        return tuple(tuple(v) if isinstance(v, list)
+                     else round(v, 9) if isinstance(v, float) else v
+                     for v in r)
+    out = {}
+    for name in ("linked", "edges", "triples", "nodes"):
+        df = pipe.table(name).read(spark)
+        out[name] = Counter(
+            row(r) for r in df.select(*sorted(df.columns)).collect())
+    return out
+
+
+def test_fresh_build_replaces_existing_warehouse(spark, docs_df,
+                                                 catalog_df, tmp_path):
+    """resume=False into a warehouse that already holds a build must end
+    with ONE build's tables — linked used to gain a second copy of
+    every row."""
+    wh = str(tmp_path / "wh")
+    KGPipeline(warehouse=wh).build(docs_df, catalog_df, resume=False)
+    pipe = KGPipeline(warehouse=wh)
+    pipe.build(docs_df, catalog_df, resume=False)
+    clean = KGPipeline(warehouse=str(tmp_path / "clean"))
+    clean.build(docs_df, catalog_df, resume=False)
+    got, exp = _table_bags(spark, pipe), _table_bags(spark, clean)
+    for name in exp:
+        assert got[name] == exp[name], name
+
+
+def test_resume_after_crash_between_link_commits(spark, docs_df, catalog_df,
+                                                 tmp_path, monkeypatch):
+    """A fresh build that dies after the linked commit but before the
+    processed_docs commit, then resumed, must equal a clean build: with
+    no processed_docs the rerun is fresh and must replace linked, not
+    append to it."""
+    from fashion_knowledge_graph_spark.sources.tables import SnapshotTable
+
+    real_write = SnapshotTable.write
+    crashed = []
+
+    def crash_once(self, df, *a, **k):
+        if self.root.endswith("processed_docs") and not crashed:
+            crashed.append(self.root)
+            raise RuntimeError("injected crash before processed_docs")
+        return real_write(self, df, *a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "write", crash_once)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        KGPipeline(warehouse=wh).build(docs_df, catalog_df, resume=False)
+    assert crashed
+    pipe = KGPipeline(warehouse=wh)           # a restarted driver
+    assert pipe.table("linked").exists()
+    assert not pipe.table("processed_docs").exists()
+    pipe.build(docs_df, catalog_df, resume=True)
+    clean = KGPipeline(warehouse=str(tmp_path / "clean"))
+    clean.build(docs_df, catalog_df, resume=False)
+    got, exp = _table_bags(spark, pipe), _table_bags(spark, clean)
+    for name in exp:
+        assert got[name] == exp[name], name
+
+
 def test_delete_where_and_time_travel(spark, docs_df, catalog_df, tmp_path):
     """Row-level DELETE (S9/S10): anti-filter rewrite as a new
     snapshot; the pre-delete snapshot stays readable (time travel)."""
-    pipe = KGPipeline(warehouse=str(tmp_path / "wh"), link_strategy="exact")
+    pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     out = pipe.build(docs_df, catalog_df)
     nodes_t = pipe.table("nodes")
     pre_sid = nodes_t.current_snapshot()
@@ -94,7 +161,7 @@ def test_detach_delete_product_cascades_to_edges(spark, docs_df,
                                                  catalog_df, tmp_path):
     """DETACH DELETE semantics (graph_database.py:400-446): dropping a
     node also drops every incident edge, in one logical operation."""
-    pipe = KGPipeline(warehouse=str(tmp_path / "wh"), link_strategy="exact")
+    pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     out = pipe.build(docs_df, catalog_df)
     edges = out["edges"].collect()
     assert edges, "fixture must produce edges"
@@ -181,18 +248,18 @@ def test_spec_attrs_parses_datasheets(spark):
 
 def test_at_scale_branches_full_build(spark, docs_df, catalog_df, tmp_path):
     """The 100×-scale code paths run END TO END through one build:
-    link_strategy="lsh" (banded blocking join) + canon/cc driver
+    broadcast_budget_mb=0 (banded blocking join) + canon/cc driver
     thresholds at 0, so link_lsh, near_duplicate_pairs and
     _cc_label_propagation produce the FINAL tables — not just their
     parity tests. The fixture's mention→catalog matches are
     attribute-compositional (scores ≈1), where 16×16-bit sign-LSH
     recall is ≈0.999, so the at-scale build must equal the
     fused/driver-UF build exactly."""
-    fast = KGPipeline(warehouse=str(tmp_path / "wh_fast"))  # auto: fused + driver UF
+    fast = KGPipeline(warehouse=str(tmp_path / "wh_fast"))  # fused + driver UF
     out_fast = fast.build(docs_df, catalog_df)
 
     at_scale = KGPipeline(warehouse=str(tmp_path / "wh_scale"),
-                          link_strategy="lsh",
+                          broadcast_budget_mb=0,
                           canon_driver_threshold=0,
                           cc_driver_threshold=0)
     out_scale = at_scale.build(docs_df, catalog_df)
@@ -225,7 +292,7 @@ def test_broadcast_gate_is_byte_based(spark):
 
 def test_pipeline_budget_knob_forces_lsh(spark, docs_df, catalog_df,
                                          tmp_path, monkeypatch):
-    """broadcast_budget_mb=0 must push an "auto" build off the fused
+    """broadcast_budget_mb=0 must push a build off the fused
     packed-broadcast path onto link_lsh even for a dim-sized catalog
     (row count alone used to gate this)."""
     from fashion_knowledge_graph_spark.operators import linking as lk

@@ -114,7 +114,7 @@ def test_edges_plan_shuffles_narrow_rows_only(spark, docs_df, catalog_df,
     commit."""
     from fashion_knowledge_graph_spark.plans.pipeline import KGPipeline
 
-    pipe = KGPipeline(warehouse=str(tmp_path / "wh"), link_strategy="exact")
+    pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     linked = pipe.stage_linked(docs_df, catalog_df, resume=False)
     canon = pipe.stage_canonical(catalog_df)
     plan = _plan(pipe._edges_df(linked, canon))

@@ -8,7 +8,7 @@ from fashion_knowledge_graph_spark.plans.pipeline import KGPipeline
 @pytest.fixture(scope="module")
 def kg(spark, docs_df, catalog_df, tmp_path_factory):
     wh = tmp_path_factory.mktemp("qwh")
-    pipe = KGPipeline(warehouse=str(wh), link_strategy="exact")
+    pipe = KGPipeline(warehouse=str(wh))
     return pipe.build(docs_df, catalog_df)
 
 

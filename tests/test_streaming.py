@@ -20,7 +20,7 @@ def test_streaming_linked_equals_batch(spark, docs_df, catalog_df,
                                        docs_stream_dir, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("swh"))
     ck = str(tmp_path_factory.mktemp("sck"))
-    pipe = KGPipeline(warehouse=wh, link_strategy="exact")
+    pipe = KGPipeline(warehouse=wh)
     stream = st.stream_docs(spark, docs_stream_dir, max_files_per_trigger=1)
     q = st.stream_linked(stream, catalog_df, pipe, ck)
     q.awaitTermination(300)
@@ -28,7 +28,7 @@ def test_streaming_linked_equals_batch(spark, docs_df, catalog_df,
     got = pipe.table("linked").read(spark)
     # batch result over the same docs
     wh2 = str(tmp_path_factory.mktemp("bwh"))
-    pipe2 = KGPipeline(warehouse=wh2, link_strategy="exact")
+    pipe2 = KGPipeline(warehouse=wh2)
     exp = pipe2.stage_linked(docs_df, catalog_df, resume=False)
     key = ["doc_id", "span_idx", "product_id"]
     assert sorted(map(tuple, got.select(*key).collect())) == \
@@ -43,7 +43,7 @@ def test_streaming_restart_is_idempotent(spark, docs_df, catalog_df,
     duplicate linked rows (checkpoint + processed-docs anti-join)."""
     wh = str(tmp_path_factory.mktemp("swh2"))
     ck = str(tmp_path_factory.mktemp("sck2"))
-    pipe = KGPipeline(warehouse=wh, link_strategy="exact")
+    pipe = KGPipeline(warehouse=wh)
     for _ in range(2):
         stream = st.stream_docs(spark, docs_stream_dir)
         q = st.stream_linked(stream, catalog_df, pipe, ck)

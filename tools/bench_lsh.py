@@ -2,8 +2,8 @@
 
 Builds a large synthetic catalog (datagen, deterministic), links the
 sf0.1-derived mention stream against it with the LSH-blocked join,
-and reports throughput + recall vs the broadcast-matmul exact path
-on a sample. Usage:
+and reports throughput + recall vs a distributed exact join on a
+sample. Usage:
 
     python tools/bench_lsh.py [n_products] [replicate]
 """
@@ -96,20 +96,15 @@ def main():
     from pyspark.sql import functions as F
     sample = docs.filter(F.crc32(F.col("doc_id")) % 100 == 0)
     sm = mn.image_mentions(sample)
-    if n_products <= 300_000:
-        exact_df = lk.link_broadcast_matmul(sm, catalog)
-    else:
-        # 1M+ catalog: the matmul path collects the catalog to the
-        # driver (boxed Rows ≈ 12 GB at 1M×512f) — compute the exact
-        # ground truth DISTRIBUTED instead: shuffle join on the
-        # metadata-filter keys, Arrow dot kernel, same W5 gate
-        m = lk._mention_side(sm)
-        c = lk._catalog_side(catalog)
-        cand = m.join(c, lk._filter_cond(), "inner")
-        scored = lk._dot_arrow(cand, "embedding", "c_embedding", "score") \
-            .select("doc_id", "span_idx", "product_id", "score")
-        exact_df = lk._top1_then_threshold(
-            scored, ["doc_id", "span_idx"], 5, 0.7)
+    # exact ground truth computed DISTRIBUTED at every catalog size (a
+    # driver-packed catalog is ~12 GB of boxed Rows at 1M×512f): shuffle
+    # join on the metadata-filter keys, Arrow dot kernel, same W5 gate
+    cand = lk._mention_side(sm).join(lk._catalog_side(catalog),
+                                     lk._filter_cond(), "inner")
+    scored = lk._dot_arrow(cand, "embedding", "c_embedding", "score") \
+        .select("doc_id", "span_idx", "product_id", "score")
+    exact_df = lk._top1_then_threshold(
+        scored, ["doc_id", "span_idx"], 5, 0.7)
     exact = {(r["doc_id"], r["span_idx"]): r["product_id"]
              for r in exact_df.collect()}
     approx = {(r["doc_id"], r["span_idx"]): r["product_id"]

@@ -10,8 +10,7 @@ master/cluster manager):
          --conf spark.executor.memory=14g] \
         tools/submit_build.py \
         --docs /data/docs.parquet --catalog /data/catalog.parquet \
-        --warehouse /data/kg_warehouse [--resume] \
-        [--link-strategy auto|exact|lsh] [--n-entities 150]
+        --warehouse /data/kg_warehouse [--resume] [--n-entities 150]
 
 Reads the interleaved-docs table (or a flat (doc_id, text) corpus,
 auto-adapted through sources/interleave.py), runs the full build —
@@ -44,8 +43,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true",
                     help="resume from the warehouse's last snapshots "
                          "(O(new) delta maintenance when possible)")
-    ap.add_argument("--link-strategy", default="auto",
-                    choices=("auto", "exact", "lsh"))
     ap.add_argument("--n-entities", type=int, default=150,
                     help="entity count used when adapting a flat corpus")
     args = ap.parse_args()
@@ -64,8 +61,7 @@ def main() -> None:
         docs = interleaved_docs(docs, n_entities=args.n_entities)
     catalog = spark.read.parquet(args.catalog)
 
-    pipe = KGPipeline(warehouse=args.warehouse,
-                      link_strategy=args.link_strategy)
+    pipe = KGPipeline(warehouse=args.warehouse)
     t0 = time.time()
     out = pipe.build(docs, catalog, resume=args.resume)
     wall = time.time() - t0
