@@ -148,7 +148,7 @@ _KG_TABLES = ("linked", "canonical", "edges", "triples", "nodes")
 # only hashes the datagen/hash modules, so e.g. the round-3 edge
 # `source` change or a new materialized artifact needs this token to
 # invalidate cached worlds in /tmp
-_KG_WORLD_V = "w6"   # w6: linked built through the byte-budget gate
+_KG_WORLD_V = "w7"   # w7: canonical built by the blocked driver path
 
 
 def _kg_paths(sf_dir: str) -> dict[str, str]:

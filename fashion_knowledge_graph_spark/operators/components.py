@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .. import taxonomy as tx
 from ..functions.embeddings import cosine_col, hyperplanes, make_signature_udf
+from . import linking as lk
 
 DUP_COSINE = 0.98
 
@@ -112,28 +113,33 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
         if edges.limit(edge_cap + 1).count() > edge_cap:
             return _cc_label_propagation(edges, vertices, id_col, max_iter)
         vs = [r[0] for r in vertices.select(id_col).collect()]
-        parent = {v: v for v in vs}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in edges.select("src", "dst").collect():
-            a, b = find(r[0]), find(r[1])
-            if a != b:
-                lo, hi = (a, b) if a < b else (b, a)
-                parent[hi] = lo
-        spark = vertices.sparkSession
-        rows = [(v, find(v)) for v in vs]
+        root = _union_find(vs, edges.select("src", "dst").collect())
         schema = vertices.select(
             F.col(id_col).alias("id"),
             F.col(id_col).alias("component")).schema
-        return spark.createDataFrame(rows, schema)
+        return vertices.sparkSession.createDataFrame(
+            list(root.items()), schema)
     return _cc_label_propagation(edges, vertices, id_col, max_iter)
+
+
+def _union_find(ids, pairs) -> dict:
+    """Driver union-find: id → min id of its component. Linking the
+    larger root under the smaller keeps every root its component's
+    minimum."""
+    parent = {v: v for v in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        a, b = find(a), find(b)
+        if a != b:
+            lo, hi = (a, b) if a < b else (b, a)
+            parent[hi] = lo
+    return {v: find(v) for v in ids}
 
 
 def _cc_label_propagation(edges: DataFrame, vertices: DataFrame,
@@ -160,61 +166,51 @@ def _cc_label_propagation(edges: DataFrame, vertices: DataFrame,
     return labels
 
 
+# row-block height of the driver canonicalization's cosine: a block
+# of _SIM_BLOCK rows against its whole (type, color) group bounds the
+# similarity buffer at _SIM_BLOCK × group rows of float64
+_SIM_BLOCK = 512
+
+
 def canonical_mapping(catalog: DataFrame,
                       threshold: float = DUP_COSINE,
-                      driver_threshold: int = 20_000,
-                      cc_driver_threshold: int = 200_000) -> DataFrame:
+                      budget_mb: int = lk.BROADCAST_BUDGET_MB) -> DataFrame:
     """catalog → (product_id, canonical_id) — identity for singletons.
 
-    Dim-sized catalogs (≤ ``driver_threshold``) run entirely on the
-    driver: exact O(n²) numpy cosine + union-find — the distributed
-    LSH self-join spends ~10 Spark jobs on 300 rows otherwise (pure
-    fixed cost in every build). Larger catalogs keep the LSH-blocked
-    pair generation + distributed CC. Results identical
-    (tests/test_components.py pins both paths)."""
-    n = catalog.count()
-    if n <= driver_threshold:
+    A catalog that fits the linking gate (``linking.
+    fits_driver_broadcast`` at ``budget_mb``) runs entirely on the
+    driver: exact cosine within each (type, color) group of
+    ``linking.pack_catalog`` — the LSH path's blocking key — in row
+    blocks, then union-find. Up to the gate this beats the LSH
+    self-join, which shuffles the banded embeddings (and spends ~10
+    Spark jobs even on a few hundred rows). Larger catalogs take the
+    LSH-blocked pair generation + connected components. Both paths
+    read only product_id, type, color and embedding, and give
+    identical results (tests/test_components.py pins both paths)."""
+    if lk.fits_driver_broadcast(catalog, budget_mb):
         import numpy as np
 
-        rows = catalog.select("product_id", "type", "color",
-                              "embedding").collect()
-        rows.sort(key=lambda r: r["product_id"])
-        ids = [r["product_id"] for r in rows]
-        keys = [(r["type"], r["color"]) for r in rows]
-        mat = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                        for r in rows])
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
-        sims = mat @ mat.T
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        ii, jj = np.nonzero(sims >= threshold)
-        for i, j in zip(ii, jj):
-            # blocking-key parity with the LSH path: same (type,color)
-            if i < j and keys[i] == keys[j]:
-                a, b = find(int(i)), find(int(j))
-                if a != b:
-                    lo, hi = (a, b) if a < b else (b, a)
-                    parent[hi] = lo
-        out = [(ids[i], ids[find(i)]) for i in range(n)]
+        ids, pairs = [], []
+        for pids, mat in lk.pack_catalog(catalog, extra=()).values():
+            ids.extend(pids)
+            mat /= np.maximum(
+                np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
+            for lo in range(0, len(pids), _SIM_BLOCK):
+                i, j = np.nonzero(mat[lo:lo + _SIM_BLOCK] @ mat.T
+                                  >= threshold)
+                keep = lo + i < j
+                pairs.extend(zip(pids[lo + i[keep]], pids[j[keep]]))
         return catalog.sparkSession.createDataFrame(
-            out, "product_id string, canonical_id string")
+            sorted(_union_find(ids, pairs).items()),
+            "product_id string, canonical_id string")
     pairs = near_duplicate_pairs(catalog, threshold)
-    labels = connected_components(pairs, catalog, id_col="product_id",
-                                  driver_threshold=cc_driver_threshold)
+    labels = connected_components(pairs, catalog, id_col="product_id")
     return labels.select(F.col("id").alias("product_id"),
                          F.col("component").alias("canonical_id"))
 
 
 def update_canonical_mapping(catalog: DataFrame, old_mapping: DataFrame,
-                             threshold: float = DUP_COSINE,
-                             cc_driver_threshold: int = 200_000
-                             ) -> DataFrame:
+                             threshold: float = DUP_COSINE) -> DataFrame:
     """Fold NEW catalog items into an existing canonical mapping
     without re-generating pairs for the whole catalog — the
     incremental path a 10^12-row catalog actually runs (from-scratch
@@ -229,9 +225,10 @@ def update_canonical_mapping(catalog: DataFrame, old_mapping: DataFrame,
     edges come from one probe-restricted LSH join. Components — and
     therefore min-id canonical labels — match a full recompute up to
     the banded join's recall (≈0.999 at the 0.98 duplicate threshold;
-    the same approximation the from-scratch >20k path makes). Pinned
-    exactly equal on fixtures by tests/test_components.py, including
-    a new item BRIDGING two previously separate components.
+    the same approximation the from-scratch path makes past the byte
+    budget). Pinned exactly equal on fixtures by
+    tests/test_components.py, including a new item BRIDGING two
+    previously separate components.
 
     Contract: supports catalog GROWTH only. Star edges stand in for
     pairwise connectivity inside old components, so with deletions
@@ -248,8 +245,7 @@ def update_canonical_mapping(catalog: DataFrame, old_mapping: DataFrame,
         .select(F.col("product_id").alias("src"),
                 F.col("canonical_id").alias("dst"))
     edges = pairs.select("src", "dst").union(old_edges)
-    labels = connected_components(edges, catalog, id_col="product_id",
-                                  driver_threshold=cc_driver_threshold)
+    labels = connected_components(edges, catalog, id_col="product_id")
     return labels.select(F.col("id").alias("product_id"),
                          F.col("component").alias("canonical_id"))
 

@@ -30,6 +30,9 @@ src/engine/process_social_media_images.py:78-99):
   near-duplicate photos (cosine ≥ 0.98) ≈ 0.999; verified ≥ 0.95 vs
   brute force in tests.
 
+The same gate picks canonicalization's driver path
+(``components.canonical_mapping``), which packs its own copy.
+
 ``link_exact`` (broadcast join, exact cosine, window top-1) is the
 relational reference both paths are tested against; no build path
 selects it.
@@ -206,24 +209,31 @@ def _dot_arrow(df: DataFrame, a_col: str, b_col: str,
     return df.mapInArrow(kernel, out_schema)
 
 
-def _pack_catalog(catalog: DataFrame) -> dict:
-    """(type, color) → (pids, categories, genders, unit-vec matrix),
-    sorted by product_id so argmax ties resolve to the min id."""
+def pack_catalog(catalog: DataFrame,
+                 extra: tuple = ("category", "gender")) -> dict:
+    """(type, color) → (pids, *``extra`` columns, float64 embedding
+    matrix), rows sorted by product_id so argmax ties resolve to the
+    min id. One Arrow collect: the embeddings reach the driver as one
+    flat float buffer, not as a Python float per element (~4× the
+    packed bytes)."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    rows = _catalog_side(catalog).collect()
-    rows.sort(key=lambda r: r["product_id"])
+    t = catalog.select("product_id", "type", "color", *extra,
+                       "embedding").toArrow()
+    if t.num_rows == 0:
+        return {}
+    t = t.take(pc.sort_indices(t, [("product_id", "ascending")]))
+    vecs = t.column("embedding").combine_chunks().flatten().to_numpy() \
+        .reshape(t.num_rows, -1)
+    cols = [np.array(t.column(c).to_pylist(), dtype=object)
+            for c in ("product_id", *extra)]
     groups: dict = {}
-    for r in rows:
-        groups.setdefault((r["c_type"], r["c_color"]), []).append(r)
-    return {
-        k: (np.array([r["product_id"] for r in g], dtype=object),
-            np.array([r["c_category"] for r in g], dtype=object),
-            np.array([r["c_gender"] for r in g], dtype=object),
-            np.stack([np.asarray(r["c_embedding"], dtype=np.float64)
-                      for r in g]))
-        for k, g in groups.items()
-    }
+    for i, k in enumerate(zip(t.column("type").to_pylist(),
+                              t.column("color").to_pylist())):
+        groups.setdefault(k, []).append(i)
+    return {k: (*(c[g] for c in cols), vecs[g].astype(np.float64))
+            for k, g in groups.items()}
 
 
 def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
@@ -251,7 +261,7 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
 
     spans = mn.explode_spans(docs).filter(
         (F.col("kind") == "image_ref") & F.col("media_ref").isNotNull())
-    bc = spans.sparkSession.sparkContext.broadcast(_pack_catalog(catalog))
+    bc = spans.sparkSession.sparkContext.broadcast(pack_catalog(catalog))
 
     out_schema = T.StructType([
         T.StructField("doc_id", spans.schema["doc_id"].dataType),
@@ -310,38 +320,34 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
     return spans.mapInArrow(kernel, out_schema)
 
 
-# Driver-broadcast budget for the packed-catalog fast path
-# (_pack_catalog → detect_and_link_fused).
+# Driver-broadcast budget for the packed-catalog fast paths
+# (pack_catalog → detect_and_link_fused, canonical_mapping's driver path).
 # A row gate alone is not a memory contract: 100k rows × 512-d
 # float64 is ~410 MB of packed numpy on the driver AND inside every
 # executor Python worker — the BYTES are what OOM, not the rows, and
 # a 4096-d catalog must fall back to LSH long before 100k rows.
 # Estimated packed size = rows × (dim × 8 + per-row overhead for the
 # three object arrays: product_id/category/gender strings).
+# The budget bounds ONE packed copy: a fresh build packs two at once
+# (linking and canonicalization overlap) and pickles linking's for the
+# broadcast, so the driver's Python peak is ~4× the packed size.
 BROADCAST_MAX_ROWS = 100_000
 BROADCAST_BUDGET_MB = 256
 _PACK_ROW_OVERHEAD = 160
 
 
-def est_packed_bytes(catalog: DataFrame) -> tuple[int, int]:
-    """(rows, estimated packed bytes) for the broadcast fast path —
-    ONE agg job (count + max embedding length; both metadata-cheap on
-    parquet/Iceberg scans with column pruning)."""
+def fits_driver_broadcast(catalog: DataFrame,
+                          budget_mb: int = BROADCAST_BUDGET_MB) -> bool:
+    """True iff the packed catalog fits on the driver, asserted in
+    BYTES (estimated packed size), not just rows — ONE agg job (count
+    + max embedding length; both metadata-cheap on parquet/Iceberg
+    scans with column pruning)."""
     row = catalog.agg(
         F.count(F.lit(1)).alias("n"),
         F.max(F.size("embedding")).alias("dim")).first()
-    n = row["n"]
-    dim = row["dim"] or 0
-    return n, n * (dim * 8 + _PACK_ROW_OVERHEAD)
-
-
-def fits_driver_broadcast(catalog: DataFrame,
-                          max_rows: int = BROADCAST_MAX_ROWS,
-                          budget_mb: int = BROADCAST_BUDGET_MB) -> bool:
-    """True iff the catalog fits the packed driver-broadcast fast
-    path, asserted in BYTES (estimated packed size), not just rows."""
-    n, est = est_packed_bytes(catalog)
-    return n <= max_rows and est <= budget_mb << 20
+    n, dim = row["n"], row["dim"] or 0
+    return n <= BROADCAST_MAX_ROWS \
+        and n * (dim * 8 + _PACK_ROW_OVERHEAD) <= budget_mb << 20
 
 
 def link_mentions(docs: DataFrame, catalog: DataFrame,

@@ -9,18 +9,24 @@ as one declarative lineage over the interleaved docs table:
   mentions ⋈ catalog ──top-1≥0.7──► linked mentions
       (one fused broadcast kernel; LSH blocking past the byte budget)
   linked ──self-join i<j──► pairs ──agg──► edges
-  catalog ──LSH self-join──► near-dups ──CC──► canonical map
+  catalog ──cosine≥0.98──► near-dups ──CC──► canonical map
+      (driver blocks + union-find; LSH self-join past the byte budget)
   linked+edges+triples ──canonicalize──► nodes / edges / triples tables
+
+The build's one setting, ``broadcast_budget_mb`` (the byte budget of
+the packed catalog on the driver, linking.fits_driver_broadcast),
+picks the physical path of both linking and canonicalization.
 
 Stage boundaries are snapshot commits (sources/tables.py): each stage
 is resumable — rerunning skips stages whose snapshot exists (and, for
 the mention stage, processes only docs not yet in the lineage,
 anti-join on doc_id). Shuffle inventory (the whole build):
-  1. LSH path only: linking join (band,bsig,type,color) — AQE
-     skew-split — then candidate dedup + top-1 window (doc_id,span_idx)
+  1. past the byte budget only: linking join (band,bsig,type,color)
+     — AQE skew-split — then candidate dedup + top-1 window
+     (doc_id,span_idx); the near-dup LSH self-join, and CC label
+     propagation once the dup graph outgrows the driver
   2. pair self-join (doc_id)               — narrow projected rows
   3. edge aggregation (src,dst,rel)        — map-side partial agg
-  4. CC iterations (small: catalog-sized)
 Everything else is map-side.
 """
 
@@ -43,22 +49,14 @@ from ..sources.tables import SnapshotTable
 
 @dataclass
 class KGPipeline:
-    """Config + table handles for one KG build."""
+    """Warehouse + table handles for one KG build."""
 
     warehouse: str
-    link_threshold: float = tx.LINK_THRESHOLD
-    link_top_k: int = tx.LINK_TOP_K
-    dup_threshold: float = cc.DUP_COSINE
-    # scale knobs — the three gates that pick driver fast paths over
-    # the distributed (100 TB) branches; broadcast_budget_mb alone
-    # picks the linking path (linking.link_mentions). Production
-    # defaults; tests set them to 0 to force the at-scale plans
-    # end-to-end
-    # (tests/test_pipeline.py::test_at_scale_branches_full_build).
+    # the one driver-fit gate (linking.fits_driver_broadcast) of
+    # linking and canonicalization; tests set it to 0 to force the
+    # at-scale plans end-to-end (test_at_scale_branches_full_build)
     broadcast_budget_mb: int = lk.BROADCAST_BUDGET_MB
-    canon_driver_threshold: int = 20_000
-    cc_driver_threshold: int = 200_000
-    tables: dict = field(default_factory=dict)
+    tables: dict = field(default_factory=dict, init=False)
 
     def __post_init__(self):
         import threading
@@ -110,10 +108,8 @@ class KGPipeline:
         # job launch — measurable against the build's fixed-cost floor)
         if resuming and todo.isEmpty():
             return t.read(spark)
-        linked = lk.link_mentions(
-            todo, catalog, top_k=self.link_top_k,
-            threshold=self.link_threshold,
-            budget_mb=self.broadcast_budget_mb)
+        linked = lk.link_mentions(todo, catalog,
+                                  budget_mb=self.broadcast_budget_mb)
         # a fresh build REPLACES whatever the warehouse holds; only a
         # resumed build adds to it
         mode = "append" if resuming else "overwrite"
@@ -172,9 +168,7 @@ class KGPipeline:
 
         def rebuild():
             t.write(cc.canonical_mapping(
-                        catalog, self.dup_threshold,
-                        driver_threshold=self.canon_driver_threshold,
-                        cc_driver_threshold=self.cc_driver_threshold),
+                        catalog, budget_mb=self.broadcast_budget_mb),
                     mode="overwrite", stage="canonicalize")
 
         self._canon_changed = True
@@ -197,30 +191,11 @@ class KGPipeline:
         if d["removed"] > 0:
             rebuild()
         elif d["added"] > 0:
-            t.write(cc.update_canonical_mapping(
-                        catalog, old, self.dup_threshold,
-                        cc_driver_threshold=self.cc_driver_threshold),
+            t.write(cc.update_canonical_mapping(catalog, old),
                     mode="overwrite", stage="canonicalize")
         else:
             self._canon_changed = False
         return t.read(spark)
-
-    def _edges_df(self, linked: DataFrame, canon: DataFrame) -> DataFrame:
-        """The edges aggregation plan (no commit).
-
-        Project down to the four pair-generation columns BEFORE the
-        self-join: the join shuffles both sides by doc_id, and shipping
-        the ten attribute fields through that exchange (plus a round-2
-        explicit repartitionByRange — a THIRD full-width shuffle the
-        hash join cannot reuse, since range partitioning doesn't
-        satisfy its clustering) saturated shared tmpfs bandwidth
-        exactly when the concurrent triples write needs it. Per-doc
-        groups are tiny (≤ a few mentions), so the doc_id hash shuffle
-        is skew-free without any explicit repartition."""
-        narrow = linked.select("doc_id", "span_idx", "product_id",
-                               "category")
-        linked_canon = cc.canonicalize(narrow, canon, ["product_id"])
-        return ed.aggregate_edges(ed.cooccurrence_pairs(linked_canon))
 
     def _incremental_ok(self, *table_names: str) -> bool:
         """True iff this resumed build may maintain the named derived
@@ -232,25 +207,39 @@ class KGPipeline:
                 and all(self.table(n).exists() for n in table_names))
 
     def _edges_plan(self, linked: DataFrame, canon: DataFrame) -> DataFrame:
-        """Full re-aggregation, or — when the resumed build only GREW
-        under an unchanged mapping — the committed edges MERGE the
-        delta aggregated over just the new docs' linked rows
-        (edges.merge_edge_delta): O(new), not O(all linked ever)."""
-        if self._incremental_ok("edges"):
-            narrow = self._inc_new_linked.select(
-                "doc_id", "span_idx", "product_id", "category")
-            delta = ed.aggregate_edges(ed.cooccurrence_pairs(
-                cc.canonicalize(narrow, canon, ["product_id"])))
-            return ed.merge_edge_delta(
-                self.table("edges").read(linked.sparkSession), delta)
-        return self._edges_df(linked, canon)
+        """The edges aggregation plan (no commit): full re-aggregation
+        of ``linked``, or — when the resumed build only GREW under an
+        unchanged mapping — the same chain over just the new docs'
+        linked rows, MERGED into the committed edges
+        (edges.merge_edge_delta): O(new), not O(all linked ever).
 
-    def stage_edges(self, linked: DataFrame, canon: DataFrame) -> DataFrame:
-        spark = linked.sparkSession
-        t = self.table("edges")
-        t.write(self._edges_plan(linked, canon), mode="overwrite",
-                stage="edges")
-        return t.read(spark)
+        Project down to the four pair-generation columns BEFORE the
+        self-join: the join shuffles both sides by doc_id, and the ten
+        attribute fields riding that exchange saturated shared tmpfs
+        bandwidth exactly when the concurrent triples write needs it.
+        Per-doc groups are tiny (≤ a few mentions), so the doc_id hash
+        shuffle is skew-free without any explicit repartition."""
+        delta = self._incremental_ok("edges")
+        rows = self._inc_new_linked if delta else linked
+        narrow = rows.select("doc_id", "span_idx", "product_id", "category")
+        agg = ed.aggregate_edges(ed.cooccurrence_pairs(
+            cc.canonicalize(narrow, canon, ["product_id"])))
+        if delta:
+            return ed.merge_edge_delta(
+                self.table("edges").read(linked.sparkSession), agg)
+        return agg
+
+    def stage_edges(self, linked: DataFrame, canon: DataFrame,
+                    ex) -> DataFrame:
+        """Aggregate the edges ONCE (localCheckpoint runs the agg job
+        now, concurrently with the triples-base write) and commit them
+        on ``ex``: the edges-table commit and the complements append
+        both read the checkpointed blocks, so they overlap instead of
+        running as back-to-back commits (the round-2 serial tail)."""
+        edges = self._edges_plan(linked, canon).localCheckpoint(eager=True)
+        self._deferred.append(ex.submit(
+            self.table("edges").write, edges, "overwrite", "edges"))
+        return edges
 
     def stage_triples_base(self, docs: DataFrame, linked: DataFrame,
                            canon: DataFrame) -> None:
@@ -296,11 +285,6 @@ class KGPipeline:
         t.write(t_comp, mode="append", stage="triples")
         return t.read(spark)
 
-    def stage_triples(self, docs: DataFrame, linked: DataFrame,
-                      canon: DataFrame, edges: DataFrame) -> DataFrame:
-        self.stage_triples_base(docs, linked, canon)
-        return self.stage_triples_comp(edges)
-
     def stage_nodes(self, catalog: DataFrame, canon: DataFrame) -> DataFrame:
         """Canonical nodes table — last-write-wins per canonical id
         (reference MERGE SET p += attrs, graph_database.py:89-92);
@@ -328,57 +312,41 @@ class KGPipeline:
 
     # ---- full build ---------------------------------------------------
     def build(self, docs: DataFrame, catalog: DataFrame,
-              resume: bool = True, parallel: bool = True) -> dict[str, DataFrame]:
-        """Run all stages. ``parallel=True`` (default) overlaps
-        independent stages from driver threads — Spark schedules
-        concurrent jobs and (with FAIR mode, session.py) interleaves
-        their tasks, so small stages fill the big stages' scheduling
-        gaps and tail idle slots instead of running serially after
-        them. Round-1 scaling decomposition attributed ~half the
-        efficiency loss to exactly this serial stage chain (kernel
-        0.92 → full build 0.52). Dependency DAG honored:
+              resume: bool = True) -> dict[str, DataFrame]:
+        """Run all stages, overlapping independent ones from driver
+        threads — Spark schedules concurrent jobs and (with FAIR mode,
+        session.py) interleaves their tasks, so small stages fill the
+        big stages' scheduling gaps and tail idle slots instead of
+        running serially after them. Round-1 scaling decomposition
+        attributed ~half the efficiency loss to a serial stage chain
+        (kernel 0.92 → full build 0.52). Dependency DAG honored:
 
             canonical ──┐                  ┌─► nodes
             linked ─────┴─► edges ─► triples
         """
-        spark = docs.sparkSession
-        if not parallel:
-            linked = self.stage_linked(docs, catalog, resume=resume)
-            canon = self.stage_canonical(catalog)
-            edges = self.stage_edges(linked, canon)
-            triples = self.stage_triples(docs, linked, canon, edges)
-            nodes = self.stage_nodes(catalog, canon)
-            return {"linked": linked, "canonical": canon, "edges": edges,
-                    "triples": triples, "nodes": nodes}
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=5) as ex:
-            f_canon = ex.submit(self.stage_canonical, catalog)
-            linked = self.stage_linked(docs, catalog, resume=resume, ex=ex)
-            canon = f_canon.result()
-            f_nodes = ex.submit(self.stage_nodes, catalog, canon)
-            # the attr+text triples write (the bulk of all output rows)
-            # overlaps the edges aggregation — it needs only linked+canon
-            f_tbase = ex.submit(self.stage_triples_base, docs, linked, canon)
-            # edges: aggregate ONCE (localCheckpoint runs the agg job
-            # now, concurrently with the triples-base write), then the
-            # edges-table commit and the complements append both read
-            # the checkpointed blocks — the round-2 serial tail
-            # (edges write → comp append as back-to-back commits) now
-            # overlaps fully
-            t_edges = self.table("edges")
-            edges_df = self._edges_plan(linked, canon) \
-                .localCheckpoint(eager=True)
-            f_ewrite = ex.submit(t_edges.write, edges_df, "overwrite",
-                                 "edges")
-            f_tbase.result()
-            triples = self.stage_triples_comp(edges_df)
-            f_ewrite.result()
-            edges = t_edges.read(spark)
-            nodes = f_nodes.result()
-            for f in self._deferred:
-                f.result()
-            self._deferred.clear()
-        return {"linked": linked, "canonical": canon, "edges": edges,
+            try:
+                f_canon = ex.submit(self.stage_canonical, catalog)
+                linked = self.stage_linked(docs, catalog, resume=resume,
+                                           ex=ex)
+                canon = f_canon.result()
+                f_nodes = ex.submit(self.stage_nodes, catalog, canon)
+                # the attr+text triples write (the bulk of all output
+                # rows) overlaps the edges aggregation — it needs only
+                # linked+canon
+                f_tbase = ex.submit(self.stage_triples_base, docs, linked,
+                                    canon)
+                edges_cp = self.stage_edges(linked, canon, ex)
+                f_tbase.result()
+                triples = self.stage_triples_comp(edges_cp)
+                nodes = f_nodes.result()
+                for f in self._deferred:
+                    f.result()
+            finally:
+                # a failed commit must not fail the next build() too
+                self._deferred.clear()
+        return {"linked": linked, "canonical": canon,
+                "edges": self.table("edges").read(docs.sparkSession),
                 "triples": triples, "nodes": nodes}
-

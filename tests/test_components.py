@@ -33,11 +33,19 @@ def test_distributed_cc_equals_driver_cc(spark, catalog_df):
         sorted(map(tuple, dist.collect()))
 
 
-def test_driver_canonical_equals_lsh_canonical(spark, catalog_df):
-    fast = cc.canonical_mapping(catalog_df)
-    dist = cc.canonical_mapping(catalog_df, driver_threshold=0)
-    assert sorted(map(tuple, fast.collect())) == \
-        sorted(map(tuple, dist.collect()))
+def test_driver_canonical_equals_lsh_canonical(spark, catalog_df,
+                                              monkeypatch):
+    """Driver and LSH canonicalization agree — also when the driver's
+    row blocks (3 rows) are smaller than a (type, color) group."""
+    dist = sorted(map(tuple, cc.canonical_mapping(
+        catalog_df, budget_mb=0).collect()))
+    assert any(p != c for p, c in dist)
+    assert catalog_df.groupBy("type", "color").count() \
+        .agg({"count": "max"}).first()[0] > 6
+    for block in (cc._SIM_BLOCK, 3):
+        monkeypatch.setattr(cc, "_SIM_BLOCK", block)
+        assert sorted(map(tuple, cc.canonical_mapping(
+            catalog_df).collect())) == dist
 
 
 def test_cc_dense_edges_fall_back_to_distributed(spark):
@@ -106,6 +114,11 @@ def test_incremental_update_bridges_components(spark):
     got = cc.update_canonical_mapping(full_cat, old_map)
     assert {tuple(r) for r in got.collect()} == \
         {("a", "a"), ("b", "a"), ("c", "a")}
+    # the same four-column catalog on both sides of the byte gate
+    for budget_mb in (0, 256):
+        scratch = cc.canonical_mapping(full_cat, budget_mb=budget_mb)
+        assert {tuple(r) for r in scratch.collect()} == \
+            {tuple(r) for r in got.collect()}
 
 
 def test_stage_canonical_incremental_and_removal(spark, catalog_df,

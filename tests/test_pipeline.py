@@ -73,15 +73,26 @@ def test_resume_skips_done_work(spark, docs_df, catalog_df, tmp_path):
     assert pipe.table("linked").current_snapshot() == sid
 
 
+def _spy(monkeypatch, calls, mod, name, **forced):
+    """Count the calls of ``mod.name`` in ``calls``, forcing the given
+    keyword arguments."""
+    real = getattr(mod, name)
+
+    def wrapped(*a, **k):
+        calls[name] += 1
+        return real(*a, **{**k, **forced})
+    monkeypatch.setattr(mod, name, wrapped)
+
+
 def _table_bags(spark, pipe):
-    """Committed linked/edges/triples/nodes as row multisets (a set
-    would hide a duplicated row)."""
+    """The five committed build tables as row multisets (a set would
+    hide a duplicated row)."""
     def row(r):
         return tuple(tuple(v) if isinstance(v, list)
                      else round(v, 9) if isinstance(v, float) else v
                      for v in r)
     out = {}
-    for name in ("linked", "edges", "triples", "nodes"):
+    for name in ("linked", "canonical", "edges", "triples", "nodes"):
         df = pipe.table(name).read(spark)
         out[name] = Counter(
             row(r) for r in df.select(*sorted(df.columns)).collect())
@@ -109,7 +120,8 @@ def test_resume_after_crash_between_link_commits(spark, docs_df, catalog_df,
     """A fresh build that dies after the linked commit but before the
     processed_docs commit, then resumed, must equal a clean build: with
     no processed_docs the rerun is fresh and must replace linked, not
-    append to it."""
+    append to it. The same object resumes: its failed commit must not
+    fail the next build() too."""
     from fashion_knowledge_graph_spark.sources.tables import SnapshotTable
 
     real_write = SnapshotTable.write
@@ -123,16 +135,18 @@ def test_resume_after_crash_between_link_commits(spark, docs_df, catalog_df,
 
     monkeypatch.setattr(SnapshotTable, "write", crash_once)
     wh = str(tmp_path / "wh")
+    pipe = KGPipeline(warehouse=wh)
     with pytest.raises(RuntimeError, match="injected crash"):
-        KGPipeline(warehouse=wh).build(docs_df, catalog_df, resume=False)
+        pipe.build(docs_df, catalog_df, resume=False)
     assert crashed
-    pipe = KGPipeline(warehouse=wh)           # a restarted driver
     assert pipe.table("linked").exists()
     assert not pipe.table("processed_docs").exists()
     pipe.build(docs_df, catalog_df, resume=True)
     clean = KGPipeline(warehouse=str(tmp_path / "clean"))
     clean.build(docs_df, catalog_df, resume=False)
-    got, exp = _table_bags(spark, pipe), _table_bags(spark, clean)
+    # read back through a restarted driver's handles
+    got = _table_bags(spark, KGPipeline(warehouse=wh))
+    exp = _table_bags(spark, clean)
     for name in exp:
         assert got[name] == exp[name], name
 
@@ -246,23 +260,34 @@ def test_spec_attrs_parses_datasheets(spark):
     }
 
 
-def test_at_scale_branches_full_build(spark, docs_df, catalog_df, tmp_path):
+def test_at_scale_branches_full_build(spark, docs_df, catalog_df, tmp_path,
+                                      monkeypatch):
     """The 100×-scale code paths run END TO END through one build:
-    broadcast_budget_mb=0 (banded blocking join) + canon/cc driver
-    thresholds at 0, so link_lsh, near_duplicate_pairs and
-    _cc_label_propagation produce the FINAL tables — not just their
-    parity tests. The fixture's mention→catalog matches are
-    attribute-compositional (scores ≈1), where 16×16-bit sign-LSH
-    recall is ≈0.999, so the at-scale build must equal the
-    fused/driver-UF build exactly."""
+    broadcast_budget_mb=0 is the one knob that moves linking onto
+    link_lsh and canonicalization onto near_duplicate_pairs; the
+    shared connected_components keeps its own size gate, forced to
+    _cc_label_propagation here by driver_threshold=0. The fixture's
+    mention→catalog matches are attribute-compositional (scores ≈1),
+    where 16×16-bit sign-LSH recall is ≈0.999, so the at-scale build
+    must equal the fused/driver-UF build exactly."""
+    from fashion_knowledge_graph_spark.operators import components as cc
+    from fashion_knowledge_graph_spark.operators import linking as lk
+
     fast = KGPipeline(warehouse=str(tmp_path / "wh_fast"))  # fused + driver UF
     out_fast = fast.build(docs_df, catalog_df)
 
+    calls = Counter()
+    for mod, name in ((lk, "link_lsh"), (lk, "pack_catalog"),
+                      (cc, "near_duplicate_pairs"),
+                      (cc, "_cc_label_propagation")):
+        _spy(monkeypatch, calls, mod, name)
+    _spy(monkeypatch, calls, cc, "connected_components", driver_threshold=0)
     at_scale = KGPipeline(warehouse=str(tmp_path / "wh_scale"),
-                          broadcast_budget_mb=0,
-                          canon_driver_threshold=0,
-                          cc_driver_threshold=0)
+                          broadcast_budget_mb=0)
     out_scale = at_scale.build(docs_df, catalog_df)
+    assert calls["link_lsh"] and calls["near_duplicate_pairs"] \
+        and calls["_cc_label_propagation"], calls
+    assert not calls["pack_catalog"], calls
 
     for name, cols in (("canonical", ["product_id", "canonical_id"]),
                        ("edges", EDGE_COLS),
@@ -283,9 +308,6 @@ def test_broadcast_gate_is_byte_based(spark):
         F.concat(F.lit("p"), F.col("id")).alias("product_id"),
         F.expr("transform(sequence(1, 16384),"
                " x -> cast(x as float) / 16384.0)").alias("embedding"))
-    n, est = lk.est_packed_bytes(wide)
-    assert n == 500
-    assert est > (32 << 20)
     assert lk.fits_driver_broadcast(wide, budget_mb=512)
     assert not lk.fits_driver_broadcast(wide, budget_mb=32)
 
@@ -297,18 +319,14 @@ def test_pipeline_budget_knob_forces_lsh(spark, docs_df, catalog_df,
     (row count alone used to gate this)."""
     from fashion_knowledge_graph_spark.operators import linking as lk
 
-    calls = []
-    real_lsh = lk.link_lsh
-    real_fused = lk.detect_and_link_fused
-    monkeypatch.setattr(lk, "link_lsh",
-                        lambda *a, **k: calls.append("lsh") or real_lsh(*a, **k))
-    monkeypatch.setattr(lk, "detect_and_link_fused",
-                        lambda *a, **k: calls.append("fused") or real_fused(*a, **k))
+    calls = Counter()
+    _spy(monkeypatch, calls, lk, "link_lsh")
+    _spy(monkeypatch, calls, lk, "detect_and_link_fused")
 
     pipe = KGPipeline(warehouse=str(tmp_path / "wh"), broadcast_budget_mb=0)
     linked = pipe.stage_linked(docs_df, catalog_df)
     assert linked.count() > 0
-    assert "lsh" in calls and "fused" not in calls
+    assert calls["link_lsh"] and not calls["detect_and_link_fused"]
 
 
 def test_resume_uses_delta_maintenance(spark, docs_df, catalog_df,
@@ -318,11 +336,8 @@ def test_resume_uses_delta_maintenance(spark, docs_df, catalog_df,
     full re-aggregation."""
     from fashion_knowledge_graph_spark.operators import edges as ed_mod
 
-    calls = []
-    real = ed_mod.merge_edge_delta
-    monkeypatch.setattr(
-        ed_mod, "merge_edge_delta",
-        lambda *a, **k: calls.append(1) or real(*a, **k))
+    calls = Counter()
+    _spy(monkeypatch, calls, ed_mod, "merge_edge_delta")
 
     half = docs_df.filter(F.crc32(F.col("doc_id")) % 2 == 0)
     pipe = KGPipeline(warehouse=str(tmp_path / "wh"))

@@ -117,7 +117,7 @@ def test_edges_plan_shuffles_narrow_rows_only(spark, docs_df, catalog_df,
     pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     linked = pipe.stage_linked(docs_df, catalog_df, resume=False)
     canon = pipe.stage_canonical(catalog_df)
-    plan = _plan(pipe._edges_df(linked, canon))
+    plan = _plan(pipe._edges_plan(linked, canon))
     shuffle_sections = [s for s in plan.split("\n(")
                         if s.split(" ", 1)[-1].startswith("Exchange")]
     assert shuffle_sections, plan
