@@ -143,21 +143,14 @@ _KG_N_PRODUCTS = 150
 _KG_TABLES = ("linked", "canonical", "edges", "triples", "nodes")
 
 
-# world layout version: bump when the PIPELINE code (not datagen)
-# changes what the materialized world contains — content_version()
-# only hashes the datagen/hash modules, so e.g. the round-3 edge
-# `source` change or a new materialized artifact needs this token to
-# invalidate cached worlds in /tmp
-_KG_WORLD_V = "w7"   # w7: canonical built by the blocked driver path
-
-
 def _kg_paths(sf_dir: str) -> dict[str, str]:
-    from fashion_knowledge_graph_spark import datagen
+    # keyed on the package's code: a change to it builds a new world
+    # (a change to _kg_world below does not)
+    from fashion_knowledge_graph_spark.session import package_sources
 
     fix_dir = os.path.join(
         tempfile.gettempdir(),
-        f"fkg_fixtures_p{_KG_N_PRODUCTS}_{_KG_WORLD_V}_"
-        f"{datagen.content_version()}_"
+        f"fkg_fixtures_p{_KG_N_PRODUCTS}_{package_sources()[0][:12]}_"
         f"{os.path.basename(os.path.normpath(sf_dir))}")
     return {
         "fix": fix_dir,
@@ -255,8 +248,7 @@ def _kg_world(spark: SparkSession, sf_dir: str) -> dict:
                     F.col("attrs.gender").alias("m_gender"),
                     "embedding") \
             .write.mode("overwrite").parquet(p["qimg"])
-        with open(p["done"], "w") as f:
-            f.write(datagen.content_version())
+        open(p["done"], "w").close()
     else:
         docs = spark.read.parquet(p["docs"])
         out = {name: pipe.table(name).read(spark) for name in _KG_TABLES}
@@ -3016,9 +3008,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from fashion_knowledge_graph_spark.operators import (
             components as cc,
         )
+        from fashion_knowledge_graph_spark.operators import linking as lk
         catalog = _kg_world(spark, sf)["catalog"]
-        old = cc.canonical_mapping(
-            catalog.filter(F.crc32("product_id") % 10 < 7))
+        part = catalog.filter(F.crc32("product_id") % 10 < 7)
+        old = cc.canonical_mapping(part, lk.pack_catalog(part))
         return cc.update_canonical_mapping(catalog, old)
 
     def kg_complete_the_look(spark, sf):

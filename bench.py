@@ -188,17 +188,18 @@ def _prepare_input(spark, sf_dir: str, replicate: int) -> tuple[str, str]:
     from pyspark.sql import functions as F
 
     from fashion_knowledge_graph_spark import datagen
+    from fashion_knowledge_graph_spark.session import package_sources
     from fashion_knowledge_graph_spark.sources.interleave import interleaved_docs
 
-    fix = os.path.join(
-        tempfile.gettempdir(),
-        f"fkg_bench_cat{N_PRODUCTS}_{datagen.content_version()}")
+    code = package_sources()[0][:8]
+    fix = os.path.join(tempfile.gettempdir(),
+                       f"fkg_bench_cat{N_PRODUCTS}_{code}")
     if not os.path.exists(os.path.join(fix, "catalog.parquet")):
         datagen.write_fixtures(fix, n_docs=1, n_products=N_PRODUCTS, seed=42)
     base = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     sf = os.path.basename(os.path.normpath(sf_dir))
     docs_dir = os.path.join(
-        base, f"fkg_docs_{datagen.content_version()}_{sf}_x{replicate}")
+        base, f"fkg_docs_{code}_{sf}_x{replicate}")
     marker = os.path.join(docs_dir, "_SUCCESS")
     if not os.path.exists(marker):
         documents = spark.read.parquet(
@@ -397,6 +398,7 @@ def run_map_only(sf_dir: str, cpus: int, replicate: int = 1,
     snapshot commits. Scaling decomposition evidence."""
     from fashion_knowledge_graph_spark.operators.linking import (
         detect_and_link_fused,
+        pack_catalog,
     )
     from fashion_knowledge_graph_spark.session import get_spark
 
@@ -409,12 +411,12 @@ def run_map_only(sf_dir: str, cpus: int, replicate: int = 1,
     warm = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
         .limit(512).repartition(cpus * 2)
     docs_dir, cat_path = _prepare_input(spark, sf_dir, replicate)
-    catalog = spark.read.parquet(cat_path)
+    packed = pack_catalog(spark.read.parquet(cat_path))
     _force(detect_and_link_fused(
-        interleaved_docs(warm, n_entities=N_PRODUCTS), catalog))
+        interleaved_docs(warm, n_entities=N_PRODUCTS), packed))
     docs = spark.read.parquet(docs_dir)
     t0 = time.time()
-    _force(detect_and_link_fused(docs, catalog))
+    _force(detect_and_link_fused(docs, packed))
     sec = time.time() - t0
     n_docs = docs.count()
     spark.stop()

@@ -53,25 +53,6 @@ TYPE_TO_CATEGORY = {
 }
 
 
-def content_version() -> str:
-    """8-hex digest of the modules that determine fixture content —
-    cache directories must embed this so a kernel change can never
-    reuse stale fixtures (datagen, the Spark UDFs, and the oracle all
-    derive values from these files)."""
-    import hashlib
-
-    from . import taxonomy
-    from .functions import hashing
-    from .sources import interleave
-
-    h = hashlib.md5()
-    pkg = __import__(__name__.rsplit(".", 1)[0], fromlist=["datagen"])
-    for mod in (hashing, taxonomy, interleave, pkg.datagen):
-        with open(mod.__file__, "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:8]
-
-
 def split_ref(refs) -> tuple[np.ndarray, np.ndarray]:
     """media_ref → (base content key, variant suffix or '').
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import taxonomy as tx
-from ..functions.embeddings import cosine_col, hyperplanes, make_signature_udf
+from ..functions.embeddings import hyperplanes, make_signature_udf
 from . import linking as lk
 
 DUP_COSINE = 0.98
@@ -33,56 +33,48 @@ def near_duplicate_pairs(catalog: DataFrame,
                          nbits: int = 64, nbands: int = 8,
                          probe: DataFrame | None = None) -> DataFrame:
     """LSH-blocked self-join of the catalog embedding space →
-    (src, dst) candidate duplicate pairs with cosine ≥ threshold.
+    (src, dst, score) pairs, src < dst, with cosine ≥ threshold.
 
-    Blocking key = (type, color, band, bsig) exactly like the linking
-    join; id1 < id2 halves the candidate set.
+    The two-phase, narrow-row plan of ``linking.link_lsh``: candidates
+    join on ids and the blocking key (type, color, band, bsig) only —
+    the 512-d vectors never ride the ``nbands``× replicated join or the
+    dedup — then each endpoint's embedding joins back by id and
+    ``linking._dot_arrow`` scores the pair (a plain dot: the cosine of
+    L2-normalized embeddings).
 
     ``probe``: optional subset of catalog rows — restricts the output
     to pairs with at least one endpoint in ``probe`` (the incremental
     canonicalization path: pair generation costs O(|new| × block)
-    instead of O(|catalog| × block); src < dst still canonical).
+    instead of O(|catalog| × block)). A probe item may collide either
+    way round, so the pair is oriented (least, greatest) before the
+    dedup; without a probe, id1 < id2 halves the candidates.
     """
     planes = hyperplanes(tx.IMG_DIM, nbits, seed_key="dedup-img")
     sig = make_signature_udf(planes, nbands)
 
-    def banded(df):
-        c = df.select("product_id", "type", "color", "embedding") \
-            .withColumn("sigs", sig("embedding"))
-        return c.select("*", F.posexplode("sigs").alias("band", "bsig")) \
-            .drop("sigs")
+    def banded(df, side):
+        return df.select(
+            *[F.col(x).alias(f"{side}_{x}")
+              for x in ("product_id", "type", "color")],
+            F.posexplode(sig("embedding")).alias(f"{side}_band",
+                                                 f"{side}_bsig"))
 
-    e = banded(catalog)
-    a_side = banded(probe) if probe is not None else e
-    a = a_side.select(*[F.col(x).alias(f"a_{x}") for x in a_side.columns])
-    b = e.select(*[F.col(x).alias(f"b_{x}") for x in e.columns])
-    on = (F.col("a_band") == F.col("b_band")) \
-        & (F.col("a_bsig") == F.col("b_bsig")) \
-        & (F.col("a_type") == F.col("b_type")) \
-        & (F.col("a_color") == F.col("b_color"))
-    if probe is None:
-        cand = a.join(
-            on=on & (F.col("a_product_id") < F.col("b_product_id")),
-            other=b, how="inner",
-        ).dropDuplicates(["a_product_id", "b_product_id"])
-        scored = cand.withColumn(
-            "score", cosine_col("a_embedding", "b_embedding"))
-        return scored.filter(F.col("score") >= threshold).select(
-            F.col("a_product_id").alias("src"),
-            F.col("b_product_id").alias("dst"), "score")
-    # probe side may collide either way round — orient the pair
-    # (least, greatest) BEFORE the dedup so probe×probe pairs are
-    # emitted once
-    cand = a.join(
-        on=on & (F.col("a_product_id") != F.col("b_product_id")),
-        other=b, how="inner",
-    ).withColumn("src", F.least("a_product_id", "b_product_id")) \
-     .withColumn("dst", F.greatest("a_product_id", "b_product_id")) \
-     .dropDuplicates(["src", "dst"])
-    scored = cand.withColumn(
-        "score", cosine_col("a_embedding", "b_embedding"))
-    return scored.filter(F.col("score") >= threshold) \
-        .select("src", "dst", "score")
+    def vec(end):
+        return catalog.select(F.col("product_id").alias(end),
+                              F.col("embedding").alias(f"{end}_emb"))
+
+    a = banded(catalog if probe is None else probe, "a")
+    b = banded(catalog, "b")
+    pid_a, pid_b = F.col("a_product_id"), F.col("b_product_id")
+    on = [F.col(f"a_{x}") == F.col(f"b_{x}")
+          for x in ("band", "bsig", "type", "color")]
+    on.append(pid_a < pid_b if probe is None else pid_a != pid_b)
+    cand = a.join(b, on, "inner").select(
+        F.least(pid_a, pid_b).alias("src"),
+        F.greatest(pid_a, pid_b).alias("dst")).dropDuplicates()
+    paired = cand.join(vec("src"), "src").join(vec("dst"), "dst")
+    return lk._dot_arrow(paired, "src_emb", "dst_emb", "score") \
+        .filter(F.col("score") >= threshold).select("src", "dst", "score")
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame,
@@ -103,22 +95,22 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
       with per-round localCheckpoint (the 100 TB path; at cluster
       scale checkpoint to a table instead).
     """
-    n_vertices = vertices.count()
-    if n_vertices <= driver_threshold:
-        # gate on EDGE count too: a pathological pair generation (e.g.
-        # a threshold that matches everything) can produce O(n²) edges
-        # under a modest vertex count — probing limit(cap+1).count()
-        # costs one cheap early-terminating job, collect() would not
-        edge_cap = 4 * driver_threshold
-        if edges.limit(edge_cap + 1).count() > edge_cap:
-            return _cc_label_propagation(edges, vertices, id_col, max_iter)
-        vs = [r[0] for r in vertices.select(id_col).collect()]
-        root = _union_find(vs, edges.select("src", "dst").collect())
-        schema = vertices.select(
-            F.col(id_col).alias("id"),
-            F.col(id_col).alias("component")).schema
-        return vertices.sparkSession.createDataFrame(
-            list(root.items()), schema)
+    # one limited collect per input both gates and feeds union-find:
+    # each plan runs once, and the driver holds at most cap + 1 rows.
+    # The EDGE gate matters too: a pathological pair generation (e.g.
+    # a threshold that matches everything) can produce O(n²) edges
+    # under a modest vertex count
+    edge_cap = 4 * driver_threshold
+    vs = [r[0] for r in vertices.select(id_col)
+          .limit(driver_threshold + 1).collect()]
+    if len(vs) <= driver_threshold:
+        pairs = edges.select("src", "dst").limit(edge_cap + 1).collect()
+        if len(pairs) <= edge_cap:
+            schema = vertices.select(
+                F.col(id_col).alias("id"),
+                F.col(id_col).alias("component")).schema
+            return vertices.sparkSession.createDataFrame(
+                list(_union_find(vs, pairs).items()), schema)
     return _cc_label_propagation(edges, vertices, id_col, max_iter)
 
 
@@ -172,32 +164,32 @@ def _cc_label_propagation(edges: DataFrame, vertices: DataFrame,
 _SIM_BLOCK = 512
 
 
-def canonical_mapping(catalog: DataFrame,
-                      threshold: float = DUP_COSINE,
-                      budget_mb: int = lk.BROADCAST_BUDGET_MB) -> DataFrame:
+def canonical_mapping(catalog: DataFrame, packed: dict | None,
+                      threshold: float = DUP_COSINE) -> DataFrame:
     """catalog → (product_id, canonical_id) — identity for singletons.
 
-    A catalog that fits the linking gate (``linking.
-    fits_driver_broadcast`` at ``budget_mb``) runs entirely on the
-    driver: exact cosine within each (type, color) group of
-    ``linking.pack_catalog`` — the LSH path's blocking key — in row
-    blocks, then union-find. Up to the gate this beats the LSH
-    self-join, which shuffles the banded embeddings (and spends ~10
-    Spark jobs even on a few hundred rows). Larger catalogs take the
-    LSH-blocked pair generation + connected components. Both paths
-    read only product_id, type, color and embedding, and give
-    identical results (tests/test_components.py pins both paths)."""
-    if lk.fits_driver_broadcast(catalog, budget_mb):
+    ``packed`` is ``linking.pack_catalog(catalog)``, the driver-fit
+    decision linking shares. A pack runs entirely on the driver: exact
+    cosine within each (type, color) group — the LSH path's blocking
+    key — in row blocks, then union-find; each block's dot products are
+    divided by the row norms, so the shared pack is only read. Up to
+    the gate this beats the LSH self-join and its Spark jobs. ``None``
+    takes the LSH-blocked ``near_duplicate_pairs`` + connected
+    components. Both paths read only product_id, type, color and
+    embedding, and give identical results (tests/test_components.py
+    pins both paths)."""
+    if packed is not None:
         import numpy as np
 
         ids, pairs = [], []
-        for pids, mat in lk.pack_catalog(catalog, extra=()).values():
+        for pids, *_, mat in packed.values():
             ids.extend(pids)
-            mat /= np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
+            norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
             for lo in range(0, len(pids), _SIM_BLOCK):
-                i, j = np.nonzero(mat[lo:lo + _SIM_BLOCK] @ mat.T
-                                  >= threshold)
+                sims = mat[lo:lo + _SIM_BLOCK] @ mat.T
+                sims /= norms[lo:lo + _SIM_BLOCK, None]
+                sims /= norms
+                i, j = np.nonzero(sims >= threshold)
                 keep = lo + i < j
                 pairs.extend(zip(pids[lo + i[keep]], pids[j[keep]]))
         return catalog.sparkSession.createDataFrame(

@@ -11,16 +11,16 @@ src/engine/process_social_media_images.py:78-99):
   ``score >= 0.7`` (W5 in SURVEY §2.E: top-1-then-threshold, NOT
   threshold-then-top-1 — every path here preserves this order)
 
-``link_mentions`` is the one entry point. Its byte-budget gate
-(``fits_driver_broadcast``: estimated packed catalog bytes against
-``BROADCAST_BUDGET_MB``) picks one of two physical paths:
+``pack_catalog`` is the one driver-fit decision: a byte-budget gate
+(``fits_driver_broadcast``: estimated packed bytes against
+``BROADCAST_BUDGET_MB``), then the pack or ``None``, which
+``link_mentions`` (the one entry point) and canonicalization take:
 
-- ``detect_and_link_fused`` — the catalog fits: it is packed per
-  (type, color) on the driver and broadcast, and ONE ``mapInArrow``
-  kernel detects, embeds and links each batch (a matmul per metadata
-  group). Exact, zero shuffles, and the 512-d embeddings never cross
-  the Arrow/JVM boundary.
-- ``link_lsh`` — the catalog is too big or too wide: both sides get
+- ``detect_and_link_fused`` — a pack: it is broadcast, and ONE
+  ``mapInArrow`` kernel detects, embeds and links each batch (a
+  matmul per metadata group). Exact, zero shuffles, and the 512-d
+  embeddings never cross the Arrow/JVM boundary.
+- ``link_lsh`` — ``None``, a catalog too big or too wide: both sides get
   sign-LSH band signatures (``NBANDS`` = 16 bands × 16 bits, from
   ``NBITS`` = 256 deterministic hyperplanes); candidates = equi-join
   on (type, color, band_idx, band_sig) — the metadata filters *are*
@@ -29,9 +29,6 @@ src/engine/process_social_media_images.py:78-99):
   residual imbalance. Exact cosine re-rank on candidates. Recall for
   near-duplicate photos (cosine ≥ 0.98) ≈ 0.999; verified ≥ 0.95 vs
   brute force in tests.
-
-The same gate picks canonicalization's driver path
-(``components.canonical_mapping``), which packs its own copy.
 
 ``link_exact`` (broadcast join, exact cosine, window top-1) is the
 relational reference both paths are tested against; no build path
@@ -209,34 +206,77 @@ def _dot_arrow(df: DataFrame, a_col: str, b_col: str,
     return df.mapInArrow(kernel, out_schema)
 
 
-def pack_catalog(catalog: DataFrame,
-                 extra: tuple = ("category", "gender")) -> dict:
-    """(type, color) → (pids, *``extra`` columns, float64 embedding
+# Driver-broadcast budget of the packed catalog (pack_catalog, shared
+# by detect_and_link_fused and canonical_mapping's driver path).
+# A row gate alone is not a memory contract: 100k rows × 512-d
+# float64 is ~410 MB of packed numpy on the driver AND inside every
+# executor Python worker — the BYTES are what OOM, not the rows, and
+# a 4096-d catalog must fall back to LSH long before 100k rows.
+# Estimated packed size = rows × (dim × 8 + per-row overhead for the
+# three object arrays: product_id/category/gender strings). A build
+# packs once; near the gate the driver's Python peak is ~1.7× this
+# size (the Arrow collect plus the pack).
+BROADCAST_MAX_ROWS = 100_000
+BROADCAST_BUDGET_MB = 256
+_PACK_ROW_OVERHEAD = 160
+
+
+def fits_driver_broadcast(catalog: DataFrame,
+                          budget_mb: int = BROADCAST_BUDGET_MB) -> bool:
+    """True iff the packed catalog fits on the driver, asserted in
+    BYTES (estimated packed size), not just rows — ONE agg job (count
+    + max embedding length; both metadata-cheap on parquet/Iceberg
+    scans with column pruning)."""
+    row = catalog.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.size("embedding")).alias("dim")).first()
+    n, dim = row["n"], row["dim"] or 0
+    return n <= BROADCAST_MAX_ROWS \
+        and n * (dim * 8 + _PACK_ROW_OVERHEAD) <= budget_mb << 20
+
+
+def pack_catalog(catalog: DataFrame, budget_mb: int = BROADCAST_BUDGET_MB,
+                 extra: tuple = ("category", "gender")) -> dict | None:
+    """``None`` past ``budget_mb`` (``fits_driver_broadcast``), else
+    (type, color) → (pids, *``extra`` columns, float64 embedding
     matrix), rows sorted by product_id so argmax ties resolve to the
-    min id. One Arrow collect: the embeddings reach the driver as one
-    flat float buffer, not as a Python float per element (~4× the
-    packed bytes)."""
+    min id; consumers only read the arrays. One Arrow collect: the
+    embeddings reach the driver as one flat float buffer, not as a
+    Python float per element (~4× the packed bytes)."""
     import numpy as np
     import pyarrow.compute as pc
 
+    if not fits_driver_broadcast(catalog, budget_mb):
+        return None
     t = catalog.select("product_id", "type", "color", *extra,
                        "embedding").toArrow()
-    if t.num_rows == 0:
+    n = t.num_rows
+    if n == 0:
         return {}
-    t = t.take(pc.sort_indices(t, [("product_id", "ascending")]))
-    vecs = t.column("embedding").combine_chunks().flatten().to_numpy() \
-        .reshape(t.num_rows, -1)
-    cols = [np.array(t.column(c).to_pylist(), dtype=object)
+    # rows in (type, color, product_id) order, so each group is one
+    # contiguous slice of ONE float64 matrix, filled chunk by chunk:
+    # the driver holds the Arrow table and the pack, no third copy
+    order = pc.sort_indices(t, [(c, "ascending") for c in
+                                ("type", "color", "product_id")])
+    row_at = np.empty(n, dtype=np.int64)
+    row_at[order.to_numpy()] = np.arange(n)
+    emb = t.column("embedding")
+    mat, lo = np.empty((n, len(emb[0]))), 0
+    for ch in emb.chunks:
+        if len(ch):
+            mat[row_at[lo:lo + len(ch)]] = \
+                ch.flatten().to_numpy().reshape(len(ch), -1)
+        lo += len(ch)
+    cols = [np.array(t.column(c).take(order).to_pylist(), dtype=object)
             for c in ("product_id", *extra)]
-    groups: dict = {}
-    for i, k in enumerate(zip(t.column("type").to_pylist(),
-                              t.column("color").to_pylist())):
-        groups.setdefault(k, []).append(i)
-    return {k: (*(c[g] for c in cols), vecs[g].astype(np.float64))
-            for k, g in groups.items()}
+    keys = list(zip(t.column("type").take(order).to_pylist(),
+                    t.column("color").take(order).to_pylist()))
+    cuts = [i for i in range(1, n) if keys[i] != keys[i - 1]]
+    return {keys[a]: (*(c[a:b] for c in cols), mat[a:b])
+            for a, b in zip([0, *cuts], [*cuts, n])}
 
 
-def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
+def detect_and_link_fused(docs: DataFrame, packed: dict,
                           top_k: int = tx.LINK_TOP_K,
                           threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
     """Mention detection + entity linking FUSED into one ``mapInArrow``
@@ -247,7 +287,7 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
     of pure serialization for a column the linked output then drops.
     Fusing keeps embeddings in numpy: the detect step
     (``mentions.detect_batch``), then one matmul per (type, color)
-    group against the broadcast catalog, emitting only the narrow
+    group against the broadcast ``packed`` catalog, emitting only the narrow
     linked rows. Semantics identical to ``image_mentions`` →
     ``link_exact`` (pinned by a parity test): gender mask, then the W5
     gate — ``top_k`` only bounds the candidates the reference ranks
@@ -261,7 +301,7 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
 
     spans = mn.explode_spans(docs).filter(
         (F.col("kind") == "image_ref") & F.col("media_ref").isNotNull())
-    bc = spans.sparkSession.sparkContext.broadcast(pack_catalog(catalog))
+    bc = spans.sparkSession.sparkContext.broadcast(packed)
 
     out_schema = T.StructType([
         T.StructField("doc_id", spans.schema["doc_id"].dataType),
@@ -320,46 +360,15 @@ def detect_and_link_fused(docs: DataFrame, catalog: DataFrame,
     return spans.mapInArrow(kernel, out_schema)
 
 
-# Driver-broadcast budget for the packed-catalog fast paths
-# (pack_catalog → detect_and_link_fused, canonical_mapping's driver path).
-# A row gate alone is not a memory contract: 100k rows × 512-d
-# float64 is ~410 MB of packed numpy on the driver AND inside every
-# executor Python worker — the BYTES are what OOM, not the rows, and
-# a 4096-d catalog must fall back to LSH long before 100k rows.
-# Estimated packed size = rows × (dim × 8 + per-row overhead for the
-# three object arrays: product_id/category/gender strings).
-# The budget bounds ONE packed copy: a fresh build packs two at once
-# (linking and canonicalization overlap) and pickles linking's for the
-# broadcast, so the driver's Python peak is ~4× the packed size.
-BROADCAST_MAX_ROWS = 100_000
-BROADCAST_BUDGET_MB = 256
-_PACK_ROW_OVERHEAD = 160
-
-
-def fits_driver_broadcast(catalog: DataFrame,
-                          budget_mb: int = BROADCAST_BUDGET_MB) -> bool:
-    """True iff the packed catalog fits on the driver, asserted in
-    BYTES (estimated packed size), not just rows — ONE agg job (count
-    + max embedding length; both metadata-cheap on parquet/Iceberg
-    scans with column pruning)."""
-    row = catalog.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.size("embedding")).alias("dim")).first()
-    n, dim = row["n"], row["dim"] or 0
-    return n <= BROADCAST_MAX_ROWS \
-        and n * (dim * 8 + _PACK_ROW_OVERHEAD) <= budget_mb << 20
-
-
-def link_mentions(docs: DataFrame, catalog: DataFrame,
+def link_mentions(docs: DataFrame, catalog: DataFrame, packed: dict | None,
                   top_k: int = tx.LINK_TOP_K,
-                  threshold: float = tx.LINK_THRESHOLD,
-                  budget_mb: int = BROADCAST_BUDGET_MB) -> DataFrame:
+                  threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
     """Detect and link the image mentions of ``docs`` — the one linking
-    entry point. The byte-budget gate picks the physical path: a
-    dim-sized catalog takes the fused detect+link kernel (exact, zero
-    shuffles); a big or wide one takes ``image_mentions`` → LSH
-    blocking. Spark's own broadcast threshold cannot make this call —
-    the cosine join needs it made here, above Catalyst."""
-    if fits_driver_broadcast(catalog, budget_mb=budget_mb):
-        return detect_and_link_fused(docs, catalog, top_k, threshold)
+    entry point. ``packed`` (``pack_catalog(catalog)``) picks the
+    path: a pack takes the fused detect+link kernel (exact, zero
+    shuffles); ``None`` takes ``image_mentions`` → LSH blocking.
+    Spark's own broadcast threshold cannot make this call — the
+    cosine join needs it made here, above Catalyst."""
+    if packed is not None:
+        return detect_and_link_fused(docs, packed, top_k, threshold)
     return link_lsh(mn.image_mentions(docs), catalog, top_k, threshold)

@@ -14,8 +14,9 @@ as one declarative lineage over the interleaved docs table:
   linked+edges+triples ──canonicalize──► nodes / edges / triples tables
 
 The build's one setting, ``broadcast_budget_mb`` (the byte budget of
-the packed catalog on the driver, linking.fits_driver_broadcast),
-picks the physical path of both linking and canonicalization.
+the packed catalog on the driver), feeds one ``linking.pack_catalog``
+per build, whose pack (or ``None``) picks the physical path of both
+linking and canonicalization.
 
 Stage boundaries are snapshot commits (sources/tables.py): each stage
 is resumable — rerunning skips stages whose snapshot exists (and, for
@@ -23,8 +24,9 @@ the mention stage, processes only docs not yet in the lineage,
 anti-join on doc_id). Shuffle inventory (the whole build):
   1. past the byte budget only: linking join (band,bsig,type,color)
      — AQE skew-split — then candidate dedup + top-1 window
-     (doc_id,span_idx); the near-dup LSH self-join, and CC label
-     propagation once the dup graph outgrows the driver
+     (doc_id,span_idx); the near-dup LSH self-join on ids, its dedup
+     and two by-id embedding joins; CC label propagation once the dup
+     graph outgrows the driver
   2. pair self-join (doc_id)               — narrow projected rows
   3. edge aggregation (src,dst,rel)        — map-side partial agg
 Everything else is map-side.
@@ -52,7 +54,7 @@ class KGPipeline:
     """Warehouse + table handles for one KG build."""
 
     warehouse: str
-    # the one driver-fit gate (linking.fits_driver_broadcast) of
+    # the byte budget of the one driver-fit decision (_pack) shared by
     # linking and canonicalization; tests set it to 0 to force the
     # at-scale plans end-to-end (test_at_scale_branches_full_build)
     broadcast_budget_mb: int = lk.BROADCAST_BUDGET_MB
@@ -72,6 +74,19 @@ class KGPipeline:
         self._inc_new_linked = None
         self._inc_new_docs = None
         self._canon_changed = True
+        # _pack's memo: (catalog, its pack or None)
+        self._pack_lock = threading.Lock()
+        self._packed = None
+
+    def _pack(self, catalog: DataFrame) -> dict | None:
+        """``lk.pack_catalog(catalog)`` once per build (or stream),
+        shared by the concurrent linking and canonical stages, which ask
+        only to link new docs or to rebuild the mapping."""
+        with self._pack_lock:
+            if self._packed is None or self._packed[0] is not catalog:
+                self._packed = (catalog, lk.pack_catalog(
+                    catalog, self.broadcast_budget_mb))
+            return self._packed[1]
 
     def table(self, name: str) -> SnapshotTable:
         with self._lock:
@@ -108,8 +123,7 @@ class KGPipeline:
         # job launch — measurable against the build's fixed-cost floor)
         if resuming and todo.isEmpty():
             return t.read(spark)
-        linked = lk.link_mentions(todo, catalog,
-                                  budget_mb=self.broadcast_budget_mb)
+        linked = lk.link_mentions(todo, catalog, self._pack(catalog))
         # a fresh build REPLACES whatever the warehouse holds; only a
         # resumed build adds to it
         mode = "append" if resuming else "overwrite"
@@ -167,8 +181,7 @@ class KGPipeline:
         t = self.table("canonical")
 
         def rebuild():
-            t.write(cc.canonical_mapping(
-                        catalog, budget_mb=self.broadcast_budget_mb),
+            t.write(cc.canonical_mapping(catalog, self._pack(catalog)),
                     mode="overwrite", stage="canonicalize")
 
         self._canon_changed = True
@@ -345,8 +358,10 @@ class KGPipeline:
                 for f in self._deferred:
                     f.result()
             finally:
-                # a failed commit must not fail the next build() too
+                # a failed commit must not fail the next build() too,
+                # and the pack does not outlive the build
                 self._deferred.clear()
+                self._packed = None
         return {"linked": linked, "canonical": canon,
                 "edges": self.table("edges").read(docs.sparkSession),
                 "triples": triples, "nodes": nodes}

@@ -152,10 +152,10 @@ def outfit_from_image(query_docs: DataFrame, catalog: DataFrame,
     """Query media docs (input_hint shape) → detected garment mentions
     → linking against the catalog (threshold 0.7, recommender.py:227)
     through the same gate and paths as the KG build
-    (``linking.link_mentions``). Returns matched catalog items per
-    query doc."""
-    linked = lk.link_mentions(query_docs, catalog, top_k=top_k,
-                              threshold=threshold)
+    (``linking.pack_catalog`` → ``linking.link_mentions``). Returns
+    matched catalog items per query doc."""
+    linked = lk.link_mentions(query_docs, catalog, lk.pack_catalog(catalog),
+                              top_k=top_k, threshold=threshold)
     return linked.select("doc_id", "span_idx", "product_id",
                          "category", "score")
 

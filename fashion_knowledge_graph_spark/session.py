@@ -8,6 +8,7 @@ north_rule's two-cluster-size scaling criterion).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -131,30 +132,36 @@ def get_spark(app: str = "fkg", cpus: int | None = None,
     return b.getOrCreate()
 
 
+@functools.cache
+def package_sources() -> tuple[str, list[str]]:
+    """(md5 hex over every ``.py`` file of this package — relative path
+    and bytes, in sorted order —, their absolute paths). Keys whatever
+    is derived from the code: the executor zip and cached fixture
+    worlds. Computed once per process, like the modules it loaded."""
+    import hashlib
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    paths = sorted(os.path.join(d, f) for d, _, files in os.walk(pkg_dir)
+                   if "__pycache__" not in d
+                   for f in files if f.endswith(".py"))
+    h = hashlib.md5()
+    for p in paths:
+        h.update(os.path.relpath(p, pkg_dir).encode())
+        with open(p, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest(), paths
+
+
 def _package_zip() -> str:
     """Zip this package (once per content hash) for --py-files
     shipping to executor Python workers."""
-    import hashlib
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    name = os.path.basename(pkg_dir)
-    h = hashlib.md5()
-    paths = []
-    for dirpath, _, files in os.walk(pkg_dir):
-        if "__pycache__" in dirpath:
-            continue
-        for f in sorted(files):
-            if f.endswith(".py"):
-                p = os.path.join(dirpath, f)
-                paths.append(p)
-                h.update(p.encode())
-                with open(p, "rb") as fh:
-                    h.update(fh.read())
+    digest, paths = package_sources()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = os.path.join(
         os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
-        f"fkg_pkg_{h.hexdigest()[:12]}.zip")
+        f"fkg_pkg_{digest[:12]}.zip")
     if not os.path.exists(out):
         os.makedirs(os.path.dirname(out), exist_ok=True)
         tmp = out + ".tmp"

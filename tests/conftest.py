@@ -55,6 +55,17 @@ def oracle_out(docs_pdf, catalog_pdf):
     return oracle.full_pipeline(docs_pdf, catalog_pdf)
 
 
+def spy(monkeypatch, calls, mod, name, **forced):
+    """Count the calls of ``mod.name`` in ``calls``, forcing the given
+    keyword arguments."""
+    real = getattr(mod, name)
+
+    def wrapped(*a, **k):
+        calls[name] += 1
+        return real(*a, **{**k, **forced})
+    monkeypatch.setattr(mod, name, wrapped)
+
+
 def rows_set(df, cols, round_floats=6):
     """Spark or pandas DF → set of tuples for order-insensitive compare."""
     if hasattr(df, "toPandas"):

@@ -1,9 +1,16 @@
 from fashion_knowledge_graph_spark.operators import components as cc
+from fashion_knowledge_graph_spark.operators import linking as lk
 from tests.conftest import rows_set
 
 
+def _driver_canon(catalog):
+    """canonical_mapping with the catalog's driver-fit decision — the
+    pack, for every catalog these tests build."""
+    return cc.canonical_mapping(catalog, lk.pack_catalog(catalog))
+
+
 def test_canonical_mapping_matches_oracle(spark, catalog_df, oracle_out):
-    got = cc.canonical_mapping(catalog_df)
+    got = _driver_canon(catalog_df)
     exp = [(k, v) for k, v in oracle_out["canon"].items()]
     import pandas as pd
 
@@ -13,7 +20,7 @@ def test_canonical_mapping_matches_oracle(spark, catalog_df, oracle_out):
 
 
 def test_components_collapse_duplicates(spark, catalog_df, catalog_pdf):
-    got = cc.canonical_mapping(catalog_df).toPandas()
+    got = _driver_canon(catalog_df).toPandas()
     merged = got.merge(catalog_pdf[["product_id", "entity_key"]], on="product_id")
     # every ground-truth duplicate group maps to exactly one canonical id
     per_entity = merged.groupby("entity_key")["canonical_id"].nunique()
@@ -38,13 +45,13 @@ def test_driver_canonical_equals_lsh_canonical(spark, catalog_df,
     """Driver and LSH canonicalization agree — also when the driver's
     row blocks (3 rows) are smaller than a (type, color) group."""
     dist = sorted(map(tuple, cc.canonical_mapping(
-        catalog_df, budget_mb=0).collect()))
+        catalog_df, None).collect()))
     assert any(p != c for p, c in dist)
     assert catalog_df.groupBy("type", "color").count() \
         .agg({"count": "max"}).first()[0] > 6
     for block in (cc._SIM_BLOCK, 3):
         monkeypatch.setattr(cc, "_SIM_BLOCK", block)
-        assert sorted(map(tuple, cc.canonical_mapping(
+        assert sorted(map(tuple, _driver_canon(
             catalog_df).collect())) == dist
 
 
@@ -65,6 +72,51 @@ def test_cc_dense_edges_fall_back_to_distributed(spark):
     assert got == {f"v{i:02d}": "v00" for i in range(n)}
 
 
+def test_cc_runs_the_edge_plan_once(spark):
+    """The driver path's edge-count gate and its union-find read ONE
+    limited collect: every edge row is produced once per call, not
+    once to count and again to collect."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    produced = spark.sparkContext.accumulator(0)
+
+    def counted(_):
+        produced.add(1)
+        return True
+
+    keep = F.udf(counted, T.BooleanType())
+    n = 12
+    verts = spark.createDataFrame([(f"v{i:02d}",) for i in range(n)],
+                                  "product_id string")
+    edges = spark.createDataFrame(
+        [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(0, n - 1, 2)],
+        "src string, dst string").filter(keep("src"))
+    labels = cc.connected_components(edges, verts, id_col="product_id")
+    got = {r["id"]: r["component"] for r in labels.collect()}
+    assert got == {f"v{i:02d}": f"v{i - i % 2:02d}" for i in range(n)}
+    assert produced.value == n // 2
+
+
+def test_driver_canonical_leaves_the_pack_unchanged(spark, catalog_df):
+    """The pack is shared with linking's broadcast: canonicalization
+    must only read it (no in-place normalization)."""
+    import numpy as np
+
+    packed = lk.pack_catalog(catalog_df)
+    before = {k: [np.copy(a) for a in g] for k, g in packed.items()}
+    got = cc.canonical_mapping(catalog_df, packed)
+    assert got.count() == catalog_df.count()
+    assert before.keys() == packed.keys()
+    for k, g in packed.items():
+        for a, b in zip(g, before[k], strict=True):
+            assert a.dtype == b.dtype, k
+            if a.dtype == object:
+                assert (a == b).all(), k
+            else:
+                assert a.tobytes() == b.tobytes(), k
+
+
 def test_incremental_update_equals_from_scratch(spark, catalog_df):
     """Fold the last ~30% of catalog items into a mapping built from
     the first ~70% — must equal a from-scratch mapping over the full
@@ -72,9 +124,9 @@ def test_incremental_update_equals_from_scratch(spark, catalog_df):
     from pyspark.sql import functions as F
 
     old_part = catalog_df.filter(F.crc32("product_id") % 10 < 7)
-    old_map = cc.canonical_mapping(old_part)
+    old_map = _driver_canon(old_part)
     got = cc.update_canonical_mapping(catalog_df, old_map)
-    exp = cc.canonical_mapping(catalog_df)
+    exp = _driver_canon(catalog_df)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, exp.collect()))
     # no-op update returns the mapping unchanged (zero new items)
@@ -105,7 +157,8 @@ def test_incremental_update_bridges_components(spark):
     schema = ("product_id string, type string, color string, "
               "embedding array<double>")
     old_cat = spark.createDataFrame(rows, schema)
-    old_map = cc.canonical_mapping(old_cat)
+    old_map = cc.canonical_mapping(old_cat, lk.pack_catalog(old_cat,
+                                                            extra=()))
     assert {tuple(r) for r in old_map.collect()} == \
         {("a", "a"), ("b", "b")}
 
@@ -115,8 +168,8 @@ def test_incremental_update_bridges_components(spark):
     assert {tuple(r) for r in got.collect()} == \
         {("a", "a"), ("b", "a"), ("c", "a")}
     # the same four-column catalog on both sides of the byte gate
-    for budget_mb in (0, 256):
-        scratch = cc.canonical_mapping(full_cat, budget_mb=budget_mb)
+    for packed in (None, lk.pack_catalog(full_cat, extra=())):
+        scratch = cc.canonical_mapping(full_cat, packed)
         assert {tuple(r) for r in scratch.collect()} == \
             {tuple(r) for r in got.collect()}
 
@@ -136,11 +189,11 @@ def test_stage_canonical_incremental_and_removal(spark, catalog_df,
     assert m1.count() == part.count()
 
     m2 = pipe.stage_canonical(catalog_df)          # growth → incremental
-    exp = cc.canonical_mapping(catalog_df)
+    exp = _driver_canon(catalog_df)
     assert sorted(map(tuple, m2.collect())) == \
         sorted(map(tuple, exp.collect()))
 
     m3 = pipe.stage_canonical(part)                # shrink → rebuild
-    exp3 = cc.canonical_mapping(part)
+    exp3 = _driver_canon(part)
     assert sorted(map(tuple, m3.collect())) == \
         sorted(map(tuple, exp3.collect()))

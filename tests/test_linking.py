@@ -47,7 +47,7 @@ def test_fused_detect_and_link_equals_exact(spark, docs_df, catalog_df):
 
     m = mn.image_mentions(docs_df)
     a = lk.link_exact(m, catalog_df)
-    b = lk.detect_and_link_fused(docs_df, catalog_df)
+    b = lk.detect_and_link_fused(docs_df, lk.pack_catalog(catalog_df))
     ka = {(r["doc_id"], r["span_idx"]): (r["product_id"], r["category"],
                                          round(r["score"], 6))
           for r in a.collect()}

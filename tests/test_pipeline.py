@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fashion_knowledge_graph_spark.plans.pipeline import KGPipeline
-from tests.conftest import rows_set
+from tests.conftest import rows_set, spy
 
 EDGE_COLS = ["src", "dst", "rel_type", "weight", "images", "source"]
 TRIPLE_COLS = ["subj", "pred", "obj"]
@@ -73,17 +73,6 @@ def test_resume_skips_done_work(spark, docs_df, catalog_df, tmp_path):
     assert pipe.table("linked").current_snapshot() == sid
 
 
-def _spy(monkeypatch, calls, mod, name, **forced):
-    """Count the calls of ``mod.name`` in ``calls``, forcing the given
-    keyword arguments."""
-    real = getattr(mod, name)
-
-    def wrapped(*a, **k):
-        calls[name] += 1
-        return real(*a, **{**k, **forced})
-    monkeypatch.setattr(mod, name, wrapped)
-
-
 def _table_bags(spark, pipe):
     """The five committed build tables as row multisets (a set would
     hide a duplicated row)."""
@@ -97,6 +86,24 @@ def _table_bags(spark, pipe):
         out[name] = Counter(
             row(r) for r in df.select(*sorted(df.columns)).collect())
     return out
+
+
+def test_build_makes_one_driver_fit_decision(spark, docs_df, catalog_df,
+                                            tmp_path, monkeypatch):
+    """Linking and canonicalization share one gate and one pack: a
+    fresh build runs fits_driver_broadcast once and packs once; a
+    resume with no new docs and an unchanged catalog runs neither."""
+    from fashion_knowledge_graph_spark.operators import linking as lk
+
+    calls = Counter()
+    spy(monkeypatch, calls, lk, "fits_driver_broadcast")
+    spy(monkeypatch, calls, lk, "pack_catalog")
+    pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
+    pipe.build(docs_df, catalog_df, resume=False)
+    assert calls == {"fits_driver_broadcast": 1, "pack_catalog": 1}, calls
+    calls.clear()
+    pipe.build(docs_df, catalog_df)
+    assert not calls, calls
 
 
 def test_fresh_build_replaces_existing_warehouse(spark, docs_df,
@@ -277,17 +284,24 @@ def test_at_scale_branches_full_build(spark, docs_df, catalog_df, tmp_path,
     out_fast = fast.build(docs_df, catalog_df)
 
     calls = Counter()
-    for mod, name in ((lk, "link_lsh"), (lk, "pack_catalog"),
+    for mod, name in ((lk, "link_lsh"), (lk, "detect_and_link_fused"),
                       (cc, "near_duplicate_pairs"),
                       (cc, "_cc_label_propagation")):
-        _spy(monkeypatch, calls, mod, name)
-    _spy(monkeypatch, calls, cc, "connected_components", driver_threshold=0)
+        spy(monkeypatch, calls, mod, name)
+    spy(monkeypatch, calls, cc, "connected_components", driver_threshold=0)
+    packs = []
+    real_pack = lk.pack_catalog
+
+    def pack(*a, **k):
+        packs.append(real_pack(*a, **k))
+        return packs[-1]
+    monkeypatch.setattr(lk, "pack_catalog", pack)
     at_scale = KGPipeline(warehouse=str(tmp_path / "wh_scale"),
                           broadcast_budget_mb=0)
     out_scale = at_scale.build(docs_df, catalog_df)
     assert calls["link_lsh"] and calls["near_duplicate_pairs"] \
         and calls["_cc_label_propagation"], calls
-    assert not calls["pack_catalog"], calls
+    assert packs == [None] and not calls["detect_and_link_fused"], calls
 
     for name, cols in (("canonical", ["product_id", "canonical_id"]),
                        ("edges", EDGE_COLS),
@@ -320,8 +334,8 @@ def test_pipeline_budget_knob_forces_lsh(spark, docs_df, catalog_df,
     from fashion_knowledge_graph_spark.operators import linking as lk
 
     calls = Counter()
-    _spy(monkeypatch, calls, lk, "link_lsh")
-    _spy(monkeypatch, calls, lk, "detect_and_link_fused")
+    spy(monkeypatch, calls, lk, "link_lsh")
+    spy(monkeypatch, calls, lk, "detect_and_link_fused")
 
     pipe = KGPipeline(warehouse=str(tmp_path / "wh"), broadcast_budget_mb=0)
     linked = pipe.stage_linked(docs_df, catalog_df)
@@ -337,7 +351,7 @@ def test_resume_uses_delta_maintenance(spark, docs_df, catalog_df,
     from fashion_knowledge_graph_spark.operators import edges as ed_mod
 
     calls = Counter()
-    _spy(monkeypatch, calls, ed_mod, "merge_edge_delta")
+    spy(monkeypatch, calls, ed_mod, "merge_edge_delta")
 
     half = docs_df.filter(F.crc32(F.col("doc_id")) % 2 == 0)
     pipe = KGPipeline(warehouse=str(tmp_path / "wh"))

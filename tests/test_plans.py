@@ -24,7 +24,8 @@ def test_fused_link_plan_is_one_map_stage(spark, docs_df, catalog_df):
     — the whole mention+linking map path is one pipelined stage."""
     import re
 
-    plan = _plan(lk.detect_and_link_fused(docs_df, catalog_df))
+    plan = _plan(lk.detect_and_link_fused(docs_df,
+                                          lk.pack_catalog(catalog_df)))
     assert "Exchange" not in plan, plan
     # one kernel node (formatted output lists each node twice: once in
     # the tree, once as a "(n) MapInArrow" detail section)
@@ -125,6 +126,26 @@ def test_edges_plan_shuffles_narrow_rows_only(spark, docs_df, catalog_df,
         for attr_col in ("material", "style", "season", "occasion"):
             assert attr_col not in s, s
     assert "RangePartitioning" not in plan, plan
+
+
+def test_near_duplicate_candidates_shuffle_ids_only(spark, catalog_df):
+    """near_duplicate_pairs generates candidates on ids and blocking
+    keys only: no exchange up to and including the candidate dedup
+    carries an embedding — the vectors join back by id afterwards
+    (banded 512-d rows through the replicated self-join shuffled ~11 GB
+    at a 50k catalog)."""
+    from fashion_knowledge_graph_spark.operators import components as cc
+
+    plan = _plan(cc.near_duplicate_pairs(catalog_df))
+    # (header, details) of each node; the formatted plan numbers nodes
+    # bottom-up, so every node below the dedup comes before it
+    nodes = [s.split("\n", 1) for s in plan.split("\n(")[1:]]
+    dedup = max(i for i, (head, _) in enumerate(nodes)
+                if "Aggregate" in head)
+    below = [body for head, body in nodes[:dedup] if "Exchange" in head]
+    assert below, plan
+    for body in below:
+        assert "embedding" not in body, body
 
 
 def test_edge_aggregation_has_partial_aggregate(spark):

@@ -17,13 +17,24 @@ def docs_stream_dir(spark, docs_df, tmp_path_factory):
 
 
 def test_streaming_linked_equals_batch(spark, docs_df, catalog_df,
-                                       docs_stream_dir, tmp_path_factory):
+                                       docs_stream_dir, tmp_path_factory,
+                                       monkeypatch):
+    from collections import Counter
+
+    from fashion_knowledge_graph_spark.operators import linking as lk
+    from tests.conftest import spy
+
+    calls = Counter()
+    for name in ("fits_driver_broadcast", "pack_catalog"):
+        spy(monkeypatch, calls, lk, name)
     wh = str(tmp_path_factory.mktemp("swh"))
     ck = str(tmp_path_factory.mktemp("sck"))
     pipe = KGPipeline(warehouse=wh)
     stream = st.stream_docs(spark, docs_stream_dir, max_files_per_trigger=1)
     q = st.stream_linked(stream, catalog_df, pipe, ck)
     q.awaitTermination(300)
+    # one driver-fit decision for the whole stream, not one per batch
+    assert calls == {"fits_driver_broadcast": 1, "pack_catalog": 1}, calls
 
     got = pipe.table("linked").read(spark)
     # batch result over the same docs

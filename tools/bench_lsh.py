@@ -26,14 +26,14 @@ def main():
     from fashion_knowledge_graph_spark import datagen
     from fashion_knowledge_graph_spark.operators import linking as lk
     from fashion_knowledge_graph_spark.operators import mentions as mn
-    from fashion_knowledge_graph_spark.session import get_spark
+    from fashion_knowledge_graph_spark.session import get_spark, package_sources
 
     spark = get_spark("bench-lsh", executors=4, cores_per_executor=4,
                       executor_mem_mb=12288)
 
     base = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     cat_dir = os.path.join(
-        base, f"fkg_bigcat_{n_products}_{datagen.content_version()}")
+        base, f"fkg_bigcat_{n_products}_{package_sources()[0][:8]}")
     if not os.path.exists(os.path.join(cat_dir, "catalog.parquet")):
         t0 = time.time()
         if n_products <= 300_000:

@@ -6,19 +6,31 @@ names, and an order-insensitive value hash (floats rounded to 9
 significant-ish decimals before hashing — the driver is assumed to be
 at least this strict, so exact match here is the bar).
 
-Usage: python tools/check_entry.py [sf_dir] [query ...]
+Every run also hashes each Spark result alone. ``--hashes`` compares
+those hashes with ``ORACLE_HASHES.json`` (keyed by the sf directory's
+name) and names every query whose result changed; with no query
+arguments it runs exactly the queries the file records for that sf.
+``--write-hashes`` records them instead. Query arguments may be
+shell-style patterns (``'kg_*'``).
+
+Usage: python tools/check_entry.py [--hashes | --write-hashes]
+                                   [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
+import json
 import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+HASH_FILE = os.path.join(ROOT, "ORACLE_HASHES.json")
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -43,8 +55,21 @@ def value_hash(pdf) -> str:
 
 
 def main():
+    mode = sys.argv.pop(1) if sys.argv[1:2] in (["--hashes"],
+                                                ["--write-hashes"]) else None
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    pats = sys.argv[2:]
+    sf_key = os.path.basename(os.path.normpath(sf_dir))
+    pinned = {}
+    if os.path.exists(HASH_FILE):
+        with open(HASH_FILE) as f:
+            pinned = json.load(f)
+    if mode == "--hashes" and not pats:
+        pats = sorted(pinned.get(sf_key, {}))
+    spark_hashes: dict[str, str] = {}
+
+    def selected(name):
+        return not pats or any(fnmatch.fnmatchcase(name, p) for p in pats)
 
     # kg oracles read the materialized fixture world for this sf
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
@@ -63,7 +88,7 @@ def main():
     qs, oracles = entry.queries(), entry.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if not selected(name):
             continue
         t0 = time.time()
         try:
@@ -73,6 +98,7 @@ def main():
             print(f"FAIL  {name:28s} spark error: {type(e).__name__}: {e}")
             n_fail += 1
             continue
+        spark_hashes[name] = value_hash(spdf)
         if name not in oracles:
             status = "ROWS" if len(spdf) >= 0 else "FAIL"
             print(f"{status}  {name:28s} rows={len(spdf)}  "
@@ -108,6 +134,22 @@ def main():
             n_fail += 1
     print(f"== {n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail ==")
     spark.stop()
+    if mode == "--write-hashes":
+        pinned[sf_key] = dict(sorted(
+            {**pinned.get(sf_key, {}), **spark_hashes}.items()))
+        with open(HASH_FILE, "w") as f:
+            json.dump(dict(sorted(pinned.items())), f, indent=1)
+            f.write("\n")
+        print(f"== recorded {len(spark_hashes)} hashes for {sf_key} ==")
+    elif mode == "--hashes":
+        want = pinned.get(sf_key, {})
+        changed = sorted(n for n in set(want) | set(spark_hashes)
+                         if selected(n) and want.get(n) != spark_hashes.get(n))
+        for n in changed:
+            print(f"CHANGED  {n:28s} {want.get(n)} -> {spark_hashes.get(n)}")
+        same = sum(want.get(n) == h for n, h in spark_hashes.items())
+        print(f"== {same} hashes unchanged, {len(changed)} changed ==")
+        n_fail += len(changed)
     sys.exit(1 if n_fail else 0)
 
 
