@@ -28,6 +28,8 @@ order-independent.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import tempfile
 from collections.abc import Callable
@@ -143,14 +145,22 @@ _KG_N_PRODUCTS = 150
 _KG_TABLES = ("linked", "canonical", "edges", "triples", "nodes")
 
 
-def _kg_paths(sf_dir: str) -> dict[str, str]:
-    # keyed on the package's code: a change to it builds a new world
-    # (a change to _kg_world below does not)
+@functools.cache
+def _kg_world_key() -> str:
+    """md5 over the code that builds a world: the package's ``.py``
+    files and this file (``_kg_world``)."""
     from fashion_knowledge_graph_spark.session import package_sources
 
+    with open(__file__, "rb") as f:
+        return hashlib.md5(package_sources()[0].encode()
+                           + f.read()).hexdigest()
+
+
+def _kg_paths(sf_dir: str) -> dict[str, str]:
+    # keyed on the code: a change to it builds a new world
     fix_dir = os.path.join(
         tempfile.gettempdir(),
-        f"fkg_fixtures_p{_KG_N_PRODUCTS}_{package_sources()[0][:12]}_"
+        f"fkg_fixtures_p{_KG_N_PRODUCTS}_{_kg_world_key()[:12]}_"
         f"{os.path.basename(os.path.normpath(sf_dir))}")
     return {
         "fix": fix_dir,

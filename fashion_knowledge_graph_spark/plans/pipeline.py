@@ -18,10 +18,10 @@ the packed catalog on the driver), feeds one ``linking.pack_catalog``
 per build, whose pack (or ``None``) picks the physical path of both
 linking and canonicalization.
 
-Stage boundaries are snapshot commits (sources/tables.py): each stage
-is resumable — rerunning skips stages whose snapshot exists (and, for
-the mention stage, processes only docs not yet in the lineage,
-anti-join on doc_id). Shuffle inventory (the whole build):
+A build, a stream batch and a delete_product are each one all-or-
+nothing write (``_all_or_nothing``). A resumed build links only docs
+not in ``processed_docs`` (anti-join on doc_id) and, under an unchanged
+canonical mapping, maintains edges/triples by delta. Shuffle inventory:
   1. past the byte budget only: linking join (band,bsig,type,color)
      — AQE skew-split — then candidate dedup + top-1 window
      (doc_id,span_idx); the near-dup LSH self-join on ids, its dedup
@@ -34,7 +34,9 @@ Everything else is map-side.
 
 from __future__ import annotations
 
+import json
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -95,86 +97,80 @@ class KGPipeline:
                     os.path.join(self.warehouse, name))
             return self.tables[name]
 
+    @contextmanager
+    def _all_or_nothing(self):
+        """One all-or-nothing warehouse write (one writer at a time).
+        ``_PENDING.json`` records each build table's CURRENT on entry;
+        removing it on normal exit commits. A write that dies leaves
+        it, and the next scope undoes it first: ``publish`` each
+        recorded snapshot (an expired one raises), ``drop`` a table
+        that had none."""
+        pending = os.path.join(self.warehouse, "_PENDING.json")
+        if os.path.exists(pending):
+            with open(pending) as f:
+                for name, sid in json.load(f).items():
+                    if sid is None:
+                        self.table(name).drop()
+                    else:
+                        self.table(name).publish(sid)
+        os.makedirs(self.warehouse, exist_ok=True)
+        with open(pending + ".tmp", "w") as f:
+            json.dump({n: self.table(n).current_snapshot() for n in (
+                "linked", "processed_docs", "canonical", "edges",
+                "triples", "nodes")}, f)
+        os.replace(pending + ".tmp", pending)
+        yield
+        os.remove(pending)
+
     # ---- stages -------------------------------------------------------
     def stage_linked(self, docs: DataFrame, catalog: DataFrame,
                      resume: bool = True, ex=None) -> DataFrame:
         """Mention detection + entity linking; resumable per doc_id.
 
         Incremental semantics replace the reference's "rerun the batch
-        script against Neo4j MERGE": already-linked docs are skipped
-        via anti-join against the committed snapshot, new results are
-        appended as a new snapshot. A fresh build (``resume=False``, or
-        no committed processed-docs snapshot) overwrites both tables.
+        script against Neo4j MERGE": a resumed build appends the rows
+        of docs not yet processed; a fresh one overwrites both tables.
+        Both commits (on ``ex`` when given) read one checkpoint, which
+        is returned — after the rows read before them when resuming.
         """
         spark = docs.sparkSession
         t = self.table("linked")
         seen = self.table("processed_docs")
         todo = docs
-        self._inc_new_linked = None
-        self._inc_new_docs = None
+        self._inc_new_linked = self._inc_new_docs = None
         resuming = resume and seen.exists()
         if resuming:
+            old = t.read(spark)
             # anti-join against the *processed* doc set — docs whose
             # mentions all failed the gates still count as processed
-            done = seen.read(spark)
-            todo = docs.join(done, "doc_id", "left_anti")
-        # the isEmpty probe is only worth a job when an earlier snapshot
-        # could already cover everything (each extra action costs a full
-        # job launch — measurable against the build's fixed-cost floor)
-        if resuming and todo.isEmpty():
-            return t.read(spark)
+            todo = docs.join(seen.read(spark), "doc_id", "left_anti")
+            # a job only when an earlier snapshot may cover everything
+            if todo.isEmpty():
+                return old
         linked = lk.link_mentions(todo, catalog, self._pack(catalog))
         # a fresh build REPLACES whatever the warehouse holds; only a
         # resumed build adds to it
         mode = "append" if resuming else "overwrite"
+        # the kernel runs once: commits and downstream stages read the
+        # blocks (an executor loss fails the build; the next write's
+        # _all_or_nothing undoes what it committed)
         flat = linked.select(
             "doc_id", "span_idx", "product_id", "category", "score",
             *[F.col(f"attrs.{a}").alias(a)
-              for a in (*tx.SCALAR_ATTRS, *tx.MULTI_ATTRS)])
-        if ex is not None and not resuming:
-            # Fresh build with stage overlap: materialize the kernel
-            # output ONCE as block-manager blocks and return it
-            # directly — the linked snapshot commit moves OFF the
-            # critical path (it runs on the executor thread while the
-            # edges/triples/nodes stages consume the checkpointed
-            # blocks), and downstream stages stop re-reading the
-            # just-written parquet from shared tmpfs (the round-2
-            # decomposition pinned the residual scaling gap to exactly
-            # snapshot-commit serialism + tmpfs bandwidth contention).
-            # localCheckpoint trades lineage fault-tolerance for speed:
-            # an executor loss mid-build fails the job, but the
-            # snapshot commit protocol bounds the blast radius — the
-            # atomic CURRENT pointer means a partial commit is
-            # invisible, and resume=True restarts from the last
-            # committed stage (re-processing at most one batch).
-            flat_cp = flat.localCheckpoint(eager=True)
+              for a in (*tx.SCALAR_ATTRS, *tx.MULTI_ATTRS)]) \
+            .localCheckpoint(eager=True)
 
-            def _commit_linked():
-                t.write(flat_cp, mode=mode, stage="link")
-                # processed-docs AFTER linked: a crash between them
-                # leaves no processed_docs, so the rerun is fresh and
-                # overwrites linked — work repeated, never lost
-                seen.write(todo.select("doc_id"), mode=mode,
-                           stage="link")
-            self._deferred.append(ex.submit(_commit_linked))
-            return flat_cp
-        if resuming:
-            # resumed growth: checkpoint the NEW rows once — the
-            # append commit and the edges/triples delta paths below
-            # both consume the blocks instead of re-running the kernel
-            flat = flat.localCheckpoint(eager=True)
-            self._inc_new_linked = flat
-            self._inc_new_docs = todo
-        t.write(flat, mode=mode, stage="link")
-        # same ordering constraint as above; nothing downstream depends
-        # on processed_docs, so with an executor it overlaps the
-        # edges/triples stages
-        if ex is not None:
-            self._deferred.append(ex.submit(
-                seen.write, todo.select("doc_id"), mode, "link"))
-        else:
+        def commit():
+            t.write(flat, mode=mode, stage="link")
             seen.write(todo.select("doc_id"), mode=mode, stage="link")
-        return t.read(spark)
+        if ex is None:
+            commit()
+        else:
+            self._deferred.append(ex.submit(commit))
+        if not resuming:
+            return flat
+        self._inc_new_linked, self._inc_new_docs = flat, todo
+        return old.unionByName(flat)
 
     def stage_canonical(self, catalog: DataFrame) -> DataFrame:
         spark = catalog.sparkSession
@@ -314,14 +310,15 @@ class KGPipeline:
 
     def delete_product(self, spark: SparkSession, product_id: str) -> None:
         """DETACH DELETE (reference src/database/graph_database.py:
-        400-446): drop the product node AND every incident edge, each
-        committed as a new overwrite snapshot — prior snapshots remain
+        400-446): drop the product node AND every incident edge, one
+        all-or-nothing write of two overwrite snapshots — prior ones remain
         time-travelable (`table.read(spark, snapshot_id=...)`)."""
-        self.table("nodes").delete_where(
-            spark, F.col("product_id") == product_id)
-        self.table("edges").delete_where(
-            spark, (F.col("src") == product_id)
-            | (F.col("dst") == product_id))
+        with self._all_or_nothing():
+            self.table("nodes").delete_where(
+                spark, F.col("product_id") == product_id)
+            self.table("edges").delete_where(
+                spark, (F.col("src") == product_id)
+                | (F.col("dst") == product_id))
 
     # ---- full build ---------------------------------------------------
     def build(self, docs: DataFrame, catalog: DataFrame,
@@ -336,10 +333,12 @@ class KGPipeline:
 
             canonical ──┐                  ┌─► nodes
             linked ─────┴─► edges ─► triples
-        """
+
+        One ``_all_or_nothing`` write around the whole pool, so no
+        deferred commit outlives it."""
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=5) as ex:
+        with self._all_or_nothing(), ThreadPoolExecutor(max_workers=5) as ex:
             try:
                 f_canon = ex.submit(self.stage_canonical, catalog)
                 linked = self.stage_linked(docs, catalog, resume=resume,

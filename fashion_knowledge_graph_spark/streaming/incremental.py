@@ -12,21 +12,21 @@ the Spark-native continuous form on top:
                          ``maxFilesPerTrigger`` bounds batch size).
 - ``stream_linked``    — ``foreachBatch`` driving the SAME
                          ``KGPipeline.stage_linked`` used in batch
-                         mode: each micro-batch appends a snapshot,
-                         exactly-once via the streaming checkpoint +
-                         the pipeline's own processed-docs anti-join
-                         (re-delivered docs are skipped, so restarts
-                         are idempotent — both layers are tested).
+                         mode, each micro-batch one
+                         ``KGPipeline._all_or_nothing`` write: a batch
+                         that fails is undone before its re-delivery
+                         is linked, and docs already processed are
+                         skipped, so restarts are idempotent.
 - ``stream_event_counts`` — watermarked tumbling-window aggregation
                          over an event stream (late data dropped after
                          the watermark), the standard stateful-agg
                          shape for engagement counters feeding edge
                          weights.
 
-Scale notes: the micro-batch path reuses every batch operator
-(fused mention kernel, matmul linking), so streaming throughput ==
-batch throughput at the same trigger size; state for the windowed agg
-is bounded by (watermark horizon × distinct keys).
+Scale notes: the micro-batch path reuses the batch linking (one
+gate: fused kernel or LSH), so streaming throughput == batch
+throughput at the same trigger size; state for the windowed agg is
+bounded by (watermark horizon × distinct keys).
 """
 
 from __future__ import annotations
@@ -61,7 +61,8 @@ def stream_linked(docs_stream: DataFrame, catalog: DataFrame,
     def process(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        pipe.stage_linked(batch_df, catalog, resume=True)
+        with pipe._all_or_nothing():
+            pipe.stage_linked(batch_df, catalog, resume=True)
 
     writer = (docs_stream.writeStream
               .foreachBatch(process)

@@ -1,3 +1,6 @@
+import os
+import shutil
+import threading
 from collections import Counter
 
 import pandas as pd
@@ -19,6 +22,10 @@ def _expected_triples(oracle_out):
     t_comp = pd.DataFrame({
         "subj": ec["src"], "pred": "complements", "obj": ec["dst"]})
     return pd.concat([t_attr, t_text, t_comp], ignore_index=True)
+
+
+def _half(docs_df):
+    return docs_df.filter(F.crc32(F.col("doc_id")) % 2 == 0)
 
 
 def test_full_build_matches_oracle(spark, docs_df, catalog_df,
@@ -49,7 +56,7 @@ def test_resume_is_incremental_and_identical(spark, docs_df, catalog_df,
     """Kill-and-rerun convergence (SURVEY §5.2 layer 3): process half
     the docs, then rerun over the full set — final tables must equal a
     one-shot full build."""
-    half = docs_df.filter(F.crc32(F.col("doc_id")) % 2 == 0)
+    half = _half(docs_df)
 
     pipe1 = KGPipeline(warehouse=str(tmp_path / "wh1"))
     pipe1.build(half, catalog_df)
@@ -74,14 +81,15 @@ def test_resume_skips_done_work(spark, docs_df, catalog_df, tmp_path):
 
 
 def _table_bags(spark, pipe):
-    """The five committed build tables as row multisets (a set would
+    """The six committed build tables as row multisets (a set would
     hide a duplicated row)."""
     def row(r):
         return tuple(tuple(v) if isinstance(v, list)
                      else round(v, 9) if isinstance(v, float) else v
                      for v in r)
     out = {}
-    for name in ("linked", "canonical", "edges", "triples", "nodes"):
+    for name in ("linked", "processed_docs", "canonical", "edges",
+                 "triples", "nodes"):
         df = pipe.table(name).read(spark)
         out[name] = Counter(
             row(r) for r in df.select(*sorted(df.columns)).collect())
@@ -122,40 +130,87 @@ def test_fresh_build_replaces_existing_warehouse(spark, docs_df,
         assert got[name] == exp[name], name
 
 
-def test_resume_after_crash_between_link_commits(spark, docs_df, catalog_df,
-                                                 tmp_path, monkeypatch):
-    """A fresh build that dies after the linked commit but before the
-    processed_docs commit, then resumed, must equal a clean build: with
-    no processed_docs the rerun is fresh and must replace linked, not
-    append to it. The same object resumes: its failed commit must not
-    fail the next build() too."""
+@pytest.fixture(scope="module")
+def half_warehouse(spark, docs_df, catalog_df, tmp_path_factory):
+    """A warehouse built on the crc32 half of the docs."""
+    wh = str(tmp_path_factory.mktemp("half") / "wh")
+    KGPipeline(warehouse=wh).build(_half(docs_df), catalog_df)
+    return wh
+
+
+@pytest.fixture(scope="module")
+def clean_bags(spark, docs_df, catalog_df, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("clean") / "wh")
+    KGPipeline(warehouse=wh).build(docs_df, catalog_df, resume=False)
+    return _table_bags(spark, KGPipeline(warehouse=wh))
+
+
+# the writes each scenario's build makes, per table; the canonical
+# mapping of the half warehouse already covers the unchanged catalog,
+# and a resumed build rewrites triples as delete + append + complements
+_BUILD_WRITES = {
+    "fresh": {"linked": 1, "processed_docs": 1, "canonical": 1,
+              "edges": 1, "triples": 2, "nodes": 1},
+    "overwrite": {"linked": 1, "processed_docs": 1, "edges": 1,
+                  "triples": 2, "nodes": 1},
+    "resumed": {"linked": 1, "processed_docs": 1, "edges": 1,
+                "triples": 3, "nodes": 1},
+}
+
+
+@pytest.mark.parametrize("scenario,point", [
+    (sc, pt) for sc, writes in _BUILD_WRITES.items()
+    for pt in [*((t, n) for t, k in writes.items()
+                 for n in range(1, k + 1)), ("close", 1)]],
+    ids=lambda v: v if isinstance(v, str) else f"{v[0]}{v[1]}")
+def test_crash_point_sweep(spark, docs_df, catalog_df, half_warehouse,
+                           clean_bags, tmp_path, monkeypatch, scenario,
+                           point):
+    """A build that dies before its n-th write to a table (keyed per
+    table, so thread order does not matter; delete_where writes too) or
+    at its commit point, then resumed on the same object, must equal a
+    clean build in all six tables. Scenarios: a fresh build on an empty
+    warehouse, a fresh build over a warehouse built on half the docs,
+    and a resumed build over that warehouse."""
     from fashion_knowledge_graph_spark.sources.tables import SnapshotTable
 
-    real_write = SnapshotTable.write
-    crashed = []
+    wh = str(tmp_path / "wh")
+    if scenario != "fresh":
+        shutil.copytree(half_warehouse, wh)
+    writes, fired, lock = Counter(), [], threading.Lock()
+    real_write, real_remove = SnapshotTable.write, os.remove
 
-    def crash_once(self, df, *a, **k):
-        if self.root.endswith("processed_docs") and not crashed:
-            crashed.append(self.root)
-            raise RuntimeError("injected crash before processed_docs")
+    def write(self, df, *a, **k):
+        name = os.path.basename(self.root)
+        with lock:
+            writes[name] += 1
+            hit = (name, writes[name]) == point and not fired
+            if hit:
+                fired.append(point)
+        if hit:
+            raise RuntimeError(f"injected crash before {point}")
         return real_write(self, df, *a, **k)
 
-    monkeypatch.setattr(SnapshotTable, "write", crash_once)
-    wh = str(tmp_path / "wh")
+    def remove(path, *a, **k):
+        if point == ("close", 1) and not fired \
+                and str(path).endswith("_PENDING.json"):
+            fired.append(point)
+            raise RuntimeError("injected crash at close")
+        return real_remove(path, *a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "write", write)
+    monkeypatch.setattr(os, "remove", remove)
     pipe = KGPipeline(warehouse=wh)
     with pytest.raises(RuntimeError, match="injected crash"):
-        pipe.build(docs_df, catalog_df, resume=False)
-    assert crashed
-    assert pipe.table("linked").exists()
-    assert not pipe.table("processed_docs").exists()
+        pipe.build(docs_df, catalog_df, resume=scenario == "resumed")
+    if point == ("close", 1):
+        # a complete build: the sweep covers every write it makes
+        assert writes == Counter(_BUILD_WRITES[scenario]), writes
     pipe.build(docs_df, catalog_df, resume=True)
-    clean = KGPipeline(warehouse=str(tmp_path / "clean"))
-    clean.build(docs_df, catalog_df, resume=False)
     # read back through a restarted driver's handles
     got = _table_bags(spark, KGPipeline(warehouse=wh))
-    exp = _table_bags(spark, clean)
-    for name in exp:
-        assert got[name] == exp[name], name
+    for name in clean_bags:
+        assert got[name] == clean_bags[name], name
 
 
 def test_delete_where_and_time_travel(spark, docs_df, catalog_df, tmp_path):
@@ -203,6 +258,35 @@ def test_detach_delete_product_cascades_to_edges(spark, docs_df,
     past = pipe.table("edges").read(spark,
                                     snapshot_id=pre_edge_sid).collect()
     assert len(past) == len(edges)
+
+
+def test_delete_product_crash_is_undone(spark, docs_df, catalog_df,
+                                        tmp_path, monkeypatch):
+    """DETACH DELETE is one write: when the edges delete dies after the
+    nodes delete committed, the next write first restores both tables,
+    so no edge is left pointing at a deleted node."""
+    from fashion_knowledge_graph_spark.sources.tables import SnapshotTable
+
+    wh = str(tmp_path / "wh")
+    pipe = KGPipeline(warehouse=wh)
+    pipe.build(docs_df, catalog_df)
+    before = _table_bags(spark, pipe)
+    victim = pipe.table("edges").read(spark).first()["src"]
+    real_delete = SnapshotTable.delete_where
+
+    def delete_where(self, *a, **k):
+        if self.root.endswith("edges"):
+            raise RuntimeError("injected crash before the edges delete")
+        return real_delete(self, *a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "delete_where", delete_where)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipe.delete_product(spark, victim)
+    monkeypatch.undo()
+    pipe.delete_product(spark, "no-such-product")    # the next write
+    after = _table_bags(spark, KGPipeline(warehouse=wh))
+    assert after["nodes"] == before["nodes"]
+    assert after["edges"] == before["edges"]
 
 
 def test_delete_where_null_predicate_keeps_rows(spark, tmp_path):
@@ -353,7 +437,7 @@ def test_resume_uses_delta_maintenance(spark, docs_df, catalog_df,
     calls = Counter()
     spy(monkeypatch, calls, ed_mod, "merge_edge_delta")
 
-    half = docs_df.filter(F.crc32(F.col("doc_id")) % 2 == 0)
+    half = _half(docs_df)
     pipe = KGPipeline(warehouse=str(tmp_path / "wh"))
     pipe.build(half, catalog_df)
     assert not calls                       # fresh build: full path

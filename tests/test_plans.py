@@ -227,39 +227,6 @@ def test_kmeans_partials_never_shuffle_vectors(spark):
     assert "MapInArrow" in plan, plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts
-    must SortMergeJoin with ZERO Exchange — the co-located-join
-    contract that amortizes the shuffle across every future consumer
-    at 100 TB."""
-    from fashion_knowledge_graph_spark.sources.bucketed import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bktest LOCATION '{tmp_path}'")
-    try:
-        a = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS va")
-        b = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS vb")
-        write_bucketed(a, "bktest.ta", ["k"], 4, sort_by=["k"])
-        write_bucketed(b, "bktest.tb", ["k"], 4, sort_by=["k"])
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = bucketed_join(spark, "bktest.ta", "bktest.tb", ["k"])
-            plan = _plan(j)
-            assert "SortMergeJoin" in plan, plan
-            assert "Exchange" not in plan, plan
-            assert "Bucketed: true" in plan, plan
-            assert j.count() == 1000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bktest.ta")
-        spark.sql("DROP TABLE IF EXISTS bktest.tb")
-        spark.sql("DROP DATABASE IF EXISTS bktest")
-
-
 def test_partitioned_write_prunes_partitions_and_pushes_filters(
         spark, tmp_path):
     """Hive-partitioned writes must turn query predicates into

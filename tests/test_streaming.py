@@ -64,6 +64,46 @@ def test_streaming_restart_is_idempotent(spark, docs_df, catalog_df,
     assert got.dropDuplicates(["doc_id", "span_idx"]).count() == n
 
 
+def test_streaming_failed_batch_is_undone(spark, catalog_df,
+                                          docs_stream_dir, tmp_path_factory,
+                                          monkeypatch):
+    """A micro-batch that dies between its linked append and its
+    processed_docs append is re-delivered when the stream restarts on
+    the same checkpoint; its first attempt's linked rows must not stay
+    next to the second's."""
+    from fashion_knowledge_graph_spark.sources.tables import SnapshotTable
+
+    real_write = SnapshotTable.write
+    n_writes = []
+
+    def write(self, df, *a, **k):
+        if self.root.endswith("processed_docs"):
+            n_writes.append(1)
+            # the first append: batch 0 overwrites, so its re-delivery
+            # replaces linked whatever happened
+            if len(n_writes) == 2:
+                raise RuntimeError("injected crash before processed_docs")
+        return real_write(self, df, *a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "write", write)
+    wh = str(tmp_path_factory.mktemp("swh3"))
+    ck = str(tmp_path_factory.mktemp("sck3"))
+    pipe = KGPipeline(warehouse=wh)
+    q = st.stream_linked(
+        st.stream_docs(spark, docs_stream_dir, max_files_per_trigger=1),
+        catalog_df, pipe, ck)
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(300)
+    q = st.stream_linked(
+        st.stream_docs(spark, docs_stream_dir, max_files_per_trigger=1),
+        catalog_df, pipe, ck)
+    q.awaitTermination(300)
+    assert len(n_writes) > 2
+    got = pipe.table("linked").read(spark)
+    n = got.count()
+    assert got.dropDuplicates(["doc_id", "span_idx"]).count() == n
+
+
 def test_stream_event_counts_watermark(spark, tmp_path_factory):
     src = str(tmp_path_factory.mktemp("ev"))
     rows = [("2026-01-01 10:05:00", "view", 1.0),

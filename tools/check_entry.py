@@ -11,7 +11,8 @@ those hashes with ``ORACLE_HASHES.json`` (keyed by the sf directory's
 name) and names every query whose result changed; with no query
 arguments it runs exactly the queries the file records for that sf.
 ``--write-hashes`` records them instead. Query arguments may be
-shell-style patterns (``'kg_*'``).
+shell-style patterns (``'kg_*'``). Spark runs at
+``local[$SPARK_GRAFT_CPUS]`` (default 8).
 
 Usage: python tools/check_entry.py [--hashes | --write-hashes]
                                    [sf_dir] [query ...]
@@ -77,7 +78,8 @@ def main():
     import __spark_entry__ as entry
     from fashion_knowledge_graph_spark.session import get_spark
 
-    spark = get_spark("check-entry", cpus=8, shuffle_partitions=16)
+    spark = get_spark(
+        "check-entry", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
