@@ -35,53 +35,9 @@ def _q_load(spark, sf_dir: str, name: str):
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-HEADLINE = [
-    # name in __spark_entry__.queries()
-    "q1_pricing_summary",
-    "j6_cooccurrence_edges",
-    "w2_topk_per_group",
-    "a8_rrf_fusion",
-    "events_tumbling_agg",
-    "text_lang_id",
-    "text_quality",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "embedding_near_dup",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "tfidf_top_terms",
-    "graph_pagerank",
-    "kmeans_clusters",
-    "decontam_overlap",
-    "domain_mix_split",
-    "emb_quantize_int8",
-    "pack_sequences",
-    "funnel_view_click_purchase",
-    "text_quality_gate",
-    "ann_hard_negatives",
-    "text_bm25_topk",
-    "hybrid_search_rrf",
-    "dedup_jaccard_prefix",
-    # round-4 additions (sketches, PQ-family ANN, PCA, RAKE)
-    "sketch_cms_bigrams",
-    "sketch_kmv_distinct",
-    "emb_pca_project",
-    "ann_pq_adc_topk",
-    "ann_ivfpq_topk",
-    "text_rake_keyphrases",
-    # round-4 session additions (tokenizer training, data selection,
-    # media near-dup, classifier training)
-    "tok_bpe_pair_counts",
-    "select_dsir_weights",
-    "mm_phash_near_dup",
-    "ml_logreg_irls",
-]
-
-
 def run_headline(sf_dir: str, cpus: int) -> dict:
     import __spark_entry__ as entry
+    from fashion_knowledge_graph_spark import registry
     from fashion_knowledge_graph_spark.session import get_spark
 
     spark = get_spark("bench", cpus=cpus)
@@ -99,7 +55,7 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
 
     qs = entry.queries()
     times: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in registry.headline():
         # best-of-2 with an AGREEMENT rule: the first evaluation pays
         # per-query plan compilation + codegen and is exposed to
         # host-steal waves (observed same-query swings of 2-5× on this

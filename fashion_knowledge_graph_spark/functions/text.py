@@ -128,7 +128,7 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
     100 TB it is pure map tasks pipelined into the scan; the prior
     plan shuffled ~|tokens| rows twice (count + window) and joined
     the result back. The relational formulation is preserved in the
-    driver oracle (``__spark_entry__`` ``text_lang_id`` SQL) and in
+    driver oracle (``registry/text.py`` ``text_lang_id`` SQL) and in
     ``stopword_dim`` for anyone who wants the join shape.
     """
     best = lang_best(F.col(text_col))

@@ -18,7 +18,7 @@ undirected ``-[r]-`` match (graph_database.py:308).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import taxonomy as tx
@@ -200,49 +200,3 @@ def outfit_from_text(query_texts: DataFrame, catalog: DataFrame,
     fused = rrf_fuse([p1, p2], keys=["query_id"], k=rrf_k)
     return grouped_top_k(fused, ["query_id"], [F.desc("rrf_score")],
                          top_k, tie_breaks=[F.asc("product_id")])
-
-
-def negative_samples(triples: DataFrame, exclude_preds=("complements",),
-                     salt: str = "neg") -> DataFrame:
-    """Type-constrained negative sampling for KG-embedding training
-    (the TransE/DistMult corruption step): every distinct
-    ``(subj, pred, obj)`` triple gets ONE corrupted object drawn
-    deterministically from the same predicate's OTHER objects →
-    ``(subj, pred, obj, neg_obj)``.
-
-    Constraining the draw to the predicate's own vocabulary keeps
-    negatives type-consistent (a ``hasColor`` triple corrupts to
-    another color, never to a material) — the corruption regime that
-    yields hard negatives instead of trivially-false ones. The pick
-    is an md5-keyed index into the dense ``row_number`` ranking of
-    the predicate vocabulary with the true object's slot skipped
-    (index < true rank keeps, else +1 — a bijection onto the V−1
-    others), so re-runs are byte-identical and the SQL replay exact.
-
-    Scale shape: the vocabulary is predicate-attribute-sized (dim,
-    not corpus) — ONE dim-sized window ranks it, and both lookups
-    broadcast; the triple stream itself is pure map work. Predicates
-    with a single object (nothing to corrupt to) drop out.
-    """
-    t = (triples.filter(~F.col("pred").isin(*exclude_preds))
-         .select(F.col("subj").cast("string").alias("subj"),
-                 "pred", F.col("obj").cast("string").alias("obj"))
-         .distinct())
-    vocab = (t.select("pred", "obj").distinct()
-             .withColumn("rnk", F.row_number().over(
-                 Window.partitionBy("pred").orderBy("obj")))
-             .withColumn("vsz", F.count(F.lit(1)).over(
-                 Window.partitionBy("pred"))))
-    h = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit(salt), F.col("subj"), F.col("pred"),
-        F.col("obj"))), 1, 15), 16, 10).cast("long")
-    j = (t.join(F.broadcast(vocab), ["pred", "obj"])
-         .filter(F.col("vsz") >= 2)
-         .withColumn("idx0", h % (F.col("vsz") - 1) + 1)
-         .withColumn("nrk", F.when(F.col("idx0") < F.col("rnk"),
-                                   F.col("idx0"))
-                     .otherwise(F.col("idx0") + 1)))
-    neg = vocab.select("pred", F.col("rnk").alias("nrk"),
-                       F.col("obj").alias("neg_obj"))
-    return (j.join(F.broadcast(neg), ["pred", "nrk"])
-            .select("subj", "pred", "obj", "neg_obj"))

@@ -31,6 +31,9 @@ bounded by (watermark horizon × distinct keys).
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +41,38 @@ from ..plans.pipeline import KGPipeline
 
 DOCS_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
                "media_ref:string,offset:int>>")
+EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
+                 "event_type string, value double, props string")
+DOCUMENTS_SCHEMA = ("doc_id bigint, text string, lang string, "
+                    "source string, n_chars bigint")
+
+_ONCE_SEQ = [0]  # per-session memory-sink name counter
+
+
+def _source_dir(path: str) -> str:
+    """The file source reads directories: a single file is staged
+    behind a symlink in a fresh directory (no data copy)."""
+    if os.path.isfile(path):
+        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
+        os.symlink(path, os.path.join(d, os.path.basename(path)))
+        return d
+    return path
+
+
+def _drain(stream: DataFrame, mode: str, tag: str) -> DataFrame:
+    """Run ``stream`` to the end of its static source (``availableNow``)
+    into a memory sink named ``fkg_stream_<tag>_<n>`` and return that
+    table — the deterministic driver-facing form of a streaming
+    query."""
+    _ONCE_SEQ[0] += 1
+    name = f"fkg_stream_{tag}_{_ONCE_SEQ[0]}"
+    q = (stream.writeStream.outputMode(mode).format("memory")
+         .queryName(name)
+         .option("checkpointLocation",
+                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return stream.sparkSession.table(name)
 
 
 def stream_docs(spark: SparkSession, docs_dir: str,
@@ -142,30 +177,11 @@ def stream_sessionize_once(spark: SparkSession, events_path: str,
     (availableNow, append-mode memory sink) and return the closed
     sessions — the driver-facing deterministic runner, same pattern as
     ``stream_tumbling_agg_once``."""
-    import os
-    import tempfile
 
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    src = spark.readStream.schema(schema).parquet(events_path)
+    events_path = _source_dir(events_path)
+    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
     out = stream_sessionize(src, gap=gap)
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_sess_{_ONCE_SEQ[0]}"
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
-
-
-_ONCE_SEQ = [0]  # per-session memory-sink name counter
+    return _drain(out, "append", "sess")
 
 
 def stream_tumbling_agg_once(spark: SparkSession, events_path: str,
@@ -189,19 +205,9 @@ def stream_tumbling_agg_once(spark: SparkSession, events_path: str,
     Output matches the batch ``events_tumbling_agg`` query:
     (hour_start, event_type, n, total_value).
     """
-    import os
-    import tempfile
 
-    if os.path.isfile(events_path):
-        # the file source requires a directory; stage single-file
-        # inputs behind a symlink (no data copy)
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    src = spark.readStream.schema(schema).parquet(events_path)
+    events_path = _source_dir(events_path)
+    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
     agg = (src.groupBy(F.window("ts", window).alias("win"), "event_type")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
@@ -209,15 +215,7 @@ def stream_tumbling_agg_once(spark: SparkSession, events_path: str,
            .select(F.date_format(F.col("win.start"),
                                  "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
                    "event_type", "n", "total_value"))
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_evagg_{_ONCE_SEQ[0]}"
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(agg, "complete", "evagg")
 
 
 def stream_interval_join(views: DataFrame, purchases: DataFrame,
@@ -263,19 +261,11 @@ def stream_interval_join_once(spark: SparkSession, events_path: str,
     ``stream_interval_join``'s default, pinned in
     tests/test_streaming.py.
     """
-    import os
-    import tempfile
 
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
+    events_path = _source_dir(events_path)
 
     def src():
-        return spark.readStream.schema(schema).parquet(events_path)
+        return spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
 
     out = stream_interval_join(
         src().filter(F.col("event_type") == "view"),
@@ -284,15 +274,7 @@ def stream_interval_join_once(spark: SparkSession, events_path: str,
     out = out.select("purchase_id", "view_id",
                      F.col("p_user").alias("user_id"),
                      F.round("purchase_value", 6).alias("purchase_value"))
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_ssj_{_ONCE_SEQ[0]}"
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(out, "append", "ssj")
 
 
 def stream_event_counts(events_stream: DataFrame,
@@ -345,28 +327,12 @@ def stream_dedup_once(spark: SparkSession, events_path: str,
     The driver-facing deterministic runner (same pattern as
     ``stream_tumbling_agg_once``); the bounded-state expiry semantics
     are pinned separately in tests/test_streaming.py."""
-    import os
-    import tempfile
 
     keys = keys or ["user_id", "event_type"]
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    src = spark.readStream.schema(schema).parquet(events_path)
+    events_path = _source_dir(events_path)
+    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
     out = stream_dedup_keys(src, keys, watermark="365 days")
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_dedup_{_ONCE_SEQ[0]}"
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(out, "append", "dedup")
 
 
 def stream_merge_into(stream_df: DataFrame, table, key_cols: list[str],
@@ -392,7 +358,6 @@ def stream_merge_into(stream_df: DataFrame, table, key_cols: list[str],
     Returns the started query (availableNow trigger is the caller's
     choice via the stream's writeStream options)."""
     import json
-    import os
 
     from ..operators.topk import grouped_top_k
 
@@ -438,19 +403,11 @@ def stream_merge_once(spark: SparkSession, events_path: str,
     by event_id wins. Deterministic over a static source regardless
     of micro-batching: per key, the last-arriving batch's max-event_id
     row is the final state."""
-    import os
-    import tempfile
 
     from ..sources.tables import SnapshotTable
 
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    src = (spark.readStream.schema(schema)
+    events_path = _source_dir(events_path)
+    src = (spark.readStream.schema(EVENTS_SCHEMA)
            .option("maxFilesPerTrigger", 1)     # one file = one batch
            .parquet(events_path)
            .select("event_id", "user_id", "event_type", "value"))
@@ -479,18 +436,10 @@ def stream_cms_once(spark: SparkSession, docs_path: str,
     so the full ANSI-SQL oracle applies; the estimates use the same
     portable 60-bit lane as ``operators/sketches.cms_term_counts``.
     """
-    import os
-    import tempfile
 
     from fashion_knowledge_graph_spark.operators.sketches import _h60
 
-    if os.path.isfile(docs_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(docs_path, os.path.join(
-            d, os.path.basename(docs_path)))
-        docs_path = d
-    schema = ("doc_id bigint, text string, lang string, "
-              "source string, n_chars bigint")
+    docs_path = _source_dir(docs_path)
     rows = F.array([F.lit(i) for i in range(depth)])
 
     def cells_of(df):
@@ -503,18 +452,10 @@ def stream_cms_once(spark: SparkSession, docs_path: str,
             F.pmod(_h60(F.concat_ws(":", F.col("d"), F.col("term"))),
                    F.lit(width)).alias("bucket"))
 
-    src = spark.readStream.schema(schema).parquet(docs_path)
+    src = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(docs_path)
     buckets = cells_of(src).groupBy("d", "bucket").agg(
         F.count(F.lit(1)).alias("bucket_n"))
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_cms_{_ONCE_SEQ[0]}"
-    q = (buckets.writeStream.outputMode("complete").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    drained = spark.table(name)
+    drained = _drain(buckets, "complete", "cms")
 
     batch = spark.read.parquet(docs_path) \
         .filter(F.col("text").isNotNull()) \
@@ -542,20 +483,12 @@ def stream_hll_once(spark: SparkSession, events_path: str) -> DataFrame:
     drained registers equal the batch aggregation exactly, and the
     driver oracle for the BATCH HLL applies verbatim (stream ≡ batch).
 
-    Register math mirrors ``__spark_entry__.sketch_hll_distinct``:
+    Register math mirrors ``registry/stats.py::sketch_hll_distinct``:
     portable 60-bit md5, j = h mod 64, integer leading-zero rank via
     length(bin(w)), fanned-in grid, linear-counting correction.
     """
-    import os
-    import tempfile
 
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
+    events_path = _source_dir(events_path)
 
     def registers_of(df):
         h = F.conv(F.substring(F.md5(F.concat_ws(
@@ -570,20 +503,13 @@ def stream_hll_once(spark: SparkSession, events_path: str) -> DataFrame:
                 .groupBy("event_type", "j")
                 .agg(F.max("r").alias("m_j")))
 
-    src = spark.readStream.schema(schema).parquet(events_path)
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_hll_{_ONCE_SEQ[0]}"
-    q = (registers_of(src).writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
     # pin the drained state: the memory-sink view self-joins below
     # (grid ← regs ← same view) and Spark's analyzer rejects the
     # conflicting view references; the register table is 64·|types|
     # rows, so the checkpoint is free
-    regs = spark.table(name).localCheckpoint(eager=True)
+    regs = _drain(registers_of(src), "complete", "hll") \
+        .localCheckpoint(eager=True)
 
     grid = (regs.select("event_type").distinct()
             .crossJoin(spark.range(64)
@@ -612,17 +538,9 @@ def stream_static_enrich_once(spark: SparkSession, events_path: str,
     per-segment rollup. No watermark needed: a static side can never
     be late. Complete mode ⇒ stream ≡ batch, so the driver's plain
     SQL join+rollup oracle value-hash-checks the streaming run."""
-    import os
-    import tempfile
 
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(events_path, os.path.join(
-            d, os.path.basename(events_path)))
-        events_path = d
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    src = spark.readStream.schema(schema).parquet(events_path)
+    events_path = _source_dir(events_path)
+    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
     dim = spark.read.parquet(customer_path).select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment")
     joined = src.join(F.broadcast(dim), "user_id")
@@ -630,15 +548,7 @@ def stream_static_enrich_once(spark: SparkSession, events_path: str,
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
         .cast("double").alias("total_value"))
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_enrich_{_ONCE_SEQ[0]}"
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name).localCheckpoint(eager=True)
+    return _drain(agg, "complete", "enrich").localCheckpoint(eager=True)
 
 
 def stream_quality_filter_once(spark: SparkSession,
@@ -649,29 +559,13 @@ def stream_quality_filter_once(spark: SparkSession,
     ZERO state — the shape of an ingest-time document filter (score,
     gate, pass through). Stream ≡ batch trivially (no aggregation to
     re-order), so the batch scoring SQL oracles the run."""
-    import os
-    import tempfile
 
     from ..functions.text import quality_score
 
-    if os.path.isfile(docs_path):
-        d = tempfile.mkdtemp(prefix="fkg_stream_src_")
-        os.symlink(docs_path, os.path.join(
-            d, os.path.basename(docs_path)))
-        docs_path = d
-    schema = ("doc_id bigint, text string, lang string, "
-              "source string, n_chars bigint")
-    src = spark.readStream.schema(schema).parquet(docs_path)
+    docs_path = _source_dir(docs_path)
+    src = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(docs_path)
     scored = src.select(
         "doc_id",
         F.round(quality_score(F.col("text")), 6).alias("quality")) \
         .filter(F.col("quality") >= min_quality)
-    _ONCE_SEQ[0] += 1
-    name = f"fkg_stream_qgate_{_ONCE_SEQ[0]}"
-    q = (scored.writeStream.outputMode("append").format("memory")
-         .queryName(name)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="fkg_stream_cp_"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name).localCheckpoint(eager=True)
+    return _drain(scored, "append", "qgate").localCheckpoint(eager=True)

@@ -53,10 +53,10 @@ def _seed() -> str:
 def _sample_names() -> list[str]:
     if not os.path.isdir(SF_DIR):
         return []
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
-    import __spark_entry__ as entry
+    # declared oracles, not evaluated: collecting builds no world
+    from fashion_knowledge_graph_spark import registry
 
-    names = sorted(set(entry.queries()) & set(entry.oracle_sql()))
+    names = sorted(registry.oracles())
     seed = _seed()
     names.sort(key=lambda n: hashlib.md5(f"{seed}:{n}".encode()).hexdigest())
     return sorted(names[:SAMPLE_SIZE])

@@ -178,35 +178,3 @@ def test_two_hop_mid_degree_cap(spark):
                                   max_mid_degree=3).collect()}
     # h has degree 4 → its fan-out is dropped; only a->b->c remains
     assert capped == {"c"}
-
-
-def test_negative_samples_type_constrained_and_deterministic(spark):
-    triples = [
-        ("i1", "hasColor", "black"), ("i1", "hasColor", "red"),
-        ("i2", "hasColor", "blue"), ("i3", "hasColor", "black"),
-        ("i1", "hasMaterial", "cotton"), ("i2", "hasMaterial", "silk"),
-        # single-object predicate: nothing to corrupt to → drops
-        ("i1", "hasStyle", "casual"),
-        # complements excluded by default
-        ("i1", "complements", "i2"),
-    ]
-    df = spark.createDataFrame(triples, "subj string, pred string, obj string")
-    out = Q.negative_samples(df).collect()
-    by_pred = {}
-    for r in out:
-        by_pred.setdefault(r.pred, []).append(r)
-    assert set(by_pred) == {"hasColor", "hasMaterial"}
-    vocab = {"hasColor": {"black", "red", "blue"},
-             "hasMaterial": {"cotton", "silk"}}
-    for pred, rows in by_pred.items():
-        for r in rows:
-            # corrupted object: same predicate's vocabulary, never
-            # the true object
-            assert r.neg_obj in vocab[pred] and r.neg_obj != r.obj
-    # every distinct input triple of a corruptable predicate appears
-    # exactly once
-    assert len(by_pred["hasColor"]) == 4
-    assert len(by_pred["hasMaterial"]) == 2
-    # byte-identical across re-runs
-    again = Q.negative_samples(df).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))

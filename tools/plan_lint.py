@@ -12,7 +12,15 @@ Checked per query (formatted explain, final AQE-planned tree):
   upstream); the lint flags any unpartitioned window whose subtree
   has no row-limiting operator.
 
+A flagged query is WAIVED when its ``@query`` declaration carries a
+``waive`` reason: its unpartitioned window provably runs over a
+DIMENSION-sized input the plan-text check cannot see, and the reason
+names the bound. Everything corpus-sized was migrated to the
+range-partitioned two-pass forms (topk.global_rank /
+ntile_distributed / global_prefix_sum).
+
 Usage: python tools/plan_lint.py [sf_dir] [query ...]
+Spark runs at ``local[$SPARK_GRAFT_CPUS]`` (default 8).
 Exit code 1 if any query is flagged.
 """
 
@@ -31,22 +39,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 # grouped aggregates can still be corpus-sized.
 BOUNDED = ("TakeOrderedAndProject", "GlobalLimit", "CollectLimit",
            "WindowGroupLimit")
-
-# queries whose unpartitioned window provably runs over a
-# DIMENSION-sized input the plan-text check cannot see; each waiver
-# names the bound. Everything corpus-sized was migrated to the
-# range-partitioned two-pass forms (topk.global_rank /
-# ntile_distributed / global_prefix_sum).
-WAIVED = {
-    "q_skyline_2d": "global sweep input = per-bucket local-skyline "
-                    "survivors (bucket count x frontier size)",
-    "events_survival_km": "KM estimator input = distinct-duration "
-                          "rollup (day-range-bounded vocabulary)",
-    "stat_mannwhitney_u": "midranks on the DISTINCT-VALUE table "
-                          "(value vocabulary, not rows)",
-    "stat_spearman": "tie-aware midranks on distinct-value tables "
-                     "for both variables",
-}
 
 
 def lint_plan(plan: str) -> list[str]:
@@ -78,11 +70,14 @@ def main():
     import contextlib
 
     import __spark_entry__ as entry
+    from fashion_knowledge_graph_spark import registry
     from fashion_knowledge_graph_spark.session import get_spark
 
-    spark = get_spark("plan-lint", cpus=8, shuffle_partitions=16)
+    spark = get_spark(
+        "plan-lint", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     bad = 0
     qs = entry.queries()
+    waived = registry.waivers()
     for name in sorted(qs):
         if only and name not in only:
             continue
@@ -94,8 +89,8 @@ def main():
             flags = lint_plan(buf.getvalue())
         except Exception as e:                      # noqa: BLE001
             flags = [f"plan build error: {e}"]
-        if flags and name in WAIVED:
-            print(f"WAIVE {name:32s} {WAIVED[name]}")
+        if flags and name in waived:
+            print(f"WAIVE {name:32s} {waived[name]}")
             continue
         if flags:
             bad += 1
