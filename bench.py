@@ -453,7 +453,8 @@ def run_kg_only(sf_dir: str, cpus: int, replicate: int = 1,
 def main():
     args = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     if "--sf-dir" in args:
         sf_dir = args[args.index("--sf-dir") + 1]
     if "--cpus" in args:

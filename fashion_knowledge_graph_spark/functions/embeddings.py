@@ -201,17 +201,23 @@ def lsh_params_for(cos_threshold: float, target_recall: float = 0.99,
     return b * k, k
 
 
-def make_signature_udf(planes: np.ndarray, nbands: int):
+def make_signature_udf(nbits: int, nbands: int, seed_key: str):
     """vec → array<int> of ``nbands`` band signatures (packed sign
-    bits). Runs as an Arrow-batched matmul — one BLAS call per batch."""
-    nbits = planes.shape[0]
+    bits) under ``hyperplanes(dim, nbits, seed_key)``, drawn for the
+    vectors' own width ``dim`` once per width per task — no caller
+    needs to know the width, so none probes for it. Runs as an
+    Arrow-batched matmul — one BLAS call per batch."""
     assert nbits % nbands == 0
     bits_per_band = nbits // nbands
+    planes: dict[int, np.ndarray] = {}
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def signature_udf(vecs: pd.Series) -> pd.Series:
         m = np.stack(vecs.to_numpy())                      # (n, dim)
-        signs = (m @ planes.T) >= 0                        # (n, nbits)
+        dim = m.shape[1]
+        if dim not in planes:
+            planes[dim] = hyperplanes(dim, nbits, seed_key)
+        signs = (m @ planes[dim].T) >= 0                   # (n, nbits)
         weights = (1 << np.arange(bits_per_band)).astype(np.int64)
         sigs = signs.reshape(len(m), nbands, bits_per_band) @ weights
         return pd.Series(list(sigs.astype(np.int32)))

@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import taxonomy as tx
-from ..functions.embeddings import hyperplanes, make_signature_udf
+from ..functions.embeddings import make_signature_udf
 from . import linking as lk
 
 DUP_COSINE = 0.98
@@ -31,16 +30,25 @@ DUP_COSINE = 0.98
 def near_duplicate_pairs(catalog: DataFrame,
                          threshold: float = DUP_COSINE,
                          nbits: int = 64, nbands: int = 8,
-                         probe: DataFrame | None = None) -> DataFrame:
-    """LSH-blocked self-join of the catalog embedding space →
-    (src, dst, score) pairs, src < dst, with cosine ≥ threshold.
+                         probe: DataFrame | None = None,
+                         id_col: str = "product_id",
+                         vec_col: str = "embedding",
+                         keys: tuple[str, ...] = ("type", "color"),
+                         seed: str = "dedup-img") -> DataFrame:
+    """LSH-blocked cosine self-join → (src, dst, score) pairs of
+    ``id_col`` values, src < dst, with cosine ≥ threshold — the
+    package's one blocked near-duplicate plan (canonicalization,
+    ``dedup.embedding_near_dup_auto`` past the driver budget,
+    ``dedup.semantic_dedup``).
 
     The two-phase, narrow-row plan of ``linking.link_lsh``: candidates
-    join on ids and the blocking key (type, color, band, bsig) only —
-    the 512-d vectors never ride the ``nbands``× replicated join or the
-    dedup — then each endpoint's embedding joins back by id and
-    ``linking._dot_arrow`` scores the pair (a plain dot: the cosine of
-    L2-normalized embeddings).
+    join on ids and the blocking key (``keys``, band, bsig) only — the
+    vectors never ride the ``nbands``× replicated join or the dedup —
+    then each endpoint's vector joins back by id and
+    ``linking._dot_arrow`` scores the pair's cosine. The hyperplanes
+    (``seed``) are drawn for the vectors' own width. ``nbits=0,
+    nbands=1`` makes every pair sharing ``keys`` a candidate: an exact
+    blocked self-join.
 
     ``probe``: optional subset of catalog rows — restricts the output
     to pairs with at least one endpoint in ``probe`` (the incremental
@@ -49,31 +57,30 @@ def near_duplicate_pairs(catalog: DataFrame,
     way round, so the pair is oriented (least, greatest) before the
     dedup; without a probe, id1 < id2 halves the candidates.
     """
-    planes = hyperplanes(tx.IMG_DIM, nbits, seed_key="dedup-img")
-    sig = make_signature_udf(planes, nbands)
+    sig = make_signature_udf(nbits, nbands, seed)
 
     def banded(df, side):
         return df.select(
-            *[F.col(x).alias(f"{side}_{x}")
-              for x in ("product_id", "type", "color")],
-            F.posexplode(sig("embedding")).alias(f"{side}_band",
-                                                 f"{side}_bsig"))
+            *[F.col(x).alias(f"{side}_{x}") for x in (id_col, *keys)],
+            F.posexplode(sig(vec_col)).alias(f"{side}_band",
+                                             f"{side}_bsig"))
 
     def vec(end):
-        return catalog.select(F.col("product_id").alias(end),
-                              F.col("embedding").alias(f"{end}_emb"))
+        return catalog.select(F.col(id_col).alias(end),
+                              F.col(vec_col).alias(f"{end}_vec"))
 
     a = banded(catalog if probe is None else probe, "a")
     b = banded(catalog, "b")
-    pid_a, pid_b = F.col("a_product_id"), F.col("b_product_id")
+    id_a, id_b = F.col(f"a_{id_col}"), F.col(f"b_{id_col}")
     on = [F.col(f"a_{x}") == F.col(f"b_{x}")
-          for x in ("band", "bsig", "type", "color")]
-    on.append(pid_a < pid_b if probe is None else pid_a != pid_b)
+          for x in ("band", "bsig", *keys)]
+    on.append(id_a < id_b if probe is None else id_a != id_b)
     cand = a.join(b, on, "inner").select(
-        F.least(pid_a, pid_b).alias("src"),
-        F.greatest(pid_a, pid_b).alias("dst")).dropDuplicates()
+        F.least(id_a, id_b).alias("src"),
+        F.greatest(id_a, id_b).alias("dst")).dropDuplicates()
     paired = cand.join(vec("src"), "src").join(vec("dst"), "dst")
-    return lk._dot_arrow(paired, "src_emb", "dst_emb", "score") \
+    return lk._dot_arrow(paired, "src_vec", "dst_vec", "score",
+                         cosine=True) \
         .filter(F.col("score") >= threshold).select("src", "dst", "score")
 
 
@@ -176,8 +183,9 @@ def canonical_mapping(catalog: DataFrame, packed: dict | None,
     the gate this beats the LSH self-join and its Spark jobs. ``None``
     takes the LSH-blocked ``near_duplicate_pairs`` + connected
     components. Both paths read only product_id, type, color and
-    embedding, and give identical results (tests/test_components.py
-    pins both paths)."""
+    embedding, score the same cosine (unnormalized embeddings too),
+    and give identical results (tests/test_components.py pins both
+    paths)."""
     if packed is not None:
         import numpy as np
 

@@ -21,10 +21,14 @@ pruning / AQE:
 - ``simhash_pairs``        — 64-bit SimHash, banded blocking on 4×16
                              bit keys, Hamming-distance verify with
                              ``bit_count(xor)`` (JVM-side).
-- ``embedding_near_dup``   — cosine-threshold self-join over an
-                             embedding column (exact; the LSH-blocked
-                             variant for big corpora is
-                             ``components.near_duplicate_pairs``).
+- ``embedding_near_dup_auto`` — cosine-threshold self-join over an
+                             embedding column behind linking's
+                             driver-fit byte gate: the exact broadcast
+                             matmul, or past the budget the package's
+                             one blocked cosine self-join,
+                             ``components.near_duplicate_pairs``
+                             (which ``semantic_dedup`` blocks on
+                             k-means clusters).
 
 All pair emitters return canonical ``id_a < id_b`` pairs. ``dedup_keep``
 turns any pair set into a keep/drop decision via connected components
@@ -37,6 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
+from . import components as cc
+from . import linking as lk
 
 
 # ---------------------------------------------------------------- exact
@@ -245,31 +251,26 @@ def minhash_lane_params(num_hashes: int) -> list[tuple[int, int, int]]:
     return out
 
 
-def _lane_exprs(num_hashes: int, hash_family: str) -> list:
-    """Per-lane hash expressions over the 60-bit posting column ``sh``.
-
-    ``portable`` (default): a carefully overflow-free universal hash
-    family both engines evaluate identically in BIGINT arithmetic —
-    split ``sh`` into 30-bit halves (lo, hi) and take
+def _lane_exprs(num_hashes: int) -> list:
+    """Per-lane hash expressions over the 60-bit posting column ``sh``:
+    a carefully overflow-free universal hash family both engines
+    evaluate identically in BIGINT arithmetic — split ``sh`` into
+    30-bit halves (lo, hi) and take
     h_j = (a_j·lo + b_j·hi + c_j) mod (2^31−1). Products stay < 2^61
     and sums < 2^63, so no 64-bit wraparound anywhere (Spark 4 runs
     ANSI mode; DuckDB BIGINT matches exactly) — the whole MinHash
     pipeline is oracle-replayable at codegen speed (an earlier
-    md5-per-lane portable family was 128 digests/posting row — 4.5×
-    the round-1 xxhash runtime). ``fast``: h_j(x) = xxhash64(j, x),
-    Spark-only.
+    md5-per-lane family was 128 digests/posting row — 4.5× the
+    round-1 xxhash runtime).
     """
-    if hash_family == "portable":
-        # reference pre-materialized sh_lo/sh_hi columns: computing the
-        # split inside each of the 128 aggregate expressions is not
-        # CSE'd by Catalyst (256 extra bit-ops per posting row)
-        lo, hi = F.col("sh_lo"), F.col("sh_hi")
-        return [
-            F.min(F.pmod(F.lit(a) * lo + F.lit(b) * hi + F.lit(c),
-                         F.lit(_MH_PRIME))).alias(f"h{j}")
-            for j, (a, b, c) in enumerate(minhash_lane_params(num_hashes))]
-    return [F.min(F.xxhash64(F.lit(j), F.col("sh"))).alias(f"h{j}")
-            for j in range(num_hashes)]
+    # reference pre-materialized sh_lo/sh_hi columns: computing the
+    # split inside each of the 128 aggregate expressions is not CSE'd
+    # by Catalyst (256 extra bit-ops per posting row)
+    lo, hi = F.col("sh_lo"), F.col("sh_hi")
+    return [
+        F.min(F.pmod(F.lit(a) * lo + F.lit(b) * hi + F.lit(c),
+                     F.lit(_MH_PRIME))).alias(f"h{j}")
+        for j, (a, b, c) in enumerate(minhash_lane_params(num_hashes))]
 
 
 def _with_lane_halves(post: DataFrame) -> DataFrame:
@@ -284,7 +285,7 @@ def _minhash_sig_arrow(df: DataFrame, id_col: str, text_col: str,
     ``mapInArrow`` numpy kernel — the SimHash-kernel pattern applied to
     MinHash (round-2 verdict item #1).
 
-    Identical lane values to the Catalyst ``portable`` path: same
+    Identical lane values to the Catalyst spec: same
     md5-derived 60-bit shingle hashes (functions/text.shingle_hash),
     same ``minhash_lane_params`` universal-hash coefficients, same
     mod-(2^31−1) arithmetic — so the DuckDB candidate-set replay
@@ -371,21 +372,18 @@ def _minhash_sig_arrow(df: DataFrame, id_col: str, text_col: str,
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str,
                       n: int = 3, num_hashes: int = 64,
-                      hash_family: str = "portable",
                       engine: str = "auto") -> DataFrame:
     """(id, sig:array) MinHash signatures.
 
-    ``portable`` family (default) runs as one ``mapInArrow`` numpy
-    kernel (``_minhash_sig_arrow``); ``engine="catalyst"`` keeps the
-    relational spec (posting explode → 128 JVM min-aggregates) used by
-    the kernel's parity test and by the Spark-only ``fast`` family
-    (xxhash64 lanes have no numpy equivalent)."""
-    if hash_family == "portable" and engine != "catalyst":
+    Runs as one ``mapInArrow`` numpy kernel (``_minhash_sig_arrow``);
+    ``engine="catalyst"`` keeps the relational spec (posting explode →
+    128 JVM min-aggregates) the kernel's parity test compares with."""
+    if engine != "catalyst":
         sig = _minhash_sig_arrow(df, id_col, text_col, n, num_hashes)
     else:
         post = _with_lane_halves(
             _shingle_posting_catalyst(df, id_col, text_col, n))
-        sig = post.groupBy("id").agg(*_lane_exprs(num_hashes, hash_family))
+        sig = post.groupBy("id").agg(*_lane_exprs(num_hashes))
     return sig.select(
         "id", F.array(*[F.col(f"h{j}") for j in range(num_hashes)]).alias("sig"))
 
@@ -394,8 +392,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
                       num_hashes: int = 64, bands: int = 16,
                       threshold: float = 0.5,
-                      verify: bool = True,
-                      hash_family: str = "portable",
                       probe: DataFrame | None = None) -> DataFrame:
     """Banded-LSH candidate pairs, then exact-Jaccard verification.
 
@@ -403,10 +399,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     at J=0.8: ≈ 0.9998 — tune (bands, num_hashes) to the target
     threshold. Verification re-joins candidates to the posting lists
     and computes exact Jaccard, so precision is 1.0; recall is the LSH
-    recall (reported vs exact in tests). With ``hash_family=
-    "portable"`` (default) the lane hashes and band keys are pure md5
-    → the full candidate set + verification is reproducible in DuckDB
-    (the driver's oracle); ``"fast"`` swaps in xxhash64 lanes.
+    recall (reported vs exact in tests). The lane hashes are portable
+    BIGINT arithmetic and the band keys md5 → the full candidate set +
+    verification is reproducible in DuckDB (the driver's oracle).
 
     ``probe``: optional subset of corpus rows (same ``id_col``) —
     restricts output to pairs with at least one endpoint in ``probe``
@@ -416,33 +411,19 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    if hash_family == "portable":
-        # one-pass Arrow kernel (identical lane values; see
-        # _minhash_sig_arrow) — the Catalyst 128-min-agg form cost
-        # +45% on the bench. Verification re-derives posting lists
-        # separately below (it needs them anyway, and only for the
-        # candidate ids).
-        # checkpoint: the banded self-join reads sig via two subtrees
-        # of one job — without it the Arrow kernel runs twice. Eager:
-        # lazy checkpoints let the subtrees' concurrent AQE stage-jobs
-        # race to compute the same partitions (bimodal 3× slowdown).
-        sig = _minhash_sig_arrow(df, id_col, text_col, n, num_hashes) \
-            .localCheckpoint(eager=True)
-        post_all = None
-    else:
-        post_all = _shingle_posting(df, id_col, text_col, n) \
-            .localCheckpoint(eager=True)   # shared by sig + verify;
-        #                          blocks auto-freed on GC (no persist leak)
-        sig = _with_lane_halves(post_all) \
-            .groupBy("id").agg(*_lane_exprs(num_hashes, hash_family))
-    if hash_family == "portable":
-        band_keys = [F.md5(F.concat_ws("|", *[
-            F.col(f"h{b * rows_per_band + r}")
-            for r in range(rows_per_band)])) for b in range(bands)]
-    else:
-        band_keys = [F.xxhash64(*[F.col(f"h{b * rows_per_band + r}")
-                                  for r in range(rows_per_band)])
-                     for b in range(bands)]
+    # one-pass Arrow kernel (identical lane values; see
+    # _minhash_sig_arrow) — the Catalyst 128-min-agg form cost +45% on
+    # the bench. Verification re-derives posting lists separately below
+    # (it needs them anyway, and only for the candidate ids).
+    # checkpoint: the banded self-join reads sig via two subtrees of
+    # one job — without it the Arrow kernel runs twice. Eager: lazy
+    # checkpoints let the subtrees' concurrent AQE stage-jobs race to
+    # compute the same partitions (bimodal 3× slowdown).
+    sig = _minhash_sig_arrow(df, id_col, text_col, n, num_hashes) \
+        .localCheckpoint(eager=True)
+    band_keys = [F.md5(F.concat_ws("|", *[
+        F.col(f"h{b * rows_per_band + r}")
+        for r in range(rows_per_band)])) for b in range(bands)]
     banded = sig.select(
         "id", F.posexplode(F.array(*band_keys)).alias("band", "bkey"))
     a = banded.select(F.col("id").alias("id_a"), "band", "bkey")
@@ -462,26 +443,20 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
             .select(F.least("id_a", "id_b").alias("id_a"),
                     F.greatest("id_a", "id_b").alias("id_b")) \
             .distinct()
-    if not verify:
-        return cand
-    if post_all is None:
-        # verification only needs posting lists for CANDIDATE ids —
-        # semi-join the corpus down before the second shingle pass
-        # instead of re-tokenizing everything. At 100 TB duplicates
-        # are sparse, so this turns the verify pass from O(corpus)
-        # into O(candidates); semantics are identical (inter and
-        # sizes are only ever read for candidate pairs). cand is
-        # checkpointed because it now feeds three subtrees (the two
-        # id projections + the verify join) — without it the banded
-        # self-join re-executes per consumer.
-        cand = cand.localCheckpoint(eager=True)
-        cand_ids = cand.select(F.col("id_a").alias(id_col)).unionByName(
-            cand.select(F.col("id_b").alias(id_col))).distinct()
-        post = _shingle_posting(df.join(cand_ids, id_col, "left_semi"),
-                                id_col, text_col, n) \
-            .localCheckpoint(eager=True)   # three subtrees below
-    else:
-        post = post_all
+    # verification only needs posting lists for CANDIDATE ids —
+    # semi-join the corpus down before the second shingle pass instead
+    # of re-tokenizing everything. At 100 TB duplicates are sparse, so
+    # this turns the verify pass from O(corpus) into O(candidates);
+    # semantics are identical (inter and sizes are only ever read for
+    # candidate pairs). cand is checkpointed because it feeds three
+    # subtrees (the two id projections + the verify join) — without it
+    # the banded self-join re-executes per consumer.
+    cand = cand.localCheckpoint(eager=True)
+    cand_ids = cand.select(F.col("id_a").alias(id_col)).unionByName(
+        cand.select(F.col("id_b").alias(id_col))).distinct()
+    post = _shingle_posting(df.join(cand_ids, id_col, "left_semi"),
+                            id_col, text_col, n) \
+        .localCheckpoint(eager=True)   # three subtrees below
     sizes = post.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     pa = post.select(F.col("id").alias("id_a"), "sh")
     pb = post.select(F.col("id").alias("id_b"), "sh")
@@ -686,9 +661,10 @@ def embedding_near_dup_matmul(df: DataFrame, id_col: str = "vec_id",
     with one BLAS call (``mapInPandas``) — a single map-side pass, no
     shuffle, no per-pair object churn. This is the exact-search
     pattern up to corpora whose (id, vec) fit in executor memory
-    (~10M × 64-d ≈ 2.5 GB); beyond that, block on an LSH/centroid key
-    first (``components.near_duplicate_pairs`` / ``similarity.ivf_topk``).
-    ~8× faster than the relational cross-join form at sf0.1.
+    (~10M × 64-d ≈ 2.5 GB); ``embedding_near_dup_auto`` takes it
+    under linking's driver budget and the LSH-blocked
+    ``components.near_duplicate_pairs`` past it. ~8× faster than a
+    relational cross-join form at sf0.1.
     """
     import numpy as np
     import pandas as pd
@@ -744,144 +720,29 @@ def embedding_near_dup_matmul(df: DataFrame, id_col: str = "vec_id",
         .mapInPandas(kernel, out_schema)
 
 
-def embedding_near_dup(df: DataFrame, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       threshold: float = 0.95,
-                       block_col: str | None = None) -> DataFrame:
-    """Exact cosine-threshold self-join (id_a < id_b), relational form.
-
-    ``block_col`` (e.g. a label / LSH band) turns the cross join into
-    an equi-join — at corpus scale always pass one (or use
-    ``components.near_duplicate_pairs`` for sign-LSH blocking); the
-    unblocked form is the small-scale oracle configuration. For the
-    fast exact path see ``embedding_near_dup_matmul``.
-    """
-    # L2-normalize BEFORE the join: per-pair work drops to one dot
-    # product (the naive form recomputes two norms per pair — 3× the
-    # flops on the O(n²) side of the plan)
-    norm = F.sqrt(F.aggregate(
-        F.col(vec_col), F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    unit = F.transform(F.col(vec_col),
-                       lambda x: x.cast("double") / F.col("__n"))
-    side = df.select(F.col(id_col).alias("id"),
-                     F.col(vec_col),
-                     *( [F.col(block_col).alias("blk")] if block_col else [])) \
-        .withColumn("__n", norm).withColumn("vec", unit) \
-        .drop(vec_col, "__n")
-    a = side.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"),
-                    *( [F.col("blk").alias("blk")] if block_col else []))
-    b = side.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"),
-                    *( [F.col("blk").alias("blk")] if block_col else []))
-    if block_col:
-        cand = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
-    else:
-        cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    dot = F.aggregate(
-        F.zip_with("vec_a", "vec_b", lambda x, y: x * y),
-        F.lit(0.0), lambda acc, v: acc + v)
-    scored = cand.withColumn("cosine", dot)
-    return scored.filter(F.col("cosine") >= threshold) \
-        .select("id_a", "id_b", "cosine")
-
-
-def embedding_near_dup_lsh(df: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           threshold: float = 0.95,
-                           nbits: int = 64, nbands: int = 8,
-                           dim: int | None = None) -> DataFrame:
-    """Sign-LSH-blocked near-dup pairs — the beyond-driver-memory path.
-
-    Random-hyperplane band signatures → equi-join on (band, bsig) →
-    exact-cosine verification of the candidates in an Arrow matmul
-    kernel (precision 1.0; recall is the LSH recall — at cos ≥ 0.95
-    with 8 bands × 8 bits, 1-(1-0.9^8)^8 ≈ 0.989). Vectors never ride
-    the banded join: candidates are narrow (id, band, bsig) rows,
-    vectors re-join only for the surviving pairs — same two-phase plan
-    as linking.link_mentions."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..functions.embeddings import hyperplanes, make_signature_udf
-
-    id_type = df.schema[id_col].dataType
-    if dim is None:
-        # dim probe costs one tiny job; callers that know the dim (or
-        # already probed, like embedding_near_dup_auto) pass it in
-        first = df.select(F.size(F.col(vec_col)).alias("d")).head(1)
-        if not first:          # empty corpus → empty pair set
-            return df.sparkSession.createDataFrame(
-                [], f"id_a {id_type.simpleString()}, "
-                    f"id_b {id_type.simpleString()}, cosine double")
-        dim = first[0]["d"]
-    planes = hyperplanes(dim, nbits, seed_key="near-dup-generic")
-    sig = make_signature_udf(planes, nbands)
-    keyed = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    banded = keyed.select(
-        "id", F.posexplode(sig("vec")).alias("band", "bsig"))
-    a = banded.select(F.col("id").alias("id_a"), "band", "bsig")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bsig")
-    cand = a.join(b, ["band", "bsig"]) \
-        .filter(F.col("id_a") < F.col("id_b")) \
-        .select("id_a", "id_b").distinct()
-    withv = cand \
-        .join(keyed.select(F.col("id").alias("id_a"),
-                           F.col("vec").alias("vec_a")), "id_a") \
-        .join(keyed.select(F.col("id").alias("id_b"),
-                           F.col("vec").alias("vec_b")), "id_b")
-
-    out_schema = T.StructType([
-        T.StructField("id_a", id_type), T.StructField("id_b", id_type),
-        T.StructField("cosine", T.DoubleType())])
-
-    def verify(batches):
-        # vectorized pair cosine — NOT a Catalyst zip_with/aggregate
-        # (higher-order-function lambdas are interpreted; this is the
-        # exact hot path where that cost 10×+ before)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            va = np.stack([np.asarray(v, dtype=np.float64)
-                           for v in pdf["vec_a"]])
-            vb = np.stack([np.asarray(v, dtype=np.float64)
-                           for v in pdf["vec_b"]])
-            va /= np.maximum(np.linalg.norm(va, axis=1, keepdims=True), 1e-300)
-            vb /= np.maximum(np.linalg.norm(vb, axis=1, keepdims=True), 1e-300)
-            cos = np.einsum("ij,ij->i", va, vb)
-            keep = cos >= threshold
-            yield pd.DataFrame({"id_a": pdf["id_a"][keep],
-                                "id_b": pdf["id_b"][keep],
-                                "cosine": cos[keep]})
-
-    return withv.mapInPandas(verify, out_schema)
-
-
 def embedding_near_dup_auto(df: DataFrame, id_col: str = "vec_id",
                             vec_col: str = "embedding",
-                            threshold: float = 0.95,
-                            matmul_budget_rows: int = 2_000_000,
-                            matmul_budget_bytes: int = 1 << 30) -> DataFrame:
-    """Size-probed dispatch (mirrors linking.link_mentions): corpora
-    whose normalized (n × dim) float64 matrix fits the byte budget take
-    the exact broadcast-matmul path; larger ones the LSH-blocked path,
-    so the default can never OOM driver or executors at scale. The
-    budget is MEMORY-aware, not row-count-only: 2M rows is fine at
-    dim=16 (256 MB) but would broadcast 8 GB at dim=512 — the byte
-    check (n·dim·8 ≤ 1 GiB default ⇒ ≤ 262k rows at 512-d) is what
-    actually bounds the executor allocation (the matmul kernel
-    additionally slices its sims matrix to ≤ 256 MB per block).
-    Probe = one limit-1 job for dim + one metadata-cheap count."""
-    first = df.select(F.size(F.col(vec_col)).alias("d")).head(1)
-    if not first:
-        id_type = df.schema[id_col].dataType.simpleString()
-        return df.sparkSession.createDataFrame(
-            [], f"id_a {id_type}, id_b {id_type}, cosine double")
-    dim = first[0]["d"]
-    n = df.count()
-    if n <= matmul_budget_rows and n * dim * 8 <= matmul_budget_bytes:
+                            threshold: float = 0.95) -> DataFrame:
+    """Cosine ≥ threshold pairs (id_a < id_b, cosine) behind ONE
+    driver-fit decision, linking's byte gate
+    (``linking.fits_driver_broadcast`` against
+    ``linking.BROADCAST_BUDGET_MB``, read at call time; one probe job
+    for rows and dim): a corpus whose packed vectors fit takes the
+    exact broadcast matmul (``embedding_near_dup_matmul``), a larger
+    one the blocked cosine self-join
+    ``components.near_duplicate_pairs`` with no blocking keys —
+    precision 1.0, recall the LSH recall (at cos ≥ 0.95 with 8 bands ×
+    8 bits, 1-(1-0.9^8)^8 ≈ 0.989) — so the default can never OOM
+    driver or executors at scale. An empty corpus takes the blocked
+    plan too: it yields the empty, typed pair set."""
+    if lk.fits_driver_broadcast(df, lk.BROADCAST_BUDGET_MB, vec_col):
         return embedding_near_dup_matmul(df, id_col, vec_col, threshold)
-    return embedding_near_dup_lsh(df, id_col, vec_col, threshold, dim=dim)
+    pairs = cc.near_duplicate_pairs(df, threshold, id_col=id_col,
+                                    vec_col=vec_col, keys=(),
+                                    seed="near-dup-generic")
+    return pairs.select(F.col("src").alias("id_a"),
+                        F.col("dst").alias("id_b"),
+                        F.col("score").alias("cosine"))
 
 
 def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
@@ -897,23 +758,29 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
 
     Composition of two existing kernels: ``clustering.kmeans_assign``
     (Arrow partial-agg Lloyd iterations, deterministic first-k init)
-    produces the blocking key, and ``embedding_near_dup`` with
-    ``block_col="cluster"`` turns the pair search into a cluster-local
-    equi-join — vectors never ride a cross product. At 100 TB the
-    cluster count scales with the corpus (k ≈ n/10k keeps blocks
-    verify-sized) and each block's pair join shuffles only its own
-    rows. Returns canonical (id_a, id_b, cosine) pairs; duplicates
-    ACROSS clusters are unreachable by construction — that recall gap
-    is the documented SemDeDup trade-off (the paper accepts it for a
-    50× cost cut; tests measure it vs the exact pair set)."""
+    produces the blocking key, and ``components.near_duplicate_pairs``
+    blocked on ``cluster`` with zero hyperplane bits (one band: every
+    same-cluster pair is a candidate) turns the pair search into an
+    exact cluster-local equi-join — ids and cluster only, the vectors
+    join back by id for the Arrow cosine. At 100 TB the cluster count
+    scales with the corpus (k ≈ n/10k keeps blocks verify-sized) and
+    each block's pair join shuffles only its own rows. Returns
+    canonical (id_a, id_b, cosine) pairs; duplicates ACROSS clusters
+    are unreachable by construction — that recall gap is the
+    documented SemDeDup trade-off (the paper accepts it for a 50× cost
+    cut; tests measure it vs the exact pair set)."""
     from .clustering import kmeans_assign
 
     assign = kmeans_assign(df, id_col=id_col, vec_col=vec_col, k=k,
                            iterations=iterations) \
         .select(F.col(id_col), F.col("cluster"))
     blocked = df.select(id_col, vec_col).join(assign, id_col)
-    return embedding_near_dup(blocked, id_col=id_col, vec_col=vec_col,
-                              threshold=threshold, block_col="cluster")
+    pairs = cc.near_duplicate_pairs(blocked, threshold, nbits=0, nbands=1,
+                                    id_col=id_col, vec_col=vec_col,
+                                    keys=("cluster",))
+    return pairs.select(F.col("src").alias("id_a"),
+                        F.col("dst").alias("id_b"),
+                        F.col("score").alias("cosine"))
 
 
 # ------------------------------------------------------------ keep set
@@ -921,10 +788,8 @@ def dedup_keep(df: DataFrame, pairs: DataFrame,
                id_col: str = "doc_id") -> DataFrame:
     """Pairs → (id, keep_id) via connected components (min id wins).
     Singletons keep themselves."""
-    from .components import connected_components
-
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = connected_components(edges, df.select(id_col), id_col=id_col)
+    labels = cc.connected_components(edges, df.select(id_col), id_col=id_col)
     return labels.select(F.col("id").alias(id_col),
                          F.col("component").alias("keep_id"))
 
@@ -932,8 +797,7 @@ def dedup_keep(df: DataFrame, pairs: DataFrame,
 # ----------------------------------------------------- decontamination
 def decontaminate(train: DataFrame, bench: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 8,
-                  broadcast_bench: bool = True) -> DataFrame:
+                  n: int = 8) -> DataFrame:
     """Benchmark decontamination: flag training documents that share
     any word-``n``-gram shingle with a held-out benchmark document
     (the GPT-3-appendix / Gopher / Llama pretraining hygiene step —
@@ -944,7 +808,7 @@ def decontaminate(train: DataFrame, bench: DataFrame,
     same posting-list Arrow kernel as the dedup family, never a
     cross product. The benchmark side is eval-set-sized (thousands of
     docs against a 100 TB train corpus), so its posting list is
-    broadcast by default: the train posting list then never shuffles —
+    broadcast: the train posting list then never shuffles —
     the probe is map-side, and only the (hit id, sh, bench_id) rows
     (rare by construction) reach the two-phase distinct aggregation.
     Per-doc shingle totals are computed only for contaminated ids
@@ -955,10 +819,8 @@ def decontaminate(train: DataFrame, bench: DataFrame,
     contamination_frac = hit/total distinct shingles).
     """
     post_t = _shingle_posting(train, id_col, text_col, n)
-    post_b = _shingle_posting(bench, id_col, text_col, n) \
-        .select(F.col("id").alias("bench_id"), "sh")
-    if broadcast_bench:
-        post_b = F.broadcast(post_b)
+    post_b = F.broadcast(_shingle_posting(bench, id_col, text_col, n)
+                         .select(F.col("id").alias("bench_id"), "sh"))
     # posting list feeds the probe AND the (filtered) size count:
     # materialize once (same eager-checkpoint rationale as
     # jaccard_pairs_exact — avoids recomputing the Arrow kernel and

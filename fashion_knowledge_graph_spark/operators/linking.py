@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import taxonomy as tx
-from ..functions.embeddings import cosine_col, hyperplanes, make_signature_udf
+from ..functions.embeddings import cosine_col, make_signature_udf
 from . import mentions as mn
 
 # 16 bands × 16 bits: at a 200k catalog, 8-bit signatures left ~27
@@ -139,8 +139,7 @@ def link_lsh(mentions: DataFrame, catalog: DataFrame,
     part of the blocking key so head attribute values ("black") are
     already spread across 2^bits_per_band × nbands partitions.
     """
-    planes = hyperplanes(tx.IMG_DIM, nbits, seed_key="link-img")
-    sig = make_signature_udf(planes, nbands)
+    sig = make_signature_udf(nbits, nbands, "link-img")
 
     m = _mention_side(mentions).withColumn("sigs", sig("embedding"))
     c = _catalog_side(catalog).withColumn("sigs", sig("c_embedding"))
@@ -207,7 +206,8 @@ def _dot_arrow(df: DataFrame, a_col: str, b_col: str,
 
 
 # Driver-broadcast budget of the packed catalog (pack_catalog, shared
-# by detect_and_link_fused and canonical_mapping's driver path).
+# by detect_and_link_fused and canonical_mapping's driver path) and of
+# dedup.embedding_near_dup_auto's broadcast matmul.
 # A row gate alone is not a memory contract: 100k rows × 512-d
 # float64 is ~410 MB of packed numpy on the driver AND inside every
 # executor Python worker — the BYTES are what OOM, not the rows, and
@@ -222,17 +222,20 @@ _PACK_ROW_OVERHEAD = 160
 
 
 def fits_driver_broadcast(catalog: DataFrame,
-                          budget_mb: int = BROADCAST_BUDGET_MB) -> bool:
-    """True iff the packed catalog fits on the driver, asserted in
-    BYTES (estimated packed size), not just rows — ONE agg job (count
-    + max embedding length; both metadata-cheap on parquet/Iceberg
-    scans with column pruning)."""
+                          budget_mb: int = BROADCAST_BUDGET_MB,
+                          vec_col: str = "embedding") -> int | None:
+    """The row count if ``catalog``'s packed vectors fit on the driver,
+    else ``None`` — asserted in BYTES (estimated packed size), not just
+    rows. ONE agg job (count + max vector length; both metadata-cheap
+    on parquet/Iceberg scans with column pruning). Shared by
+    ``pack_catalog`` and ``dedup.embedding_near_dup_auto``."""
     row = catalog.agg(
         F.count(F.lit(1)).alias("n"),
-        F.max(F.size("embedding")).alias("dim")).first()
+        F.max(F.size(vec_col)).alias("dim")).first()
     n, dim = row["n"], row["dim"] or 0
-    return n <= BROADCAST_MAX_ROWS \
+    fits = n <= BROADCAST_MAX_ROWS \
         and n * (dim * 8 + _PACK_ROW_OVERHEAD) <= budget_mb << 20
+    return n if fits else None
 
 
 def pack_catalog(catalog: DataFrame, budget_mb: int = BROADCAST_BUDGET_MB,
@@ -246,7 +249,7 @@ def pack_catalog(catalog: DataFrame, budget_mb: int = BROADCAST_BUDGET_MB,
     import numpy as np
     import pyarrow.compute as pc
 
-    if not fits_driver_broadcast(catalog, budget_mb):
+    if fits_driver_broadcast(catalog, budget_mb) is None:
         return None
     t = catalog.select("product_id", "type", "color", *extra,
                        "embedding").toArrow()

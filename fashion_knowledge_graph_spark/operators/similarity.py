@@ -10,9 +10,11 @@ Three physical strategies with identical logical semantics
                       parallel — the corpus never shuffles, only the
                       k·|Q| result rows do.
 - ``lsh_topk``      — sign-LSH banded blocking (same machinery as the
-                      entity-linking join, operators/linking.py), exact
-                      re-rank inside candidate blocks. Sub-linear
-                      candidates; recall tuned by (nbits, nbands).
+                      entity-linking join, operators/linking.py, and
+                      the near-duplicate self-join,
+                      components.near_duplicate_pairs), exact re-rank
+                      inside candidate blocks. Sub-linear candidates;
+                      recall tuned by (nbits, nbands).
 - ``ivf_topk``      — IVF: deterministically sampled centroids,
                       corpus assigned to nearest centroid (one pass),
                       queries probe the ``nprobe`` nearest centroids
@@ -73,15 +75,14 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-             dim: int = 64, nbits: int = 64, nbands: int = 16,
+             nbits: int = 64, nbands: int = 16,
              q_id: str = "vec_id", q_vec: str = "embedding",
              c_id: str = "vec_id", c_vec: str = "embedding") -> DataFrame:
     """Sign-LSH banded candidates, exact re-rank. Recall depends on the
     angle distribution; report it against ``cosine_topk`` in tests."""
-    from ..functions.embeddings import hyperplanes, make_signature_udf
+    from ..functions.embeddings import make_signature_udf
 
-    planes = hyperplanes(dim, nbits, seed_key="ann-lsh")
-    sig = make_signature_udf(planes, nbands)
+    sig = make_signature_udf(nbits, nbands, "ann-lsh")
     q = queries.select(F.col(q_id).alias("query_id"),
                        F.col(q_vec).alias("q_vec"))
     c = corpus.select(F.col(c_id).alias("corpus_id"),

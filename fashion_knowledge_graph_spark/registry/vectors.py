@@ -526,8 +526,7 @@ def ann_lsh_topk(spark, sf):
     # tests/test_similarity.py (recall ≥ 0.9 vs exact).
     emb = _load(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    dim = len(emb.select("embedding").first()[0])
-    return sim.lsh_topk(q, emb, k=5, dim=dim, nbits=0, nbands=1) \
+    return sim.lsh_topk(q, emb, k=5, nbits=0, nbands=1) \
         .select("query_id", "corpus_id", "rank")
 
 

@@ -28,7 +28,8 @@ def get_spark(app: str = "fkg", cpus: int | None = None,
     process and stops scaling past ~8 threads on this box; see
     BENCH.md)."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     py_files = None
     if executors is not None:
         os.environ.setdefault("SPARK_HOME", os.path.dirname(
@@ -66,8 +67,7 @@ def get_spark(app: str = "fkg", cpus: int | None = None,
         # locality only idles cores (shuffle-read tasks were observed
         # stalling 3 s tails); on a real cluster tune per topology
         .config("spark.locality.wait", "0s")
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
+        .config("spark.sql.parquet.compression.codec", "snappy")
         # INT96 (the legacy default) carries NO min/max statistics, so
         # timestamp predicates can prune neither parquet row groups nor
         # SnapshotTable manifests — at 100 TB, time-range queries would
@@ -77,8 +77,7 @@ def get_spark(app: str = "fkg", cpus: int | None = None,
                 "TIMESTAMP_MICROS")
         # Arrow is the UDF hot path (model-inference stand-ins)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # dims (taxonomy ~80 rows, catalog small at test scale) broadcast
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # local mode: ALL task threads share the driver JVM heap — size
@@ -98,8 +97,7 @@ def get_spark(app: str = "fkg", cpus: int | None = None,
         # ExplicitGCInvokesConcurrent below, without which each
         # periodic System.gc() is a stop-the-world FULL collection
         # (measured +65% on the 16-core KG build: 251 s vs 152 s).
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "60s"))
+        .config("spark.cleaner.periodicGC.interval", "60s")
         # G1 turns explicit System.gc() into a concurrent cycle: the
         # ContextCleaner's periodic GC reclaims checkpoint blocks
         # without pausing the scheduler or the task threads

@@ -55,6 +55,32 @@ def test_driver_canonical_equals_lsh_canonical(spark, catalog_df,
             catalog_df).collect())) == dist
 
 
+def test_canonical_paths_agree_on_unnormalized_catalog(spark):
+    """Both paths score the cosine, not the raw dot product: a
+    duplicate whose embedding is scaled by 0.5 merges on the driver
+    path and on the LSH path alike."""
+    import numpy as np
+
+    from fashion_knowledge_graph_spark import taxonomy as tx
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(size=(6, tx.IMG_DIM))
+    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    rows = []
+    for i, v in enumerate(base):
+        dup = v + rng.normal(scale=1e-3, size=tx.IMG_DIM)
+        for j, vec in enumerate((v, dup * 0.5 if i < 3 else dup)):
+            rows.append((f"p{2 * i + j:02d}", f"t{i % 2}", f"c{i % 3}",
+                         "cat", "unisex", [float(x) for x in vec]))
+    cat = spark.createDataFrame(
+        rows, "product_id string, type string, color string, "
+              "category string, gender string, embedding array<float>")
+    drv = sorted(map(tuple, _driver_canon(cat).collect()))
+    assert sum(p != c for p, c in drv) == 6
+    assert sorted(map(tuple, cc.canonical_mapping(
+        cat, None).collect())) == drv
+
+
 def test_cc_dense_edges_fall_back_to_distributed(spark):
     """Edge-count gate: few vertices but O(n²) edges must not be
     collected to the driver — and the distributed path must still

@@ -214,7 +214,7 @@ def test_embedding_near_dup_vs_numpy(spark):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
     got = {(r["id_a"], r["id_b"]) for r in
-           dd.embedding_near_dup(df, threshold=0.95).collect()}
+           dd.embedding_near_dup_auto(df, threshold=0.95).collect()}
     m = np.stack([np.asarray(v, dtype=np.float64) for _, v in rows])
     m /= np.linalg.norm(m, axis=1, keepdims=True)
     sims = m @ m.T
@@ -224,20 +224,23 @@ def test_embedding_near_dup_vs_numpy(spark):
     assert len(exp) >= 5
 
 
-def test_embedding_near_dup_matmul_equals_relational(spark):
+def test_embedding_near_dup_matmul_equals_numpy(spark):
     rng = np.random.default_rng(12)
     base = rng.normal(size=(30, 16)).astype(np.float32)
     vecs = list(base) + [base[i] + rng.normal(scale=0.01, size=16)
                          .astype(np.float32) for i in range(8)]
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    rel = {(r["id_a"], r["id_b"]): r["cosine"]
-           for r in dd.embedding_near_dup(df, threshold=0.9).collect()}
+    m = np.stack([np.asarray(v, dtype=np.float64) for _, v in rows])
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ m.T
+    exp = {(i, j): sims[i, j] for i in range(len(rows))
+           for j in range(i + 1, len(rows)) if sims[i, j] >= 0.9}
     mat = {(r["id_a"], r["id_b"]): r["cosine"]
            for r in dd.embedding_near_dup_matmul(df, threshold=0.9).collect()}
-    assert set(rel) == set(mat) and rel
-    for k in rel:
-        assert rel[k] == pytest.approx(mat[k], abs=1e-12)
+    assert set(exp) == set(mat) and exp
+    for k in exp:
+        assert exp[k] == pytest.approx(mat[k], abs=1e-12)
 
 
 def test_semantic_dedup_is_cluster_blocked_subset(spark):
@@ -276,9 +279,12 @@ def test_semantic_dedup_is_cluster_blocked_subset(spark):
     assert got.issubset(exact)
 
 
-def test_embedding_near_dup_auto_dispatch_and_string_ids(spark):
+def test_embedding_near_dup_auto_dispatch_and_string_ids(spark,
+                                                        monkeypatch):
     """Over-budget corpora must take the LSH path (no driver collect),
     and string id columns must work on every path."""
+    from fashion_knowledge_graph_spark.operators import linking as lk
+
     rng = np.random.default_rng(13)
     base = rng.normal(size=(40, 16)).astype(np.float32)
     vecs = list(base) + [base[i] + rng.normal(scale=0.005, size=16)
@@ -296,16 +302,31 @@ def test_embedding_near_dup_auto_dispatch_and_string_ids(spark):
     got_mat = {(r["id_a"], r["id_b"]) for r in
                dd.embedding_near_dup_matmul(df, threshold=0.95).collect()}
     assert got_mat == exp
-    # forced LSH path (budget 0): near-identical pairs ⇒ recall ≈ 1
-    got_lsh = {(r["id_a"], r["id_b"]) for r in
-               dd.embedding_near_dup_auto(
-                   df, threshold=0.95, matmul_budget_rows=0).collect()}
-    assert got_lsh <= exp
-    assert len(got_lsh) >= 0.9 * len(exp)
     # under budget the auto path is the exact matmul result
     got_auto = {(r["id_a"], r["id_b"]) for r in
                 dd.embedding_near_dup_auto(df, threshold=0.95).collect()}
     assert got_auto == exp
+    # forced LSH path (budget 0): near-identical pairs ⇒ recall ≈ 1
+    monkeypatch.setattr(lk, "BROADCAST_BUDGET_MB", 0)
+    got_lsh = {(r["id_a"], r["id_b"]) for r in
+               dd.embedding_near_dup_auto(df, threshold=0.95).collect()}
+    assert got_lsh <= exp
+    assert len(got_lsh) >= 0.9 * len(exp)
+
+
+@pytest.mark.parametrize("budget_mb", [256, 0])
+def test_embedding_near_dup_auto_empty_corpus(spark, monkeypatch,
+                                              budget_mb):
+    """An empty corpus yields an empty, typed pair set under the driver
+    budget and past it."""
+    from fashion_knowledge_graph_spark.operators import linking as lk
+
+    monkeypatch.setattr(lk, "BROADCAST_BUDGET_MB", budget_mb)
+    df = spark.createDataFrame([], "vec_id string, embedding array<float>")
+    out = dd.embedding_near_dup_auto(df, threshold=0.95)
+    assert out.collect() == []
+    assert out.schema.simpleString() == \
+        "struct<id_a:string,id_b:string,cosine:double>"
 
 
 def test_dedup_keep_components(spark, corpus):

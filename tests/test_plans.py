@@ -128,24 +128,35 @@ def test_edges_plan_shuffles_narrow_rows_only(spark, docs_df, catalog_df,
     assert "RangePartitioning" not in plan, plan
 
 
-def test_near_duplicate_candidates_shuffle_ids_only(spark, catalog_df):
+def test_near_duplicate_candidates_shuffle_ids_only(spark, catalog_df,
+                                                   monkeypatch):
     """near_duplicate_pairs generates candidates on ids and blocking
     keys only: no exchange up to and including the candidate dedup
     carries an embedding — the vectors join back by id afterwards
     (banded 512-d rows through the replicated self-join shuffled ~11 GB
-    at a 50k catalog)."""
+    at a 50k catalog). Checked on the catalog call and on the generic
+    call past the driver budget (an embeddings frame, no blocking
+    keys)."""
     from fashion_knowledge_graph_spark.operators import components as cc
+    from fashion_knowledge_graph_spark.operators import dedup as dd
 
-    plan = _plan(cc.near_duplicate_pairs(catalog_df))
-    # (header, details) of each node; the formatted plan numbers nodes
-    # bottom-up, so every node below the dedup comes before it
-    nodes = [s.split("\n", 1) for s in plan.split("\n(")[1:]]
-    dedup = max(i for i, (head, _) in enumerate(nodes)
-                if "Aggregate" in head)
-    below = [body for head, body in nodes[:dedup] if "Exchange" in head]
-    assert below, plan
-    for body in below:
-        assert "embedding" not in body, body
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(64)])
+         for i in range(20)], "vec_id long, embedding array<float>")
+    monkeypatch.setattr(lk, "BROADCAST_BUDGET_MB", 0)
+    for pairs in (cc.near_duplicate_pairs(catalog_df),
+                  dd.embedding_near_dup_auto(emb)):
+        plan = _plan(pairs)
+        # (header, details) of each node; the formatted plan numbers
+        # nodes bottom-up, so every node below the dedup comes first
+        nodes = [s.split("\n", 1) for s in plan.split("\n(")[1:]]
+        dedup = max(i for i, (head, _) in enumerate(nodes)
+                    if "Aggregate" in head)
+        below = [body for head, body in nodes[:dedup]
+                 if "Exchange" in head]
+        assert below, plan
+        for body in below:
+            assert "embedding" not in body, body
 
 
 def test_edge_aggregation_has_partial_aggregate(spark):

@@ -96,8 +96,7 @@ def test_lsh_topk_recall_on_clusters(spark, corpus_df, query_df, corpus_rows):
     recover nearly all of them; emitted ranks must be exact-cosine
     consistent (subset property)."""
     k = 2
-    res = sim.lsh_topk(query_df, corpus_df, k=k, dim=DIM,
-                       nbits=64, nbands=16)
+    res = sim.lsh_topk(query_df, corpus_df, k=k, nbits=64, nbands=16)
     got = {}
     for r in res.collect():
         got.setdefault(r["query_id"], set()).add(r["corpus_id"])
