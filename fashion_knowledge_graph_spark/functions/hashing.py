@@ -228,11 +228,11 @@ def pick(h: np.ndarray, options: list, lane: int) -> np.ndarray:
     return np.asarray(options, dtype=object)[idx]
 
 
-def pick_zipf(h: np.ndarray, options: list, lane: int, s: float = 1.2) -> np.ndarray:
+def pick_zipf(h: np.ndarray, options: list, lane: int) -> np.ndarray:
     """Zipf-skewed pick: head values ('black', 'cotton') dominate —
     exercises the salted-join skew path (FIXTURES.md §1)."""
     ranks = np.arange(1, len(options) + 1, dtype=np.float64)
-    w = 1.0 / ranks**s
+    w = 1.0 / ranks**1.2
     cdf = np.cumsum(w / w.sum())
     u = rand_uniform(h, 1, lane=lane)[:, 0]
     idx = np.searchsorted(cdf, u, side="right")

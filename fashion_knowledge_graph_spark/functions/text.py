@@ -106,14 +106,7 @@ def quality_score(col) -> Column:
     )
 
 
-def stopword_dim(spark) -> DataFrame:
-    """(lang, token) broadcast dim for lang_id."""
-    rows = [(lang, t) for lang, toks in LANG_STOPWORDS.items() for t in toks]
-    return spark.createDataFrame(rows, "lang string, token string")
-
-
-def lang_id(df: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-hit language ID as a ZERO-SHUFFLE map: per-language
     ``regexp_count`` with word boundaries over the normalized text
     (the normalized alphabet is ``[a-z0-9 ]``, so ``\\b`` matches
@@ -128,12 +121,11 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
     100 TB it is pure map tasks pipelined into the scan; the prior
     plan shuffled ~|tokens| rows twice (count + window) and joined
     the result back. The relational formulation is preserved in the
-    driver oracle (``registry/text.py`` ``text_lang_id`` SQL) and in
-    ``stopword_dim`` for anyone who wants the join shape.
+    driver oracle (``registry/text.py`` ``text_lang_id`` SQL).
     """
-    best = lang_best(F.col(text_col))
+    best = lang_best(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(best["h"] > 0, best["lang"]).otherwise("und").alias("lang_pred"),
         best["h"].alias("lang_hits"))
 
@@ -190,8 +182,7 @@ def redact_pii(col) -> Column:
     return out
 
 
-def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", k: int = 3) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` TF-IDF terms per document.
 
     tf = in-doc term count, idf = ln((N+1)/(df+1)) + 1 (smoothed,
@@ -206,8 +197,8 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
 
     n_docs = df.count()  # one metadata-cheap job; the scalar rides
     #                      into the plan as a literal (no crossJoin)
-    terms = df.select(F.col(id_col).alias("id"),
-                      F.explode(tokens(F.col(text_col))).alias("term"))
+    terms = df.select(F.col("doc_id").alias("id"),
+                      F.explode(tokens(F.col("text"))).alias("term"))
     tf = terms.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
     scored = tf.join(dfreq, "term").withColumn(
@@ -217,7 +208,7 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
     w = Window.partitionBy("id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
-            .select(F.col("id").alias(id_col), "term", "tf",
+            .select(F.col("id").alias("doc_id"), "term", "tf",
                     F.col("df_t"), F.round("tfidf", 6).alias("tfidf"),
                     "rnk"))
 
@@ -263,9 +254,7 @@ def minhash_sketch_col(col, k: int = 16, n: int = 3) -> Column:
     return F.slice(F.array_sort(hashes), 1, k)
 
 
-def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20,
-              id_col: str = "doc_id", text_col: str = "text",
-              k1: float = 1.2, b: float = 0.75) -> DataFrame:
+def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20) -> DataFrame:
     """BM25 ranked retrieval (Lucene's idf form) — the lexical
     complement to the embedding searches: score(d) = Σ_t idf(t) ·
     tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl)), idf = ln((N-df+0.5)/
@@ -278,8 +267,8 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20,
     partial-aggregated, corpus totals broadcast, one top-k window.
     """
     terms = [t.lower() for t in query_terms]
-    toks = df.select(F.col(id_col).alias("id"),
-                     tokens(F.col(text_col)).alias("tk"))
+    toks = df.select(F.col("doc_id").alias("id"),
+                     tokens(F.col("text")).alias("tk"))
     dl = toks.select("id", F.size("tk").alias("dl"))
     totals = dl.agg(F.count(F.lit(1)).alias("n_docs"),
                     F.avg("dl").alias("avgdl"))
@@ -291,8 +280,10 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20,
               .crossJoin(F.broadcast(totals)))
     idf = F.log((F.col("n_docs") - F.col("df_t") + 0.5)
                 / (F.col("df_t") + 0.5) + 1.0)
-    part = idf * (F.col("tf") * (k1 + 1)) \
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
+    # k1 = 1.2, b = 0.75 (Lucene's defaults)
+    part = idf * (F.col("tf") * (1.2 + 1)) \
+        / (F.col("tf")
+           + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
     per_doc = scored.groupBy("id").agg(
         F.round(F.sum(part), 6).alias("score"))
     from pyspark.sql import Window
@@ -303,13 +294,12 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20,
     head = per_doc.orderBy(F.desc("score"), F.asc("id")).limit(k)
     w = Window.orderBy(F.desc("score"), F.asc("id"))
     return (head.withColumn("rank", F.row_number().over(w))
-            .select(F.col("id").alias(id_col), "score", "rank"))
+            .select(F.col("id").alias("doc_id"), "score", "rank"))
 
 
-def char_entropy(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def char_entropy(df: DataFrame) -> DataFrame:
     """Per-document character-level Shannon entropy →
-    ``(id_col, n_chars, entropy)`` in bits; NULL/empty text rows are
+    ``(doc_id, n_chars, entropy)`` in bits; NULL/empty text rows are
     dropped (the engine-wide null-text contract).
 
     H = −Σ_c (n_c/n)·log2(n_c/n) over the document's character
@@ -322,25 +312,24 @@ def char_entropy(df: DataFrame, id_col: str = "doc_id",
     all JVM codegen, no UDF; the per-doc sum spans ≤ |alphabet|
     terms so the float drift is orders under the round-6 contract.
     """
-    chars = (df.select(id_col, F.explode(F.split(text_col, ""))
+    chars = (df.select("doc_id", F.explode(F.split("text", ""))
                        .alias("ch"))
              .filter(F.col("ch") != ""))
-    freq = chars.groupBy(id_col, "ch").agg(
+    freq = chars.groupBy("doc_id", "ch").agg(
         F.count(F.lit(1)).alias("n_c"))
-    return (freq.groupBy(id_col)
+    return (freq.groupBy("doc_id")
             .agg(F.sum("n_c").alias("n_chars"),
                  (-F.sum(F.col("n_c")
                          * F.log2(F.col("n_c").cast("double"))))
                  .alias("__s"))
-            .select(id_col, "n_chars",
+            .select("doc_id", "n_chars",
                     F.round(
                         F.col("__s") / F.col("n_chars")
                         + F.log2(F.col("n_chars").cast("double")), 6)
                     .alias("entropy")))
 
 
-def rake_keyphrases(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", max_phrase_len: int = 4,
+def rake_keyphrases(df: DataFrame, max_phrase_len: int = 4,
                     top: int = 25) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010) →
     the ``top`` phrases as ``(phrase, n_occurrences, score, rank)``.
@@ -360,9 +349,9 @@ def rake_keyphrases(df: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql import Window
 
-    toks = (df.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("doc"),
-                    F.posexplode(F.split(text_col, " "))
+    toks = (df.filter(F.col("text").isNotNull())
+            .select(F.col("doc_id").alias("doc"),
+                    F.posexplode(F.split("text", " "))
                     .alias("pos", "tok"))
             .filter(F.col("tok") != ""))
     ns = toks.filter(~F.col("tok").isin(*EN_STOPWORDS))
@@ -403,8 +392,7 @@ def rake_keyphrases(df: DataFrame, id_col: str = "doc_id",
             .select("phrase", "n_occurrences", "score", "rank"))
 
 
-def chunk_documents(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", chunk_tokens: int = 64,
+def chunk_documents(df: DataFrame, chunk_tokens: int = 64,
                     overlap_tokens: int = 16) -> DataFrame:
     """RAG-ingestion chunking: split each document into ~``chunk_
     tokens``-token windows overlapping by ``overlap_tokens``,
@@ -424,9 +412,9 @@ def chunk_documents(df: DataFrame, id_col: str = "doc_id",
     if overlap_tokens >= chunk_tokens:
         raise ValueError("overlap_tokens must be < chunk_tokens")
     step = chunk_tokens - overlap_tokens
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
-    out = (df.select(F.col(id_col).alias("id"), toks.alias("__t"),
+    out = (df.select(F.col("doc_id").alias("id"), toks.alias("__t"),
                      n.alias("__n"))
            .filter(F.col("__n") > 0)
            .select("id", "__t", "__n",

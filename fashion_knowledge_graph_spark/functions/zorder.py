@@ -56,7 +56,7 @@ def zorder_key(bucketed: list[Column], bits: int = 16) -> Column:
 
 
 def zorder_by(df: DataFrame, specs: list[tuple[str, int, int]],
-              bits: int = 16, num_files: int | None = None) -> DataFrame:
+              num_files: int | None = None) -> DataFrame:
     """Cluster ``df`` for multi-column skipping: range-partition +
     sort by the interleaved key of ``specs`` = [(col, lo, hi), ...].
     Pass the result to ``SnapshotTable.write(stats_cols=[cols...])``
@@ -66,8 +66,8 @@ def zorder_by(df: DataFrame, specs: list[tuple[str, int, int]],
     sample, standard Spark machinery); ``num_files`` controls the
     file/partition count (defaults to the session's shuffle
     parallelism)."""
-    cols = [bucketize(c, lo, hi, bits) for c, lo, hi in specs]
-    with_z = df.withColumn("__z", zorder_key(cols, bits))
+    cols = [bucketize(c, lo, hi, 16) for c, lo, hi in specs]
+    with_z = df.withColumn("__z", zorder_key(cols))
     parts = num_files or df.sparkSession.sparkContext.defaultParallelism
     return with_z.repartitionByRange(parts, "__z") \
         .sortWithinPartitions("__z").drop("__z")

@@ -27,10 +27,7 @@ _SCALAR_PREDS = [(a, tx.PREDICATES[a]) for a in tx.SCALAR_ATTRS]
 _MULTI_PREDS = [(a, tx.PREDICATES[a]) for a in tx.MULTI_ATTRS]
 
 
-def attr_triples(linked: DataFrame,
-                 subj_col: str = "product_id",
-                 attrs_col: str = "attrs",
-                 score_col: str = "score") -> DataFrame:
+def attr_triples(linked: DataFrame, subj_col: str = "product_id") -> DataFrame:
     """linked mentions (subj, attrs struct, doc_id, span_idx, score)
     → triples (subj, pred, obj, doc_id, span_idx, score).
 
@@ -46,15 +43,15 @@ def attr_triples(linked: DataFrame,
     for attr, pred in _SCALAR_PREDS:
         pairs.append(F.struct(
             F.lit(pred).alias("pred"),
-            F.col(f"{attrs_col}.{attr}").alias("obj")))
+            F.col(f"attrs.{attr}").alias("obj")))
     arr = F.array(*pairs)
     for attr, pred in _MULTI_PREDS:
         arr = F.concat(arr, F.transform(
-            F.coalesce(F.col(f"{attrs_col}.{attr}"), F.array()),
+            F.coalesce(F.col(f"attrs.{attr}"), F.array()),
             _to_struct(pred)))
     out = linked.select(
         F.col(subj_col).alias("subj"), "doc_id", "span_idx",
-        F.col(score_col).alias("score"),
+        "score",
         F.explode(arr).alias("po"),
     )
     return out.select(
@@ -63,8 +60,7 @@ def attr_triples(linked: DataFrame,
     ).filter(F.col("obj").isNotNull())
 
 
-def spec_attrs(df: DataFrame, subj_col: str,
-               text_col: str = "spec_text") -> DataFrame:
+def spec_attrs(df: DataFrame, subj_col: str) -> DataFrame:
     """Open-vocabulary spec-sheet attribute extraction (M7) — the
     Spark stand-in for the reference's GPT-4o-over-datasheet feature
     (src/inference/product_attributes.py:27-88, prompts
@@ -79,7 +75,7 @@ def spec_attrs(df: DataFrame, subj_col: str,
     """
     out = df.select(
         F.col(subj_col).alias("subj"),
-        F.explode(F.split(F.col(text_col), "\n")).alias("line"))
+        F.explode(F.split(F.col("spec_text"), "\n")).alias("line"))
     key = F.regexp_replace(
         F.trim(F.lower(F.regexp_extract("line", "^([^:]+):", 1))),
         r"\s+", "_")
@@ -88,8 +84,8 @@ def spec_attrs(df: DataFrame, subj_col: str,
         .filter((F.col("attr") != "") & (F.col("value") != ""))
 
 
-def lexicon_map_df(spark, preds: dict[str, list[str]] | None = None,
-                   with_aliases: bool = True) -> DataFrame:
+def lexicon_map_df(spark,
+                   preds: dict[str, list[str]] | None = None) -> DataFrame:
     """(token, pred, obj) broadcast dim from the closed vocabulary."""
     rows = []
     preds = preds if preds is not None else tx.LEXICON_PREDS
@@ -97,7 +93,7 @@ def lexicon_map_df(spark, preds: dict[str, list[str]] | None = None,
         pred = tx.PREDICATES[attr]
         for v in values:
             surfaces = {v}
-            if with_aliases and "-" in v:
+            if "-" in v:
                 surfaces.add(v.replace("-", " "))
             for s in surfaces:
                 rows.append((s, pred, v))
@@ -105,8 +101,6 @@ def lexicon_map_df(spark, preds: dict[str, list[str]] | None = None,
 
 
 def lexicon_triples(text_df: DataFrame, subj_col: str,
-                    text_col: str = "text",
-                    bigrams: bool = True,
                     preds: dict[str, list[str]] | None = None,
                     keep: list[str] | None = None) -> DataFrame:
     """Free text → (subj, pred, obj) via broadcast equi-join of tokens
@@ -127,13 +121,13 @@ def lexicon_triples(text_df: DataFrame, subj_col: str,
     # ops → whole-stage codegen. (The tokenize-then-explode form went
     # through Catalyst higher-order functions, which are *interpreted*
     # per element — ~200M lambda evaluations at bench scale, 56 s;
-    # this form is ~2 s.) ``bigrams`` is accepted for API parity:
-    # multi-token surfaces match naturally by substring.
+    # this form is ~2 s.) Multi-token surfaces match naturally by
+    # substring.
     surfaces = sorted({
         s for values in preds_map.values() for v in values
         for s in ({v, v.replace("-", " ")} if "-" in v else {v})})
     padded = F.concat(F.lit(" "),
-                      F.regexp_replace(F.lower(F.col(text_col)),
+                      F.regexp_replace(F.lower(F.col("text")),
                                        r"[^a-z0-9\-]+", " "),
                       F.lit(" "))
     # materialize the normalized string in its own projection: the 60

@@ -110,7 +110,6 @@ def _bfs_closure(base: DataFrame, max_hops: int,
     return reach
 
 
-_PATH_RX = re.compile(r"^(?P<pred>[^?\s+]+)\+$")
 _ATOM_RX = re.compile(r"^\^?[A-Za-z_][\w:.-]*$")
 
 
@@ -377,12 +376,8 @@ def bgp_aggregate(triples: DataFrame,
                   group_by: list[str],
                   aggs: dict,
                   having=None,
-                  optionals: list[tuple[str, str, str]] | None = None,
-                  negations: list[tuple[str, str, str]] | None = None,
-                  filters: list | None = None,
                   values: tuple[list[str], list[tuple]] | None = None,
-                  distinct: bool = True,
-                  path_hops: int = 8) -> DataFrame:
+                  distinct: bool = True) -> DataFrame:
     """SPARQL ``SELECT ?g (agg(?x) AS name) ... GROUP BY ?g [HAVING]``
     over a basic graph pattern.
 
@@ -406,10 +401,8 @@ def bgp_aggregate(triples: DataFrame,
     if not aggs:
         raise ValueError("bgp_aggregate needs at least one aggregate")
     keys = [v[1:] if _is_var(v) else v for v in group_by]
-    sol = bgp_query(triples, patterns, optionals=optionals,
-                    negations=negations, filters=filters,
-                    values=values, distinct=distinct,
-                    path_hops=path_hops)
+    sol = bgp_query(triples, patterns,
+                    values=values, distinct=distinct)
     missing = [k for k in keys if k not in sol.columns]
     if missing:
         raise ValueError(
@@ -425,14 +418,7 @@ def bgp_topk(triples: DataFrame,
              order_by: list,
              k: int,
              group_by: list[str] | None = None,
-             aggs: dict | None = None,
-             having=None,
-             optionals: list[tuple[str, str, str]] | None = None,
-             negations: list[tuple[str, str, str]] | None = None,
-             filters: list | None = None,
-             values: tuple[list[str], list[tuple]] | None = None,
-             distinct: bool = True,
-             path_hops: int = 8) -> DataFrame:
+             aggs: dict | None = None) -> DataFrame:
     """SPARQL solution modifiers ``ORDER BY ... LIMIT k`` over a BGP
     (optionally grouped: pass ``group_by``+``aggs`` to rank aggregate
     rows instead of raw solutions).
@@ -455,15 +441,9 @@ def bgp_topk(triples: DataFrame,
         raise ValueError("ORDER BY needs at least one key")
     if group_by or aggs:
         sol = bgp_aggregate(triples, patterns, group_by or [],
-                            aggs or {}, having=having,
-                            optionals=optionals, negations=negations,
-                            filters=filters, values=values,
-                            distinct=distinct, path_hops=path_hops)
+                            aggs or {})
     else:
-        sol = bgp_query(triples, patterns, optionals=optionals,
-                        negations=negations, filters=filters,
-                        values=values, distinct=distinct,
-                        path_hops=path_hops)
+        sol = bgp_query(triples, patterns)
     keys = [F.col(o[1:]) if isinstance(o, str) and _is_var(o)
             else (F.col(o) if isinstance(o, str) else o)
             for o in order_by]

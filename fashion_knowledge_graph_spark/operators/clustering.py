@@ -66,22 +66,20 @@ def _dists_kernel(centroids: np.ndarray, id_col: str, vec_col: str,
     return kernel
 
 
-def kmeans_assign(df: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding", k: int = 8,
-                  iterations: int = 2) -> DataFrame:
+def kmeans_assign(df: DataFrame, k: int = 8, iterations: int = 2) -> DataFrame:
     """Lloyd's algorithm, ``iterations`` centroid updates, then a
     final assignment pass. Returns (id, cluster, dist).
 
     Empty clusters keep their previous centroid (deterministic, and
     what the SQL replay's LEFT JOIN + coalesce does)."""
-    src = df.select(id_col, vec_col)
-    init = src.orderBy(id_col).limit(k).select(vec_col).collect()
+    src = df.select("vec_id", "embedding")
+    init = src.orderBy("vec_id").limit(k).select("embedding").collect()
     centroids = np.asarray([r[0] for r in init], dtype=np.float64)
 
     partial_schema = ("cluster int, cnt long, vsum array<double>")
     for _ in range(iterations):
         parts = src.mapInArrow(
-            _dists_kernel(centroids, id_col, vec_col, "partial"),
+            _dists_kernel(centroids, "vec_id", "embedding", "partial"),
             partial_schema).collect()          # ≤ k × partitions rows
         cnt = np.zeros(len(centroids))
         tot = np.zeros_like(centroids)
@@ -92,10 +90,11 @@ def kmeans_assign(df: DataFrame, id_col: str = "vec_id",
         centroids = centroids.copy()
         centroids[nz] = tot[nz] / cnt[nz, None]
 
-    out_schema = f"{id_col} long, cluster int, dist double"
+    out_schema = "vec_id long, cluster int, dist double"
     return src.mapInArrow(
-        _dists_kernel(centroids, id_col, vec_col, "assign"), out_schema) \
-        .select(id_col, "cluster", F.round("dist", 6).alias("dist"))
+        _dists_kernel(centroids, "vec_id", "embedding", "assign"),
+        out_schema) \
+        .select("vec_id", "cluster", F.round("dist", 6).alias("dist"))
 
 
 def pca_project(df: DataFrame, id_col: str = "vec_id",

@@ -6,14 +6,16 @@ stay distinct nodes. The north_rule requires true canonicalization:
 detect near-duplicate catalog entities (cosine ≥ threshold) and
 collapse each connected component to one canonical id.
 
-Implementation is GraphFrames-style iterative label propagation
-expressed as plain DataFrame self-joins (no GraphFrames dependency):
-every vertex repeatedly adopts the minimum label among itself and its
-neighbors; converges in O(component diameter) rounds. Lineage is cut
-with ``localCheckpoint`` each round (at cluster scale: write the
-label table to an Iceberg checkpoint instead — sources/tables.py).
-Duplicate-listing components are tiny (2-5 nodes) so 3-4 rounds
-converge; the loop exits by fixpoint count, not a guessed bound.
+``canonical_mapping`` takes one of two paths, chosen by linking's
+driver-fit gate (``linking.pack_catalog``). While the catalog fits,
+the driver computes exact cosine in row blocks within each
+(type, color) group and merges pairs with union-find — the default.
+Past the budget, ``near_duplicate_pairs`` (an LSH-blocked cosine
+self-join) feeds ``connected_components``, which itself unions on
+the driver up to ``driver_threshold`` vertices and beyond that runs
+GraphFrames-style min-label propagation as DataFrame self-joins,
+lineage cut with ``localCheckpoint`` each round, until a round
+changes no label.
 """
 
 from __future__ import annotations
@@ -32,7 +34,6 @@ def near_duplicate_pairs(catalog: DataFrame,
                          nbits: int = 64, nbands: int = 8,
                          probe: DataFrame | None = None,
                          id_col: str = "product_id",
-                         vec_col: str = "embedding",
                          keys: tuple[str, ...] = ("type", "color"),
                          seed: str = "dedup-img") -> DataFrame:
     """LSH-blocked cosine self-join → (src, dst, score) pairs of
@@ -62,12 +63,12 @@ def near_duplicate_pairs(catalog: DataFrame,
     def banded(df, side):
         return df.select(
             *[F.col(x).alias(f"{side}_{x}") for x in (id_col, *keys)],
-            F.posexplode(sig(vec_col)).alias(f"{side}_band",
+            F.posexplode(sig("embedding")).alias(f"{side}_band",
                                              f"{side}_bsig"))
 
     def vec(end):
         return catalog.select(F.col(id_col).alias(end),
-                              F.col(vec_col).alias(f"{end}_vec"))
+                              F.col("embedding").alias(f"{end}_vec"))
 
     a = banded(catalog if probe is None else probe, "a")
     b = banded(catalog, "b")
@@ -85,7 +86,7 @@ def near_duplicate_pairs(catalog: DataFrame,
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame,
-                         id_col: str = "id", max_iter: int = 50,
+                         id_col: str = "id",
                          driver_threshold: int = 200_000) -> DataFrame:
     """(src,dst) edges + vertex ids → (id, component) with component =
     min id in the component.
@@ -118,7 +119,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
                 F.col(id_col).alias("component")).schema
             return vertices.sparkSession.createDataFrame(
                 list(_union_find(vs, pairs).items()), schema)
-    return _cc_label_propagation(edges, vertices, id_col, max_iter)
+    return _cc_label_propagation(edges, vertices, id_col)
 
 
 def _union_find(ids, pairs) -> dict:
@@ -142,15 +143,14 @@ def _union_find(ids, pairs) -> dict:
 
 
 def _cc_label_propagation(edges: DataFrame, vertices: DataFrame,
-                          id_col: str = "id",
-                          max_iter: int = 50) -> DataFrame:
+                          id_col: str = "id") -> DataFrame:
     """Distributed min-label propagation (GraphFrames-style)."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.distinct().localCheckpoint(eager=True)
     labels = vertices.select(F.col(id_col).alias("id")) \
         .withColumn("component", F.col("id")).localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(50):
         msgs = sym.join(labels, sym.src == labels.id, "inner") \
             .select(F.col("dst").alias("id"), "component")
         new_labels = labels.select("id", "component").union(msgs) \
@@ -171,8 +171,7 @@ def _cc_label_propagation(edges: DataFrame, vertices: DataFrame,
 _SIM_BLOCK = 512
 
 
-def canonical_mapping(catalog: DataFrame, packed: dict | None,
-                      threshold: float = DUP_COSINE) -> DataFrame:
+def canonical_mapping(catalog: DataFrame, packed: dict | None) -> DataFrame:
     """catalog → (product_id, canonical_id) — identity for singletons.
 
     ``packed`` is ``linking.pack_catalog(catalog)``, the driver-fit
@@ -197,20 +196,20 @@ def canonical_mapping(catalog: DataFrame, packed: dict | None,
                 sims = mat[lo:lo + _SIM_BLOCK] @ mat.T
                 sims /= norms[lo:lo + _SIM_BLOCK, None]
                 sims /= norms
-                i, j = np.nonzero(sims >= threshold)
+                i, j = np.nonzero(sims >= DUP_COSINE)
                 keep = lo + i < j
                 pairs.extend(zip(pids[lo + i[keep]], pids[j[keep]]))
         return catalog.sparkSession.createDataFrame(
             sorted(_union_find(ids, pairs).items()),
             "product_id string, canonical_id string")
-    pairs = near_duplicate_pairs(catalog, threshold)
+    pairs = near_duplicate_pairs(catalog)
     labels = connected_components(pairs, catalog, id_col="product_id")
     return labels.select(F.col("id").alias("product_id"),
                          F.col("component").alias("canonical_id"))
 
 
-def update_canonical_mapping(catalog: DataFrame, old_mapping: DataFrame,
-                             threshold: float = DUP_COSINE) -> DataFrame:
+def update_canonical_mapping(catalog: DataFrame,
+                             old_mapping: DataFrame) -> DataFrame:
     """Fold NEW catalog items into an existing canonical mapping
     without re-generating pairs for the whole catalog — the
     incremental path a 10^12-row catalog actually runs (from-scratch
@@ -239,7 +238,7 @@ def update_canonical_mapping(catalog: DataFrame, old_mapping: DataFrame,
         old_mapping.select("product_id"), "product_id", "left_anti")
     if new_items.isEmpty():
         return old_mapping
-    pairs = near_duplicate_pairs(catalog, threshold, probe=new_items)
+    pairs = near_duplicate_pairs(catalog, probe=new_items)
     old_edges = old_mapping \
         .filter(F.col("product_id") != F.col("canonical_id")) \
         .select(F.col("product_id").alias("src"),

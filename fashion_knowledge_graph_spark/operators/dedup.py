@@ -10,10 +10,7 @@ pruning / AQE:
                              **inverted-index join** (explode shingle →
                              equi-join on shingle → count common per
                              pair). Never materializes the cross
-                             product: cost is Σ df(shingle)², and hot
-                             shingles (stopword-grams) are dropped by a
-                             document-frequency cap exactly like
-                             classic blocking.
+                             product: cost is Σ df(shingle)².
 - ``minhash_lsh_pairs``    — MinHash signatures + banded LSH blocking,
                              exact-Jaccard verification of candidates.
                              The 100 TB path: cost linear in corpus +
@@ -46,18 +43,17 @@ from . import linking as lk
 
 
 # ---------------------------------------------------------------- exact
-def exact_dedup(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative per identical normalized content.
 
     groupBy on the md5 fingerprint (not the full text) keeps shuffle
     rows narrow at 100 TB; collisions are md5-improbable. Output:
     (fingerprint, keep_id, n_dups)."""
     return df.select(
-        tx.fingerprint_md5(F.col(text_col)).alias("fingerprint"),
-        F.col(id_col)
+        tx.fingerprint_md5(F.col("text")).alias("fingerprint"),
+        F.col("doc_id")
     ).groupBy("fingerprint").agg(
-        F.min(id_col).alias("keep_id"),
+        F.min("doc_id").alias("keep_id"),
         F.count(F.lit(1)).alias("n_dups"))
 
 
@@ -151,9 +147,7 @@ def _shingle_posting(df: DataFrame, id_col: str, text_col: str,
         .mapInArrow(kernel, out_schema)
 
 
-def ngram_repetition_stats(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           n: int = 2) -> DataFrame:
+def ngram_repetition_stats(df: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style repetition quality: fraction of word-``n``-grams
     that are repeats of an earlier one in the same document
     (``1 - distinct/total``; high ⇒ boilerplate/spam).
@@ -164,9 +158,9 @@ def ngram_repetition_stats(df: DataFrame, id_col: str = "doc_id",
     with fewer than ``n`` tokens have no n-grams → fraction 0.
     Output: (id, n_tokens, n_ngrams, n_distinct, rep_frac)."""
     toks = df.select(
-        F.col(id_col).alias("id"),
-        tx.token_count(F.col(text_col)).alias("n_tokens"))
-    distinct = _shingle_posting(df, id_col, text_col, n) \
+        F.col("doc_id").alias("id"),
+        tx.token_count(F.col("text")).alias("n_tokens"))
+    distinct = _shingle_posting(df, "doc_id", "text", n) \
         .groupBy("id").agg(F.count(F.lit(1)).alias("n_distinct_raw"))
     total = F.greatest(F.col("n_tokens") - (n - 1), F.lit(0))
     return (toks.join(distinct, "id", "left")
@@ -186,18 +180,11 @@ def ngram_repetition_stats(df: DataFrame, id_col: str = "doc_id",
                 .otherwise(F.lit(0.0))))
 
 
-def jaccard_pairs_exact(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 3,
-                        threshold: float = 0.5,
-                        max_df: int | None = None) -> DataFrame:
-    """Exact word-``n``-gram Jaccard ≥ threshold pairs via inverted
+def jaccard_pairs_exact(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact word-3-gram Jaccard ≥ threshold pairs via inverted
     index: |A∩B| from the shingle equi-join, |A|,|B| from per-doc
-    shingle counts, J = inter / (|A|+|B|-inter).
-
-    ``max_df`` drops shingles appearing in more than that many docs
-    before pairing (cost cap for head shingles). With ``max_df=None``
-    the result is exactly the brute-force pairwise Jaccard — that is
-    the oracle-checked configuration.
+    shingle counts, J = inter / (|A|+|B|-inter) — exactly the
+    brute-force pairwise Jaccard.
     """
     # posting list feeds three scans (sizes, join side a, join side b):
     # materialize it — at cluster scale this is an intermediate table;
@@ -211,13 +198,9 @@ def jaccard_pairs_exact(df: DataFrame, id_col: str = "doc_id",
     # compute the same checkpoint partitions — duplicate Arrow-kernel
     # work + block-lock convoys (measured: a bimodal 3× slowdown on
     # exactly the runs that lost the race).
-    post = _shingle_posting(df, id_col, text_col, n) \
+    post = _shingle_posting(df, "doc_id", "text", 3) \
         .localCheckpoint(eager=True)
     sizes = post.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    if max_df is not None:
-        keep = post.groupBy("sh").agg(F.count(F.lit(1)).alias("df_sh")) \
-            .filter(F.col("df_sh") <= max_df).select("sh")
-        post = post.join(keep, "sh")
     a = post.select(F.col("id").alias("id_a"), "sh")
     b = post.select(F.col("id").alias("id_b"), "sh")
     inter = a.join(b, "sh").filter(F.col("id_a") < F.col("id_b")) \
@@ -370,22 +353,28 @@ def _minhash_sig_arrow(df: DataFrame, id_col: str, text_col: str,
         .mapInArrow(kernel, out_schema)
 
 
-def minhash_signature(df: DataFrame, id_col: str, text_col: str,
-                      n: int = 3, num_hashes: int = 64,
-                      engine: str = "auto") -> DataFrame:
-    """(id, sig:array) MinHash signatures.
-
-    Runs as one ``mapInArrow`` numpy kernel (``_minhash_sig_arrow``);
-    ``engine="catalyst"`` keeps the relational spec (posting explode →
-    128 JVM min-aggregates) the kernel's parity test compares with."""
-    if engine != "catalyst":
-        sig = _minhash_sig_arrow(df, id_col, text_col, n, num_hashes)
-    else:
-        post = _with_lane_halves(
-            _shingle_posting_catalyst(df, id_col, text_col, n))
-        sig = post.groupBy("id").agg(*_lane_exprs(num_hashes))
+def _as_sig_array(sig: DataFrame, num_hashes: int) -> DataFrame:
     return sig.select(
         "id", F.array(*[F.col(f"h{j}") for j in range(num_hashes)]).alias("sig"))
+
+
+def minhash_signature(df: DataFrame, id_col: str, text_col: str,
+                      n: int = 3, num_hashes: int = 64) -> DataFrame:
+    """(id, sig:array) MinHash signatures, computed by one
+    ``mapInArrow`` numpy kernel (``_minhash_sig_arrow``)."""
+    return _as_sig_array(
+        _minhash_sig_arrow(df, id_col, text_col, n, num_hashes), num_hashes)
+
+
+def minhash_signature_catalyst(df: DataFrame, id_col: str, text_col: str,
+                               n: int, num_hashes: int) -> DataFrame:
+    """``minhash_signature``'s relational spec (posting explode → JVM
+    min-aggregates per lane): the reference the kernel's parity test
+    compares with."""
+    post = _with_lane_halves(
+        _shingle_posting_catalyst(df, id_col, text_col, n))
+    return _as_sig_array(post.groupBy("id").agg(*_lane_exprs(num_hashes)),
+                         num_hashes)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -524,8 +513,7 @@ def simhash_py(text: str) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def simhash_df(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def simhash_df(df: DataFrame) -> DataFrame:
     """(id, simhash:long) via one ``mapInArrow`` numpy kernel.
 
     Replaces the round-1 Catalyst form (``aggregate`` over a 64-wide
@@ -545,7 +533,7 @@ def simhash_df(df: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import types as T
 
     out_schema = T.StructType([
-        T.StructField("id", df.schema[id_col].dataType),
+        T.StructField("id", df.schema["doc_id"].dataType),
         T.StructField("simhash", T.LongType()),
     ])
     memo: dict[str, int] = {}
@@ -557,8 +545,8 @@ def simhash_df(df: DataFrame, id_col: str = "doc_id",
         shifts = np.uint64(63) - np.arange(64, dtype=np.uint64)
         weights = (np.uint64(1) << shifts)
         for rb in batches:
-            ids = rb.column(id_col)
-            texts = rb.column(text_col).to_pylist()
+            ids = rb.column("doc_id")
+            texts = rb.column("text").to_pylist()
             n = len(texts)
             tok_lists = [
                 [t for t in re.sub(r"[^a-z0-9]+", " ", (s or "").lower())
@@ -614,13 +602,10 @@ def simhash_df(df: DataFrame, id_col: str = "doc_id",
                 [ids, pa.array(sh)], schema=pa.schema([
                     ("id", ids.type), ("simhash", pa.int64())]))
 
-    return df.select(F.col(id_col).alias(id_col),
-                     F.col(text_col).alias(text_col)) \
-        .mapInArrow(kernel, out_schema)
+    return df.select("doc_id", "text").mapInArrow(kernel, out_schema)
 
 
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", max_hamming: int = 8) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
     Blocking: split the 64-bit hash into 4 × 16-bit bands; any pair
@@ -631,7 +616,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     # checkpoint the Arrow kernel runs twice (measured 2× wall time).
     # eager: lazy checkpoints race under concurrent AQE stage-jobs
     # (see minhash_lsh_pairs)
-    sh = simhash_df(df, id_col, text_col).localCheckpoint(eager=True)
+    sh = simhash_df(df).localCheckpoint(eager=True)
     banded = sh.select(
         "id", "simhash",
         F.posexplode(F.array(*[
@@ -720,8 +705,7 @@ def embedding_near_dup_matmul(df: DataFrame, id_col: str = "vec_id",
         .mapInPandas(kernel, out_schema)
 
 
-def embedding_near_dup_auto(df: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding",
+def embedding_near_dup_auto(df: DataFrame,
                             threshold: float = 0.95) -> DataFrame:
     """Cosine ≥ threshold pairs (id_a < id_b, cosine) behind ONE
     driver-fit decision, linking's byte gate
@@ -735,18 +719,17 @@ def embedding_near_dup_auto(df: DataFrame, id_col: str = "vec_id",
     8 bits, 1-(1-0.9^8)^8 ≈ 0.989) — so the default can never OOM
     driver or executors at scale. An empty corpus takes the blocked
     plan too: it yields the empty, typed pair set."""
-    if lk.fits_driver_broadcast(df, lk.BROADCAST_BUDGET_MB, vec_col):
-        return embedding_near_dup_matmul(df, id_col, vec_col, threshold)
-    pairs = cc.near_duplicate_pairs(df, threshold, id_col=id_col,
-                                    vec_col=vec_col, keys=(),
-                                    seed="near-dup-generic")
+    if lk.fits_driver_broadcast(df, lk.BROADCAST_BUDGET_MB):
+        return embedding_near_dup_matmul(df, "vec_id", "embedding",
+                                         threshold)
+    pairs = cc.near_duplicate_pairs(df, threshold, id_col="vec_id",
+                                    keys=(), seed="near-dup-generic")
     return pairs.select(F.col("src").alias("id_a"),
                         F.col("dst").alias("id_b"),
                         F.col("score").alias("cosine"))
 
 
-def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", k: int = 8,
+def semantic_dedup(df: DataFrame, k: int = 8,
                    iterations: int = 2,
                    threshold: float = 0.95) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -771,12 +754,11 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     cut; tests measure it vs the exact pair set)."""
     from .clustering import kmeans_assign
 
-    assign = kmeans_assign(df, id_col=id_col, vec_col=vec_col, k=k,
-                           iterations=iterations) \
-        .select(F.col(id_col), F.col("cluster"))
-    blocked = df.select(id_col, vec_col).join(assign, id_col)
+    assign = kmeans_assign(df, k=k, iterations=iterations) \
+        .select(F.col("vec_id"), F.col("cluster"))
+    blocked = df.select("vec_id", "embedding").join(assign, "vec_id")
     pairs = cc.near_duplicate_pairs(blocked, threshold, nbits=0, nbands=1,
-                                    id_col=id_col, vec_col=vec_col,
+                                    id_col="vec_id",
                                     keys=("cluster",))
     return pairs.select(F.col("src").alias("id_a"),
                         F.col("dst").alias("id_b"),
@@ -784,19 +766,18 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
 
 
 # ------------------------------------------------------------ keep set
-def dedup_keep(df: DataFrame, pairs: DataFrame,
-               id_col: str = "doc_id") -> DataFrame:
+def dedup_keep(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Pairs → (id, keep_id) via connected components (min id wins).
     Singletons keep themselves."""
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = cc.connected_components(edges, df.select(id_col), id_col=id_col)
-    return labels.select(F.col("id").alias(id_col),
+    labels = cc.connected_components(edges, df.select("doc_id"),
+                                     id_col="doc_id")
+    return labels.select(F.col("id").alias("doc_id"),
                          F.col("component").alias("keep_id"))
 
 
 # ----------------------------------------------------- decontamination
 def decontaminate(train: DataFrame, bench: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
                   n: int = 8) -> DataFrame:
     """Benchmark decontamination: flag training documents that share
     any word-``n``-gram shingle with a held-out benchmark document
@@ -818,8 +799,8 @@ def decontaminate(train: DataFrame, bench: DataFrame,
     (id, n_hit_shingles, n_bench_docs, train_shingles,
     contamination_frac = hit/total distinct shingles).
     """
-    post_t = _shingle_posting(train, id_col, text_col, n)
-    post_b = F.broadcast(_shingle_posting(bench, id_col, text_col, n)
+    post_t = _shingle_posting(train, "doc_id", "text", n)
+    post_b = F.broadcast(_shingle_posting(bench, "doc_id", "text", n)
                          .select(F.col("id").alias("bench_id"), "sh"))
     # posting list feeds the probe AND the (filtered) size count:
     # materialize once (same eager-checkpoint rationale as
@@ -837,9 +818,7 @@ def decontaminate(train: DataFrame, bench: DataFrame,
                 / F.col("train_shingles").cast("double"), 6))
 
 
-def jaccard_pairs_prefix(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", n: int = 3,
-                         threshold: float = 0.5) -> DataFrame:
+def jaccard_pairs_prefix(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT Jaccard-join with PPJoin-style prefix filtering — the
     classic set-similarity-join optimization over the plain inverted
     index (``jaccard_pairs_exact``):
@@ -858,7 +837,7 @@ def jaccard_pairs_prefix(df: DataFrame, id_col: str = "doc_id",
     doc-sized hash arrays — bounded by the (filtered) candidate count,
     not by posting-list blowup.
     """
-    post, prefix = _prefix_index(df, id_col, text_col, n, threshold)
+    post, prefix = _prefix_index(df, "doc_id", "text", 3, threshold)
     a = prefix.select(F.col("id").alias("id_a"), "sh",
                       F.col("sz").alias("sz_a"))
     b = prefix.select(F.col("id").alias("id_b"), "sh",
@@ -926,8 +905,7 @@ def _prefix_candidate_count(df: DataFrame, id_col: str, text_col: str,
     return pairs(prefix), pairs(post)
 
 
-def duplicated_span_stats(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text", n: int = 10,
+def duplicated_span_stats(df: DataFrame, n: int = 10,
                           min_docs: int = 2) -> DataFrame:
     """Window-granular exact substring-duplication analysis — the
     distributed practical form of suffix-array substring dedup
@@ -945,7 +923,7 @@ def duplicated_span_stats(df: DataFrame, id_col: str = "doc_id",
     fewer than ``n`` tokens have one whole-doc window by the shared
     shingle spec; 0-token docs emit nothing.
     """
-    post = _shingle_posting(df, id_col, text_col, n) \
+    post = _shingle_posting(df, "doc_id", "text", n) \
         .localCheckpoint(eager=True)
     wdf = post.groupBy("sh").agg(
         F.countDistinct("id").alias("w_docs"))

@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cooccurrence_pairs(linked: DataFrame,
-                       evidence_col: str = "doc_id") -> DataFrame:
+def cooccurrence_pairs(linked: DataFrame) -> DataFrame:
     """linked mentions (doc_id, span_idx, product_id, category) →
     one row per ordered position pair i<j within each doc.
 

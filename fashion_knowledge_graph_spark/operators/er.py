@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 
 def qgram_explode(df: DataFrame, id_col: str, text_col: str,
-                  q: int = 3, out: str = "gram") -> DataFrame:
+                  q: int = 3) -> DataFrame:
     """One row per DISTINCT q-gram of ``text_col`` (padded-free,
     character-position grams; strings shorter than ``q`` contribute
     their single truncated gram so they remain blockable)."""
@@ -41,17 +41,16 @@ def qgram_explode(df: DataFrame, id_col: str, text_col: str,
     grams = F.array_distinct(
         F.transform(F.sequence(F.lit(1), n),
                     lambda i: F.substr(F.col(text_col), i, F.lit(q))))
-    return df.select(F.col(id_col), F.explode(grams).alias(out))
+    return df.select(F.col(id_col), F.explode(grams).alias("gram"))
 
 
-def stop_grams(catalog_grams: DataFrame, max_gram_df: int,
-               gram_col: str = "gram") -> DataFrame:
+def stop_grams(catalog_grams: DataFrame, max_gram_df: int) -> DataFrame:
     """Grams whose catalog document frequency exceeds the cap.
     Tiny by construction (head of the Zipf curve) — broadcast it."""
-    return (catalog_grams.groupBy(gram_col)
+    return (catalog_grams.groupBy("gram")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_gram_df)
-            .select(gram_col))
+            .select("gram"))
 
 
 def fuzzy_join(left: DataFrame, right: DataFrame,
@@ -155,14 +154,13 @@ def snm_pairs(df: DataFrame, id_col: str, key_col: str,
     return pairs
 
 
-def fs_em_step(pairs: DataFrame, gamma_cols: list[str],
-               pi0: float = 0.1, m0: float = 0.9,
-               u0: float = 0.1) -> dict:
+def fs_em_step(pairs: DataFrame, gamma_cols: list[str]) -> dict:
     """One EM iteration of the Fellegi–Sunter record-linkage model
     (Fellegi & Sunter 1969; Winkler's EM estimation).
 
     ``pairs`` carries one binary agreement column per comparator.
-    E-step: P(match|γ) per pair from the current (π, m, u) — a pure
+    E-step: P(match|γ) per pair from the starting (π, m, u) =
+    (0.1, 0.9, 0.1) for every comparator — a pure
     codegen expression of literals, bit-identical across engines.
     M-step: the new m_i/u_i/π from ONE partial-agg'd pass (2·|γ|+1
     sums). Driver state is the parameter dict only — the classic
@@ -171,13 +169,13 @@ def fs_em_step(pairs: DataFrame, gamma_cols: list[str],
     Returns {"pi": π', "m": {γ: m'}, "u": {γ: u'}} — feed into
     ``fs_weights`` for the log2 agreement weights.
     """
-    pm = F.lit(pi0)
-    pu = F.lit(1.0 - pi0)
+    pm = F.lit(0.1)
+    pu = F.lit(1.0 - 0.1)
     for g in gamma_cols:
-        pm = pm * F.when(F.col(g) == 1, F.lit(m0)) \
-                   .otherwise(F.lit(1.0 - m0))
-        pu = pu * F.when(F.col(g) == 1, F.lit(u0)) \
-                   .otherwise(F.lit(1.0 - u0))
+        pm = pm * F.when(F.col(g) == 1, F.lit(0.9)) \
+                   .otherwise(F.lit(1.0 - 0.9))
+        pu = pu * F.when(F.col(g) == 1, F.lit(0.1)) \
+                   .otherwise(F.lit(1.0 - 0.1))
     p = (pm / (pm + pu)).alias("__p")
     scored = pairs.select(*gamma_cols, p)
     aggs = [F.sum("__p").alias("sp"),
@@ -210,10 +208,7 @@ def fs_score(pairs: DataFrame, params: dict,
 
 
 def blocking_metrics(docs: DataFrame, truth_pairs: DataFrame,
-                     key_cols: list[str],
-                     id_col: str = "doc_id",
-                     pair_cols: tuple[str, str] = ("id_a", "id_b")
-                     ) -> DataFrame:
+                     key_cols: list[str]) -> DataFrame:
     """Blocking-quality metrics for an entity-resolution blocker:
     pairs completeness (recall of true matches inside the candidate
     set) and reduction ratio (fraction of the n·(n−1)/2 comparison
@@ -231,9 +226,9 @@ def blocking_metrics(docs: DataFrame, truth_pairs: DataFrame,
     Returns one row: n_docs, n_true, n_candidates, n_matched,
     pairs_completeness, reduction_ratio (both rounded to 6 places).
     """
-    a, b = pair_cols
+    a, b = "id_a", "id_b"
     key = F.struct(*[F.col(c) for c in key_cols])
-    keyed = docs.select(F.col(id_col).alias("__id"),
+    keyed = docs.select(F.col("doc_id").alias("__id"),
                         key.alias("__k")) \
         .filter(F.col("__k").isNotNull())
     for c in key_cols:
@@ -263,9 +258,7 @@ def blocking_metrics(docs: DataFrame, truth_pairs: DataFrame,
 
 
 def meta_blocking(membership: DataFrame,
-                  max_block_size: int | None = None,
-                  id_col: str = "id",
-                  block_col: str = "block") -> DataFrame:
+                  max_block_size: int | None = None) -> DataFrame:
     """Meta-blocking (Papadakis et al.): prune a redundancy-positive
     blocking collection down to the comparisons worth running.
 
@@ -282,8 +275,8 @@ def meta_blocking(membership: DataFrame,
     the WEP threshold is a single-row aggregate broadcast back — no
     window, no driver collect, nothing quadratic in the corpus.
     """
-    m = membership.select(F.col(block_col).alias("__b"),
-                          F.col(id_col).alias("__id")).distinct()
+    m = membership.select(F.col("block").alias("__b"),
+                          F.col("id").alias("__id")).distinct()
     if max_block_size is not None:
         ok = (m.groupBy("__b")
               .agg(F.count(F.lit(1)).alias("nb"))

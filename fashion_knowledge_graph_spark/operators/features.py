@@ -70,7 +70,7 @@ def target_encode_loo(df: DataFrame, id_col: str, cat_col: str,
 
 
 def feature_hash(tokens: DataFrame, id_col: str, token_col: str,
-                 dim: int = 1024, signed: bool = True) -> DataFrame:
+                 dim: int = 1024) -> DataFrame:
     """The hashing trick (Weinberger et al. 2009): fold an unbounded
     feature vocabulary into a FIXED ``dim``-bucket space with a
     signed hash → sparse ``(id, bucket, value)`` rows, value =
@@ -94,7 +94,7 @@ def feature_hash(tokens: DataFrame, id_col: str, token_col: str,
     sign = F.when(
         F.pmod(_h60(F.concat(F.lit("s:"), F.col("tok"))),
                F.lit(2)) == 1,
-        F.lit(1)).otherwise(F.lit(-1)) if signed else F.lit(1)
+        F.lit(1)).otherwise(F.lit(-1))
     return (t.select("id", bucket.alias("bucket"), sign.alias("s"))
             .groupBy("id", "bucket")
             .agg(F.sum("s").cast("long").alias("value"))

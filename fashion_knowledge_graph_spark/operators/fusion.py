@@ -19,7 +19,7 @@ estimator deterministic and lets an ANSI-SQL oracle replay it by
 unrolling the rounds.
 
 Determinism contract: trust is QUANTIZED to an integer number of
-``quantum``-ths (floor((quantum * matching) / total) in integer
+``QUANTUM``-ths (floor((QUANTUM * matching) / total) in integer
 arithmetic), so vote scores are exact integer sums — order-independent
 across partitions and engines — and the (score, obj) tie-break is
 exact rather than hostage to float summation order. Only the final
@@ -42,51 +42,45 @@ from pyspark.sql import functions as F
 QUANTUM = 1_000_000
 
 
-def _consensus(weighted: DataFrame, subj: str, pred: str,
-               obj: str) -> DataFrame:
+def _consensus(weighted: DataFrame) -> DataFrame:
     """Winner per (subj, pred): max total weight, ties to max obj."""
-    votes = (weighted.groupBy(subj, pred, obj)
+    votes = (weighted.groupBy("subj", "pred", "obj")
              .agg(F.sum("w").alias("score"),
                   F.count(F.lit(1)).alias("n_sources")))
-    best = (votes.groupBy(subj, pred)
+    best = (votes.groupBy("subj", "pred")
             .agg(F.max_by(
-                F.struct(F.col(obj), F.col("score"),
+                F.struct(F.col("obj"), F.col("score"),
                          F.col("n_sources")),
-                F.struct(F.col("score"), F.col(obj))).alias("b"),
+                F.struct(F.col("score"), F.col("obj"))).alias("b"),
                 F.sum("score").alias("denom")))
     return best.select(
-        subj, pred,
-        F.col(f"b.{obj}").alias(obj),
+        "subj", "pred",
+        F.col("b.obj").alias("obj"),
         F.col("b.score").alias("score"),
         F.col("b.n_sources").alias("n_sources"),
         "denom")
 
 
-def source_trust(claims: DataFrame, consensus: DataFrame,
-                 source: str = "source", subj: str = "subj",
-                 pred: str = "pred", obj: str = "obj",
-                 quantum: int = QUANTUM) -> DataFrame:
+def source_trust(claims: DataFrame, consensus: DataFrame) -> DataFrame:
     """Per-source accuracy against a consensus, in integer quanta:
-    floor((quantum * matching claims) / total claims).
+    floor((QUANTUM * matching claims) / total claims).
 
     One aggregation over the claim stream; the output is source-sized
     (broadcastable by construction).
     """
     hit = (claims.join(
-        consensus.select(subj, pred, obj).withColumn("hit", F.lit(1)),
-        [subj, pred, obj], "left"))
-    agg = (hit.groupBy(source)
+        consensus.select("subj", "pred", "obj")
+        .withColumn("hit", F.lit(1)),
+        ["subj", "pred", "obj"], "left"))
+    agg = (hit.groupBy("source")
            .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("m"),
                 F.count(F.lit(1)).alias("t")))
     return agg.select(
-        source,
-        F.expr(f"({quantum} * m) div t").cast("long").alias("w"))
+        "source",
+        F.expr(f"({QUANTUM} * m) div t").cast("long").alias("w"))
 
 
-def truth_discovery(claims: DataFrame, rounds: int = 2,
-                    source: str = "source", subj: str = "subj",
-                    pred: str = "pred", obj: str = "obj",
-                    quantum: int = QUANTUM) -> DataFrame:
+def truth_discovery(claims: DataFrame, rounds: int = 2) -> DataFrame:
     """Iterative source-reliability consensus over distinct claims.
 
     Returns one row per (subj, pred): the winning obj, its normalized
@@ -98,27 +92,23 @@ def truth_discovery(claims: DataFrame, rounds: int = 2,
     round's trust table (source-sized) would be materialized, the
     claim stream is re-scanned once per round either way.
     """
-    c = claims.select(source, subj, pred, obj).distinct()
+    c = claims.select("source", "subj", "pred", "obj").distinct()
     trust = None
     cons = None
     for _ in range(rounds):
-        w = (c.withColumn("w", F.lit(quantum).cast("long"))
+        w = (c.withColumn("w", F.lit(QUANTUM).cast("long"))
              if trust is None
-             else c.join(F.broadcast(trust), source))
-        cons = _consensus(w, subj, pred, obj)
-        trust = source_trust(c, cons, source, subj, pred, obj,
-                             quantum)
+             else c.join(F.broadcast(trust), "source"))
+        cons = _consensus(w)
+        trust = source_trust(c, cons)
     return cons.select(
-        subj, pred, obj,
+        "subj", "pred", "obj",
         (F.col("score").cast("double")
          / F.col("denom").cast("double")).alias("confidence"),
         F.col("n_sources").cast("int").alias("n_sources"))
 
 
-def source_reliability(claims: DataFrame, source: str = "source",
-                       subj: str = "subj", pred: str = "pred",
-                       obj: str = "obj",
-                       quantum: int = QUANTUM) -> DataFrame:
+def source_reliability(claims: DataFrame) -> DataFrame:
     """The per-source audit row behind truth discovery: claim count,
     majority-consensus agreement count, and the quantized trust
     weight — the provenance datasheet a KB curator reviews before
@@ -126,17 +116,16 @@ def source_reliability(claims: DataFrame, source: str = "source",
     round 1: data-sized aggregations keyed (subj, pred[, obj]),
     source-sized output.
     """
-    c = claims.select(source, subj, pred, obj).distinct()
-    cons = _consensus(c.withColumn("w", F.lit(quantum).cast("long")),
-                      subj, pred, obj)
+    c = claims.select("source", "subj", "pred", "obj").distinct()
+    cons = _consensus(c.withColumn("w", F.lit(QUANTUM).cast("long")))
     hit = c.join(
-        cons.select(subj, pred, obj).withColumn("hit", F.lit(1)),
-        [subj, pred, obj], "left")
-    agg = (hit.groupBy(source)
+        cons.select("subj", "pred", "obj").withColumn("hit", F.lit(1)),
+        ["subj", "pred", "obj"], "left")
+    agg = (hit.groupBy("source")
            .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0)))
                 .cast("long").alias("n_match"),
                 F.count(F.lit(1)).alias("n_claims")))
     return agg.select(
-        source, "n_claims", "n_match",
-        F.expr(f"({quantum} * n_match) div n_claims").cast("long")
+        "source", "n_claims", "n_match",
+        F.expr(f"({QUANTUM} * n_match) div n_claims").cast("long")
         .alias("w"))

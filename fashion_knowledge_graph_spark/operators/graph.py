@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
+def pagerank(edges: DataFrame,
              weight: str | None = None, iterations: int = 3,
              damping: float = 0.85,
              seeds: DataFrame | None = None,
@@ -54,7 +54,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # set each consume it, and edges usually arrive from an expensive
     # upstream plan (a co-occurrence self-join here) that would
     # otherwise re-execute once per consumer
-    e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"),
+    e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
                      w.alias("w")).localCheckpoint(eager=True)
     # node set + dangling flag in ONE partial-agg'd pass (src rows
     # carry has_out=1, dst rows 0, max per node), ONE checkpoint, and
@@ -148,10 +148,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def pagerank_checkpointed(edges: DataFrame, table, iterations: int,
-                          chunk: int = 1, src: str = "src",
-                          dst: str = "dst", weight: str | None = None,
-                          damping: float = 0.85,
-                          seeds: DataFrame | None = None) -> DataFrame:
+                          chunk: int = 1,
+                          weight: str | None = None) -> DataFrame:
     """PageRank with DURABLE snapshot checkpoints: every ``chunk``
     iterations the rank vector commits to ``table`` (a
     ``sources.tables.SnapshotTable``) with the iteration number in
@@ -179,8 +177,8 @@ def pagerank_checkpointed(edges: DataFrame, table, iterations: int,
             ranks = table.read(spark)
     while done < iterations:
         step = min(chunk, iterations - done)
-        ranks = pagerank(edges, src=src, dst=dst, weight=weight,
-                         iterations=step, damping=damping, seeds=seeds,
+        ranks = pagerank(edges, weight=weight,
+                         iterations=step,
                          init_ranks=ranks)
         done += step
         table.write(ranks, mode="overwrite", stage=f"pr_iter_{done}")
@@ -245,8 +243,7 @@ def triangle_counts(edges: DataFrame, src: str = "src",
         F.count(F.lit(1)).alias("triangles"))
 
 
-def clustering_coefficient(edges: DataFrame, src: str = "src",
-                           dst: str = "dst") -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient over an undirected edge list →
     ``(node, deg, triangles, coeff)`` for every node with deg ≥ 2.
 
@@ -262,7 +259,7 @@ def clustering_coefficient(edges: DataFrame, src: str = "src",
     dropping them would bias the mean coefficient upward). The divide
     is integer-derived, so the SQL replay is bit-identical.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     e = (edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
          .filter(F.col("a") != F.col("b")).distinct()
          .localCheckpoint(eager=True))
@@ -283,7 +280,6 @@ def clustering_coefficient(edges: DataFrame, src: str = "src",
 
 
 def shortest_paths(edges: DataFrame, seeds: DataFrame, rounds: int,
-                   src: str = "src", dst: str = "dst",
                    weight: str | None = None) -> DataFrame:
     """Fixed-round multi-source weighted shortest paths (Bellman-Ford
     relaxation) over a DIRECTED edge list → ``(node, dist)`` =
@@ -312,8 +308,8 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, rounds: int,
     replays 1..t-1.
     """
     w = F.col(weight).cast("long") if weight else F.lit(1).cast("long")
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst"), w.alias("w")) \
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst"), w.alias("w")) \
         .localCheckpoint(eager=True)
     node_col = seeds.columns[0]
     dists = seeds.select(F.col(node_col).alias("node"),
@@ -329,8 +325,7 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, rounds: int,
     return dists
 
 
-def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
-         iterations: int = 3) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a DIRECTED
     edge list → ``(node, hub, authority)``, L1-normalized each
     half-step, fixed iterations.
@@ -350,8 +345,8 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     in-edges (out-edges) keep authority (hub) = 0 via the left join
     against the full node set.
     """
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst")) \
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst")) \
         .localCheckpoint(eager=True)
     nodes = (e.select(F.col("e_src").alias("node"))
              .unionByName(e.select(F.col("e_dst").alias("node")))
@@ -387,8 +382,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     return hubs.join(auths, "node").select("node", "hub", "authority")
 
 
-def link_prediction(edges: DataFrame, src: str = "src",
-                    dst: str = "dst",
+def link_prediction(edges: DataFrame,
                     max_degree: int | None = None) -> DataFrame:
     """Common-neighbor link prediction over an undirected edge list →
     ``(node_a, node_b, common_neighbors, adamic_adar)`` for node pairs
@@ -411,7 +405,7 @@ def link_prediction(edges: DataFrame, src: str = "src",
     loses only their ~1/ln(deg)→0 contributions (documented recall
     trade, same knob as the 2-hop expansion's hub cap).
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     und = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct()
@@ -436,8 +430,7 @@ def link_prediction(edges: DataFrame, src: str = "src",
                  .alias("adamic_adar")))
 
 
-def neighbor_jaccard(edges: DataFrame, src: str = "src",
-                     dst: str = "dst",
+def neighbor_jaccard(edges: DataFrame,
                      min_common: int = 1,
                      max_degree: int | None = None) -> DataFrame:
     """Neighborhood Jaccard similarity over an undirected edge list →
@@ -465,7 +458,7 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src",
     trade: hub-mediated similarity ('both are black') is the
     near-zero-signal term at 100 TB.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     und = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct()
@@ -499,8 +492,7 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src",
                     .alias("jaccard")))
 
 
-def kcore_peel(edges: DataFrame, k: int, rounds: int,
-               src: str = "src", dst: str = "dst") -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Fixed-round k-core peeling over an UNDIRECTED (symmetrized)
     edge list: each round recomputes degrees, keeps vertices with
     degree ≥ k, and drops every edge touching a peeled vertex.
@@ -518,7 +510,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int,
     is checkpointed per round (lineage truncation; without it round R
     replays rounds 1..R-1).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
+    e = edges.select("src", "dst") \
         .localCheckpoint(eager=True)
     for _ in range(rounds):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -533,10 +525,8 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int,
         .select(F.col("src").alias("node"), "deg")
 
 
-def label_propagation(edges: DataFrame, src: str = "src",
-                      dst: str = "dst", weight: str | None = None,
-                      rounds: int = 4,
-                      plan_audit: list | None = None) -> DataFrame:
+def label_propagation(edges: DataFrame, weight: str | None = None,
+                      rounds: int = 4) -> DataFrame:
     """Synchronous label-propagation community detection over an
     UNDIRECTED (symmetrized) edge list → ``(node, community)``.
 
@@ -565,8 +555,8 @@ def label_propagation(edges: DataFrame, src: str = "src",
     from pyspark.sql import Window
 
     w = F.col(weight).cast("long") if weight else F.lit(1).cast("long")
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst"), w.alias("w")) \
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst"), w.alias("w")) \
         .localCheckpoint(eager=True)
     labels = (e.select(F.col("e_src").alias("node"))
               .unionByName(e.select(F.col("e_dst").alias("node")))
@@ -584,16 +574,11 @@ def label_propagation(edges: DataFrame, src: str = "src",
                   .withColumn("rn", F.row_number().over(pick))
                   .filter(F.col("rn") == 1)
                   .select("node", "label"))
-        if plan_audit is not None:
-            # expose the pre-checkpoint round plan for executable
-            # plan-audit tests (the checkpoint erases it otherwise)
-            plan_audit.append(picked)
         labels = picked.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))
 
 
 def modularity(edges: DataFrame, communities: DataFrame,
-               src: str = "src", dst: str = "dst",
                weight: str | None = None) -> DataFrame:
     """Per-community modularity decomposition over an UNDIRECTED
     (symmetrized) edge list + a ``(node, community)`` assignment →
@@ -611,8 +596,8 @@ def modularity(edges: DataFrame, communities: DataFrame,
     table here), one partial-agg'd groupBy per term.
     """
     w = F.col(weight).cast("long") if weight else F.lit(1).cast("long")
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst"), w.alias("w")) \
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst"), w.alias("w")) \
         .localCheckpoint(eager=True)
     lab = communities.select(F.col(communities.columns[0]).alias("node"),
                              F.col(communities.columns[1])
@@ -651,8 +636,8 @@ def modularity(edges: DataFrame, communities: DataFrame,
                 .alias("contribution")))
 
 
-def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int,
-                  src: str = "src", dst: str = "dst") -> DataFrame:
+def bfs_distances(edges: DataFrame, seeds: DataFrame,
+                  max_depth: int) -> DataFrame:
     """Fixed-depth multi-source BFS over an UNDIRECTED (symmetrized)
     edge list: dist(v) = min hops from any seed, up to ``max_depth``
     (unreached nodes are absent). The fixed depth keeps the result
@@ -667,8 +652,8 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int,
     doesn't replay rounds 1..d-1.
     """
     node_col = seeds.columns[0]
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst")).localCheckpoint(eager=True)
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst")).localCheckpoint(eager=True)
     visited = seeds.select(F.col(node_col).alias("node"),
                            F.lit(0).alias("dist")).localCheckpoint(eager=True)
     frontier = visited
@@ -684,8 +669,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int,
 
 
 def deterministic_walks(edges: DataFrame, steps: int,
-                        walks_per_node: int = 1,
-                        src: str = "src", dst: str = "dst") -> DataFrame:
+                        walks_per_node: int = 1) -> DataFrame:
     """DeepWalk/node2vec-style random-walk corpus generation over an
     UNDIRECTED (symmetrized) edge list → ``(walk_id, step, node)``
     rows, ``walks_per_node`` walks of ``steps`` hops from every node
@@ -709,7 +693,7 @@ def deterministic_walks(edges: DataFrame, steps: int,
     table, not the graph, is the big output, and it streams to the
     sink partitioned by walk_id with no global sort.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     und = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct())
@@ -744,8 +728,7 @@ def deterministic_walks(edges: DataFrame, steps: int,
     return out
 
 
-def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst",
-                 dmin: int = 2) -> DataFrame:
+def degree_stats(edges: DataFrame, dmin: int = 2) -> DataFrame:
     """One-row degree datasheet for an undirected edge list:
     ``(n_nodes, n_edges, max_degree, mean_degree, alpha_hill)``.
 
@@ -758,7 +741,7 @@ def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst",
     arithmetic happens on a vocabulary-of-degrees-sized table, not
     per node. Callers round alpha for cross-engine display.
     """
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     deg = (und.select(F.col("a").alias("node"))
            .unionAll(und.select(F.col("b").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
@@ -778,8 +761,7 @@ def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst",
             .alias("alpha_hill"))))
 
 
-def degree_assortativity(edges: DataFrame, src: str = "src",
-                         dst: str = "dst") -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Newman degree assortativity r for an undirected edge list —
     the Pearson correlation of endpoint degrees over the symmetrized
     edge set. One row: ``(n_edge_ends, r)``.
@@ -792,9 +774,9 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
     lifting is one degree agg + one edge-end join, both on the edge
     key — no new shuffle shape.
     """
-    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .unionAll(edges.select(F.col(dst).alias("a"),
-                                  F.col(src).alias("b"))))
+    und = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+           .unionAll(edges.select(F.col("dst").alias("a"),
+                                  F.col("src").alias("b"))))
     deg = (und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
            .withColumnRenamed("a", "node"))
     ends = (und
@@ -821,8 +803,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
 
 
 def harmonic_centrality(edges: DataFrame, seeds: DataFrame,
-                        max_depth: int, src: str = "src",
-                        dst: str = "dst") -> DataFrame:
+                        max_depth: int) -> DataFrame:
     """Seed-sampled harmonic closeness centrality over an UNDIRECTED
     (symmetrized) edge list → ``(node, n_reached, harmonic)`` where
     harmonic(v) = Σ_{s ∈ seeds, s≠v, d(s,v)≤max_depth} 1/d(s,v) —
@@ -841,8 +822,8 @@ def harmonic_centrality(edges: DataFrame, seeds: DataFrame,
     terms, summed in one partial-agg'd groupBy).
     """
     node_col = seeds.columns[0]
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst")).localCheckpoint(eager=True)
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst")).localCheckpoint(eager=True)
     visited = seeds.select(F.col(node_col).alias("seed"),
                            F.col(node_col).alias("node"),
                            F.lit(0).alias("dist")) \
@@ -864,8 +845,7 @@ def harmonic_centrality(edges: DataFrame, seeds: DataFrame,
 
 
 def betweenness_sampled(edges: DataFrame, seeds: DataFrame,
-                        max_depth: int, src: str = "src",
-                        dst: str = "dst") -> DataFrame:
+                        max_depth: int) -> DataFrame:
     """Seed-sampled betweenness centrality (Brandes' algorithm with a
     fixed source sample — the standard approximation at scale) over
     an UNDIRECTED (symmetrized) edge list →
@@ -893,8 +873,8 @@ def betweenness_sampled(edges: DataFrame, seeds: DataFrame,
     # distinct: σ is a path COUNT — a duplicated edge row would count
     # the same shortest path twice (Brandes is defined on simple
     # graphs)
-    e = edges.select(F.col(src).alias("e_src"),
-                     F.col(dst).alias("e_dst")).distinct() \
+    e = edges.select(F.col("src").alias("e_src"),
+                     F.col("dst").alias("e_dst")).distinct() \
         .localCheckpoint(eager=True)
     lvl0 = seeds.select(F.col(node_col).alias("seed"),
                         F.col(node_col).alias("node")).distinct() \
@@ -953,8 +933,7 @@ def betweenness_sampled(edges: DataFrame, seeds: DataFrame,
             .filter(F.col("betweenness") > 0))
 
 
-def ktruss_peel(edges: DataFrame, k: int, rounds: int,
-                src: str = "src", dst: str = "dst") -> DataFrame:
+def ktruss_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Fixed-round k-truss peeling over an undirected edge list →
     the surviving canonical edges ``(a, b, support)`` (a < b).
 
@@ -975,7 +954,7 @@ def ktruss_peel(edges: DataFrame, k: int, rounds: int,
     orientation of ``triangle_counts`` (O(m^1.5) wedge bound) — the
     support arithmetic downstream is identical.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     cur = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct()
@@ -1003,8 +982,7 @@ def ktruss_peel(edges: DataFrame, k: int, rounds: int,
     return out
 
 
-def luby_mis(edges: DataFrame, rounds: int, src: str = "src",
-             dst: str = "dst") -> DataFrame:
+def luby_mis(edges: DataFrame, rounds: int) -> DataFrame:
     """Luby's maximal-independent-set algorithm with DETERMINISTIC
     priorities over an undirected edge list → ``(node, mis_round)``
     for every node that joined the MIS within ``rounds`` rounds.
@@ -1029,7 +1007,7 @@ def luby_mis(edges: DataFrame, rounds: int, src: str = "src",
     """
     from ..operators.sketches import _h60
 
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     und = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct())
@@ -1077,9 +1055,8 @@ def luby_mis(edges: DataFrame, rounds: int, src: str = "src",
     return out
 
 
-def wl_refine(edges: DataFrame, labels: DataFrame, iterations: int = 2,
-              src: str = "src", dst: str = "dst", node: str = "id",
-              label: str = "label") -> DataFrame:
+def wl_refine(edges: DataFrame, labels: DataFrame,
+              iterations: int = 2) -> DataFrame:
     """Weisfeiler-Lehman color refinement over an undirected graph.
 
     Each round replaces a node's label with
@@ -1097,12 +1074,12 @@ def wl_refine(edges: DataFrame, labels: DataFrame, iterations: int = 2,
     aggregateMessages. Isolated nodes keep hashing their own label
     (empty neighbor multiset), matching the WL definition.
     """
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .unionByName(edges.select(F.col(dst).alias("a"),
-                                     F.col(src).alias("b")))
+    sym = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+           .unionByName(edges.select(F.col("dst").alias("a"),
+                                     F.col("src").alias("b")))
            .distinct())
-    cur = labels.select(F.col(node).alias("a"),
-                        F.col(label).cast("string").alias("lbl"))
+    cur = labels.select(F.col("id").alias("a"),
+                        F.col("label").cast("string").alias("lbl"))
     for _ in range(iterations):
         nb = (sym.join(cur.select(F.col("a").alias("b"),
                                   F.col("lbl").alias("nb_lbl")), "b")
@@ -1115,12 +1092,11 @@ def wl_refine(edges: DataFrame, labels: DataFrame, iterations: int = 2,
                            "|", F.col("lbl"),
                            F.coalesce(F.col("sig"), F.lit(""))))
                        .alias("lbl")))
-    return cur.select(F.col("a").alias(node), F.col("lbl").alias(label))
+    return cur.select(F.col("a").alias("id"), F.col("lbl").alias("label"))
 
 
 def node2vec_walks(edges: DataFrame, steps: int,
-                   p_mult: int = 4, q_mult: int = 2,
-                   src: str = "src", dst: str = "dst") -> DataFrame:
+                   p_mult: int = 4, q_mult: int = 2) -> DataFrame:
     """Second-order (node2vec-style) biased walk corpus over an
     UNDIRECTED edge list -> ``(walk_id, step, node)`` rows, one walk
     per node.
@@ -1144,7 +1120,7 @@ def node2vec_walks(edges: DataFrame, steps: int,
     step t never replays 1..t-1. Step 1 has no predecessor and is
     unbiased, matching the definition.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     und = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct())
@@ -1195,14 +1171,12 @@ def node2vec_walks(edges: DataFrame, steps: int,
     return out
 
 
-def neighbor_sample(edges: DataFrame, fanouts: list[int],
-                    src: str = "src", dst: str = "dst",
-                    salt: str = "ns") -> DataFrame:
+def neighbor_sample(edges: DataFrame, fanouts: list[int]) -> DataFrame:
     """GraphSAGE-style layered neighbor sampling over an undirected
     edge list -> ``(seed, layer, node)`` rows: layer 0 is every node,
     layer i keeps at most ``fanouts[i-1]`` neighbors of each frontier
     node, deterministically — neighbors ranked by
-    ``md5(salt:seed:layer:node:neighbor)`` so the minibatch a GNN
+    ``md5(ns:seed:layer:node:neighbor)`` so the minibatch a GNN
     trainer sees is reproducible across reruns and partitionings
     (RNG-per-executor sampling is not), and SQL-replayable.
 
@@ -1215,7 +1189,7 @@ def neighbor_sample(edges: DataFrame, fanouts: list[int],
     """
     from pyspark.sql.window import Window
 
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     und = (edges.select(F.least(a, b).alias("a"),
                         F.greatest(a, b).alias("b"))
            .filter(F.col("a") != F.col("b")).distinct())
@@ -1230,7 +1204,7 @@ def neighbor_sample(edges: DataFrame, fanouts: list[int],
                           F.col("cur").alias("node"))
     for i, k in enumerate(fanouts, start=1):
         cand = frontier.join(adj, "cur")
-        rk = F.md5(F.concat_ws(":", F.lit(salt), F.col("seed"),
+        rk = F.md5(F.concat_ws(":", F.lit("ns"), F.col("seed"),
                                F.lit(i), F.col("cur"),
                                F.col("nxt")))
         w = Window.partitionBy("seed", "cur").orderBy(rk)

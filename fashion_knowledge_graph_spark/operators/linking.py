@@ -53,16 +53,18 @@ NBANDS = 16
 
 
 def _top1_then_threshold(scored: DataFrame, query_keys: list[str],
-                         top_k: int, threshold: float) -> DataFrame:
+                         threshold: float) -> DataFrame:
     """W5 gate: rank all candidates, keep rank-1, then threshold.
 
+    The reference's top_k=5 only bounds the candidates it ranks before
+    checking rank 1, so it cannot change the result and is not applied.
     Ties broken by product_id asc (Pinecone's ordering is unspecified;
     this makes results deterministic and is pinned by the oracle).
     """
     w = Window.partitionBy(*query_keys).orderBy(
         F.desc("score"), F.asc("product_id"))
     ranked = scored.withColumn("rank", F.row_number().over(w))
-    return (ranked.filter(F.col("rank") <= top_k)
+    return (ranked
             .filter((F.col("rank") == 1) & (F.col("score") >= threshold))
             .drop("rank"))
 
@@ -94,7 +96,6 @@ def _filter_cond():
 
 
 def link_exact(mentions: DataFrame, catalog: DataFrame,
-               top_k: int = tx.LINK_TOP_K,
                threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
     """Relational exact reference: broadcast join on the metadata
     filters, exact cosine, window top-1-then-threshold. The fused and
@@ -111,24 +112,21 @@ def link_exact(mentions: DataFrame, catalog: DataFrame,
     scored = cand.withColumn("score", cosine_col("embedding", "c_embedding")) \
         .select("doc_id", "span_idx", "product_id",
                 F.col("c_category").alias("category"), "attrs", "score")
-    return _top1_then_threshold(scored, ["doc_id", "span_idx"],
-                                top_k, threshold)
+    return _top1_then_threshold(scored, ["doc_id", "span_idx"], threshold)
 
 
 def link_lsh(mentions: DataFrame, catalog: DataFrame,
-             top_k: int = tx.LINK_TOP_K,
-             threshold: float = tx.LINK_THRESHOLD,
-             nbits: int = NBITS, nbands: int = NBANDS) -> DataFrame:
+             threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
     """LSH-blocked variant — the plan that survives a 1M+ catalog.
 
     Two-phase, narrow-row design:
 
-    1. **Candidate generation**: both sides banded (``nbands``×
+    1. **Candidate generation**: both sides banded (``NBANDS``×
        replication) but carrying ONLY ids + blocking keys — all
        equalities in the ON clause so (band, bsig, type, color) are
        hash-join keys (a post-join filter would key on band/bsig alone
        → candidate explosion on hot bands). Vectors must NOT ride
-       through this join: the catalog side is replicated nbands×, and
+       through this join: the catalog side is replicated NBANDS×, and
        512-d embeddings × replication OOM'd 8 GB executors at a 200k
        catalog — ids are ~50 B/row instead.
     2. **Re-rank**: distinct candidate (mention, product) pairs join
@@ -137,9 +135,9 @@ def link_lsh(mentions: DataFrame, catalog: DataFrame,
 
     AQE skew-join splits residual hot blocks; the metadata filters are
     part of the blocking key so head attribute values ("black") are
-    already spread across 2^bits_per_band × nbands partitions.
+    already spread across 2^bits_per_band × NBANDS partitions.
     """
-    sig = make_signature_udf(nbits, nbands, "link-img")
+    sig = make_signature_udf(NBITS, NBANDS, "link-img")
 
     m = _mention_side(mentions).withColumn("sigs", sig("embedding"))
     c = _catalog_side(catalog).withColumn("sigs", sig("c_embedding"))
@@ -162,8 +160,7 @@ def link_lsh(mentions: DataFrame, catalog: DataFrame,
                      "c_embedding")
     paired = cand.join(m_vec, ["doc_id", "span_idx"]).join(c_vec, "product_id")
     scored = _dot_arrow(paired, "embedding", "c_embedding", "score")
-    return _top1_then_threshold(scored, ["doc_id", "span_idx"],
-                                top_k, threshold)
+    return _top1_then_threshold(scored, ["doc_id", "span_idx"], threshold)
 
 
 def _dot_arrow(df: DataFrame, a_col: str, b_col: str,
@@ -222,8 +219,8 @@ _PACK_ROW_OVERHEAD = 160
 
 
 def fits_driver_broadcast(catalog: DataFrame,
-                          budget_mb: int = BROADCAST_BUDGET_MB,
-                          vec_col: str = "embedding") -> int | None:
+                          budget_mb: int = BROADCAST_BUDGET_MB
+                          ) -> int | None:
     """The row count if ``catalog``'s packed vectors fit on the driver,
     else ``None`` — asserted in BYTES (estimated packed size), not just
     rows. ONE agg job (count + max vector length; both metadata-cheap
@@ -231,7 +228,7 @@ def fits_driver_broadcast(catalog: DataFrame,
     ``pack_catalog`` and ``dedup.embedding_near_dup_auto``."""
     row = catalog.agg(
         F.count(F.lit(1)).alias("n"),
-        F.max(F.size(vec_col)).alias("dim")).first()
+        F.max(F.size("embedding")).alias("dim")).first()
     n, dim = row["n"], row["dim"] or 0
     fits = n <= BROADCAST_MAX_ROWS \
         and n * (dim * 8 + _PACK_ROW_OVERHEAD) <= budget_mb << 20
@@ -280,7 +277,6 @@ def pack_catalog(catalog: DataFrame, budget_mb: int = BROADCAST_BUDGET_MB,
 
 
 def detect_and_link_fused(docs: DataFrame, packed: dict,
-                          top_k: int = tx.LINK_TOP_K,
                           threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
     """Mention detection + entity linking FUSED into one ``mapInArrow``
     kernel (the dim-sized-catalog fast path).
@@ -293,7 +289,7 @@ def detect_and_link_fused(docs: DataFrame, packed: dict,
     group against the broadcast ``packed`` catalog, emitting only the narrow
     linked rows. Semantics identical to ``image_mentions`` →
     ``link_exact`` (pinned by a parity test): gender mask, then the W5
-    gate — ``top_k`` only bounds the candidates the reference ranks
+    gate — the reference's top_k only bounds the candidates it ranks
     before checking rank 1, so emitting the argmax is exact; ties go
     to the min product_id."""
     import numpy as np
@@ -364,7 +360,6 @@ def detect_and_link_fused(docs: DataFrame, packed: dict,
 
 
 def link_mentions(docs: DataFrame, catalog: DataFrame, packed: dict | None,
-                  top_k: int = tx.LINK_TOP_K,
                   threshold: float = tx.LINK_THRESHOLD) -> DataFrame:
     """Detect and link the image mentions of ``docs`` — the one linking
     entry point. ``packed`` (``pack_catalog(catalog)``) picks the
@@ -373,5 +368,5 @@ def link_mentions(docs: DataFrame, catalog: DataFrame, packed: dict | None,
     Spark's own broadcast threshold cannot make this call — the
     cosine join needs it made here, above Catalyst."""
     if packed is not None:
-        return detect_and_link_fused(docs, packed, top_k, threshold)
-    return link_lsh(mn.image_mentions(docs), catalog, top_k, threshold)
+        return detect_and_link_fused(docs, packed, threshold)
+    return link_lsh(mn.image_mentions(docs), catalog, threshold)

@@ -29,17 +29,13 @@ from .sampling import sample_hash
 
 def negative_samples(triples: DataFrame,
                      vocab: dict[str, list[str]],
-                     k: int = 1,
-                     salt: str = "neg",
-                     subj_col: str = "subj",
-                     pred_col: str = "pred",
-                     obj_col: str = "obj") -> DataFrame:
+                     k: int = 1) -> DataFrame:
     """k corrupted-tail negatives per distinct positive triple.
 
     ``vocab`` maps predicate -> ordered candidate objects (the closed
     vocabulary; order is part of the determinism contract). Positives
     whose predicate is absent from ``vocab`` are skipped. For draw i,
-    the candidate index is ``H60(salt, i:subj:pred:obj) mod n``; a
+    the candidate index is ``H60(neg, i:subj:pred:obj) mod n``; a
     draw landing on the positive object linearly re-probes one slot
     (deterministic), and any corruption that equals SOME true triple
     is dropped by the anti-join (filtered negative sampling), as is a
@@ -58,9 +54,7 @@ def negative_samples(triples: DataFrame,
             raise ValueError(f"duplicate candidates for {p!r}")
 
     pos = (triples
-           .select(F.col(subj_col).alias("subj"),
-                   F.col(pred_col).alias("pred"),
-                   F.col(obj_col).alias("obj"))
+           .select("subj", "pred", "obj")
            .filter(F.col("pred").isin(list(vocab)))
            .distinct())
     arr_map = F.create_map(*[x for p in sorted(vocab)
@@ -73,7 +67,7 @@ def negative_samples(triples: DataFrame,
          .withColumn("__arr", arr_map[F.col("pred")]))
     n = F.size("__arr")
     h = sample_hash(F.concat_ws(":", F.col("neg_ix"), F.col("subj"),
-                                F.col("pred"), F.col("obj")), salt)
+                                F.col("pred"), F.col("obj")), "neg")
     idx = F.pmod(h, n).cast("int")
     first = F.element_at("__arr", idx + 1)
     reprobe = F.element_at("__arr", (F.pmod(idx + 1, n) + 1).cast("int"))
@@ -98,12 +92,7 @@ def _lane(tag: str, col, j: int, salt: str):
         - F.lit(1.0)
 
 
-def transe_entity_ranking(triples: DataFrame, dim: int = 8,
-                          salt: str = "te",
-                          exclude_preds=("complements",),
-                          subj_col: str = "subj",
-                          pred_col: str = "pred",
-                          obj_col: str = "obj") -> DataFrame:
+def transe_entity_ranking(triples: DataFrame, dim: int = 8) -> DataFrame:
     """TransE-style filtered entity-ranking evaluation over the triple
     table — the standard KG-embedding benchmark protocol (score each
     positive's true object against every same-predicate candidate,
@@ -136,10 +125,10 @@ def transe_entity_ranking(triples: DataFrame, dim: int = 8,
 
     if dim < 1:
         raise ValueError("dim must be >= 1")
-    t = (triples.filter(~F.col(pred_col).isin(*exclude_preds))
-         .select(F.col(subj_col).cast("string").alias("subj"),
-                 F.col(pred_col).alias("pred"),
-                 F.col(obj_col).cast("string").alias("obj"))
+    t = (triples.filter(F.col("pred") != "complements")
+         .select(F.col("subj").cast("string").alias("subj"),
+                 "pred",
+                 F.col("obj").cast("string").alias("obj"))
          .distinct())
     fan = t.groupBy("subj", "pred").agg(
         F.collect_set("obj").alias("true_objs"))
@@ -148,18 +137,18 @@ def transe_entity_ranking(triples: DataFrame, dim: int = 8,
     t2 = t.join(fan, ["subj", "pred"])
     for j in range(dim):
         t2 = t2.withColumn(
-            f"hr{j}", _lane("ent", F.col("subj"), j, salt)
-            + _lane("rel", F.col("pred"), j, salt))
+            f"hr{j}", _lane("ent", F.col("subj"), j, "te")
+            + _lane("rel", F.col("pred"), j, "te"))
     dist_true = reduce(operator.add, [
-        (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, salt))
-        * (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, salt))
+        (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, "te"))
+        * (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, "te"))
         for j in range(dim)])
     t2 = t2.withColumn("dist_true", dist_true)
 
     cands = t.select("pred", F.col("obj").alias("cand")).distinct()
     for j in range(dim):
         cands = cands.withColumn(
-            f"c{j}", _lane("ent", F.col("cand"), j, salt))
+            f"c{j}", _lane("ent", F.col("cand"), j, "te"))
     rows = (t2.join(F.broadcast(cands), "pred")
             .filter((F.col("cand") == F.col("obj"))
                     | ~F.array_contains("true_objs", F.col("cand"))))
@@ -190,20 +179,15 @@ def transe_entity_ranking(triples: DataFrame, dim: int = 8,
 VOCAB_WINDOW_THRESHOLD = 100_000
 
 
-def _vocab_ranked(t: DataFrame, strategy: str = "auto") -> DataFrame:
+def _vocab_ranked(t: DataFrame) -> DataFrame:
     """(pred, obj, rnk, vsz) — dense [1, V] per-predicate ranking of
-    the distinct object vocabulary, by either strategy (identical
-    output, parity-tested): ``window`` while every vocabulary fits a
-    window partition, ``distributed`` (topk.grouped_dense_rank) when
-    the distinct vocab outgrows VOCAB_WINDOW_THRESHOLD. ``auto``
-    probes the distinct count."""
-    if strategy not in ("auto", "window", "distributed"):
-        raise ValueError(f"unknown rank_strategy {strategy!r}")
+    the distinct object vocabulary, by one of two plans chosen from
+    the distinct count (identical output, parity-tested): a window
+    while every vocabulary fits a window partition,
+    ``topk.grouped_dense_rank`` once the distinct vocabulary outgrows
+    VOCAB_WINDOW_THRESHOLD."""
     v = t.select("pred", "obj").distinct()
-    if strategy == "auto":
-        strategy = ("distributed"
-                    if v.count() > VOCAB_WINDOW_THRESHOLD else "window")
-    if strategy == "window":
+    if v.count() <= VOCAB_WINDOW_THRESHOLD:
         return (v.withColumn("rnk", F.row_number().over(
                     Window.partitionBy("pred").orderBy("obj")))
                 .withColumn("vsz", F.count(F.lit(1)).over(
@@ -216,11 +200,7 @@ def _vocab_ranked(t: DataFrame, strategy: str = "auto") -> DataFrame:
 
 
 def transe_sampled_ranking(triples: DataFrame, k: int = 20,
-                           dim: int = 8, salt: str = "ts",
-                           subj_col: str = "subj",
-                           pred_col: str = "pred",
-                           obj_col: str = "obj",
-                           rank_strategy: str = "auto") -> DataFrame:
+                           dim: int = 8) -> DataFrame:
     """Sampled-negative TransE ranking evaluation — the protocol that
     survives entity-sized vocabularies (DGL-KE / PyTorch-BigGraph
     style): instead of ranking the true object against the
@@ -238,13 +218,14 @@ def transe_sampled_ranking(triples: DataFrame, k: int = 20,
     (pred, obj) set — a per-predicate window while every vocabulary
     is window-partition-sized, switching to the distributed
     range-partitioned dense rank (``topk.grouped_dense_rank``) the
-    moment the distinct vocabulary outgrows ``window_threshold``
-    rows: a 10^8-product ``complements`` vocabulary must never funnel
-    through one window task. Both strategies produce the IDENTICAL
-    dense [1, V] ranking (parity-tested), so the draw replay — and
-    the SQL oracle — are strategy-independent. The true-rank lookup
-    joins on (pred, obj) and the draw lookup on (pred, nrk) — plain
-    equi-joins that shuffle vocabulary-sized data, never pairwise.
+    moment the distinct vocabulary outgrows
+    ``VOCAB_WINDOW_THRESHOLD`` rows: a 10^8-product ``complements``
+    vocabulary must never funnel through one window task. Both plans
+    produce the IDENTICAL dense [1, V] ranking (parity-tested), so the
+    draw replay — and the SQL oracle — are plan-independent. The
+    true-rank lookup joins on (pred, obj) and the draw lookup on
+    (pred, nrk) — plain equi-joins that shuffle vocabulary-sized data,
+    never pairwise.
     The k-way explode and every hash lane run in codegen; ranks are
     in [1, k+1]. Output: (pred, n_test, k, mrr_sampled, hits_at_1,
     hits_at_3, mean_rank).
@@ -257,26 +238,26 @@ def transe_sampled_ranking(triples: DataFrame, k: int = 20,
     if dim < 1:
         raise ValueError("dim must be >= 1")
     t = (triples
-         .select(F.col(subj_col).cast("string").alias("subj"),
-                 F.col(pred_col).alias("pred"),
-                 F.col(obj_col).cast("string").alias("obj"))
+         .select(F.col("subj").cast("string").alias("subj"),
+                 "pred",
+                 F.col("obj").cast("string").alias("obj"))
          .distinct())
-    vocab = _vocab_ranked(t, rank_strategy)
+    vocab = _vocab_ranked(t)
     pos = (t.join(vocab, ["pred", "obj"])
            .filter(F.col("vsz") >= 2))
     for j in range(dim):
         pos = pos.withColumn(
-            f"hr{j}", _lane("ent", F.col("subj"), j, salt)
-            + _lane("rel", F.col("pred"), j, salt))
+            f"hr{j}", _lane("ent", F.col("subj"), j, "ts")
+            + _lane("rel", F.col("pred"), j, "ts"))
     dist_true = reduce(operator.add, [
-        (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, salt))
-        * (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, salt))
+        (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, "ts"))
+        * (F.col(f"hr{j}") - _lane("ent", F.col("obj"), j, "ts"))
         for j in range(dim)])
     pos = pos.withColumn("dist_true", dist_true)
     e = pos.withColumn("draw", F.explode(F.array(
         *[F.lit(i) for i in range(k)])))
     h = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit(salt), F.col("draw"), F.col("subj"),
+        ":", F.lit("ts"), F.col("draw"), F.col("subj"),
         F.col("pred"), F.col("obj"))), 1, 15), 16, 10).cast("long")
     e = (e.withColumn("idx0", h % (F.col("vsz") - 1) + 1)
          .withColumn("nrk", F.when(F.col("idx0") < F.col("rnk"),
@@ -286,8 +267,8 @@ def transe_sampled_ranking(triples: DataFrame, k: int = 20,
                        F.col("obj").alias("neg_obj"))
     e = e.join(neg, ["pred", "nrk"])
     dist_neg = reduce(operator.add, [
-        (F.col(f"hr{j}") - _lane("ent", F.col("neg_obj"), j, salt))
-        * (F.col(f"hr{j}") - _lane("ent", F.col("neg_obj"), j, salt))
+        (F.col(f"hr{j}") - _lane("ent", F.col("neg_obj"), j, "ts"))
+        * (F.col(f"hr{j}") - _lane("ent", F.col("neg_obj"), j, "ts"))
         for j in range(dim)])
     e = e.withColumn("dist_neg", dist_neg)
     beats = F.when((F.col("dist_neg") < F.col("dist_true"))
@@ -310,10 +291,7 @@ def transe_sampled_ranking(triples: DataFrame, k: int = 20,
 
 
 def pra_path_features(pairs: DataFrame, triples: DataFrame,
-                      preds: list[str],
-                      src: str = "src", dst: str = "dst",
-                      subj: str = "subj", pred: str = "pred",
-                      obj: str = "obj") -> DataFrame:
+                      preds: list[str]) -> DataFrame:
     """Path-Ranking-Algorithm features for candidate entity pairs.
 
     For each (src, dst) candidate and each predicate p in ``preds``,
@@ -330,20 +308,20 @@ def pra_path_features(pairs: DataFrame, triples: DataFrame,
     candidate set on its own (src, dst) key, so AQE reuses one
     partitioning across all feature columns. No windows, no UDFs.
     """
-    out = pairs.select(src, dst)
+    out = pairs.select("src", "dst")
     for p in preds:
-        tp = (triples.filter(F.col(pred) == p)
-              .select(F.col(subj).alias("_s"),
-                      F.col(obj).alias("_v")).distinct())
-        f = (out.select(src, dst)
-             .join(tp.withColumnRenamed("_s", src), src)
-             .join(tp.withColumnRenamed("_s", dst)
+        tp = (triples.filter(F.col("pred") == p)
+              .select(F.col("subj").alias("_s"),
+                      F.col("obj").alias("_v")).distinct())
+        f = (out.select("src", "dst")
+             .join(tp.withColumnRenamed("_s", "src"), "src")
+             .join(tp.withColumnRenamed("_s", "dst")
                    .withColumnRenamed("_v", "_v2"),
-                   [dst], "inner")
+                   ["dst"], "inner")
              .filter(F.col("_v") == F.col("_v2"))
-             .groupBy(src, dst)
+             .groupBy("src", "dst")
              .agg(F.countDistinct("_v").alias(f"f_{p}")))
-        out = (out.join(f, [src, dst], "left")
+        out = (out.join(f, ["src", "dst"], "left")
                .withColumn(f"f_{p}",
                            F.coalesce(F.col(f"f_{p}"), F.lit(0))))
     return out

@@ -3,9 +3,14 @@
 Replaces the reference's per-image SegFormer loop
 (src/engine/process_social_media_images.py:57-64 →
 src/engine/image_processor.py:89-148) with one declarative lineage:
-scan → posexplode(spans) → Arrow-batched segment/attr/embed UDFs →
-filters. No shuffle — this whole stage is map-side and scales
-linearly with input splits.
+scan → posexplode(spans) → one fused ``mapInArrow`` kernel
+(``detect_batch``: segment, attributes, embedding and the reference's
+gates per record batch). No shuffle — this whole stage is map-side
+and scales linearly with input splits. The KG build runs the same
+kernel fused with linking (``linking.detect_and_link_fused``);
+``image_mentions_udf_chain``, the three chained pandas UDFs of the
+reference's decomposition, is kept only as the parity tests'
+reference.
 
 Per-row invariant (input_hint): span order is carried as ``span_idx``
 from ``posexplode`` and kept on every downstream row, so the original

@@ -61,8 +61,7 @@ def _parse(pattern: str):
     return terms
 
 
-def motif_find(edges: DataFrame, pattern: str,
-               src: str = "src", dst: str = "dst") -> DataFrame:
+def motif_find(edges: DataFrame, pattern: str) -> DataFrame:
     """Find every binding of ``pattern`` in the directed edge list →
     one column per named vertex alias plus ``<edge>_<attr>`` columns
     for named edge aliases.
@@ -71,7 +70,7 @@ def motif_find(edges: DataFrame, pattern: str,
     open wedges — the 2-hop recommendation frontier.
     """
     terms = _parse(pattern)
-    attr_cols = [c for c in edges.columns if c not in (src, dst)]
+    attr_cols = [c for c in edges.columns if c not in ("src", "dst")]
     anon = 0
     out: DataFrame | None = None
     bound: set[str] = set()
@@ -89,7 +88,7 @@ def motif_find(edges: DataFrame, pattern: str,
         if a == b:
             raise ValueError(
                 f"self-loop terms are not supported: ({a})->({b})")
-        cols = [F.col(src).alias(a), F.col(dst).alias(b)]
+        cols = [F.col("src").alias(a), F.col("dst").alias(b)]
         if t["e"]:
             cols += [F.col(c).alias(f'{t["e"]}_{c}') for c in attr_cols]
         term_df = edges.select(*cols)
@@ -109,8 +108,8 @@ def motif_find(edges: DataFrame, pattern: str,
             raise ValueError(
                 "negated terms need both endpoints bound by "
                 f"positive terms: !({t['a']})-[]->({t['b']})")
-        neg = edges.select(F.col(src).alias(t["a"]),
-                           F.col(dst).alias(t["b"])).distinct()
+        neg = edges.select(F.col("src").alias(t["a"]),
+                           F.col("dst").alias(t["b"])).distinct()
         out = out.join(neg, [t["a"], t["b"]], "left_anti")
 
     keep = [c for c in out.columns if not c.startswith("__anon")]

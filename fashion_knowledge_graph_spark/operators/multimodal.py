@@ -54,12 +54,12 @@ def _md5_int(col, salt: str):
                   16, 10).cast("bigint")
 
 
-def synthesize_media(refs_df: DataFrame, ref_col: str = "media_ref") -> DataFrame:
+def synthesize_media(refs_df: DataFrame) -> DataFrame:
     """Deterministic fake media table from reference keys (test/bench
     input): content = md5-stream bytes (128 B), sizes md5-derived —
     every field replayable in ANSI SQL for the driver oracle. Real
     deployments replace this with a parquet/Iceberg media table."""
-    r = F.col(ref_col)
+    r = F.col("media_ref")
     content = F.to_binary(F.repeat(F.md5(r), 8), F.lit("hex"))
     # deterministic modality split (~25% video): first hex digit of a
     # salted md5 — replayable as substr(md5(mid||':m'),1,1) < '4'
@@ -102,14 +102,13 @@ def decode_image(content: bytes, w: int, h: int, fake: bool = False) -> np.ndarr
     return _fake_pixels(content, w, h)
 
 
-def extract_features(media: DataFrame, fake: bool = True,
-                     dim: int = FEATURE_DIM) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """media table → (media_id, feature:array<float>) via mapInPandas.
 
     Batch shape is the production contract: the kernel receives whole
-    Arrow record batches, decodes each payload, and emits fixed-dim
-    features; swapping the body for a real vision model changes no
-    Spark plumbing. Map-side only — zero shuffles."""
+    Arrow record batches, decodes each payload, and emits
+    ``FEATURE_DIM``-wide features; swapping the body for a real vision
+    model changes no Spark plumbing. Map-side only — zero shuffles."""
     out_schema = T.StructType([
         T.StructField("media_id", T.StringType()),
         T.StructField("feature", T.ArrayType(T.DoubleType())),
@@ -120,15 +119,15 @@ def extract_features(media: DataFrame, fake: bool = True,
             feats = []
             for content, meta in zip(pdf["content"], pdf["meta"]):
                 px = decode_image(bytes(content), int(meta["width"]),
-                                  int(meta["height"]), fake=fake)
+                                  int(meta["height"]), fake=True)
                 # deterministic pooled 'feature': col/row means folded
                 # to dim; double precision end-to-end so the SQL oracle
                 # (exact integer sums / IEEE division) agrees to the
                 # last rounding digit
                 pooled = np.concatenate([
                     px.mean(axis=0), px.mean(axis=1)]).astype(np.float64)
-                reps = int(np.ceil(dim / len(pooled)))
-                v = np.tile(pooled, reps)[:dim]
+                reps = int(np.ceil(FEATURE_DIM / len(pooled)))
+                v = np.tile(pooled, reps)[:FEATURE_DIM]
                 n = np.linalg.norm(v)
                 feats.append(v / n if n else v)
             yield pd.DataFrame({"media_id": pdf["media_id"],
@@ -198,10 +197,8 @@ def audio_chunk_plan(media: DataFrame, chunk_ms: int = 2000,
                             F.col("dur")).alias("end_ms")))
 
 
-def synthesize_media_clustered(docs_df: DataFrame, n_bases: int = 40,
-                               id_col: str = "doc_id",
-                               width: int = 48,
-                               height: int = 32) -> DataFrame:
+def synthesize_media_clustered(docs_df: DataFrame,
+                               n_bases: int = 40) -> DataFrame:
     """Near-dup media synthesis (test/bench input for perceptual-hash
     dedup): every instance repeats its cluster's base payload
     (cluster = id mod ``n_bases``) with ONE md5-chosen low nibble
@@ -209,8 +206,8 @@ def synthesize_media_clustered(docs_df: DataFrame, n_bases: int = 40,
     re-encode jitter". Fixed dims so cluster members are pixel-aligned.
     Every byte is replayable in ANSI SQL (string ops over md5 hex)."""
     base = F.format_string("img://base%08d",
-                           F.pmod(F.col(id_col), F.lit(n_bases)))
-    mid = F.format_string("img://doc%08d", F.col(id_col))
+                           F.pmod(F.col("doc_id"), F.lit(n_bases)))
+    mid = F.format_string("img://doc%08d", F.col("doc_id"))
     hx0 = F.repeat(F.md5(base), 8)               # 256 hex = 128 bytes
     p = F.pmod(_md5_int(mid, ":p"), F.lit(128))  # perturbed byte
     hx = F.concat(F.substring(hx0, 1, 2 * p + 1),
@@ -221,19 +218,19 @@ def synthesize_media_clustered(docs_df: DataFrame, n_bases: int = 40,
         mid.alias("media_id"),
         F.lit("image/png").alias("mime"),
         content.alias("content"),
-        F.struct(F.lit(width).cast("int").alias("width"),
-                 F.lit(height).cast("int").alias("height"),
+        F.struct(F.lit(48).cast("int").alias("width"),
+                 F.lit(32).cast("int").alias("height"),
                  F.lit(None).cast("int").alias("duration_ms"),
                  F.length(content).cast("long").alias("n_bytes"),
                  ).alias("meta"))
 
 
-def pixel_pool_sums(media: DataFrame, fake: bool = True,
-                    dim: int = FEATURE_DIM) -> DataFrame:
+def pixel_pool_sums(media: DataFrame) -> DataFrame:
     """media → (media_id, psums:array<long>): EXACT scaled-integer
     pooled pixel sums — the perceptual-hash input.
 
-    Same pooling layout as ``extract_features`` (first min(w, dim)
+    Same pooling layout as ``extract_features`` (first
+    min(w, FEATURE_DIM)
     column sums, then row sums to fill), but kept in integers scaled
     to the common denominator L = lcm(h, w): col j carries
     S_col(j)·L/h, row j carries S_row(j)·L/w, so u_j/L is the pooled
@@ -253,11 +250,12 @@ def pixel_pool_sums(media: DataFrame, fake: bool = True,
             for content, meta in zip(pdf["content"], pdf["meta"]):
                 w, h = int(meta["width"]), int(meta["height"])
                 px = decode_image(bytes(content), w, h,
-                                  fake=fake).astype(np.int64)
+                                  fake=True).astype(np.int64)
                 lcm = math.lcm(h, w)
                 cols = px.sum(axis=0) * (lcm // h)
                 rows = px.sum(axis=1) * (lcm // w)
-                u = np.concatenate([cols[:dim], rows])[:dim]
+                u = np.concatenate(
+                    [cols[:FEATURE_DIM], rows])[:FEATURE_DIM]
                 out.append(u)
             yield pd.DataFrame({"media_id": pdf["media_id"],
                                 "psums": out})
@@ -265,7 +263,7 @@ def pixel_pool_sums(media: DataFrame, fake: bool = True,
     return media.mapInPandas(kernel, out_schema)
 
 
-def phash64(psums: DataFrame, sums_col: str = "psums") -> DataFrame:
+def phash64(psums: DataFrame) -> DataFrame:
     """64-bit perceptual hash as 4×16-bit band integers (b0..b3).
 
     bit_j = [u_j·64 > Σ_k u_k] — "this pooled region is brighter than
@@ -273,11 +271,11 @@ def phash64(psums: DataFrame, sums_col: str = "psums") -> DataFrame:
     exact BIGINT arithmetic (see pixel_pool_sums). Band k packs bits
     16k..16k+15 little-endian; bands double as the LSH blocking keys."""
     with_tot = psums.withColumn(
-        "__tot", F.aggregate(F.col(sums_col), F.lit(0).cast("long"),
+        "__tot", F.aggregate(F.col("psums"), F.lit(0).cast("long"),
                              lambda a, x: a + x))
     band = lambda k: F.expr(
         f"aggregate(sequence(0, 15), cast(0 as bigint), (acc, i) -> "
-        f"acc + if(element_at({sums_col}, {16 * k} + i + 1) * 64 "
+        f"acc + if(element_at(psums, {16 * k} + i + 1) * 64 "
         f"         > __tot, shiftleft(cast(1 as bigint), i), "
         f"         cast(0 as bigint)))")
     return with_tot.select(

@@ -32,14 +32,12 @@ def hierarchy_df(spark) -> DataFrame:
                                  "child string, parent string")
 
 
-def transitive_closure(edges: DataFrame, child: str = "child",
-                       parent: str = "parent",
-                       max_rounds: int = 20) -> DataFrame:
+def transitive_closure(edges: DataFrame) -> DataFrame:
     """All (descendant, ancestor, depth) pairs reachable through the
     DAG, depth = shortest path length.
 
     Path-doubling: after round r the closure holds every path of
-    length <= 2^r, so max_rounds=20 covers depth ~1M — the number of
+    length <= 2^r, so 20 rounds cover depth ~1M — the number of
     *shuffle rounds* is logarithmic in ontology depth, which is what
     survives scale-up (naive frontier expansion is linear). The input
     is a dimension; each round's count() is a cheap fixpoint probe on
@@ -50,12 +48,12 @@ def transitive_closure(edges: DataFrame, child: str = "child",
     # grows exponentially in rounds (and leaks into every downstream
     # consumer's plan). Dimension-sized data — the checkpoint is
     # pennies; same per-iteration pattern as graph.pagerank.
-    closure = (edges.select(F.col(child).alias("child"),
-                            F.col(parent).alias("parent"),
+    closure = (edges.select("child",
+                            "parent",
                             F.lit(1).alias("depth"))
                .distinct().localCheckpoint())
     n = closure.count()
-    for _ in range(max_rounds):
+    for _ in range(20):
         a, b = closure.alias("a"), closure.alias("b")
         doubled = (a.join(b, F.col("a.parent") == F.col("b.child"))
                    .select(F.col("a.child").alias("child"),
@@ -73,19 +71,18 @@ def transitive_closure(edges: DataFrame, child: str = "child",
     return closure
 
 
-def entail_ancestors(triples: DataFrame, closure: DataFrame,
-                     pred_map: dict[str, str] | None = None) -> DataFrame:
+def entail_ancestors(triples: DataFrame, closure: DataFrame) -> DataFrame:
     """RDFS-style entailment: for each triple whose predicate is in
-    ``pred_map`` and whose object is a hierarchy member, emit
-    (subj, entailed_pred, ancestor) for every ancestor of the object.
+    ``taxonomy.ENTAILED_PREDICATES`` and whose object is a hierarchy
+    member, emit (subj, entailed_pred, ancestor) for every ancestor of
+    the object.
 
     One broadcast join against the closure dim — the triple stream is
     never shuffled (the trailing distinct aggregates only the entailed
     rows, a vocabulary-bounded fraction of the input).
     """
-    pred_map = pred_map or tax.ENTAILED_PREDICATES
     spark = triples.sparkSession
-    pm = spark.createDataFrame(sorted(pred_map.items()),
+    pm = spark.createDataFrame(sorted(tax.ENTAILED_PREDICATES.items()),
                                "pred_in string, pred_out string")
     return (triples
             .join(F.broadcast(pm), triples["pred"] == pm["pred_in"])
@@ -142,8 +139,7 @@ def shacl_report(triples: DataFrame, shapes: list[dict]) -> DataFrame:
                  F.sum("n_out_of_range").alias("n_range_violations")))
 
 
-def symmetric_closure(pairs: DataFrame, src: str = "subj",
-                      dst: str = "obj") -> DataFrame:
+def symmetric_closure(pairs: DataFrame) -> DataFrame:
     """Missing inverses of a symmetric relation: for every stored
     (a, b) emit (b, a) unless it is already stored. One anti-join on
     the pair key — the semantic completion of the reference's
@@ -151,11 +147,11 @@ def symmetric_closure(pairs: DataFrame, src: str = "subj",
     (process_social_media_images.py:135-146), expressed relationally
     so it holds under batch aggregation too.
     """
-    fw = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d")) \
+    fw = pairs.select(F.col("subj").alias("s"), F.col("obj").alias("d")) \
         .distinct()
     rev = fw.select(F.col("d").alias("s"), F.col("s").alias("d"))
     return (rev.join(fw, ["s", "d"], "left_anti")
-            .select(F.col("s").alias(src), F.col("d").alias(dst)))
+            .select(F.col("s").alias("subj"), F.col("d").alias("obj")))
 
 
 def kg_shapes() -> list[dict]:
@@ -179,8 +175,7 @@ def kg_shapes() -> list[dict]:
     return shapes
 
 
-def domain_range_profile(triples: DataFrame,
-                         type_pred: str = "type") -> DataFrame:
+def domain_range_profile(triples: DataFrame) -> DataFrame:
     """Schema induction: per predicate, the majority subject class
     (domain), the majority object kind (entity reference vs literal),
     and their support — the RDFS domain/range axioms a KB curator
@@ -194,9 +189,9 @@ def domain_range_profile(triples: DataFrame,
     """
     from pyspark.sql.window import Window
 
-    t = (triples.filter(F.col("pred") != type_pred)
+    t = (triples.filter(F.col("pred") != "type")
          .select("subj", "pred", "obj").distinct())
-    ty = (triples.filter(F.col("pred") == type_pred)
+    ty = (triples.filter(F.col("pred") == "type")
           .select(F.col("subj").alias("_s"),
                   F.col("obj").alias("stype")).distinct())
     dom = (t.join(F.broadcast(ty), t["subj"] == ty["_s"])

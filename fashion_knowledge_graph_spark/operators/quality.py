@@ -26,8 +26,7 @@ from ..functions import text as tx
 from .dedup import ngram_repetition_stats
 
 
-def quality_gate(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text",
+def quality_gate(df: DataFrame,
                  min_tokens: int = 20, max_tokens: int = 100_000,
                  max_rep_frac: float = 0.2,
                  allowed_langs: tuple[str, ...] = ("en",),
@@ -35,19 +34,19 @@ def quality_gate(df: DataFrame, id_col: str = "doc_id",
     """→ (id, n_tokens, rep_frac, lang_pred, pii_total, verdict).
     NULL text gates as too_short (0 tokens), matching the filter-first
     convention elsewhere."""
-    best = tx.lang_best(F.col(text_col))
-    pii = tx.pii_counts(F.col(text_col))
+    best = tx.lang_best(F.col("text"))
+    pii = tx.pii_counts(F.col("text"))
     pii_total = sum(list(pii.values())[1:], list(pii.values())[0])
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         # NULL text ⇒ 0 tokens / 0 PII, not NULL (a NULL comparison
         # would skip every WHEN branch and mislabel the doc 'pass')
-        F.coalesce(tx.token_count(F.col(text_col)),
+        F.coalesce(tx.token_count(F.col("text")),
                    F.lit(0)).alias("n_tokens"),
         F.when(best["h"] > 0, best["lang"]).otherwise("und")
         .alias("lang_pred"),
         F.coalesce(pii_total.cast("long"), F.lit(0)).alias("pii_total"))
-    rep = ngram_repetition_stats(df, id_col, text_col, n=2) \
+    rep = ngram_repetition_stats(df) \
         .select("id", "rep_frac")
     out = base.join(rep, "id", "left") \
         .withColumn("rep_frac", F.coalesce(F.col("rep_frac"), F.lit(0.0)))
@@ -61,9 +60,7 @@ def quality_gate(df: DataFrame, id_col: str = "doc_id",
     return out.withColumn("verdict", verdict)
 
 
-def bigram_lm_score(docs: DataFrame, model_docs: DataFrame,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    backoff: float = 0.4) -> DataFrame:
+def bigram_lm_score(docs: DataFrame, model_docs: DataFrame) -> DataFrame:
     """Per-document mean bigram log-likelihood under a *held-out*
     bigram language model with stupid backoff — the CCNet/KenLM
     quality-filter shape (score every doc with an LM trained on a
@@ -74,7 +71,7 @@ def bigram_lm_score(docs: DataFrame, model_docs: DataFrame,
     so scored docs contain unseen bigrams.
 
     score(w1,w2) = ln(c(w1,w2) / c(w1))              if bigram seen
-                 = ln(backoff · (c(w2)+1) / (N+V))   otherwise
+                 = ln(0.4 · (c(w2)+1) / (N+V))   otherwise
     (stupid backoff, Brants et al. 2007 — no normalization, which is
     what makes it embarrassingly distributable: counts are pure
     partial-agg sums, no per-context normalizer join.)
@@ -89,21 +86,21 @@ def bigram_lm_score(docs: DataFrame, model_docs: DataFrame,
     Output: (doc_id, n_bigrams, mean_logp) for docs with ≥2 tokens.
     """
     def doc_bigrams(df: DataFrame) -> DataFrame:
-        tk = tx.tokens(F.col(text_col))
-        return (df.filter(F.col(text_col).isNotNull())
-                .select(F.col(id_col), tk.alias("tk"))
+        tk = tx.tokens(F.col("text"))
+        return (df.filter(F.col("text").isNotNull())
+                .select(F.col("doc_id"), tk.alias("tk"))
                 .filter(F.size("tk") >= 2)
                 .select(
-                    id_col,
+                    "doc_id",
                     F.explode(F.arrays_zip(
                         F.expr("slice(tk, 1, size(tk) - 1)").alias("w1"),
                         F.expr("slice(tk, 2, size(tk) - 1)").alias("w2")))
                     .alias("b"))
-                .select(id_col, F.col("b.w1").alias("w1"),
+                .select("doc_id", F.col("b.w1").alias("w1"),
                         F.col("b.w2").alias("w2")))
 
-    model_tok = model_docs.filter(F.col(text_col).isNotNull()).select(
-        F.explode(tx.tokens(F.col(text_col))).alias("w"))
+    model_tok = model_docs.filter(F.col("text").isNotNull()).select(
+        F.explode(tx.tokens(F.col("text"))).alias("w"))
     mu = model_tok.groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))
     mb = doc_bigrams(model_docs).groupBy("w1", "w2") \
         .agg(F.count(F.lit(1)).alias("c_ab"))
@@ -121,10 +118,10 @@ def bigram_lm_score(docs: DataFrame, model_docs: DataFrame,
         F.col("c_ab").isNotNull(),
         F.log(F.col("c_ab") / F.col("c_w1"))
     ).otherwise(
-        F.log(F.lit(backoff)
+        F.log(F.lit(0.4)
               * (F.coalesce(F.col("c_w2"), F.lit(0)) + 1)
               / (F.col("n_tok") + F.col("vocab"))))
-    return (j.groupBy(id_col)
+    return (j.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_bigrams"),
                  F.round(F.sum(logp) / F.count(F.lit(1)), 6)
                  .alias("mean_logp")))

@@ -110,8 +110,7 @@ def quantize_int8(df: DataFrame, id_col: str = "vec_id",
 
 
 def int8_cosine_topk(queries_q: DataFrame, corpus_q: DataFrame,
-                     k: int = 5, q_id: str = "id", q_vec: str = "qvec",
-                     c_id: str = "id", c_vec: str = "qvec") -> DataFrame:
+                     k: int = 5) -> DataFrame:
     """ANN search directly over the QUANTIZED codes — the payoff of
     ``quantize_int8``: cosine is scale-invariant, so
     ``cos(deq(a), deq(b)) == cos(qvec_a, qvec_b)`` exactly (the
@@ -129,7 +128,7 @@ def int8_cosine_topk(queries_q: DataFrame, corpus_q: DataFrame,
     from .similarity import cosine_topk
 
     return cosine_topk(queries_q, corpus_q, k=k,
-                       q_id=q_id, q_vec=q_vec, c_id=c_id, c_vec=c_vec)
+                       q_id="id", q_vec="qvec", c_id="id", c_vec="qvec")
 
 
 def pq_train(df: DataFrame, id_col: str = "vec_id",
@@ -212,10 +211,9 @@ def pq_train(df: DataFrame, id_col: str = "vec_id",
     return books
 
 
-def pq_encode(df: DataFrame, codebooks, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+def pq_encode(df: DataFrame, codebooks) -> DataFrame:
     """Encode every vector as its per-subspace nearest-centroid codes
-    → ``(id_col, codes array<int>)`` — d floats become m small ints
+    → ``(vec_id, codes array<int>)`` — d floats become m small ints
     (the 16-64× index-size lever that lets a 10^12-vector corpus fit
     an ANN tier at all). One map pass, no shuffle."""
     import numpy as np
@@ -228,7 +226,7 @@ def pq_encode(df: DataFrame, codebooks, id_col: str = "vec_id",
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            x = np.asarray(rb.column(vec_col).to_pylist(),
+            x = np.asarray(rb.column("embedding").to_pylist(),
                            dtype=np.float64)
             codes = np.empty((len(x), m), dtype=np.int32)
             for i in range(m):
@@ -239,18 +237,18 @@ def pq_encode(df: DataFrame, codebooks, id_col: str = "vec_id",
             offs = pa.array(range(0, (len(x) + 1) * m, m),
                             type=pa.int32())
             yield pa.RecordBatch.from_arrays(
-                [rb.column(id_col),
+                [rb.column("vec_id"),
                  pa.ListArray.from_arrays(offs,
                                           pa.array(codes.ravel(),
                                                    pa.int32()))],
-                names=[id_col, "codes"])
+                names=["vec_id", "codes"])
 
-    return df.select(id_col, vec_col).mapInArrow(
-        kernel, f"{id_col} long, codes array<int>")
+    return df.select("vec_id", "embedding").mapInArrow(
+        kernel, "vec_id long, codes array<int>")
 
 
 def pq_adc_topk(codes_df: DataFrame, codebooks, queries,
-                topk: int = 10, id_col: str = "vec_id") -> DataFrame:
+                topk: int = 10) -> DataFrame:
     """Asymmetric-distance (ADC) top-k search over PQ codes →
     ``(query_id, vec_id, adc_dist)``: per query, a (m × k) lookup
     table of exact subspace distances to every centroid is built once
@@ -292,26 +290,25 @@ def pq_adc_topk(codes_df: DataFrame, codebooks, queries,
             sc = np.zeros((len(qids), n))
             for i in range(m):
                 sc += lut[:, i, codes[:, i]]
-            ids = np.asarray(rb.column(id_col).to_pylist())
+            ids = np.asarray(rb.column("vec_id").to_pylist())
             yield pa.RecordBatch.from_arrays(
                 [pa.array(np.repeat(qids, n), pa.int64()),
                  pa.array(np.tile(ids, len(qids)), pa.int64()),
                  pa.array(sc.ravel(), pa.float64())],
-                names=["query_id", id_col, "adc"])
+                names=["query_id", "vec_id", "adc"])
 
     scored = codes_df.mapInArrow(
-        kernel, f"query_id long, {id_col} long, adc double")
+        kernel, "query_id long, vec_id long, adc double")
     w = Window.partitionBy("query_id").orderBy(
-        F.round("adc", 6).asc(), F.col(id_col).asc())
+        F.round("adc", 6).asc(), F.col("vec_id").asc())
     return (scored
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= topk)
-            .select("query_id", id_col,
+            .select("query_id", "vec_id",
                     F.round("adc", 6).alias("adc_dist")))
 
 
-def ivfpq_topk(df: DataFrame, queries, id_col: str = "vec_id",
-               vec_col: str = "embedding", ncoarse: int = 8,
+def ivfpq_topk(df: DataFrame, queries, ncoarse: int = 8,
                nprobe: int = 2, m: int = 4, k: int = 16,
                iterations: int = 1, topk: int = 10) -> DataFrame:
     """IVF-PQ search (the FAISS ``IVFx,PQy`` architecture) →
@@ -340,9 +337,9 @@ def ivfpq_topk(df: DataFrame, queries, id_col: str = "vec_id",
 
     from pyspark.sql import Window
 
-    coarse = pq_train(df, id_col, vec_col, m=1, k=ncoarse,
+    coarse = pq_train(df, "vec_id", "embedding", m=1, k=ncoarse,
                       iterations=iterations)           # (1, ncoarse, d)
-    books = pq_train(df, id_col, vec_col, m=m, k=k,
+    books = pq_train(df, "vec_id", "embedding", m=m, k=k,
                      iterations=iterations)
     cb = np.asarray(books)
     _m, _k, dsub = cb.shape
@@ -361,7 +358,7 @@ def ivfpq_topk(df: DataFrame, queries, id_col: str = "vec_id",
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            x = np.asarray(rb.column(vec_col).to_pylist(),
+            x = np.asarray(rb.column("embedding").to_pylist(),
                            dtype=np.float64)
             cl = np.argmin(((x[:, None, :] - cc[None, :, :]) ** 2)
                            .sum(axis=2), axis=1).astype(np.int32)
@@ -374,14 +371,14 @@ def ivfpq_topk(df: DataFrame, queries, id_col: str = "vec_id",
             offs = pa.array(range(0, (len(x) + 1) * _m, _m),
                             type=pa.int32())
             yield pa.RecordBatch.from_arrays(
-                [rb.column(id_col), pa.array(cl, pa.int32()),
+                [rb.column("vec_id"), pa.array(cl, pa.int32()),
                  pa.ListArray.from_arrays(offs,
                                           pa.array(cds.ravel(),
                                                    pa.int32()))],
-                names=[id_col, "cluster", "codes"])
+                names=["vec_id", "cluster", "codes"])
 
-    corpus = df.select(id_col, vec_col).mapInArrow(
-        encode_both, f"{id_col} long, cluster int, codes array<int>")
+    corpus = df.select("vec_id", "embedding").mapInArrow(
+        encode_both, "vec_id long, cluster int, codes array<int>")
     qids = [int(q) for q, _ in queries]
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     cdist = ((qmat[:, None, :] - coarse[0][None, :, :]) ** 2).sum(axis=2)
@@ -417,16 +414,16 @@ def ivfpq_topk(df: DataFrame, queries, id_col: str = "vec_id",
             for i in range(_m):
                 sc += lut[qs, i, cds[:, i]]
             yield pa.RecordBatch.from_arrays(
-                [rb.column("query_id"), rb.column(id_col),
+                [rb.column("query_id"), rb.column("vec_id"),
                  pa.array(sc, pa.float64())],
-                names=["query_id", id_col, "adc"])
+                names=["query_id", "vec_id", "adc"])
 
-    scored = cand.select("query_id", id_col, "codes").mapInArrow(
-        kernel, f"query_id long, {id_col} long, adc double")
+    scored = cand.select("query_id", "vec_id", "codes").mapInArrow(
+        kernel, "query_id long, vec_id long, adc double")
     w = Window.partitionBy("query_id").orderBy(
-        F.round("adc", 6).asc(), F.col(id_col).asc())
+        F.round("adc", 6).asc(), F.col("vec_id").asc())
     return (scored
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= topk)
-            .select("query_id", id_col,
+            .select("query_id", "vec_id",
                     F.round("adc", 6).alias("adc_dist")))

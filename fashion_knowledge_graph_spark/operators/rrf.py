@@ -14,21 +14,20 @@ from pyspark.sql import functions as F
 from .. import taxonomy as tx
 
 
-def add_rank(df: DataFrame, keys: list[str], order: list,
-             rank_col: str = "rank") -> DataFrame:
+def add_rank(df: DataFrame, keys: list[str], order: list) -> DataFrame:
     w = Window.partitionBy(*keys).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w))
+    return df.withColumn("rank", F.row_number().over(w))
 
 
 def rrf_fuse(ranked_lists: list[DataFrame], keys: list[str],
-             id_col: str = "product_id", rank_col: str = "rank",
+             id_col: str = "product_id",
              k: int = tx.RRF_K) -> DataFrame:
-    """Union N ranked DataFrames (each carrying ``rank_col`` 1-based
+    """Union N ranked DataFrames (each carrying ``rank`` 1-based
     within ``keys``) and fuse: rrf_score = Σ 1/(k + rank)."""
-    cols = [*keys, id_col, rank_col]
+    cols = [*keys, id_col, "rank"]
     unioned = ranked_lists[0].select(*cols)
     for d in ranked_lists[1:]:
         unioned = unioned.unionByName(d.select(*cols))
     return unioned.groupBy(*keys, id_col).agg(
-        F.sum(F.lit(1.0) / (F.lit(float(k)) + F.col(rank_col)))
+        F.sum(F.lit(1.0) / (F.lit(float(k)) + F.col("rank")))
         .alias("rrf_score"))

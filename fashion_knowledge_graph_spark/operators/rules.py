@@ -59,8 +59,8 @@ def construct(bindings: DataFrame,
     return out.distinct()
 
 
-def _delta_bindings(known: DataFrame, delta: DataFrame, body,
-                    path_hops: int) -> DataFrame | None:
+def _delta_bindings(known: DataFrame, delta: DataFrame,
+                    body) -> DataFrame | None:
     """Semi-naive body instantiation: a binding is NEW this round only
     if >=1 body atom matches a DELTA triple, so evaluate the body once
     per atom position with that position reading ``delta`` and the
@@ -83,8 +83,7 @@ def _delta_bindings(known: DataFrame, delta: DataFrame, body,
 
 def forward_chain(triples: DataFrame,
                   rules: list[tuple[list, list]],
-                  max_iters: int = 10,
-                  path_hops: int = 8) -> DataFrame:
+                  max_iters: int = 10) -> DataFrame:
     """Apply ``rules`` = [(body_patterns, head_templates), ...] to the
     triple set until fixpoint (or ``max_iters``). Returns the closed
     triple set (originals + everything derived).
@@ -103,10 +102,9 @@ def forward_chain(triples: DataFrame,
     for _ in range(max_iters):
         derived = None
         for body, head in rules:
-            b = None if first else _delta_bindings(known, delta, body,
-                                                   path_hops)
+            b = None if first else _delta_bindings(known, delta, body)
             if b is None:
-                b = bgp_query(known, body, path_hops=path_hops)
+                b = bgp_query(known, body)
             d = construct(b, head)
             derived = d if derived is None else derived.unionByName(d)
         first = False
@@ -121,9 +119,7 @@ def forward_chain(triples: DataFrame,
 
 
 def mine_propagation_rules(triples: DataFrame, rel_pred: str,
-                           attr_preds: list[str],
-                           subj: str = "subj", pred: str = "pred",
-                           obj: str = "obj") -> DataFrame:
+                           attr_preds: list[str]) -> DataFrame:
     """AMIE-style rule mining for the attribute-propagation template
     ``p(x, v) ∧ rel(x, y) ⇒ p(y, v)`` — one row per candidate
     predicate p with its support and both confidence estimates
@@ -143,19 +139,19 @@ def mine_propagation_rules(triples: DataFrame, rel_pred: str,
     deterministic divisions at the end. The relation is used
     symmetrized, matching the undirected complements semantics.
     """
-    rel = (triples.filter(F.col(pred) == rel_pred)
-           .select(F.col(subj).alias("x"), F.col(obj).alias("y")))
+    rel = (triples.filter(F.col("pred") == rel_pred)
+           .select(F.col("subj").alias("x"), F.col("obj").alias("y")))
     rel = (rel.unionByName(rel.select(F.col("y").alias("x"),
                                       F.col("x").alias("y")))
            .distinct())
     out = None
     for p in attr_preds:
-        tp = (triples.filter(F.col(pred) == p)
-              .select(F.col(subj).alias("x"),
-                      F.col(obj).alias("v")).distinct())
+        tp = (triples.filter(F.col("pred") == p)
+              .select(F.col("subj").alias("x"),
+                      F.col("obj").alias("v")).distinct())
         body = rel.join(tp, "x").select("x", "y", "v").distinct()
         head = tp.select(F.col("x").alias("y"),
-                         F.col("v").alias("v"))
+                         "v")
         has_any = tp.select(F.col("x").alias("y")).distinct()
         pos = body.join(head, ["y", "v"], "left_semi")
         pca = body.join(has_any, ["y"], "left_semi")
@@ -178,9 +174,7 @@ def mine_propagation_rules(triples: DataFrame, rel_pred: str,
 
 def mine_value_associations(triples: DataFrame,
                             preds: list[str],
-                            min_support: int = 2,
-                            subj: str = "subj", pred: str = "pred",
-                            obj: str = "obj") -> DataFrame:
+                            min_support: int = 2) -> DataFrame:
     """Cross-attribute association rules (Apriori 1-item rules with
     lift): for unordered predicate pairs p_a < p_b, every value pair
     co-asserted by >= ``min_support`` entities, with
@@ -199,9 +193,9 @@ def mine_value_associations(triples: DataFrame,
     key is the value PAIR (vocabulary², a dimension); per-value
     support tables are vocabulary-sized and broadcast back.
     """
-    t = (triples.filter(F.col(pred).isin(preds))
-         .select(F.col(subj).alias("s"), F.col(pred).alias("p"),
-                 F.col(obj).alias("v")).distinct())
+    t = (triples.filter(F.col("pred").isin(preds))
+         .select(F.col("subj").alias("s"), F.col("pred").alias("p"),
+                 F.col("obj").alias("v")).distinct())
     n_total = t.select("s").distinct().count()
     a, b = t.alias("a"), t.alias("b")
     both = (a.join(b, (F.col("a.s") == F.col("b.s"))

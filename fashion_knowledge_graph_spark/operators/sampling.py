@@ -43,13 +43,12 @@ def sample_hash(key_col: Column | str, salt: str) -> Column:
 
 
 def domain_sample(df: DataFrame, key_col: str, domain_col: str,
-                  rates: dict[str, float], salt: str = "mix",
-                  default_rate: float = 0.0) -> DataFrame:
+                  rates: dict[str, float], salt: str = "mix") -> DataFrame:
     """Keep each row with its domain's probability, deterministically:
     row survives iff ``sample_hash(salt, key) < rate[domain] * 2^60``.
-    Domains absent from ``rates`` get ``default_rate``. Rate 1.0 keeps
+    Domains absent from ``rates`` get rate 0.0. Rate 1.0 keeps
     everything (threshold = 2^60 > any hash), 0.0 nothing."""
-    thr = F.lit(rate_threshold(default_rate))
+    thr = F.lit(rate_threshold(0.0))
     for dom, rate in sorted(rates.items()):
         thr = F.when(F.col(domain_col) == dom,
                      F.lit(rate_threshold(rate))).otherwise(thr)
@@ -157,13 +156,13 @@ def temperature_weights(df: DataFrame, domain_col: str,
     return out
 
 
-def _poisson1_thresholds(kmax: int = 9) -> list[float]:
-    """Cumulative Poisson(1) CDF values P(X ≤ k), k = 0..kmax-1, as
+def _poisson1_thresholds() -> list[float]:
+    """Cumulative Poisson(1) CDF values P(X ≤ k), k = 0..8, as
     plain floats — both engines parse the identical literals to the
     identical doubles, so the inverse-CDF CASE is bit-portable."""
     import math
     acc, fact, out = 0.0, 1.0, []
-    for k in range(kmax):
+    for k in range(9):
         if k > 0:
             fact *= k
         acc += math.exp(-1.0) / fact

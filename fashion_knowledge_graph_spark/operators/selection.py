@@ -23,9 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def greedy_max_coverage(doc_tokens: DataFrame, k: int,
-                        id_col: str = "doc_id",
-                        token_col: str = "tok") -> DataFrame:
+def greedy_max_coverage(doc_tokens: DataFrame, k: int) -> DataFrame:
     """``(id, token)`` pairs → the greedy k-pick trace:
     ``(rank, doc_id, new_tokens, total_covered)``.
 
@@ -33,8 +31,7 @@ def greedy_max_coverage(doc_tokens: DataFrame, k: int,
     the running union size. Input need not be distinct — it is
     deduplicated once up front.
     """
-    t = (doc_tokens.select(F.col(id_col).alias("id"),
-                           F.col(token_col).alias("tok"))
+    t = (doc_tokens.select(F.col("doc_id").alias("id"), "tok")
          .distinct().localCheckpoint())
     covered = None  # DataFrame of (tok)
     out = []
@@ -67,7 +64,6 @@ def greedy_max_coverage(doc_tokens: DataFrame, k: int,
 
 
 def dsir_log_weights(docs: DataFrame, target_pred,
-                     text_col: str = "text", id_col: str = "doc_id",
                      buckets: int = 64, salt: str = "dsir",
                      k: int = 50) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
@@ -92,11 +88,11 @@ def dsir_log_weights(docs: DataFrame, target_pred,
     from ..functions.text import tokens
     from .sampling import sample_hash
 
-    base = (docs.filter(F.col(text_col).isNotNull())
+    base = (docs.filter(F.col("text").isNotNull())
             .withColumn("__tgt", target_pred.cast("int")))
     tok = base.select(
-        F.col(id_col).alias("id"), F.col("lang"), F.col("__tgt"),
-        F.explode(tokens(F.col(text_col))).alias("w")
+        F.col("doc_id").alias("id"), F.col("lang"), F.col("__tgt"),
+        F.explode(tokens(F.col("text"))).alias("w")
     ).select("id", "lang", "__tgt",
              (sample_hash("w", salt) % buckets).alias("b"))
     # 64-row histogram: localCheckpoint so the corpus-sized token pass
@@ -116,8 +112,8 @@ def dsir_log_weights(docs: DataFrame, target_pred,
                             / (F.col("r_tot") + buckets)
                             .cast("double"))).alias("lw")))
     return (tok.join(F.broadcast(dim), "b")
-            .groupBy(F.col("id").alias(id_col), "lang")
+            .groupBy(F.col("id").alias("doc_id"), "lang")
             .agg(F.count(F.lit(1)).alias("n_tokens"),
                  F.round(F.sum("lw"), 6).alias("dsir_logw"))
-            .orderBy(F.desc("dsir_logw"), F.asc(id_col))
+            .orderBy(F.desc("dsir_logw"), F.asc("doc_id"))
             .limit(k))

@@ -75,18 +75,16 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-             nbits: int = 64, nbands: int = 16,
-             q_id: str = "vec_id", q_vec: str = "embedding",
-             c_id: str = "vec_id", c_vec: str = "embedding") -> DataFrame:
+             nbits: int = 64, nbands: int = 16) -> DataFrame:
     """Sign-LSH banded candidates, exact re-rank. Recall depends on the
     angle distribution; report it against ``cosine_topk`` in tests."""
     from ..functions.embeddings import make_signature_udf
 
     sig = make_signature_udf(nbits, nbands, "ann-lsh")
-    q = queries.select(F.col(q_id).alias("query_id"),
-                       F.col(q_vec).alias("q_vec"))
-    c = corpus.select(F.col(c_id).alias("corpus_id"),
-                      F.col(c_vec).alias("c_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec"))
+    c = corpus.select(F.col("vec_id").alias("corpus_id"),
+                      F.col("embedding").alias("c_vec"))
     # two-phase narrow-row plan (same as linking.link_lsh): the banded
     # join replicates each side nbands× — vectors must NOT ride it
     # (id + band keys only); candidates re-join their vectors BY ID for
@@ -103,9 +101,7 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     return _rerank(paired, k)
 
 
-def hard_negatives(df: DataFrame, k: int = 5, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   label_col: str = "label",
+def hard_negatives(df: DataFrame, k: int = 5,
                    queries: DataFrame | None = None) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the
     top-k most-similar items with a DIFFERENT label — the examples an
@@ -116,12 +112,12 @@ def hard_negatives(df: DataFrame, k: int = 5, id_col: str = "vec_id",
     top-k window — with the label-mismatch predicate folded into the
     broadcast join."""
     qsrc = queries if queries is not None else df
-    q = qsrc.select(F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("q_vec"),
-                    F.col(label_col).alias("q_label"))
-    c = df.select(F.col(id_col).alias("corpus_id"),
-                  F.col(vec_col).alias("c_vec"),
-                  F.col(label_col).alias("c_label"))
+    q = qsrc.select(F.col("vec_id").alias("query_id"),
+                    F.col("embedding").alias("q_vec"),
+                    F.col("label").alias("q_label"))
+    c = df.select(F.col("vec_id").alias("corpus_id"),
+                  F.col("embedding").alias("c_vec"),
+                  F.col("label").alias("c_label"))
     cand = c.join(F.broadcast(q),
                   (F.col("query_id") != F.col("corpus_id"))
                   & (F.col("q_label") != F.col("c_label")), "inner") \
@@ -129,13 +125,14 @@ def hard_negatives(df: DataFrame, k: int = 5, id_col: str = "vec_id",
     return _rerank(cand, k)
 
 
-def _centroids(corpus: DataFrame, c_id: str, c_vec: str,
+def _centroids(corpus: DataFrame,
                ncentroids: int) -> list[tuple[int, list[float]]]:
     """Deterministic centroid sample: the ``ncentroids`` corpus rows
     with the smallest ids (no RNG — resume-safe, test-stable). At real
     scale swap for a k-means|| pass; the operator contract (centroid_id
     assignment + probe join) is unchanged."""
-    rows = (corpus.select(F.col(c_id).alias("id"), F.col(c_vec).alias("v"))
+    rows = (corpus.select(F.col("vec_id").alias("id"),
+                          F.col("embedding").alias("v"))
             .orderBy("id").limit(ncentroids).collect())
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
 
@@ -156,20 +153,18 @@ def _assign_udf(cents: list[tuple[int, list[float]]], nprobe: int):
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-             ncentroids: int = 16, nprobe: int = 4,
-             q_id: str = "vec_id", q_vec: str = "embedding",
-             c_id: str = "vec_id", c_vec: str = "embedding") -> DataFrame:
+             ncentroids: int = 16, nprobe: int = 4) -> DataFrame:
     """IVF-flat: corpus partitioned by nearest centroid; each query
     probes its ``nprobe`` nearest centroids. recall→1 as nprobe→
     ncentroids; nprobe=ncentroids is exhaustive (== cosine_topk)."""
-    cents = _centroids(corpus, c_id, c_vec, ncentroids)
+    cents = _centroids(corpus, ncentroids)
     assign1 = _assign_udf(cents, 1)
     assignp = _assign_udf(cents, nprobe)
-    c = corpus.select(F.col(c_id).alias("corpus_id"),
-                      F.col(c_vec).alias("c_vec")) \
+    c = corpus.select(F.col("vec_id").alias("corpus_id"),
+                      F.col("embedding").alias("c_vec")) \
         .withColumn("cent", F.element_at(assign1("c_vec"), 1))
-    q = queries.select(F.col(q_id).alias("query_id"),
-                       F.col(q_vec).alias("q_vec")) \
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec")) \
         .withColumn("cent", F.explode(assignp("q_vec")))
     cand = c.join(F.broadcast(q), "cent") \
         .filter(F.col("query_id") != F.col("corpus_id")) \
@@ -178,10 +173,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
 
 def ranking_eval(ranked: DataFrame, truth: DataFrame,
-                 ks: tuple[int, ...] = (1, 5, 10),
-                 query_col: str = "query_id",
-                 cand_col: str = "corpus_id",
-                 rank_col: str = "rank") -> DataFrame:
+                 ks: tuple[int, ...] = (1, 5, 10)) -> DataFrame:
     """Retrieval-quality datasheet: filtered MRR and hits@k of the
     true candidate(s) inside a ranked candidate list.
 
@@ -199,10 +191,10 @@ def ranking_eval(ranked: DataFrame, truth: DataFrame,
     """
     if not ks or any(k < 1 for k in ks):
         raise ValueError("ks must be positive ranks")
-    j = truth.select(query_col, cand_col).join(
-        ranked.select(query_col, cand_col, rank_col),
-        on=[query_col, cand_col], how="left")
-    r = F.col(rank_col)
+    j = truth.select("query_id", "corpus_id").join(
+        ranked.select("query_id", "corpus_id", "rank"),
+        on=["query_id", "corpus_id"], how="left")
+    r = F.col("rank")
     aggs = [F.count(F.lit(1)).cast("long").alias("n_truth"),
             F.round(F.avg(F.when(r.isNotNull(), F.lit(1.0) / r)
                           .otherwise(F.lit(0.0))), 6).alias("mrr")]

@@ -91,8 +91,8 @@ def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str,
         F.round(est, 4).alias("n_distinct_kmv"))
 
 
-def cms_term_counts(tokens: DataFrame, term_col: str = "term",
-                    depth: int = 4, width: int = 512) -> DataFrame:
+def cms_term_counts(tokens: DataFrame, depth: int = 4,
+                    width: int = 512) -> DataFrame:
     """Count-min frequency estimates for every distinct term →
     ``(term, n_exact, n_cms)`` with the CMS guarantee
     ``n_cms ≥ n_exact`` (collisions only ever ADD).
@@ -108,7 +108,7 @@ def cms_term_counts(tokens: DataFrame, term_col: str = "term",
     oracle); in production they'd be dropped and only probe terms
     would join the broadcast bucket table.
     """
-    t = tokens.select(F.col(term_col).alias("term")) \
+    t = tokens.select("term") \
         .filter(F.col("term").isNotNull())
     rows = F.array([F.lit(d) for d in range(depth)])
     # one row per (occurrence, depth): explode BEFORE aggregating so

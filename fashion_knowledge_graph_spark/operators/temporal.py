@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, by: str, ts: str,
-              payload_cols: list[str], prefix: str = "asof_") -> DataFrame:
+              payload_cols: list[str]) -> DataFrame:
     """Left as-of-backward join: for every left row, attach the right
     row with the greatest ``right.ts <= left.ts`` within the same
     ``by`` key; no match → NULL payload.
@@ -38,7 +38,7 @@ def asof_join(left: DataFrame, right: DataFrame, by: str, ts: str,
     ``right`` must be unique per (by, ts) — equal-timestamp duplicates
     have no deterministic winner (dedup upstream; DuckDB's ASOF has
     the same caveat). Right payload columns are emitted as
-    ``{prefix}{col}`` plus ``{prefix}{ts}`` (the matched timestamp).
+    ``asof_{col}`` plus ``asof_{ts}`` (the matched timestamp).
     """
     l_cols = [c for c in left.columns]
     tagged_l = left.select(
@@ -65,13 +65,12 @@ def asof_join(left: DataFrame, right: DataFrame, by: str, ts: str,
         F.last("__r_ts", ignorenulls=True).over(w).alias("__m_ts"))
     return carried.filter(F.col("__side") == 1).select(
         *[F.col(f"__l_{c}").alias(c) for c in l_cols],
-        *[F.col(f"__m_{c}").alias(f"{prefix}{c}") for c in payload_cols],
-        F.col("__m_ts").alias(f"{prefix}{ts}"))
+        *[F.col(f"__m_{c}").alias(f"asof_{c}") for c in payload_cols],
+        F.col("__m_ts").alias(f"asof_{ts}"))
 
 
 def asof_join_cogroup(left: DataFrame, right: DataFrame, by: str,
-                      ts: str, payload_cols: list[str],
-                      prefix: str = "asof_") -> DataFrame:
+                      ts: str, payload_cols: list[str]) -> DataFrame:
     """``asof_join`` as a cogrouped-map (`groupBy().cogroup()
     .applyInPandas`): both sides shuffle ONCE on ``by``, then each
     key's partitions meet in a single pandas ``merge_asof``.
@@ -106,13 +105,13 @@ def asof_join_cogroup(left: DataFrame, right: DataFrame, by: str,
     r_schema = {f.name: f.dataType.simpleString()
                 for f in right.schema.fields}
     out_schema = (l_fields
-                  + "".join(f", `{prefix}{c}` {r_schema[c]}"
+                  + "".join(f", `asof_{c}` {r_schema[c]}"
                             for c in payload_cols)
-                  + f", `{prefix}{ts}` {r_schema[ts]}")
+                  + f", `asof_{ts}` {r_schema[ts]}")
     l_cols = list(left.columns)
 
-    cols_out = [*l_cols, *[f"{prefix}{c}" for c in payload_cols],
-                f"{prefix}{ts}"]
+    cols_out = [*l_cols, *[f"asof_{c}" for c in payload_cols],
+                f"asof_{ts}"]
 
     def fn(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
         if l_pdf.empty:
@@ -124,8 +123,8 @@ def asof_join_cogroup(left: DataFrame, right: DataFrame, by: str,
                 out[c] = None
             return out[cols_out]
         r = r_pdf[[ts, *payload_cols]].sort_values(ts, kind="mergesort")
-        r[f"{prefix}{ts}"] = r[ts]
-        r = r.rename(columns={c: f"{prefix}{c}" for c in payload_cols})
+        r[f"asof_{ts}"] = r[ts]
+        r = r.rename(columns={c: f"asof_{c}" for c in payload_cols})
         out = pd.merge_asof(l_pdf, r, on=ts, direction="backward")
         return out[cols_out]
 
@@ -134,8 +133,7 @@ def asof_join_cogroup(left: DataFrame, right: DataFrame, by: str,
 
 
 def range_join(left: DataFrame, right: DataFrame, by: str, ts: str,
-               lookback: str, payload_cols: list[str],
-               prefix: str = "in_range_") -> DataFrame:
+               lookback: str, payload_cols: list[str]) -> DataFrame:
     """Banded range join: all right rows with
     ``left.ts - lookback <= right.ts <= left.ts`` per key — WITHOUT
     the non-equi cross product.
@@ -168,8 +166,8 @@ def range_join(left: DataFrame, right: DataFrame, by: str, ts: str,
         F.col(by).alias("__rby"),
         r_us.alias("__rus"),
         r_us.alias("__tmp_us"),
-        *[F.col(c).alias(f"{prefix}{c}") for c in payload_cols],
-        F.col(ts).alias(f"{prefix}{ts}")) \
+        *[F.col(c).alias(f"in_range_{c}") for c in payload_cols],
+        F.col(ts).alias(f"in_range_{ts}")) \
         .withColumn("__rbkt", F.expr(f"__tmp_us div {delta_us}")) \
         .drop("__tmp_us")
     joined = l.join(r, (F.col(by) == F.col("__rby"))
@@ -221,8 +219,7 @@ def session_bounds(events: DataFrame, by: str = "user_id",
                  .alias("session_end")))
 
 
-def funnel(events: DataFrame, steps: list[str], by: str = "user_id",
-           ts: str = "ts", type_col: str = "event_type") -> DataFrame:
+def funnel(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered funnel completion: step k's time is the MIN event time
     of ``steps[k]`` STRICTLY AFTER step k-1's time, per entity — the
     standard behavioral-analytics shape ("of users who viewed, how
@@ -242,27 +239,25 @@ def funnel(events: DataFrame, steps: list[str], by: str = "user_id",
     the full event stream."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
-    cur = (events.filter(F.col(type_col) == steps[0])
-           .groupBy(by).agg(F.min(ts).alias("t1")))
+    cur = (events.filter(F.col("event_type") == steps[0])
+           .groupBy("user_id").agg(F.min("ts").alias("t1")))
     for k, step in enumerate(steps[1:], start=2):
-        nxt = events.filter(F.col(type_col) == step) \
-            .select(by, F.col(ts).alias("__nts"))
+        nxt = events.filter(F.col("event_type") == step) \
+            .select("user_id", F.col("ts").alias("__nts"))
         prev_cols = [f"t{i}" for i in range(1, k)]
-        cur = (cur.join(nxt, by, "left")
+        cur = (cur.join(nxt, "user_id", "left")
                .withColumn("__ok", F.when(
                    F.col("__nts") > F.col(f"t{k - 1}"), F.col("__nts")))
-               .groupBy(by, *prev_cols)
+               .groupBy("user_id", *prev_cols)
                .agg(F.min("__ok").alias(f"t{k}")))
     return cur
 
 
-def markov_transitions(events: DataFrame, by: str = "user_id",
-                       ts: str = "ts", state: str = "event_type",
-                       tie: str = "event_id") -> DataFrame:
+def markov_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-key event
     sequences → ``(from_state, to_state, n, p)``.
 
-    Each key's events are ordered by (ts, tie) — the deterministic
+    Each user's events are ordered by (ts, event_id) — the deterministic
     total order every window op in this engine uses — consecutive
     pairs come from one ``lead`` window (no self-join), and
     p = n(from→to) / Σ_to' n(from→to') row-normalizes the counts.
@@ -275,10 +270,10 @@ def markov_transitions(events: DataFrame, by: str = "user_id",
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(by).orderBy(ts, tie)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (events
-             .select(F.col(state).alias("from_state"),
-                     F.lead(state, 1).over(w).alias("to_state"))
+             .select(F.col("event_type").alias("from_state"),
+                     F.lead("event_type", 1).over(w).alias("to_state"))
              .filter(F.col("to_state").isNotNull()))
     counts = pairs.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n"))
@@ -288,25 +283,22 @@ def markov_transitions(events: DataFrame, by: str = "user_id",
         (F.col("n").cast("double") / F.sum("n").over(tot)).alias("p"))
 
 
-def time_decay_agg(events: DataFrame, by: str = "user_id",
-                   ts: str = "ts", value: str = "value",
-                   ref_date: str = "2024-02-01",
-                   daily_decay: float = 0.95) -> DataFrame:
-    """Exponentially time-decayed engagement per key →
-    ``(by, n_events, decayed_value)`` with
-    decayed = Σ value·decay^(days before ref_date).
+def time_decay_agg(events: DataFrame) -> DataFrame:
+    """Exponentially time-decayed engagement per user →
+    ``(user_id, n_events, decayed_value)`` with
+    decayed = Σ value·0.95^(days before 2024-02-01).
 
     The recency-weighted feature every ranking/recommendation
     pipeline derives from an event log (yesterday's purchase counts
     ~20× more than last month's at 0.95/day). The reference date is
-    an explicit parameter, NOT now(): feature snapshots must be
+    a fixed date, NOT now(): feature snapshots must be
     reproducible — rerunning the pipeline tomorrow over the same
     events yields the same training table (the determinism contract
-    shared with ``operators/sampling.py``). Events AFTER ``ref_date``
-    get decay^(negative) > 1 — amplified, not dropped: pass a
-    ref_date at or past the snapshot end (filtering future rows is
-    the caller's feature-leakage guard, which this operator must not
-    silently second-guess).
+    shared with ``operators/sampling.py``). Events AFTER the reference
+    date get decay^(negative) > 1 — amplified, not dropped: the
+    reference date must be at or past the snapshot end (filtering
+    future rows is the caller's feature-leakage guard, which this
+    operator must not silently second-guess).
 
     Plan: pure codegen projection (integer day diff → pow) feeding
     one partial-agg'd groupBy — scan-speed at 100 TB. The day diff
@@ -314,22 +306,20 @@ def time_decay_agg(events: DataFrame, by: str = "user_id",
     engines compute identical doubles; the Σ is the only
     order-sensitive term (callers round at 6).
     """
-    days = F.datediff(F.lit(ref_date).cast("date"),
-                      F.col(ts).cast("date"))
-    contrib = F.col(value) * F.pow(F.lit(daily_decay),
+    days = F.datediff(F.lit("2024-02-01").cast("date"),
+                      F.col("ts").cast("date"))
+    contrib = F.col("value") * F.pow(F.lit(0.95),
                                    days.cast("double"))
-    return (events.groupBy(by)
+    return (events.groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.round(F.sum(contrib), 6).alias("decayed_value")))
 
 
-def session_paths(events: DataFrame, by: str = "user_id",
-                  ts: str = "ts", state: str = "event_type",
-                  tie: str = "event_id", gap: str = "30 minutes",
+def session_paths(events: DataFrame, gap: str = "30 minutes",
                   max_steps: int = 5, top: int = 20) -> DataFrame:
     """Top session paths → ``(path, n_sessions)``: sessionize on the
     inactivity gap, take each session's first ``max_steps`` events in
-    the engine-wide (ts, tie) order, join them as an arrow-separated
+    the engine-wide (ts, event_id) order, join them as an arrow-separated
     string, and count path frequencies — the UX/funnel-mining
     companion to ``markov_transitions`` (which models single steps;
     this surfaces whole journeys). Ties in path counts break
@@ -342,14 +332,14 @@ def session_paths(events: DataFrame, by: str = "user_id",
     """
     from pyspark.sql import Window
 
-    s = sessionize(events, by=by, ts=ts, gap=gap)
-    w = Window.partitionBy(by, "session_idx").orderBy(ts, tie)
+    s = sessionize(events, gap=gap)
+    w = Window.partitionBy("user_id", "session_idx").orderBy("ts", "event_id")
     first_steps = (s.withColumn("__step", F.row_number().over(w))
                    .filter(F.col("__step") <= max_steps))
-    paths = (first_steps.groupBy(by, "session_idx")
+    paths = (first_steps.groupBy("user_id", "session_idx")
              .agg(F.concat_ws(
                  ">", F.array_sort(F.collect_list(
-                     F.struct("__step", F.col(state).alias("s"))))
+                     F.struct("__step", F.col("event_type").alias("s"))))
                  .getField("s")).alias("path")))
     counted = paths.groupBy("path").agg(
         F.count(F.lit(1)).alias("n_sessions"))
@@ -364,12 +354,10 @@ def session_paths(events: DataFrame, by: str = "user_id",
             .select("path", "n_sessions", "rank"))
 
 
-def scd2_intervals(events: DataFrame, by: str = "user_id",
-                   ts: str = "ts", attr: str = "event_type",
-                   tiebreak: str = "event_id") -> DataFrame:
+def scd2_intervals(events: DataFrame) -> DataFrame:
     """Type-2 slowly-changing-dimension build: collapse each entity's
     event stream into validity intervals of the tracked attribute →
-    ``(by, attr, valid_from_us, valid_to_us, is_current)`` with
+    ``(user_id, event_type, valid_from_us, valid_to_us, is_current)`` with
     epoch-µs BIGINT bounds (exact, engine-portable) and a NULL
     ``valid_to_us`` on the open current interval.
 
@@ -377,36 +365,36 @@ def scd2_intervals(events: DataFrame, by: str = "user_id",
     lag() marks changes, a running change-count keys the interval,
     min/max close it, lead() carries the next interval's start as the
     exclusive upper bound. All four windows share ONE partition key
-    (``by``) and sort, so the whole build is a single shuffle + sort
+    (``user_id``) and sort, so the whole build is a single shuffle + sort
     per entity — at 100 TB this is the standard one-pass CDC-to-SCD2
-    compaction. Ties on ``ts`` are broken by ``tiebreak`` so re-runs
+    compaction. Ties on ``ts`` are broken by ``event_id`` so re-runs
     are byte-identical.
     """
-    w = Window.partitionBy(by).orderBy(F.asc(ts), F.asc(tiebreak))
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     chg = (events
-           .withColumn("__prev", F.lag(attr).over(w))
+           .withColumn("__prev", F.lag("event_type").over(w))
            .withColumn("__new", (F.col("__prev").isNull()
-                                 | (F.col(attr) != F.col("__prev")))
+                                 | (F.col("event_type") != F.col("__prev")))
                        .cast("int"))
            .withColumn("__grp", F.sum("__new").over(
                w.rowsBetween(Window.unboundedPreceding, 0))))
-    iv = (chg.groupBy(by, "__grp")
-          .agg(F.min(attr).alias(attr),  # constant within a run
+    iv = (chg.groupBy("user_id", "__grp")
+          # event_type is constant within a run
+          .agg(F.min("event_type").alias("event_type"),
                # NTZ → TZ cast is wall-clock identity under the UTC
                # session tz; unix_micros only accepts TIMESTAMP
-               F.min(F.unix_micros(F.col(ts).cast("timestamp")))
+               F.min(F.unix_micros(F.col("ts").cast("timestamp")))
                .alias("valid_from_us")))
-    w2 = Window.partitionBy(by).orderBy("valid_from_us")
+    w2 = Window.partitionBy("user_id").orderBy("valid_from_us")
     return (iv
             .withColumn("valid_to_us",
                         F.lead("valid_from_us").over(w2))
             .withColumn("is_current", F.col("valid_to_us").isNull())
-            .select(by, attr, "valid_from_us", "valid_to_us",
+            .select("user_id", "event_type", "valid_from_us", "valid_to_us",
                     "is_current"))
 
 
-def kaplan_meier(durations: DataFrame, dur: str = "t",
-                 observed: str = "observed") -> DataFrame:
+def kaplan_meier(durations: DataFrame) -> DataFrame:
     """Kaplan–Meier survival estimator over ``(t, observed)`` rows
     (t: integer duration; observed: TRUE = the event happened,
     FALSE = right-censored) → one row per distinct EVENT time:
@@ -423,9 +411,9 @@ def kaplan_meier(durations: DataFrame, dur: str = "t",
     distinct-durations-sized table, nothing per-subject past the
     first groupBy.
     """
-    byt = (durations.groupBy(F.col(dur).alias("t"))
+    byt = (durations.groupBy("t")
            .agg(F.count(F.lit(1)).alias("n_at"),
-                F.sum(F.col(observed).cast("long"))
+                F.sum(F.col("observed").cast("long"))
                 .alias("d_events")))
     w_desc = (Window.orderBy(F.desc("t"))
               .rowsBetween(Window.unboundedPreceding, 0))
@@ -454,10 +442,7 @@ def kaplan_meier(durations: DataFrame, dur: str = "t",
                     F.round("survival", 6).alias("survival")))
 
 
-def position_attribution(events: DataFrame, conv_type: str = "purchase",
-                         touch_type: str = "view",
-                         by: str = "user_id", ts: str = "ts",
-                         id_col: str = "event_id") -> DataFrame:
+def position_attribution(events: DataFrame) -> DataFrame:
     """U-shaped (position-based) multi-touch attribution: every
     conversion distributes 1.0 of credit over the touches that
     precede it (same entity) — 40% first touch, 40% last touch, 20%
@@ -475,12 +460,12 @@ def position_attribution(events: DataFrame, conv_type: str = "purchase",
     rank window shares the join's partitioning (no second exchange).
     Ties on ts break by event id — deterministic journeys.
     """
-    conv = events.filter(F.col("event_type") == conv_type).select(
-        F.col(by).alias("e"), F.col(id_col).alias("conv_id"),
-        F.col(ts).alias("conv_ts"))
-    touch = events.filter(F.col("event_type") == touch_type).select(
-        F.col(by).alias("e"), F.col(id_col).alias("touch_id"),
-        F.col(ts).alias("touch_ts"))
+    conv = events.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("e"), F.col("event_id").alias("conv_id"),
+        F.col("ts").alias("conv_ts"))
+    touch = events.filter(F.col("event_type") == "view").select(
+        F.col("user_id").alias("e"), F.col("event_id").alias("touch_id"),
+        F.col("ts").alias("touch_ts"))
     j = conv.join(touch, "e").filter(F.col("touch_ts")
                                      < F.col("conv_ts"))
     # conv_id is unique, so adding the entity key to the window

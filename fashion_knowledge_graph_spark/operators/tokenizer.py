@@ -31,41 +31,39 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """Corpus word-frequency table ``(w, freq)`` — the single
     full-corpus pass (map-side combined word count)."""
     from ..functions.text import tokens
-    return (docs.filter(F.col(text_col).isNotNull())
-            .select(F.explode(tokens(F.col(text_col))).alias("w"))
+    return (docs.filter(F.col("text").isNotNull())
+            .select(F.explode(tokens(F.col("text"))).alias("w"))
             .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
 
 
-def _pair_struct(sym_col: str) -> Column:
-    """Adjacent-pair structs of a symbol array (empty for len<2)."""
+def _pair_struct() -> Column:
+    """Adjacent-pair structs of the ``syms`` array (empty for len<2)."""
     return F.expr(
-        f"transform(sequence(1, size({sym_col}) - 1), "
-        f"i -> struct(element_at({sym_col}, i) AS a, "
-        f"element_at({sym_col}, i + 1) AS b))")
+        "transform(sequence(1, size(syms) - 1), "
+        "i -> struct(element_at(syms, i) AS a, "
+        "element_at(syms, i + 1) AS b))")
 
 
-def pair_counts(vocab: DataFrame, sym_col: str = "syms",
-                freq_col: str = "freq") -> DataFrame:
+def pair_counts(vocab: DataFrame) -> DataFrame:
     """Weighted adjacent-pair counts ``(a, b, pair_count)`` over a
     symbolized vocab — the BPE merge-candidate table."""
-    pairs = (vocab.filter(F.size(sym_col) >= 2)
-             .select(F.col(freq_col),
-                     F.explode(_pair_struct(sym_col)).alias("p")))
+    pairs = (vocab.filter(F.size("syms") >= 2)
+             .select(F.col("freq"),
+                     F.explode(_pair_struct()).alias("p")))
     return (pairs.groupBy(F.col("p.a").alias("a"),
                           F.col("p.b").alias("b"))
-            .agg(F.sum(freq_col).cast("long").alias("pair_count")))
+            .agg(F.sum("freq").cast("long").alias("pair_count")))
 
 
-def char_pair_counts(docs: DataFrame, text_col: str = "text",
-                     k: int = 20) -> DataFrame:
+def char_pair_counts(docs: DataFrame, k: int = 20) -> DataFrame:
     """Iteration-0 merge candidates straight from a corpus: top-k
     character pairs by frequency-weighted count (count desc, pair asc
     — fully deterministic). This is the driver-oracled query shape."""
-    wf = word_freqs(docs, text_col)
+    wf = word_freqs(docs)
     sym = wf.select(
         F.expr("transform(sequence(1, length(w)), "
                "i -> substring(w, i, 1))").alias("syms"),
@@ -75,8 +73,7 @@ def char_pair_counts(docs: DataFrame, text_col: str = "text",
             .limit(k))
 
 
-def learn_bpe(docs: DataFrame, n_merges: int,
-              text_col: str = "text") -> list[tuple[str, str, int]]:
+def learn_bpe(docs: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns the merge trace
     ``[(a, b, pair_count), ...]`` in learned order.
 
@@ -84,7 +81,7 @@ def learn_bpe(docs: DataFrame, n_merges: int,
     DataFrame throughout. Ties break (count desc, a asc, b asc) so the
     trace is deterministic and replayable.
     """
-    wf = word_freqs(docs, text_col)
+    wf = word_freqs(docs)
     vocab = wf.select(
         F.expr("transform(sequence(1, length(w)), "
                "i -> substring(w, i, 1))").alias("syms"),
@@ -102,15 +99,15 @@ def learn_bpe(docs: DataFrame, n_merges: int,
     return merges
 
 
-def apply_merges(vocab: DataFrame, merges: list[tuple[str, str, int]],
-                 sym_col: str = "syms") -> DataFrame:
+def apply_merges(vocab: DataFrame,
+                 merges: list[tuple[str, str, int]]) -> DataFrame:
     """Apply a learned merge list to a symbolized vocab, in order."""
     out = vocab
     for a, b, _ in merges:
         out = out.withColumn(
-            sym_col,
+            "syms",
             F.aggregate(
-                F.col(sym_col),
+                F.col("syms"),
                 F.expr("cast(array() as array<string>)"),
                 lambda acc, x: F.when(
                     (F.size(acc) > 0)

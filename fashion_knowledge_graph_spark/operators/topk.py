@@ -22,8 +22,7 @@ def grouped_top_k(df: DataFrame, keys: list[str], order: list,
 
 
 def grouped_dense_rank(df: DataFrame, group_col: str, order_col: str,
-                       out_col: str = "rnk",
-                       num_partitions: int | None = None) -> DataFrame:
+                       out_col: str = "rnk") -> DataFrame:
     """Distributed 1-based contiguous rank of ``order_col`` within
     each group over an already-distinct (group, order) relation — the
     scale path for ranking an ENTITY-SIZED vocabulary, where
@@ -43,11 +42,9 @@ def grouped_dense_rank(df: DataFrame, group_col: str, order_col: str,
     Returns (group_col, order_col, out_col) with out_col dense in
     [1, group size] ordered by ``order_col`` ascending.
     """
-    d = df.select(group_col, order_col).distinct()
-    d = (d.repartitionByRange(num_partitions, group_col, order_col)
-         if num_partitions else
-         d.repartitionByRange(group_col, order_col))
-    d = d.withColumn("__pid", F.spark_partition_id()) \
+    d = df.select(group_col, order_col).distinct() \
+        .repartitionByRange(group_col, order_col) \
+        .withColumn("__pid", F.spark_partition_id()) \
         .localCheckpoint(eager=True)   # pin partitioning: counts and
     # ranks must see the SAME placement (a recompute may resample
     # range boundaries)
@@ -73,18 +70,17 @@ def grouped_dense_rank(df: DataFrame, group_col: str, order_col: str,
                     (F.col("__r") + F.col("__off")).alias(out_col)))
 
 
-def _range_ranked(df: DataFrame, order_cols: list,
-                  num_partitions: int | None = None):
+def _range_ranked(df: DataFrame, order_cols: list):
     """Shared two-pass machinery for global rank/prefix over a TOTAL
     order (``order_cols`` must tie-break to uniqueness, so the result
     is boundary-invariant): repartitionByRange on the sort key, pin
     the layout (localCheckpoint — both passes must see the SAME
     partitioning), count rows per range partition, and broadcast the
-    partition-count-sized offset table back. Returns
+    partition-count-sized offset table back; the range partition
+    count is ``spark.sql.shuffle.partitions``. Returns
     (pinned_df_with __pid, offsets_df(__pid, __off), total_rows)."""
     spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = (df.repartitionByRange(n, *order_cols)
          .withColumn("__pid", F.spark_partition_id())
          .localCheckpoint(eager=True))
@@ -101,8 +97,7 @@ def _range_ranked(df: DataFrame, order_cols: list,
 
 
 def global_rank(df: DataFrame, order_cols: list,
-                out_col: str = "rn",
-                num_partitions: int | None = None) -> DataFrame:
+                out_col: str = "rn") -> DataFrame:
     """Distributed global ``row_number`` over a total order — the
     replacement for ``row_number().over(Window.orderBy(...))``, whose
     unpartitioned window serializes the whole relation into ONE task.
@@ -110,7 +105,7 @@ def global_rank(df: DataFrame, order_cols: list,
     slice) and global positions come from adding the broadcast
     per-partition row-count prefix; output is identical because the
     order is total."""
-    d, odf, _ = _range_ranked(df, order_cols, num_partitions)
+    d, odf, _ = _range_ranked(df, order_cols)
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     return (d.join(F.broadcast(odf), "__pid")
             .withColumn(out_col, (F.row_number().over(w)
@@ -119,13 +114,12 @@ def global_rank(df: DataFrame, order_cols: list,
 
 
 def ntile_distributed(df: DataFrame, order_cols: list, k: int,
-                      out_col: str = "tile",
-                      num_partitions: int | None = None) -> DataFrame:
+                      out_col: str = "tile") -> DataFrame:
     """Exact SQL ``ntile(k)`` semantics (first ``N mod k`` tiles get
     the extra row) from the distributed global rank — bucket sizes
     and boundaries match ``F.ntile`` bit-for-bit under the same total
     order, without the single-task window."""
-    d, odf, total = _range_ranked(df, order_cols, num_partitions)
+    d, odf, total = _range_ranked(df, order_cols)
     big = -(-total // k)                   # ceil
     small = total // k
     r = total - small * k                  # tiles that get ceil size
@@ -146,15 +140,13 @@ def ntile_distributed(df: DataFrame, order_cols: list, k: int,
 
 
 def global_prefix_sum(df: DataFrame, order_cols: list,
-                      value_col: str, out_col: str = "cum",
-                      num_partitions: int | None = None) -> DataFrame:
+                      value_col: str, out_col: str = "cum") -> DataFrame:
     """Distributed running sum of ``value_col`` over a total order
     (inclusive frame): per-range-partition window cumsum plus the
     broadcast prefix of per-partition sums. Value type is preserved
     (DECIMAL stays exact)."""
     spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = (df.repartitionByRange(n, *order_cols)
          .withColumn("__pid", F.spark_partition_id())
          .localCheckpoint(eager=True))

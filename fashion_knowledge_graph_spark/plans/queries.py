@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import taxonomy as tx
 from ..functions.embeddings import clip_text_embed_udf, text_embed_udf
 from ..operators import linking as lk
 from ..operators.rrf import add_rank, rrf_fuse
@@ -147,23 +146,20 @@ def two_hop_recommend(edges: DataFrame, seeds: DataFrame,
 
 
 def outfit_from_image(query_docs: DataFrame, catalog: DataFrame,
-                      threshold: float = 0.7,
-                      top_k: int = tx.LINK_TOP_K) -> DataFrame:
+                      threshold: float = 0.7) -> DataFrame:
     """Query media docs (input_hint shape) → detected garment mentions
     → linking against the catalog (threshold 0.7, recommender.py:227)
     through the same gate and paths as the KG build
     (``linking.pack_catalog`` → ``linking.link_mentions``). Returns
     matched catalog items per query doc."""
     linked = lk.link_mentions(query_docs, catalog, lk.pack_catalog(catalog),
-                              top_k=top_k, threshold=threshold)
+                              threshold=threshold)
     return linked.select("doc_id", "span_idx", "product_id",
                          "category", "score")
 
 
 def outfit_from_text(query_texts: DataFrame, catalog: DataFrame,
-                     top_k: int = 5, rrf_k: int = tx.RRF_K,
-                     clip_threshold: float = 0.2,
-                     style_threshold: float = 0.5) -> DataFrame:
+                     top_k: int = 5) -> DataFrame:
     """Dual-path text search fused with RRF (recommender.py:327-382).
 
     Path 1: embed query text in the image space stand-in, rank catalog
@@ -187,16 +183,16 @@ def outfit_from_text(query_texts: DataFrame, catalog: DataFrame,
 
     p1 = catalog.join(qb, F.lit(True)) \
         .withColumn("score", cosine_col("embedding", "q_img")) \
-        .filter(F.col("score") >= clip_threshold) \
+        .filter(F.col("score") >= 0.2) \
         .select("query_id", "product_id", "score")
     p1 = add_rank(p1, ["query_id"], [F.desc("score"), F.asc("product_id")])
 
     p2 = catalog.join(qb, F.lit(True)) \
         .withColumn("score", cosine_col("style_embedding", "q_style")) \
-        .filter(F.col("score") >= style_threshold) \
+        .filter(F.col("score") >= 0.5) \
         .select("query_id", "product_id", "score")
     p2 = add_rank(p2, ["query_id"], [F.desc("score"), F.asc("product_id")])
 
-    fused = rrf_fuse([p1, p2], keys=["query_id"], k=rrf_k)
+    fused = rrf_fuse([p1, p2], keys=["query_id"])
     return grouped_top_k(fused, ["query_id"], [F.desc("rrf_score")],
                          top_k, tie_breaks=[F.asc("product_id")])

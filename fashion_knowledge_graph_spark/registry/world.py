@@ -20,7 +20,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from fashion_knowledge_graph_spark.registry.common import _load
-from fashion_knowledge_graph_spark.session import package_sources
+from fashion_knowledge_graph_spark.session import get_spark, package_sources
 
 _KG_CACHE: dict[str, dict] = {}
 _KG_N_PRODUCTS = 150
@@ -176,9 +176,7 @@ def materialize(sf_dir: str) -> None:
     spark = SparkSession.getActiveSession()
     own_session = spark is None
     if own_session:
-        spark = SparkSession.builder.master("local[8]") \
-            .appName("kg-oracle-materialize") \
-            .config("spark.sql.shuffle.partitions", "16").getOrCreate()
+        spark = get_spark("kg-oracle-materialize")
     _kg_world(spark, sf_dir)
     if own_session:
         # don't leave our throwaway session active (the caller's

@@ -22,9 +22,7 @@ def _span(kind, text, media_ref, offset):
         media_ref.alias("media_ref"), offset.cast("int").alias("offset"))
 
 
-def interleaved_docs(documents: DataFrame, n_entities: int,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def interleaved_docs(documents: DataFrame, n_entities: int) -> DataFrame:
     """documents(doc_id, text) → (doc_id:string, spans) interleaved.
 
     Layout per doc: [image_ref, text half 1, image_ref?, text half 2],
@@ -33,8 +31,8 @@ def interleaved_docs(documents: DataFrame, n_entities: int,
     ``img://entNNNNNNNN`` content keys so attributes/embeddings are
     consistent across the whole fixture world.
     """
-    did = F.col(id_col).cast("string")
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    did = F.col("doc_id").cast("string")
+    txt = F.coalesce(F.col("text"), F.lit(""))
     half = (F.length(txt) / 2).cast("int")
     t1 = txt.substr(F.lit(1), half)
     t2 = txt.substr(half + 1, F.length(txt))

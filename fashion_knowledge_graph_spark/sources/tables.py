@@ -235,17 +235,13 @@ class SnapshotTable:
                 StructType.fromJson(m["schema"])).parquet(*files)
         return spark.read.parquet(*files)
 
-    def prune_files(self, col: str, lo=None, hi=None,
-                    snapshot_id: int | None = None
-                    ) -> tuple[list[str], int]:
+    def prune_files(self, col: str, lo=None, hi=None) -> tuple[list[str], int]:
         """Manifest-level data skipping: (surviving relpaths, total
         file count) for ``lo <= col <= hi``, using the per-file min/max
         recorded at write time (``stats_cols``). Files without recorded
         bounds are kept conservatively. Pure driver metadata — no Spark
         job, no file opens; this is Iceberg's planFiles() contract."""
-        sid = snapshot_id if snapshot_id is not None \
-            else self.current_snapshot()
-        m = self._manifest(sid)
+        m = self._manifest(self.current_snapshot())
         stats = m.get("file_stats", {})
         lo_k = _stat_key(lo) if lo is not None else None
         hi_k = _stat_key(hi) if hi is not None else None
@@ -263,16 +259,16 @@ class SnapshotTable:
         return kept, len(m["files"])
 
     def read_where(self, spark: SparkSession, col: str, lo=None,
-                   hi=None, snapshot_id: int | None = None) -> DataFrame:
+                   hi=None) -> DataFrame:
         """Range-filtered read with manifest file pruning THEN the
         exact residual predicate (bounds are file-granular; rows inside
         a surviving file still need the filter — same two-level scheme
         as Iceberg + parquet row-group pushdown). Exactness does not
         depend on the stats: a file wrongly pruned would be a bug, a
         file wrongly kept only costs the scan."""
-        kept, _ = self.prune_files(col, lo, hi, snapshot_id)
+        kept, _ = self.prune_files(col, lo, hi)
         if not kept:
-            return self.read(spark, snapshot_id).filter(F.lit(False))
+            return self.read(spark).filter(F.lit(False))
         df = spark.read.parquet(
             *[os.path.join(self.data_dir, f) for f in kept])
         c = F.col(col)
@@ -310,13 +306,13 @@ class SnapshotTable:
         return spark.read.parquet(
             *[os.path.join(self.data_dir, f) for f in new])
 
-    def diff(self, spark: SparkSession, from_snapshot: int,
-             to_snapshot: int | None = None) -> DataFrame:
-        """Full change-data feed between two snapshots, INCLUDING
-        rewrites (Delta CDF's shape, where ``incremental_read`` is
-        Iceberg's append-only scan): rows present in ``to`` but not
-        ``from`` come back tagged ``op='insert'``, rows present in
-        ``from`` but not ``to`` tagged ``op='delete'`` (multiset
+    def diff(self, spark: SparkSession, from_snapshot: int) -> DataFrame:
+        """Full change-data feed from ``from_snapshot`` to the current
+        snapshot, INCLUDING rewrites (Delta CDF's shape, where
+        ``incremental_read`` is Iceberg's append-only scan): rows
+        present now but not in ``from`` come back tagged
+        ``op='insert'``, rows present in ``from`` but not now tagged
+        ``op='delete'`` (multiset
         semantics via EXCEPT ALL — duplicate rows diff by count).
 
         Scale: append-only ranges short-circuit to the manifest
@@ -326,8 +322,7 @@ class SnapshotTable:
         full-row-equality anti-joins, and those shuffle on every
         column — at 100 TB call it on bounded snapshot windows, or
         add a row-key and diff on that."""
-        to_sid = to_snapshot if to_snapshot is not None \
-            else self.current_snapshot()
+        to_sid = self.current_snapshot()
         try:
             ins = self.incremental_read(spark, from_snapshot, to_sid)
             return ins.withColumn("op", F.lit("insert"))
@@ -361,12 +356,9 @@ class SnapshotTable:
         return self.write(merged, mode="overwrite", stage=stage)
 
     def compact(self, spark: SparkSession,
-                target_files: int | None = None,
-                target_file_bytes: int = 128 << 20,
-                stats_cols: list[str] | None = None,
-                shuffle: bool = False) -> int:
+                stats_cols: list[str] | None = None) -> int:
         """``OPTIMIZE`` / small-file bin-packing: rewrite the CURRENT
-        snapshot's rows into ~``target_files`` right-sized files as
+        snapshot's rows into ~128 MB files as
         one overwrite commit (stage ``compact``). The small-files
         problem is THE operational tax of streaming ingest at scale —
         a day of micro-batch appends leaves thousands of KB-sized
@@ -377,25 +369,19 @@ class SnapshotTable:
         (time travel), and ``lineage_current`` restarts at the
         compaction like any overwrite.
 
-        ``target_files`` defaults to current-total-bytes /
-        ``target_file_bytes`` (driver-side ``stat`` of the manifest's
-        files — no Spark job). ``shuffle=False`` uses ``coalesce``
-        (narrow — no shuffle, the right default for merging small
-        files); pass ``shuffle=True`` for round-robin rebalancing when
-        input files are badly skewed. Pass ``stats_cols`` to re-record
+        The file count is current-total-bytes / 128 MB (driver-side
+        ``stat`` of the manifest's files — no Spark job), reached with
+        ``coalesce`` (narrow — no shuffle, what merging small files
+        needs). Pass ``stats_cols`` to re-record
         per-file min/max bounds — compaction of a sorted/z-ordered
         table keeps pruning tight."""
         sid = self.current_snapshot()
         if sid is None:
             raise FileNotFoundError(f"no committed snapshot in {self.root}")
-        if target_files is None:
-            total = sum(
-                os.path.getsize(os.path.join(self.data_dir, f))
-                for f in self._manifest(sid)["files"])
-            target_files = max(1, -(-total // target_file_bytes))
-        cur = self.read(spark)
-        packed = cur.repartition(target_files) if shuffle \
-            else cur.coalesce(target_files)
+        total = sum(
+            os.path.getsize(os.path.join(self.data_dir, f))
+            for f in self._manifest(sid)["files"])
+        packed = self.read(spark).coalesce(max(1, -(-total // (128 << 20))))
         return self.write(packed, mode="overwrite", stage="compact",
                           stats_cols=stats_cols)
 
@@ -461,16 +447,14 @@ class SnapshotTable:
         return total
 
     # ---- write-audit-publish -------------------------------------------
-    def write_staged(self, df: DataFrame, stage: str | None = None,
-                     stats_cols: list[str] | None = None) -> int:
+    def write_staged(self, df: DataFrame, stage: str | None = None) -> int:
         """WAP step 1: commit ``df`` as a snapshot WITHOUT moving
         CURRENT — readers keep seeing the published table while audits
         run against the staged snapshot (``read(spark, sid)``). The
         staged snapshot is an overwrite of table content when
         published; until then it is invisible and expirable."""
         before = self.current_snapshot()
-        sid = self.write(df, mode="overwrite", stage=stage or "staged",
-                         stats_cols=stats_cols)
+        sid = self.write(df, mode="overwrite", stage=stage or "staged")
         # write() moved CURRENT; restore it (atomic replace, same
         # mechanism) — the manifest stays, unreferenced
         if before is None:

@@ -84,13 +84,12 @@ def stream_docs(spark: SparkSession, docs_dir: str,
 
 
 def stream_linked(docs_stream: DataFrame, catalog: DataFrame,
-                  pipe: KGPipeline, checkpoint_dir: str,
-                  available_now: bool = True):
+                  pipe: KGPipeline, checkpoint_dir: str):
     """Run mention detection + linking on each micro-batch, appending
     to the pipeline's ``linked`` snapshot table.
 
-    Returns the started ``StreamingQuery``; with ``available_now`` the
-    query drains everything currently in the directory and stops —
+    Returns the started ``StreamingQuery``; its ``availableNow``
+    trigger drains everything currently in the directory and stops —
     the deterministic-test / backfill trigger.
     """
     def process(batch_df: DataFrame, batch_id: int):
@@ -99,17 +98,16 @@ def stream_linked(docs_stream: DataFrame, catalog: DataFrame,
         with pipe._all_or_nothing():
             pipe.stage_linked(batch_df, catalog, resume=True)
 
-    writer = (docs_stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("update"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (docs_stream.writeStream
+            .foreachBatch(process)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start())
 
 
-def stream_sessionize(events_stream: DataFrame, gap: str = "30 minutes",
-                      by: str = "user_id", ts: str = "ts") -> DataFrame:
+def stream_sessionize(events_stream: DataFrame,
+                      gap: str = "30 minutes") -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     gap-based sessionization with per-entity state (open session's
     index / count / bounds, in integer µs).
@@ -129,12 +127,12 @@ def stream_sessionize(events_stream: DataFrame, gap: str = "30 minutes",
     per = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
            "hour": 3600, "hours": 3600}[unit]
     gap_us = int(n) * per * 1_000_000
-    out_schema = (f"{by} long, session_idx long, n_events long, "
+    out_schema = ("user_id long, session_idx long, n_events long, "
                   "session_start string, session_end string")
     state_schema = "session_idx long, n_events long, start_us long, last_us long"
 
     def fn(key, pdfs, state):
-        ts_us = pd.concat([p[[ts]] for p in pdfs])[ts] \
+        ts_us = pd.concat([p[["ts"]] for p in pdfs])["ts"] \
             .astype("datetime64[us]").astype("int64").sort_values().tolist()
         if state.exists:
             idx, cnt, start, last = state.get
@@ -155,7 +153,7 @@ def stream_sessionize(events_stream: DataFrame, gap: str = "30 minutes",
             cdf = pd.DataFrame(closed, columns=[
                 "session_idx", "n_events", "start_us", "last_us"])
             yield pd.DataFrame({
-                by: key[0],
+                "user_id": key[0],
                 "session_idx": cdf["session_idx"],
                 "n_events": cdf["n_events"],
                 "session_start": pd.to_datetime(
@@ -166,7 +164,7 @@ def stream_sessionize(events_stream: DataFrame, gap: str = "30 minutes",
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return (events_stream.groupBy(by)
+    return (events_stream.groupBy("user_id")
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "append", GroupStateTimeout.NoTimeout))
 
@@ -184,8 +182,8 @@ def stream_sessionize_once(spark: SparkSession, events_path: str,
     return _drain(out, "append", "sess")
 
 
-def stream_tumbling_agg_once(spark: SparkSession, events_path: str,
-                             window: str = "1 hour") -> DataFrame:
+def stream_tumbling_agg_once(spark: SparkSession,
+                             events_path: str) -> DataFrame:
     """Drain a static events directory through a REAL Structured
     Streaming query (file source → stateful tumbling-window agg →
     complete-mode memory sink, ``availableNow`` trigger) and return
@@ -208,7 +206,7 @@ def stream_tumbling_agg_once(spark: SparkSession, events_path: str,
 
     events_path = _source_dir(events_path)
     src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
-    agg = (src.groupBy(F.window("ts", window).alias("win"), "event_type")
+    agg = (src.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
                 .cast("double").alias("total_value"))
@@ -246,8 +244,8 @@ def stream_interval_join(views: DataFrame, purchases: DataFrame,
             f"INTERVAL {horizon}")), "inner")
 
 
-def stream_interval_join_once(spark: SparkSession, events_path: str,
-                              horizon: str = "1 hour") -> DataFrame:
+def stream_interval_join_once(spark: SparkSession,
+                              events_path: str) -> DataFrame:
     """Deterministic driver-facing runner: drain a static events
     directory through TWO file-source streams (views / purchases) and
     the stream-stream interval join, append-mode memory sink,
@@ -270,7 +268,7 @@ def stream_interval_join_once(spark: SparkSession, events_path: str,
     out = stream_interval_join(
         src().filter(F.col("event_type") == "view"),
         src().filter(F.col("event_type") == "purchase"),
-        horizon=horizon, watermark="3650 days")
+        watermark="3650 days")
     out = out.select("purchase_id", "view_id",
                      F.col("p_user").alias("user_id"),
                      F.round("purchase_value", 6).alias("purchase_value"))
@@ -297,8 +295,7 @@ def stream_event_counts(events_stream: DataFrame,
 
 def stream_dedup_keys(events_stream: DataFrame,
                       keys: list[str],
-                      watermark: str = "2 hours",
-                      ts: str = "ts") -> DataFrame:
+                      watermark: str = "2 hours") -> DataFrame:
     """Streaming deduplication with BOUNDED state:
     ``dropDuplicatesWithinWatermark`` keeps the first arrival per key
     and expires each key's state once the event-time watermark passes
@@ -313,13 +310,12 @@ def stream_dedup_keys(events_stream: DataFrame,
     state expired; the watermark is the dedup horizon, exactly
     Kafka-ingest semantics."""
     return (events_stream
-            .withWatermark(ts, watermark)
+            .withWatermark("ts", watermark)
             .dropDuplicatesWithinWatermark(keys)
             .select(*keys))
 
 
-def stream_dedup_once(spark: SparkSession, events_path: str,
-                      keys: list[str] | None = None) -> DataFrame:
+def stream_dedup_once(spark: SparkSession, events_path: str) -> DataFrame:
     """Drain a static events directory through ``stream_dedup_keys``
     with a lenient (1-year) watermark — no state ever expires during
     the bounded run, so the emitted key set ≡ batch ``SELECT
@@ -328,10 +324,10 @@ def stream_dedup_once(spark: SparkSession, events_path: str,
     ``stream_tumbling_agg_once``); the bounded-state expiry semantics
     are pinned separately in tests/test_streaming.py."""
 
-    keys = keys or ["user_id", "event_type"]
     events_path = _source_dir(events_path)
     src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
-    out = stream_dedup_keys(src, keys, watermark="365 days")
+    out = stream_dedup_keys(src, ["user_id", "event_type"],
+                            watermark="365 days")
     return _drain(out, "append", "dedup")
 
 
@@ -552,8 +548,7 @@ def stream_static_enrich_once(spark: SparkSession, events_path: str,
 
 
 def stream_quality_filter_once(spark: SparkSession,
-                               docs_path: str,
-                               min_quality: float = 0.75) -> DataFrame:
+                               docs_path: str) -> DataFrame:
     """Stateless streaming quality gate: the C4/Gopher-style score is
     a pure codegen projection, so the stream runs in append mode with
     ZERO state — the shape of an ingest-time document filter (score,
@@ -567,5 +562,5 @@ def stream_quality_filter_once(spark: SparkSession,
     scored = src.select(
         "doc_id",
         F.round(quality_score(F.col("text")), 6).alias("quality")) \
-        .filter(F.col("quality") >= min_quality)
+        .filter(F.col("quality") >= 0.75)
     return _drain(scored, "append", "qgate").localCheckpoint(eager=True)

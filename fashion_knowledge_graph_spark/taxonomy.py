@@ -77,7 +77,9 @@ LEXICON_PREDS = {"color": COLORS, "material": MATERIALS, "style": STYLES}
 # (reference: src/engine/image_processor.py:117-119)
 MIN_AREA = 1028
 
-# linking gates (reference: src/engine/process_social_media_images.py:18,85,95)
+# linking gates (reference: src/engine/process_social_media_images.py:18,85,95);
+# top-5 bounds only the candidates ranked before rank 1 is threshold-checked,
+# so it cannot change a link — only the pandas oracle still applies it
 LINK_TOP_K = 5
 LINK_THRESHOLD = 0.7
 

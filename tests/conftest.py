@@ -15,8 +15,7 @@ N_PRODUCTS = 120
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("fkg-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
-                  shuffle_partitions=8)
+    s = get_spark("fkg-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -104,8 +104,8 @@ def test_minhash_arrow_kernel_matches_catalyst_spec(spark, corpus):
     df = corpus.unionByName(extra).coalesce(2)
     a = {r["id"]: r["sig"] for r in dd.minhash_signature(
         df, "doc_id", "text", num_hashes=32).collect()}
-    c = {r["id"]: r["sig"] for r in dd.minhash_signature(
-        df, "doc_id", "text", num_hashes=32, engine="catalyst").collect()}
+    c = {r["id"]: r["sig"] for r in dd.minhash_signature_catalyst(
+        df, "doc_id", "text", 3, 32).collect()}
     assert set(a) == set(c)                  # empty docs in neither
     assert 2000 not in a and 2001 not in a
     for k in c:

@@ -371,21 +371,29 @@ def test_global_rank_ntile_prefix_parity(spark):
         F.col("id").alias("k")).repartition(7)
     order = [F.desc("v"), F.asc("k")]
     w = W.orderBy(*order)
+    wc = W.orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
 
     exp_rn = {(r.v, r.k): r.rn for r in
               df.withColumn("rn", F.row_number().over(w)).collect()}
-    got_rn = {(r.v, r.k): r.rn for r in
-              global_rank(df, order, "rn",
-                          num_partitions=5).collect()}
+    # the range partition count is the session's shuffle partitions
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        got_rn = {(r.v, r.k): r.rn for r in
+                  global_rank(df, order, "rn").collect()}
+        got_t = {k: {(r.v, r.k): r.t for r in
+                     ntile_distributed(df, order, k, "t").collect()}
+                 for k in (4, 10, 3)}
+        got_c = {(r.v, r.k): r.c for r in
+                 global_prefix_sum(df, order, "v", "c").collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert got_rn == exp_rn
 
     for k in (4, 10, 3):
         exp_t = {(r.v, r.k): r.t for r in
                  df.withColumn("t", F.ntile(k).over(w)).collect()}
-        got_t = {(r.v, r.k): r.t for r in
-                 ntile_distributed(df, order, k, "t",
-                                   num_partitions=5).collect()}
-        assert got_t == exp_t, f"ntile({k}) mismatch"
+        assert got_t[k] == exp_t, f"ntile({k}) mismatch"
 
     # N < k: one row per tile
     tiny = spark.createDataFrame([(5, 1), (3, 2)], "v int, k int")
@@ -393,12 +401,8 @@ def test_global_rank_ntile_prefix_parity(spark):
         tiny, [F.desc("v"), F.asc("k")], 10, "t").collect()}
     assert got == {1: 1, 2: 2}
 
-    wc = W.orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
     exp_c = {(r.v, r.k): r.c for r in
              df.withColumn("c", F.sum("v").over(wc)).collect()}
-    got_c = {(r.v, r.k): r.c for r in
-             global_prefix_sum(df, order, "v", "c",
-                               num_partitions=5).collect()}
     assert got_c == exp_c
 
 

@@ -230,32 +230,31 @@ def test_transe_sampled_rank_bounds(spark):
         transe_sampled_ranking(df, k=0)
 
 
-def test_vocab_rank_strategies_identical(spark):
+def test_vocab_rank_strategies_identical(spark, monkeypatch):
     # grouped_dense_rank (range-partitioned two-pass) must equal the
     # per-predicate window rank exactly — the sampled protocol's draw
     # replay depends on the dense [1, V] ranking being
-    # strategy-independent
-    from fashion_knowledge_graph_spark.operators.linkpred import (
-        _vocab_ranked,
-        transe_sampled_ranking,
-    )
+    # strategy-independent. The size gate picks the plan; moving
+    # VOCAB_WINDOW_THRESHOLD forces each side.
+    from fashion_knowledge_graph_spark.operators import linkpred as lp
+
     rows = [("s%d" % i, ["complements", "hasColor"][i % 2],
              "o%03d" % ((i * 17) % 97)) for i in range(300)]
     df = spark.createDataFrame(rows, "subj string, pred string, obj string")
     t = df.distinct()
-    win = {(r["pred"], r["obj"]): (r["rnk"], r["vsz"])
-           for r in _vocab_ranked(t, "window").collect()}
-    dist = {(r["pred"], r["obj"]): (r["rnk"], r["vsz"])
-            for r in _vocab_ranked(t, "distributed").collect()}
+
+    def run(threshold):
+        monkeypatch.setattr(lp, "VOCAB_WINDOW_THRESHOLD", threshold)
+        ranks = {(r["pred"], r["obj"]): (r["rnk"], r["vsz"])
+                 for r in lp._vocab_ranked(t).collect()}
+        return ranks, sorted(map(tuple, lp.transe_sampled_ranking(
+            df, k=7, dim=4).collect()))
+
+    win, a = run(10**9)
+    dist, b = run(0)
     assert win == dist and len(win) > 100
     # and the whole sampled evaluation is strategy-independent
-    a = sorted(map(tuple, transe_sampled_ranking(
-        df, k=7, dim=4, rank_strategy="window").collect()))
-    b = sorted(map(tuple, transe_sampled_ranking(
-        df, k=7, dim=4, rank_strategy="distributed").collect()))
     assert a == b
-    with pytest.raises(ValueError, match="rank_strategy"):
-        transe_sampled_ranking(df, rank_strategy="bogus")
 
 
 def test_grouped_dense_rank_multi_partition(spark):
@@ -264,7 +263,17 @@ def test_grouped_dense_rank_multi_partition(spark):
     )
     rows = [("g%d" % (i % 3), "v%04d" % i) for i in range(500)]
     df = spark.createDataFrame(rows, "pred string, obj string")
-    out = grouped_dense_rank(df, "pred", "obj", num_partitions=7)
+    # 7 range partitions, kept apart (AQE would merge them at this size)
+    conf = {"spark.sql.shuffle.partitions": "7",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        out = grouped_dense_rank(df, "pred", "obj")
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     got = {}
     for r in out.collect():
         got.setdefault(r["pred"], []).append((r["rnk"], r["obj"]))

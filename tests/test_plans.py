@@ -393,7 +393,8 @@ def test_runtime_bloom_filter_injects_on_selective_dim_join(
                 spark.conf.set(k, v)
 
 
-def test_lpa_round_has_partial_aggregate_and_narrow_shuffle(spark):
+def test_lpa_round_has_partial_aggregate_and_narrow_shuffle(spark,
+                                                           monkeypatch):
     """One LPA round = edges ⋈ labels → tally groupBy: the tally
     aggregation must be partial (map-side combine before the
     exchange), and no shuffle may carry more than the narrow
@@ -405,9 +406,19 @@ def test_lpa_round_has_partial_aggregate_and_narrow_shuffle(spark):
     e = spark.createDataFrame(
         [(i, (i * 7) % 50, 1 + i % 3) for i in range(300)],
         "src long, dst long, w long")
-    audit = []
-    label_propagation(e, weight="w", rounds=1, plan_audit=audit)
-    plan = _plan(audit[0])
+    # capture the round's frame as it is checkpointed: the checkpoint
+    # erases its plan from the returned labels
+    frames = []
+    real = type(e).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        frames.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(e), "localCheckpoint", spy)
+    label_propagation(e, weight="w", rounds=1)
+    monkeypatch.undo()
+    plan = _plan(frames[-1])
     # partial agg: HashAggregate appears both before and after the
     # exchange of the tally groupBy
     assert "partial_sum" in plan or "partial" in plan.lower(), plan

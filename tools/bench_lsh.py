@@ -104,7 +104,7 @@ def main():
     scored = lk._dot_arrow(cand, "embedding", "c_embedding", "score") \
         .select("doc_id", "span_idx", "product_id", "score")
     exact_df = lk._top1_then_threshold(
-        scored, ["doc_id", "span_idx"], 5, 0.7)
+        scored, ["doc_id", "span_idx"], 0.7)
     exact = {(r["doc_id"], r["span_idx"]): r["product_id"]
              for r in exact_df.collect()}
     approx = {(r["doc_id"], r["span_idx"]): r["product_id"]

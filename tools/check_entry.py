@@ -12,7 +12,7 @@ name) and names every query whose result changed; with no query
 arguments it runs exactly the queries the file records for that sf.
 ``--write-hashes`` records them instead. Query arguments may be
 shell-style patterns (``'kg_*'``). Spark runs at
-``local[$SPARK_GRAFT_CPUS]`` (default 8).
+``local[$SPARK_GRAFT_CPUS]`` (default: the process's CPU affinity).
 
 Usage: python tools/check_entry.py [--hashes | --write-hashes]
                                    [sf_dir] [query ...]
@@ -78,8 +78,7 @@ def main():
     import __spark_entry__ as entry
     from fashion_knowledge_graph_spark.session import get_spark
 
-    spark = get_spark(
-        "check-entry", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("check-entry")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

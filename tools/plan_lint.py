@@ -20,7 +20,8 @@ range-partitioned two-pass forms (topk.global_rank /
 ntile_distributed / global_prefix_sum).
 
 Usage: python tools/plan_lint.py [sf_dir] [query ...]
-Spark runs at ``local[$SPARK_GRAFT_CPUS]`` (default 8).
+Spark runs at ``local[$SPARK_GRAFT_CPUS]`` (default: the process's CPU
+affinity).
 Exit code 1 if any query is flagged.
 """
 
@@ -73,8 +74,7 @@ def main():
     from fashion_knowledge_graph_spark import registry
     from fashion_knowledge_graph_spark.session import get_spark
 
-    spark = get_spark(
-        "plan-lint", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("plan-lint")
     bad = 0
     qs = entry.queries()
     waived = registry.waivers()
